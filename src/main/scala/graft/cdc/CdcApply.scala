@@ -182,16 +182,6 @@ object CdcApply {
       maxDeltaDepth: Int = MaxDeltaDepth,
       foldRatio: Double = FoldToBaseRatio,
       prunedHint: Option[(Seq[Int], Long)] = None): ApplyStats = {
-    // env-gated phase timers (GRAFT_APPLY_DEBUG=1): decompose an
-    // apply's wall into prune/plan/write/footers/commit — the
-    // measurement tool behind the fixed-floor work (guide §1)
-    val dbg = sys.env.contains("GRAFT_APPLY_DEBUG")
-    var tLast = System.nanoTime()
-    def mark(label: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"APPLYDBG $label ${(now - tLast) / 1e9}%.3f s")
-      tLast = now
-    }
     val prev = table.currentCommit()
     val prevWm = prev.map(_.txidWatermark).getOrElse(0L)
     if (batchId >= 0 && table.hasBatch(batchId, queryId))
@@ -263,7 +253,6 @@ object CdcApply {
             skippedReplay = false, prevWm, 0)
         eAgg.getSeq[Int](0).sorted
     }
-    mark("prune")
 
     // 2. latest event wins per key within the batch (§2.8 semantics) as
     // a partial-aggregable max_by instead of a row_number window — the
@@ -384,6 +373,55 @@ object CdcApply {
               .drop("__t_txid")
           }
 
+        // ONE job writes the effective winners to `dir`, partitioned by
+        // bucket, with their stats riding an Observation: (rows,
+        // deletes, max _txid). Winners arrive already hashed by bucket
+        // (the batch's one shuffle, upstream of the winner groupBy):
+        // each bucket lands whole in one task, so the dir holds one file
+        // per bucket written in parallel with NO exchange here. Tiny
+        // batches: a lone writer task beats per-task overhead. Sorted so
+        // each bucket file's row groups carry tight conv_id min/max for
+        // later pruned reads. AQE may replace an all-stale (empty)
+        // winner subtree with an empty relation, dropping the
+        // CollectMetrics node — a missing metrics map therefore USUALLY
+        // means no rows, but never trust a silent no-op: fall back to
+        // the just-written dir (reading the O(batch) output back is
+        // cheap and only happens on that path). An empty dir is deleted
+        // again (no commit — idempotent no-op).
+        def writeObserved(name: String, dir: java.nio.file.Path): (Long, Long, Long) = {
+          val obs = new org.apache.spark.sql.Observation(name)
+          val observed = effectivePlan
+            .observe(obs,
+              count(lit(1)).as("n"),
+              coalesce(sum(col("_deleted").cast("long")), lit(0L)).as("nDel"),
+              max(col("_txid")).as("maxTx"))
+            .withColumn("_bucket", col("__bkt"))
+            .drop("__bkt")
+          val arranged =
+            if (batchCount >= 0 && batchCount < ParallelDeltaWriteMinEvents)
+              observed.coalesce(1)
+            else observed
+          arranged
+            .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
+            .write.mode("overwrite").partitionBy("_bucket")
+            .parquet(dir.toString)
+          val m = obs.get
+          val stats =
+            if (m.get("n").exists(_ != null))
+              (m("n").asInstanceOf[Long],
+                m("nDel").asInstanceOf[Long],
+                Option(m("maxTx")).map(_.asInstanceOf[Long]).getOrElse(prevWm))
+            else if (LakeTable.footerRowCounts(dir).isEmpty) (0L, 0L, prevWm)
+            else {
+              val r = spark.read.parquet(dir.toString)
+                .agg(count(lit(1)), coalesce(sum(col("_deleted").cast("long")), lit(0L)),
+                  max(col("_txid"))).head()
+              (r.getLong(0), r.getLong(1), r.getLong(2))
+            }
+          if (stats._1 == 0L) LakeTable.deleteRecursively(dir)
+          stats
+        }
+
         if (prev.isEmpty) {
           // BOOTSTRAP fold — first commit of a broadcast-sized batch:
           // every winner takes effect (nothing to gate against), so
@@ -392,43 +430,8 @@ object CdcApply {
           // stats job (the general fold branch pays all three). The
           // table topology is unchanged: the first commit is a BASE,
           // exactly as the maintenance policy (and its specs) expect.
-          val obs = new org.apache.spark.sql.Observation(s"boot-$version")
-          val observed = winnerRows
-            .observe(obs,
-              count(lit(1)).as("n"),
-              coalesce(sum(col("_deleted").cast("long")), lit(0L)).as("nDel"),
-              max(col("_txid")).as("maxTx"))
-            .withColumn("_bucket", col("__bkt"))
-            .drop("__bkt")
-          val arranged =
-            if (batchCount >= 0 && batchCount < ParallelDeltaWriteMinEvents)
-              observed.coalesce(1)
-            else observed
-          mark("bootPlanBuild")
-          arranged
-            .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-            .write.mode("overwrite").partitionBy("_bucket")
-            .parquet(outDir.toString)
-          mark("bootWrite")
-          // same AQE empty-plan hazard handling as the delta branch
-          val m = obs.get
-          val (n, nDel, maxTxObs) =
-            if (m.get("n").exists(_ != null))
-              (m("n").asInstanceOf[Long],
-                m("nDel").asInstanceOf[Long],
-                Option(m("maxTx")).map(_.asInstanceOf[Long]).getOrElse(prevWm))
-            else if (LakeTable.footerRowCounts(outDir).isEmpty) (0L, 0L, prevWm)
-            else {
-              val r = spark.read.parquet(outDir.toString)
-                .agg(count(lit(1)), coalesce(sum(col("_deleted").cast("long")), lit(0L)),
-                  max(col("_txid"))).head()
-              (r.getLong(0), r.getLong(1), r.getLong(2))
-            }
-          if (n == 0L) {
-            deleteRecursively(outDir)
-            return ApplyStats(0L, 0, 0, 0,
-              skippedReplay = false, prevWm, 0)
-          }
+          val (n, nDel, maxTxObs) = writeObserved(s"boot-$version", outDir)
+          if (n == 0L) return ApplyStats(0L, 0, 0, 0, skippedReplay = false, prevWm, 0)
           (n, nDel, maxTxObs,
             Map.empty[Int, (String, Long)], Map.empty[Int, (String, Long)])
         } else if (foldBuckets.isEmpty && consBuckets.isEmpty) {
@@ -437,75 +440,24 @@ object CdcApply {
           // run as ONE job — no persist, no separate stats job; a
           // micro-batch's fixed cost is the prune pre-scan plus this
           // single write. Winners land as one small bucket-partitioned
-          // parquet dir — O(batch) write regardless of table size. The
-          // final exchange hash-partitions the winners BY BUCKET (an
-          // O(batch) batch-side shuffle; explicit numPartitions so AQE
-          // cannot collapse it): each bucket lands in exactly one task,
-          // so the dir holds one file per bucket written in parallel —
-          // a single coalesced writer task measured ~40% of steady
-          // batch wall. Sorted so each bucket file's row groups carry
-          // tight conv_id min/max for later pruned reads. Readers
-          // resolve base ∪ that bucket's deltas per key by max _txid.
-          // An all-stale batch leaves an empty dir that is deleted again
-          // (no commit — idempotent no-op).
-          val obs = new org.apache.spark.sql.Observation(s"delta-$version")
-          val observed = effectivePlan
-            .observe(obs,
-              count(lit(1)).as("n"),
-              coalesce(sum(col("_deleted").cast("long")), lit(0L)).as("nDel"),
-              max(col("_txid")).as("maxTx"))
-            .withColumn("_bucket", col("__bkt"))
-            .drop("__bkt")
-          // winners arrive already hashed by bucket (the batch's one
-          // shuffle, upstream of the winner groupBy): each bucket lands
-          // whole in one task, so the dir holds one file per bucket
-          // written in parallel with NO exchange here. Tiny batches: a
-          // lone writer task beats per-task overhead
-          val arranged =
-            if (batchCount >= 0 && batchCount < ParallelDeltaWriteMinEvents)
-              observed.coalesce(1)
-            else observed
-          mark("deltaPlanBuild")
-          arranged
-            .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-            .write.mode("overwrite").partitionBy("_bucket")
-            .parquet(deltaOutDir.toString)
-          mark("deltaWrite")
-          // AQE may replace an all-stale (empty) winner subtree with an
-          // empty relation, dropping the CollectMetrics node — a missing
-          // metrics map therefore USUALLY means n=0, but never trust a
-          // silent no-op: fall back to the just-written dir (reading the
-          // O(batch) delta back is cheap and only happens on that path)
-          val m = obs.get
-          val (n, nDel, maxTxObs) =
-            if (m.get("n").exists(_ != null))
-              (m("n").asInstanceOf[Long],
-                m("nDel").asInstanceOf[Long],
-                Option(m("maxTx")).map(_.asInstanceOf[Long]).getOrElse(prevWm))
-            else if (LakeTable.footerRowCounts(deltaOutDir).isEmpty) (0L, 0L, prevWm)
-            else {
-              val r = spark.read.parquet(deltaOutDir.toString)
-                .agg(count(lit(1)), coalesce(sum(col("_deleted").cast("long")), lit(0L)),
-                  max(col("_txid"))).head()
-              (r.getLong(0), r.getLong(1), r.getLong(2))
-            }
-          if (n == 0L) {
-            deleteRecursively(deltaOutDir)
+          // parquet dir — O(batch) write regardless of table size; a
+          // single coalesced writer task measured ~40% of steady batch
+          // wall, so each bucket's file is written by its own task.
+          // Readers resolve base ∪ that bucket's deltas per key by max
+          // _txid.
+          val (n, nDel, maxTxObs) = writeObserved(s"delta-$version", deltaOutDir)
+          if (n == 0L)
             return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
               skippedReplay = false, prevWm, 0)
-          }
           val maxTx = math.max(prevWm, maxTxObs)
-          mark("deltaObs")
           val adds = LakeTable.footerRowCounts(deltaOutDir).map { case (b, cnt) =>
             b -> (s"$deltaRel/_bucket=$b", cnt)
           }
-          mark("deltaFooters")
           table.commitDelta(schema, adds, maxTx, batchId, Map(
             "events" -> n, "upserts" -> (n - nDel), "deletes" -> nDel,
             "bucketsTouched" -> touched.length.toLong,
             "deltaCommit" -> 1L, "deltaRows" -> n)
             ++ extraMetrics, queryId)
-          mark("deltaCommit")
           return ApplyStats(version, n, n - nDel, nDel,
             skippedReplay = false, maxTx, touched.length)
         }
@@ -731,7 +683,7 @@ object CdcApply {
         if (n == 0L) {
           // pure replay: nothing took effect — discard the rewrite,
           // keep the previous snapshot (idempotent no-op)
-          deleteRecursively(outDir)
+          LakeTable.deleteRecursively(outDir)
           return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
             skippedReplay = false, prevWm, 0)
         }
@@ -743,12 +695,10 @@ object CdcApply {
       // 6. lineage: per-bucket row counts straight from the parquet
       // footers of the just-written files — driver-side metadata reads,
       // no Spark job, no scheduling latency
-      mark("mergeWrite")
       val countsByBucket: Map[Int, Long] = LakeTable.footerRowCounts(outDir)
       val rewritten: Map[Int, Option[String]] = foldBuckets.map { b =>
         b -> (if (countsByBucket.contains(b)) Some(s"$rel/_bucket=$b") else None)
       }.toMap
-      mark("baseFooters")
       table.commit(schema, rewritten, countsByBucket, maxTx, batchId, Map(
         "events" -> nEff, "upserts" -> (nEff - nDeletes), "deletes" -> nDeletes,
         "bucketsTouched" -> touched.length.toLong,
@@ -761,9 +711,6 @@ object CdcApply {
       ApplyStats(version, nEff, nEff - nDeletes, nDeletes,
         skippedReplay = false, maxTx, touched.length)
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.table.LakeTable.deleteRecursively(p)
 
   /** Replay a changelog in `nBatches` txid-ordered batches (batch-mode
     * equivalent of the streaming tail; used by tests and Verify). */

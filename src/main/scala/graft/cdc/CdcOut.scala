@@ -107,7 +107,7 @@ object CdcOut {
       // a head advanced only by maintenance (rename / compact /
       // rebucket / consolidation): acknowledge the new version but
       // never leave an empty pull directory behind
-      deleteRecursively(outDir)
+      LakeTable.deleteRecursively(outDir)
       advance(root, head)
       return None
     }
@@ -130,9 +130,6 @@ object CdcOut {
       import scala.jdk.CollectionConverters._
       s.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toList
     } finally s.close()
-    orphans.foreach(deleteRecursively)
+    orphans.foreach(LakeTable.deleteRecursively)
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    LakeTable.deleteRecursively(p)
 }

@@ -23,13 +23,19 @@ import org.apache.spark.sql.types._
   *    `round()` (LshBucketsExpr.rnd, oracle-pinned by q47/q51);
   *  - null elements / length mismatches yield null, as zip_with +
   *    Add's null propagation did.
-  * One DELIBERATE divergence: a zero/empty-norm divisor follows IEEE
-  * (NaN/Inf) here, where the HOF under Spark 4's ANSI default throws
-  * DIVIDE_BY_ZERO — reachable only on zero-norm vectors, which no
-  * operator feeds (they normalize real embeddings). VectorMathSpec
-  * asserts equality (exact bits) against the HOF forms over the bench
-  * embeddings and every nonzero adversarial shape, and pins the NaN
-  * behavior on the zero shapes.
+  * Two DELIBERATE divergences, where the HOF forms under Spark 4's
+  * ANSI default throw:
+  *  - a zero/empty-norm divisor follows IEEE (NaN/Inf) here, where the
+  *    HOF throws DIVIDE_BY_ZERO — reachable only on zero-norm vectors,
+  *    which no operator feeds (they normalize real embeddings);
+  *  - the long dot (`dotL`) multiplies and adds in plain JVM longs, so
+  *    it wraps on overflow, where the HOF throws ARITHMETIC_OVERFLOW —
+  *    reachable only past 2^63, far above the ±1000-per-component
+  *    quantized embeddings it serves.
+  * VectorMathSpec asserts equality (exact bits) against the HOF forms
+  * over the bench embeddings and every nonzero adversarial shape, and
+  * pins both divergences: NaN on the zero shapes, and the wrapped
+  * `[Long.MaxValue]·[2]` next to the HOF's overflow error.
   */
 private[functions] trait VecBinaryBase extends BinaryExpression {
   protected def elemOk(t: DataType): Boolean

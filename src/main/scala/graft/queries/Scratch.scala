@@ -2,6 +2,9 @@ package graft.queries
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 /** Shared scratch-directory factory for the query surface's ephemeral
   * tables, changelog segments and stream checkpoints.
   *
@@ -14,7 +17,9 @@ import java.nio.file.{Files, Path, Paths}
   * per-process ephemera — every bench/verify invocation rebuilds them
   * from the parquet inputs — so tmpfs is their natural home. All dirs
   * for one JVM live under one `run-<pid>-<nonce>` root that a shutdown
-  * hook deletes, so repeated runs cannot accumulate in tmpfs.
+  * hook deletes, and the first use in a JVM sweeps the roots of dead
+  * pids (a kill skips the hook), so repeated runs cannot accumulate in
+  * tmpfs.
   *
   * q38/q58 are NOT routed through here: their DuckDB oracles re-read
   * fixed `/root/repo/target/scratch` paths via `parquet_metadata()`,
@@ -28,11 +33,33 @@ object Scratch {
       catch { case _: Throwable => Paths.get("/root/repo/target/scratch") }
     }
     Files.createDirectories(base)
-    val root = Files.createTempDirectory(base, "run-")
+    sweepDead(base)
+    val root = Files.createTempDirectory(base, s"run-${ProcessHandle.current.pid}-")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       try graft.table.LakeTable.deleteRecursively(root)
       catch { case _: Throwable => () }))
     root
+  }
+
+  private val RunRootName = """run-(\d+)-.*""".r
+
+  /** Deletes the run roots under `base` whose process is gone: a JVM
+    * killed before its shutdown hook ran leaves its root behind, and on
+    * tmpfs that holds memory until reboot. Roots of live processes,
+    * this one included, are kept. */
+  private[graft] def sweepDead(base: Path): Unit = {
+    val s = Files.list(base)
+    val dead = try s.iterator().asScala.filter { p =>
+      p.getFileName.toString match {
+        case RunRootName(pid) =>
+          val h = ProcessHandle.of(pid.toLong)
+          !(h.isPresent && h.get.isAlive)
+        case _ => false
+      }
+    }.toList finally s.close()
+    // another JVM may be sweeping the same root concurrently
+    dead.foreach(p => try graft.table.LakeTable.deleteRecursively(p)
+      catch { case NonFatal(_) => () })
   }
 
   /** A fresh scratch dir with the given name prefix. */

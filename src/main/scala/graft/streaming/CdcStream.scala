@@ -234,13 +234,7 @@ object CdcStream {
         // in place on a pre-upgrade table still skips its old batches.
         if (batchId < 0 || (!table.hasBatch(batchId, queryId) &&
             !table.hasBatch(batchId, legacyQueryIdFor(checkpointDir)))) {
-          val dbg = sys.env.contains("GRAFT_STREAM_DEBUG")
-          def dtime[T](label: String)(f: => T): T =
-            if (!dbg) f else {
-              val t0 = System.nanoTime(); val r = f
-              println(f"STREAMDBG $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-            }
-          def inferSchema(): StructType = dtime("inferSchema") {
+          def inferSchema(): StructType = {
             val s = session.read.json(batch.select("value")
               .as[String](org.apache.spark.sql.Encoders.STRING)).schema
             StructType(s.fields.filterNot(_.name == "_corrupt_record"))
@@ -311,9 +305,7 @@ object CdcStream {
                   collect_set(okBucket).as("buckets"))
                   .collect()
               }
-              if (dbg) println("STREAMDBG plan:\n" +
-                enriched.queryExecution.executedPlan.toString.take(4000))
-              var summary = dtime("summarize")(summarize(enriched))
+              var summary = summarize(enriched)
               val novelKeys = summary.flatMap(r =>
                 Option(r.getSeq[String](5)).getOrElse(Nil)).distinct
               val nCorrupt = summary.map(_.getLong(4)).sum
@@ -360,21 +352,17 @@ object CdcStream {
                 if (r.isNullAt(3)) None else Some(r.getLong(3)))
               // bucket-prune inputs, already paid for by the summary job
               val nClean = summary.map(r => r.getLong(1) - r.getLong(4)).sum
-              if (dbg) println(s"STREAMDBG batch=$batchId rows=" +
-                summary.map(_.getLong(1)).sum + s" clean=$nClean parts=" +
-                enriched.rdd.getNumPartitions)
               val touchedBuckets = summary
                 .flatMap(_.getSeq[Int](6)).distinct.toSeq
               val events = normalize(enriched
                 .where(col(CorruptCol).isNull)
                 .drop(CorruptCol, "__novel"))
-              val stats = dtime("applyBatch")(
-                CdcApply.applyBatch(session, table, events,
-                  batchId = batchId, queryId = queryId, ignoreFields = ignoreFields,
-                  extraMetrics = lineage + ("originFiles" -> nFiles) ++
-                    (if (nCorruptFinal > 0)
-                      Map("corruptRows" -> nCorruptFinal) else Map.empty),
-                  prunedHint = Some((touchedBuckets, nClean))))
+              val stats = CdcApply.applyBatch(session, table, events,
+                batchId = batchId, queryId = queryId, ignoreFields = ignoreFields,
+                extraMetrics = lineage + ("originFiles" -> nFiles) ++
+                  (if (nCorruptFinal > 0)
+                    Map("corruptRows" -> nCorruptFinal) else Map.empty),
+                prunedHint = Some((touchedBuckets, nClean)))
               val ms = (System.nanoTime() - t0) / 1000000
               // ingest lag: wall-clock minus newest event time in the batch
               // (north-star metric; negative/absent ts → no lag reading)
@@ -547,13 +535,10 @@ object CdcStream {
         }
       // evidence fully accounted for (survivors in the table, the rest
       // under -remaining): release the original batch dir LAST
-      deleteRecursively(qdir)
+      LakeTable.deleteRecursively(qdir)
       RedriveStats(nApplied, nRemaining, stats)
     } finally rawLines.unpersist()
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    LakeTable.deleteRecursively(p)
 
   /** Tail the changelog until everything currently present is applied
     * (AvailableNow trigger), then return. Resume = call again with the

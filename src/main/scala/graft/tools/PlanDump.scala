@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for every declared query (or the subset
   * named on the command line) to `plans/<tag>/<query>_<suffix>.txt` —
   * the committed evidence for plan-shape claims in OPTIMIZATION_r*.md.
@@ -18,22 +16,8 @@ object PlanDump {
     val tag = args.headOption.getOrElse("r06")
     val suffix = args.drop(1).headOption.getOrElse("before")
     val only = args.drop(2).toSet
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val localDir = {
-      val shm = java.nio.file.Paths.get("/dev/shm/graft-spark-local")
-      try { java.nio.file.Files.createDirectories(shm); shm.toString }
-      catch { case _: Throwable => System.getProperty("java.io.tmpdir") }
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Session.sfDir
+    val spark = Session("graft-plandump")
     val outDir = Paths.get(s"plans/$tag")
     Files.createDirectories(outDir)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted

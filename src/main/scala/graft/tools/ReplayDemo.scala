@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.cdc.CdcApply
@@ -18,15 +17,7 @@ object ReplayDemo {
     val tableDir = args(0)
     val nEvents = if (args.length > 1) args(1).toLong else 10000L
     val nBatches = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-replay-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-replay-demo")
 
     val events = Corpus.changeEvents(spark, nEvents, nConvs = 200, maxTurns = 20)
     val table = new LakeTable(tableDir, numBuckets = 32)

@@ -30,21 +30,11 @@ object ScalingBench {
   }
 
   def runAt(cpus: Int, nEvents: Long, nBatches: Int, workDir: String): RunResult = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on tmpfs — isolates the bench from disk
-      // write-back contention (cluster analogue: local NVMe)
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
+    val spark = Session.builder(s"graft-scaling-$cpus", cpus)
       // hash join beats sort-merge for the full-outer MERGE (no sorts)
       .config("spark.sql.join.preferSortMergeJoin",
         sys.env.getOrElse("SPARK_GRAFT_SMJ", "true"))
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     replayBench(spark, cpus, nEvents, nBatches, workDir)
   }
 
@@ -67,14 +57,8 @@ object ScalingBench {
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
     val cpus = workers * coresPerWorker
-    val spark = SparkSession.builder()
+    val spark = Session.builder(s"graft-cluster-${workers}x$coresPerWorker", cpus)
       .master(s"local-cluster[$workers,$coresPerWorker,$memMB]")
-      .appName(s"graft-cluster-${workers}x$coresPerWorker")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
       .config("spark.executor.memory", s"${memMB}m")
       // executors must load the application classes; derive the path
       // from the driver's own classpath so a moved build output
@@ -85,7 +69,6 @@ object ScalingBench {
       .config("spark.sql.join.preferSortMergeJoin",
         sys.env.getOrElse("SPARK_GRAFT_SMJ", "true"))
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     replayBench(spark, cpus, nEvents, nBatches, workDir)
   }
 
@@ -93,19 +76,6 @@ object ScalingBench {
       nBatches: Int, workDir: String): RunResult = {
     val cpuListener = new CpuTimeListener
     spark.sparkContext.addSparkListener(cpuListener)
-    if (sys.env.contains("SPARK_GRAFT_STAGES"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val secs = (for {
-              a <- si.completionTime; b <- si.submissionTime
-            } yield (a - b) / 1000.0).getOrElse(-1.0)
-            System.err.println(f"[stage] ${si.stageId}%3d tasks=${si.numTasks}%4d " +
-              f"$secs%6.1f s  ${si.name.takeWhile(_ != '\n')}")
-          }
-        })
     try {
       // materialize the changelog first (untimed) — the metric is the
       // ENGINE's apply throughput over an existing changelog, not the
@@ -146,31 +116,9 @@ object ScalingBench {
   def runSteady(cpus: Int, baseEvents: Long, batchEvents: Long,
       nBatches: Int, forceOuter: Boolean, workDir: String,
       hotBuckets: Int = 0): RunResult = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-steady-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(s"graft-steady-$cpus", cpus)
     val cpuListener = new CpuTimeListener
     spark.sparkContext.addSparkListener(cpuListener)
-    if (sys.env.contains("SPARK_GRAFT_STAGES"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val secs = (for {
-              a <- si.completionTime; b <- si.submissionTime
-            } yield (a - b) / 1000.0).getOrElse(-1.0)
-            System.err.println(f"[stage] ${si.stageId}%3d tasks=${si.numTasks}%4d " +
-              f"$secs%6.1f s  ${si.name.takeWhile(_ != '\n')}")
-          }
-        })
     try {
       val total = baseEvents + batchEvents * nBatches
       val logDir = s"$workDir/changelog"
@@ -221,12 +169,7 @@ object ScalingBench {
   /** Generation-only microbench: counts the corpus (no shuffle/persist/
     * write) — isolates the expression layer when diagnosing scaling. */
   def genOnly(cpus: Int, nEvents: Long): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-gen-only", cpus)
     try {
       val ev = Corpus.changeEvents(spark, nEvents, nConvs = 100000,
         maxTurns = 40, partitions = cpus * 4)

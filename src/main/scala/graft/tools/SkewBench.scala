@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.cdc.CdcApply
@@ -44,17 +43,8 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val nEvents = args.headOption.map(_.toLong).getOrElse(4000000L)
     val nBatches = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-skew-bench")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session("graft-skew-bench", cpus)
     val listener = new StageTaskListener
     spark.sparkContext.addSparkListener(listener)
     val work = s"/root/repo/target/skew-bench-${System.nanoTime()}"

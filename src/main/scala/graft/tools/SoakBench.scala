@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.Corpus
@@ -32,22 +31,12 @@ object SoakBench {
     val workDir = args.headOption.getOrElse("target/test-tmp/soak")
     val nEvents = args.lift(1).map(_.toLong).getOrElse(2000000L)
     val nSegments = args.lift(2).map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val localDir = {
-      val shm = java.nio.file.Paths.get("/dev/shm/graft-spark-local")
-      try { java.nio.file.Files.createDirectories(shm); shm.toString }
-      catch { case _: Throwable => System.getProperty("java.io.tmpdir") }
-    }
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session("graft-soak-bench", cpus)
 
     val events = Corpus.changeEvents(spark, nEvents,
       nConvs = (nEvents / 200).toInt.max(1000), maxTurns = 40,
-      partitions = cpus.toInt * 2)
+      partitions = cpus * 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // seed the table with the first half as one bulk load so the soak
     // measures steady-state maintenance on a table of ~CONSTANT size —
@@ -119,7 +108,7 @@ object SoakBench {
     // replay of the full event set (seed bulk + tailed segments) would
     val allEvents = Corpus.changeEvents(spark, nEvents,
       nConvs = (nEvents / 200).toInt.max(1000), maxTurns = 40,
-      partitions = cpus.toInt * 2)
+      partitions = cpus * 2)
     val oracle = Corpus.oracleFinalState(allEvents)
       .select("conv_id", "turn_idx", "text")
     val got = table.read(spark).select("conv_id", "turn_idx", "text")

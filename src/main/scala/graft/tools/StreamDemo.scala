@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.Corpus
@@ -20,15 +19,7 @@ object StreamDemo {
     val work = args(0)
     val nEvents = if (args.length > 1) args(1).toLong else 20000L
     val nSegs = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-stream-demo")
 
     val events = Corpus.changeEvents(spark, nEvents, nConvs = 500, maxTurns = 20)
     val step = nEvents / nSegs

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.CdcStream
 import graft.table.LakeTable
 
@@ -16,15 +14,7 @@ object TailDemo {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: TailDemo <changelogGlob> <tableDir> <ckptDir>")
     val Array(changelog, tableDir, ckpt) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-tail")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-tail")
     val table = new LakeTable(tableDir, numBuckets = 16)
     CdcStream.runOnce(spark, changelog, table, ckpt)
     val c = table.currentCommit()

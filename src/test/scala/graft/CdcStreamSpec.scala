@@ -161,13 +161,7 @@ class CdcStreamSpec extends SparkSpec {
     // identity were derived from the path alone, batch 0 (which now
     // carries genuinely NEW events) would collide with the old run's
     // batch 0 commit and be silently dropped.
-    val ckptPath = java.nio.file.Paths.get(ckpt)
-    val walk = java.nio.file.Files.walk(ckptPath)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    } finally walk.close()
+    LakeTable.deleteRecursively(java.nio.file.Paths.get(ckpt))
     val e2 = e1.withColumn("_txid", col("_txid") + 1000L)
       .withColumn("text", concat(lit("v2 "), coalesce(col("text"), lit(""))))
     writeChangelog(logDir, e2, Seq((1L, 500L), (1001L, 1500L)))

@@ -92,4 +92,16 @@ class VectorMathSpec extends SparkSpec {
       .head().getDouble(0)
     assert(zeroCos.isNaN)
   }
+
+  test("long dot wraps on overflow where the ANSI HOF throws (pinned divergence)") {
+    import spark.implicits._
+    val df = Seq((Seq(Long.MaxValue), Seq(2L))).toDF("a", "b")
+    val nat = df.select(graft.functions.VectorMath.dotLong(col("a"), col("b")))
+      .head().getLong(0)
+    assert(nat == Long.MaxValue * 2L && nat == -2L)
+    val e = intercept[Exception](
+      df.select(Vectors.dotLongHof(col("a"), col("b"))).head())
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("ARITHMETIC_OVERFLOW")), e)
+  }
 }
