@@ -1,6 +1,6 @@
 package graft.cdc
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.model.Model
 import graft.table.LakeTable
+import graft.table.LakeTable.align
 
 /** Result of applying one change-event batch. */
 case class ApplyStats(
@@ -24,7 +25,7 @@ case class ApplyStats(
   *
   * Pipeline (SURVEY.md §3.4; each step anchored to a reference op):
   *   1. within-batch collapse — latest txid wins per (conv_id,
-  *      turn_idx) via row_number window (reference: `sort -r | uniq`
+  *      turn_idx) via a max_by (reference: `sort -r | uniq`
   *      idempotent dedupe, /root/reference/manta/dc_inputs_2b.sh:33-35);
   *   2. bucket pruning — only the hash-buckets the incoming keys map to
   *      are read and rewritten (reference analogue: per-split map
@@ -37,21 +38,26 @@ case class ApplyStats(
   *      duplication, or batch boundaries (exactly-once = idempotent
   *      keyed upsert; reference analogue: `_etag` change detection,
   *      /root/reference/lib/backup_state.js:135-143);
-  *   4. merge — survivors (left-anti) ∪ effective events;
-  *   5. salted repartition before the write so one hot conversation
-  *      cannot serialize a whole bucket into one task (north-rule skew
-  *      mandate — the reference has no skew handling, SURVEY.md §4.1);
+  *   4. merge — every rewrite (bulk apply, fold, consolidation) runs
+  *      stored rows ∪ events through ONE shared latest-per-key resolve
+  *      ([[LakeTable.resolveLatest]]), the same rule the merge-on-read
+  *      reader applies; a stored row wins a _txid tie;
+  *   5. that resolve's one exchange is salted within each bucket, so
+  *      one hot conversation cannot serialize a whole bucket into one
+  *      task (north-rule skew mandate — the reference has no skew
+  *      handling, SURVEY.md §4.1), and its output reaches the
+  *      bucket-partitioned writer with no further exchange;
   *   6. atomic commit with txid high-watermark + per-bucket lineage
   *      counts. An entirely-ineffective batch (pure replay) commits
   *      nothing.
   *
-  * Scale notes: the only full pass over the *batch* is one window
-  * shuffle keyed (conv_id, turn_idx) — fine-grained, so conv-level skew
-  * doesn't hit it. The target table is touched only on affected
-  * buckets; the version-gate and survivor joins are keyed on the merge
-  * key and AQE may broadcast the small side. Nothing scans unaffected
-  * data. Tombstones accumulate only for deleted keys; compact() can
-  * drop them once no older txids can arrive (watermark-bounded).
+  * Scale notes: the only full pass over the *batch* is one shuffle —
+  * by bucket on the steady path, by (bucket, salt) on the bulk path.
+  * The target table is touched only on affected buckets; the steady
+  * path's version gate is a broadcast join keyed on the merge key.
+  * Nothing scans unaffected data. Tombstones accumulate only for
+  * deleted keys; compact() can drop them once no older txids can
+  * arrive (watermark-bounded).
   */
 object CdcApply {
 
@@ -113,16 +119,6 @@ object CdcApply {
     val novel = incoming.fields.filterNot(f =>
       known.contains(f.name) || ignore.contains(f.name))
     StructType(widened ++ novel.map(_.copy(nullable = true)))
-  }
-
-  /** Project `df` onto `schema`: missing columns become typed nulls,
-    * present columns are cast to the table's type. */
-  private def align(df: DataFrame, schema: StructType): DataFrame = {
-    val cols = schema.fields.map { f =>
-      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }
-    df.select(cols.toSeq: _*)
   }
 
   /** Columns stored in the table: merge keys + payload + CDC metadata
@@ -281,11 +277,11 @@ object CdcApply {
       // 3. align winners to the stored schema; deletes become tombstones
       // with payload nulled (the per-key version gate needs them so a
       // stale update arriving after a newer delete cannot resurrect).
-      // Shared by the steady/broadcast winners and the bulk path's
-      // co-partitioned winners (which carry extra tag columns).
+      // Shared by the steady/broadcast winners and the bulk path's raw
+      // events (collapsed by the shared resolve instead).
       val keyCols = Model.MergeKeys.toSet
       val isDel = col("_op") === "delete"
-      def alignWinnerCols(srcCols: Seq[String]): Seq[org.apache.spark.sql.Column] =
+      def alignWinnerCols(srcCols: Seq[String]): Seq[Column] =
         schema.fields.map { f =>
           if (f.name == "_deleted") isDel.as("_deleted")
           else if (keyCols(f.name) || f.name == "_txid" || f.name == "_etag")
@@ -330,27 +326,26 @@ object CdcApply {
       val foldSet = foldBuckets.toSet
       val consSet = consBuckets.toSet
       val deltaBuckets: Seq[Int] = touched.filterNot(b => foldSet(b) || consSet(b))
-      // resolved view of ONLY the buckets this apply rewrites (lazy —
-      // the pure-delta path never executes it)
-      lazy val target = align(table.readBuckets(spark, foldBuckets), schema)
+      // the RAW stored rows (base + deltas, unresolved) of `buckets`,
+      // aligned to this apply's schema — the stored side of every
+      // shared resolve below
+      def storedRows(buckets: Seq[Int]): DataFrame =
+        align(table.readBuckets(spark, buckets, resolve = false), schema)
 
       val bucketOf = table.bucketCol(col("conv_id"))
       val (nEff, nDeletes, maxTxRaw, deltaAdds, deltaReplaces) = if (broadcastPath) {
         // 4a. BROADCAST MERGE (steady-state CDC): the batch's keys are
-        // small, so the TARGET side is never shuffled at all —
+        // small, so the gate never shuffles the TARGET side —
         //   (i)  gate: target's (key, _txid) — a column-pruned narrow
         //        scan — broadcast-joins the winner keys to find which
         //        winners take effect (w._txid > stored _txid or new key);
-        //   (ii) merge: survivors = target LEFT ANTI broadcast(effective
-        //        keys) — the full payload streams from the bucket files
-        //        straight to the writer, zero exchanges —
-        //        ∪ effective winners;
-        //   (iii) write partitioned by _bucket: rows arrive already
-        //        grouped by bucket (each task reads one bucket's files),
-        //        so no repartition and no salt are needed — there is no
-        //        key-based shuffle for a hot conversation to skew.
-        // At 100 TB this is the difference between rewriting touched
-        // buckets at disk bandwidth and re-shuffling them every batch.
+        //   (ii) plain buckets append the effective winners as one more
+        //        delta dir — the payload of the target is never read;
+        //   (iii) buckets at the depth cap consolidate (stack ∪ winners)
+        //        or fold (base ∪ stack ∪ winners) through the shared
+        //        resolve — O(stack) or O(bucket), for those buckets only.
+        // At 100 TB this is the difference between writing O(batch) per
+        // micro-batch and re-shuffling the touched buckets every batch.
         val mergeKeys = Model.MergeKeys.map(col)
         // gate over the RAW physical rows (base + deltas, unresolved):
         // the broadcast inner join prunes to the batch's keys FIRST, so
@@ -362,7 +357,7 @@ object CdcApply {
         val effectivePlan =
           if (prev.isEmpty) winnerRows
           else {
-            val rawKeys = align(table.readBuckets(spark, touched, resolve = false), schema)
+            val rawKeys = storedRows(touched)
               .select((mergeKeys :+ col("_txid").as("__t_txid")): _*)
             val wKeys = winnerRows.select(mergeKeys: _*)
             val matched = rawKeys.join(broadcast(wKeys), Model.MergeKeys.toSeq)
@@ -434,243 +429,140 @@ object CdcApply {
           if (n == 0L) return ApplyStats(0L, 0, 0, 0, skippedReplay = false, prevWm, 0)
           (n, nDel, maxTxObs,
             Map.empty[Int, (String, Long)], Map.empty[Int, (String, Long)])
-        } else if (foldBuckets.isEmpty && consBuckets.isEmpty) {
-          // 4a-i. PURE DELTA commit — the steady-state fast path: the
-          // gate, the effectiveness stats (Observation) and the write
-          // run as ONE job — no persist, no separate stats job; a
-          // micro-batch's fixed cost is the prune pre-scan plus this
-          // single write. Winners land as one small bucket-partitioned
-          // parquet dir — O(batch) write regardless of table size; a
-          // single coalesced writer task measured ~40% of steady batch
-          // wall, so each bucket's file is written by its own task.
-          // Readers resolve base ∪ that bucket's deltas per key by max
-          // _txid.
-          val (n, nDel, maxTxObs) = writeObserved(s"delta-$version", deltaOutDir)
-          if (n == 0L)
-            return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-              skippedReplay = false, prevWm, 0)
-          val maxTx = math.max(prevWm, maxTxObs)
-          val adds = LakeTable.footerRowCounts(deltaOutDir).map { case (b, cnt) =>
-            b -> (s"$deltaRel/_bucket=$b", cnt)
+        } else {
+          if (foldBuckets.isEmpty && consBuckets.isEmpty) {
+            // 4a-i. PURE DELTA commit — the steady-state fast path: the
+            // gate, the effectiveness stats (Observation) and the write
+            // run as ONE job — no persist, no separate stats job; a
+            // micro-batch's fixed cost is the prune pre-scan plus this
+            // single write. Winners land as one small bucket-partitioned
+            // parquet dir — O(batch) write regardless of table size; a
+            // single coalesced writer task measured ~40% of steady batch
+            // wall, so each bucket's file is written by its own task.
+            // Readers resolve base ∪ that bucket's deltas per key by max
+            // _txid.
+            val (n, nDel, maxTxObs) = writeObserved(s"delta-$version", deltaOutDir)
+            if (n == 0L)
+              return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
+                skippedReplay = false, prevWm, 0)
+            val maxTx = math.max(prevWm, maxTxObs)
+            val adds = LakeTable.footerRowCounts(deltaOutDir).map { case (b, cnt) =>
+              b -> (s"$deltaRel/_bucket=$b", cnt)
+            }
+            table.commitDelta(schema, adds, maxTx, batchId, Map(
+              "events" -> n, "upserts" -> (n - nDel), "deletes" -> nDel,
+              "bucketsTouched" -> touched.length.toLong,
+              "deltaCommit" -> 1L, "deltaRows" -> n)
+              ++ extraMetrics, queryId)
+            return ApplyStats(version, n, n - nDel, nDel,
+              skippedReplay = false, maxTx, touched.length)
           }
-          table.commitDelta(schema, adds, maxTx, batchId, Map(
-            "events" -> n, "upserts" -> (n - nDel), "deletes" -> nDel,
-            "bucketsTouched" -> touched.length.toLong,
-            "deltaCommit" -> 1L, "deltaRows" -> n)
-            ++ extraMetrics, queryId)
-          return ApplyStats(version, n, n - nDel, nDel,
-            skippedReplay = false, maxTx, touched.length)
-        }
-        // fold/consolidate path: effective is reused (stats, delta
-        // split, anti-join keys, fold union) — persist it once. The
-        // steady path's __bkt tag is dropped here: these branches
-        // re-derive buckets from bucketOf where needed
-        val effective = effectivePlan.drop("__bkt")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val eff = effective.agg(count(lit(1)).as("n"),
-            coalesce(sum(col("_deleted").cast("long")), lit(0L)).as("nDel"),
-            max(col("_txid")).as("maxTx")).head()
-          val n = eff.getLong(0)
-          if (n == 0L)
-            return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-              skippedReplay = false, prevWm, 0)
-          // One bucket-partitioned delta dir serves two roles, disjoint
-          // by bucket: plain buckets APPEND their winners to their
-          // stacks; at-cap-but-small stacks are CONSOLIDATED — stack ∪
-          // winners re-resolved per key (tombstones kept; only a fold
-          // may drop them) into that same dir, which then REPLACES the
-          // stack. Consolidation reads O(stack), never the base.
-          val (adds, replaces) =
-            if (deltaBuckets.isEmpty && consBuckets.isEmpty)
-              (Map.empty[Int, (String, Long)], Map.empty[Int, (String, Long)])
-            else {
-              val plainPart =
-                if (deltaBuckets.isEmpty) None
-                else Some(effective
-                  .where(bucketOf.isin(deltaBuckets.map(Integer.valueOf): _*))
-                  .repartition(bucketOf))
-              val consPart =
-                if (consBuckets.isEmpty) None
-                else {
-                  val stack = align(table.readDeltaStacks(spark, consBuckets), schema)
-                  val consEff = effective
-                    .where(bucketOf.isin(consBuckets.map(Integer.valueOf): _*))
-                  val allCols = schema.fieldNames.toSeq
-                  val resolved = stack.unionByName(consEff)
-                    .groupBy(mergeKeys: _*)
-                    .agg(max_by(struct(allCols.map(col): _*),
-                      struct(col("_txid"), coalesce(col("_etag"), lit("")))).as("__m"))
-                    .select(col("__m.*"))
-                  // one partition (and so one file) per consolidated
+          // fold/consolidate path: effective is reused (stats, delta
+          // split, consolidation and fold unions) — persist it once. The
+          // steady path's __bkt tag is dropped here: these branches
+          // re-derive buckets from bucketOf where needed
+          val effective = effectivePlan.drop("__bkt")
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            val eff = effective.agg(count(lit(1)).as("n"),
+              coalesce(sum(col("_deleted").cast("long")), lit(0L)).as("nDel"),
+              max(col("_txid")).as("maxTx")).head()
+            val n = eff.getLong(0)
+            if (n == 0L)
+              return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
+                skippedReplay = false, prevWm, 0)
+            // One bucket-partitioned delta dir serves two roles, disjoint
+            // by bucket: plain buckets APPEND their winners to their
+            // stacks; at-cap-but-small stacks are CONSOLIDATED — stack ∪
+            // winners re-resolved per key (tombstones kept; only a fold
+            // may drop them) into that same dir, which then REPLACES the
+            // stack. Consolidation reads O(stack), never the base.
+            val (adds, replaces) =
+              if (deltaBuckets.isEmpty && consBuckets.isEmpty)
+                (Map.empty[Int, (String, Long)], Map.empty[Int, (String, Long)])
+              else {
+                val plainPart =
+                  if (deltaBuckets.isEmpty) None
+                  else Some(effective
+                    .where(bucketOf.isin(deltaBuckets.map(Integer.valueOf): _*))
+                    .repartition(bucketOf))
+                val consPart =
+                  if (consBuckets.isEmpty) None
+                  // salt 1: one reducer (and so one file) per consolidated
                   // bucket — the dir lives until the bucket's fold
-                  Some(resolved.repartition(bucketOf))
+                  else Some(table.resolveLatest(
+                    align(table.readDeltaStacks(spark, consBuckets), schema)
+                      .unionByName(effective
+                        .where(bucketOf.isin(consBuckets.map(Integer.valueOf): _*))),
+                    salt = 1))
+                val deltaDf = (plainPart, consPart) match {
+                  case (Some(p), Some(c)) => p.unionByName(c)
+                  case (Some(p), None) => p
+                  case (None, c) => c.get
                 }
-              val deltaDf = (plainPart, consPart) match {
-                case (Some(p), Some(c)) => p.unionByName(c)
-                case (Some(p), None) => p
-                case (None, c) => c.get
+                deltaDf.withColumn("_bucket", bucketOf)
+                  .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
+                  .write.mode("overwrite").partitionBy("_bucket")
+                  .parquet(deltaOutDir.toString)
+                val counts = LakeTable.footerRowCounts(deltaOutDir).map { case (b, cnt) =>
+                  b -> (s"$deltaRel/_bucket=$b", cnt)
+                }
+                (counts.view.filterKeys(b => !consSet(b)).toMap,
+                  counts.view.filterKeys(consSet).toMap)
               }
-              deltaDf.withColumn("_bucket", bucketOf)
+            val nDel = eff.getLong(1)
+            // 4a-ii. broadcast FOLD: rewrite ONLY the buckets whose stacks
+            // earned it — their raw bases + delta stacks ∪ this batch's
+            // winners go through the shared resolve once and become fresh
+            // bases; their stacks clear. The gate already made every
+            // effective winner's _txid beat the stored one, so the default
+            // order picks it. The resolve's one exchange leaves the rows
+            // clustered by bucket, ≤ SaltBuckets files per bucket. Fold
+            // cost is proportional to the folded (hot, churn-heavy)
+            // buckets, never the table.
+            if (foldBuckets.nonEmpty) {
+              val effFold =
+                if (deltaBuckets.isEmpty && consBuckets.isEmpty) effective
+                else effective.where(bucketOf.isin(foldBuckets.map(Integer.valueOf): _*))
+              table.resolveLatest(storedRows(foldBuckets).unionByName(effFold), SaltBuckets)
+                .withColumn("_bucket", bucketOf)
                 .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
                 .write.mode("overwrite").partitionBy("_bucket")
-                .parquet(deltaOutDir.toString)
-              val counts = LakeTable.footerRowCounts(deltaOutDir).map { case (b, cnt) =>
-                b -> (s"$deltaRel/_bucket=$b", cnt)
-              }
-              (counts.view.filterKeys(b => !consSet(b)).toMap,
-                counts.view.filterKeys(consSet).toMap)
+                .parquet(outDir.toString)
             }
-          val nDel = eff.getLong(1)
-          // 4a-ii. broadcast FOLD: rewrite ONLY the buckets whose stacks
-          // earned it — their bases + delta stacks + this batch's
-          // winners become fresh bases and their stacks clear. The old
-          // form shuffled the folded buckets' contents TWICE (the
-          // merge-on-read resolve by key, then the salted output
-          // repartition); now the resolve's one shuffle is keyed by
-          // bucket (LakeTable.readCommit), so the anti-join survivor
-          // rows arrive bucket-clustered and stream straight to the
-          // writer — only the O(batch) winner side is hashed here.
-          // Per-bucket output file counts stay bounded (a bucket's
-          // resolved rows occupy one reducer; un-delta'd buckets are
-          // file-clustered from the scan). Fold cost is proportional
-          // to the folded (hot, churn-heavy) buckets, never the table
-          // — and the table-sized half of it now crosses the network
-          // once, not twice.
-          if (foldBuckets.nonEmpty) {
-            val effKeys = effective.select(mergeKeys: _*)
-            val effFold =
-              if (deltaBuckets.isEmpty && consBuckets.isEmpty) effective
-              else effective.where(bucketOf.isin(foldBuckets.map(Integer.valueOf): _*))
-            val baseSide = target
-              .join(broadcast(effKeys), Model.MergeKeys.toSeq, "left_anti")
-              .withColumn("_bucket", bucketOf)
-            val shufflePartitions = spark.sessionState.conf.numShufflePartitions
-            val winSide = effFold.withColumn("_bucket", bucketOf)
-              .repartition(
-                math.max(1, math.min(shufflePartitions, foldBuckets.length)),
-                col("_bucket"))
-            baseSide.unionByName(winSide)
-              .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-              .write.mode("overwrite").partitionBy("_bucket")
-              .parquet(outDir.toString)
-          }
-          (n, nDel, eff.getLong(2), adds, replaces)
-        } finally effective.unpersist()
+            (n, nDel, eff.getLong(2), adds, replaces)
+          } finally effective.unpersist()
+        }
       } else {
-        // 4b. CO-PARTITIONED FULL-OUTER MERGE (bulk loads/replays,
-        // batch ~ table size): per key the winner takes effect only if
-        // its _txid exceeds the stored row's. Both sides are
-        // pre-partitioned on (__bkt, __slt) — two functionally-
-        // dependent derivatives of the merge keys, added as extra join
-        // keys (a semantic no-op) — so the full-outer sort-merge join
-        // needs NO exchange of its own, and its output arrives at the
-        // writer ALREADY clustered by bucket: each bucket spans at most
-        // saltBuckets reducers, bounding files-per-bucket exactly as
-        // the old salted rewrite did. The previous form paid THREE full
-        // shuffles (events for the winner groupBy, target for the
-        // join, and the ENTIRE merged table again for the salted
-        // output repartition); this form pays exactly TWO — events and
-        // target — and the merged table streams from the join straight
-        // to the writer. At 100 TB the removed exchange is one full
-        // copy of the table over the network per bulk apply.
-        //
-        // __slt spreads every bucket (and so every hot conversation's
-        // bucket) over saltBuckets reducers — that explicit skew
-        // mitigation is what makes it safe to relax Spark's all-keys
-        // co-partition requirement for this one write (the conf exists
-        // precisely because subset co-partitioning trades AQE skew
-        // splitting away; set + restored around the action below).
-        //
-        // The tag expressions hash the keys AFTER casting to the
-        // stored schema types: xxhash64 is type-directed (int 5 and
-        // long 5 hash differently), so tagging a pre-cast events side
-        // would put matching keys in different (bkt, slt) groups and
-        // the join would silently duplicate instead of merge.
-        val convKey = col("conv_id").cast(schema("conv_id").dataType)
-        val turnKey = col("turn_idx").cast(schema("turn_idx").dataType)
-        val bktTag = table.bucketCol(convKey)
-        val sltTag = pmod(xxhash64(convKey, turnKey), lit(saltBuckets.toLong))
-        val shufflePartitions = spark.sessionState.conf.numShufflePartitions
-        // events side: ONE exchange on (bkt, slt); the winner groupBy
-        // keeps that partitioning (subset-of-group-keys distribution)
-        val evTagged = events
-          .withColumn("__bkt", bktTag).withColumn("__slt", sltTag)
-          .repartition(shufflePartitions, col("__bkt"), col("__slt"))
-        // keys are projected from the GROUP-KEY attributes, not out of
-        // the max_by struct: the sort-aggregate's output ordering
-        // (__bkt, __slt, keys) then survives the projection, so the
-        // sort-merge join needs no extra sort on the winners side
-        val bulkWinners = evTagged
-          .groupBy((Seq(col("__bkt"), col("__slt")) ++ Model.MergeKeys.map(col)): _*)
-          .agg(max_by(
-            struct(eventCols.filterNot(Model.MergeKeys.contains).map(col): _*),
-            struct(col("_txid"), coalesce(col("_etag"), lit("")))).as("__w"))
-          .select((Seq(col("__bkt"), col("__slt")) ++
-            Model.MergeKeys.map(col) :+ col("__w.*")): _*)
-        val bulkWinnerRows = bulkWinners.select(
-          (alignWinnerCols(bulkWinners.columns.toSeq)
-            :+ col("__bkt") :+ col("__slt")): _*)
+        // 4b. BULK MERGE (bulk loads/replays, batch ~ table size): the
+        // batch's raw events, aligned to the stored schema, ∪ the RAW
+        // stored rows (base + deltas) of the touched buckets go through
+        // the shared resolve ONCE — one exchange on (bucket, salt), and
+        // its output reaches the writer already clustered by bucket,
+        // each bucket over ≤ saltBuckets reducers (files). The salt
+        // spreads every bucket — and so every hot conversation's — over
+        // saltBuckets reducers. The within-batch collapse, the version
+        // gate and the merge are that one max_by: a stored row ranks
+        // above an event with the same _txid, so an event takes effect
+        // only if its _txid exceeds the stored row's and a re-applied
+        // batch changes nothing. An EMPTY table is the same plan with
+        // nothing to union.
+        val batchRows = events.select(alignWinnerCols(eventCols) :+ lit(true).as("__ev"): _*)
+        val rows =
+          if (prev.isEmpty) batchRows
+          else storedRows(touched).withColumn("__ev", lit(false)).unionByName(batchRows)
         val obs = new org.apache.spark.sql.Observation(s"apply-$version")
-        // An EMPTY table needs no merge: every winner takes effect, so
-        // the target scan and the full-outer join (which would still
-        // sort/probe the 1M-row winner side against an empty relation)
-        // are skipped — the first bulk load is exactly one shuffle and
-        // one write.
-        val merged = if (prev.isEmpty) {
-          bulkWinnerRows.select((schema.fieldNames.map(col).toSeq :+
-              col("__bkt").as("_bucket") :+
-              coalesce(col("_deleted"), lit(false)).as("__takeDel")): _*)
-            .observe(obs,
-              count(lit(1)).as("nEff"),
-              sum(col("__takeDel").cast("long")).as("nDel"),
-              max(col("_txid")).as("maxTx"))
-            .drop("__takeDel")
-        } else {
-        // target side: its ONE exchange, on the same keys
-        val tgtTagged = target
-          .withColumn("__bkt", bktTag).withColumn("__slt", sltTag)
-          .repartition(shufflePartitions, col("__bkt"), col("__slt"))
-        val joined = tgtTagged.alias("t")
-          .join(bulkWinnerRows.alias("w"),
-            Seq("__bkt", "__slt") ++ Model.MergeKeys, "full_outer")
-        val takeWinner = col("w._txid").isNotNull &&
-          (col("t._txid").isNull || col("w._txid") > col("t._txid"))
-        val mergedCols = schema.fields.map { f =>
-          if (keyCols(f.name)) col(f.name)
-          else when(takeWinner, col(s"w.`${f.name}`"))
-            .otherwise(col(s"t.`${f.name}`")).as(f.name)
-        }
-        joined.select((mergedCols.toSeq :+
-            col("__bkt").as("_bucket") :+
-            takeWinner.as("__take") :+
-            (takeWinner && coalesce(col("w._deleted"), lit(false))).as("__takeDel") :+
-            when(takeWinner, col("w._txid")).as("__takeTx")): _*)
+        table.resolveLatest(rows, saltBuckets,
+            struct(col("_txid"), !col("__ev"), coalesce(col("_etag"), lit(""))))
           .observe(obs,
-            sum(col("__take").cast("long")).as("nEff"),
-            sum(col("__takeDel").cast("long")).as("nDel"),
-            max(col("__takeTx")).as("maxTx"))
-          .drop("__take", "__takeDel", "__takeTx")
-        }
-        val sorted = merged
+            sum(col("__ev").cast("long")).as("nEff"),
+            sum((col("__ev") && coalesce(col("_deleted"), lit(false))).cast("long")).as("nDel"),
+            max(when(col("__ev"), col("_txid"))).as("maxTx"))
+          .drop("__ev")
+          .withColumn("_bucket", bucketOf)
           .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-        // subset co-partitioning must be allowed at PLANNING time of
-        // this one action; restore the caller's setting right after.
-        // The flip is session-visible for the write's duration: under
-        // the engine's single-writer-per-session model (concurrent
-        // WRITERS use separate sessions and the OCC commit retry) no
-        // other plan is being built in this session, and the relaxed
-        // setting is semantics-preserving anyway — it only widens
-        // which existing partitionings a join may reuse.
-        val coPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
-        val coPartPrev = spark.conf.getOption(coPartKey)
-        spark.conf.set(coPartKey, "false")
-        try sorted.write.mode("overwrite").partitionBy("_bucket")
+          .write.mode("overwrite").partitionBy("_bucket")
           .parquet(outDir.toString)
-        finally coPartPrev match {
-          case Some(v) => spark.conf.set(coPartKey, v)
-          case None => spark.conf.unset(coPartKey)
-        }
 
         // AQE may rewrite an all-empty merge to an empty relation and
         // drop the CollectMetrics node (same hazard the delta path
@@ -722,15 +614,15 @@ object CdcApply {
     val bounds = events.agg(min("_txid"), max("_txid"), count(lit(1))).head()
     val (lo, hi, n) = (bounds.getLong(0), bounds.getLong(1), bounds.getLong(2))
     val step = math.max(1L, (hi - lo + nBatches) / nBatches)
-    // Per-batch path choice: the FIRST batch always takes the
-    // co-partitioned bulk path (the table is empty — nothing to gate
+    // Per-batch path choice: the FIRST batch always takes the bulk
+    // path (the table is empty — nothing to gate
     // against, and the pre-scan would be pure overhead); later batches
     // small enough for the broadcast merge (estimated by even split)
     // run with bucket pruning, so each lands as an O(batch)
-    // MERGE-ON-READ delta commit instead of a co-partitioned full
-    // rewrite — replay cost becomes O(events + one resolve at read)
+    // MERGE-ON-READ delta commit instead of a bulk full rewrite —
+    // replay cost becomes O(events + one resolve at read)
     // instead of O(nBatches × table). Bulk-sized batches keep the
-    // no-pre-scan co-partitioned path (the estimate only decides
+    // no-pre-scan bulk path (the estimate only decides
     // whether to pay the pre-scan; the apply still measures the exact
     // batch count there before choosing the merge strategy).
     val estBatch = n / math.max(1, nBatches)

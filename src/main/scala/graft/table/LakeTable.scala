@@ -3,7 +3,7 @@ package graft.table
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.json4s._
@@ -71,6 +71,10 @@ case class Commit(
     deltaRowCounts: Map[String, Seq[Long]] = Map.empty,
     renames: Map[String, String] = Map.empty) {
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+
+  /** Every bucket holding data: base keys ∪ delta keys (deltas may hold
+    * buckets with no base yet). */
+  def liveBuckets: Set[Int] = (buckets.keySet ++ deltas.keySet).map(_.toInt)
 
   /** All delta dirs currently stacked on the table. */
   def deltaFiles: Seq[String] = deltas.values.flatten.toSeq.distinct
@@ -166,8 +170,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
         // detectable; the first commit through this code pins the
         // count and ends the exposure.)
         commits.lastOption.foreach { c =>
-          val maxId = (c.buckets.keySet ++ c.deltas.keySet).map(_.toInt)
-            .maxOption.getOrElse(-1)
+          val maxId = c.liveBuckets.maxOption.getOrElse(-1)
           require(maxId < numBuckets,
             s"table at $location holds bucket $maxId but this handle " +
               s"claims numBuckets=$numBuckets — existing table opened " +
@@ -304,23 +307,16 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
   def txidWatermark: Long = currentCommit().map(_.txidWatermark).getOrElse(0L)
 
   /** Read the live rows of the latest snapshot (tombstones filtered). */
-  def read(spark: SparkSession): DataFrame = {
-    val raw = readRaw(spark)
-    if (raw.columns.contains("_deleted"))
-      raw.where(!coalesce(col("_deleted"), lit(false))).drop("_deleted")
-    else raw
-  }
+  def read(spark: SparkSession): DataFrame = LakeTable.dropTombstones(readRaw(spark))
 
   /** Read the latest snapshot INCLUDING delete tombstones (the merge
     * path needs them for the per-key version gate). */
   def readRaw(spark: SparkSession): DataFrame = currentCommit() match {
     case None => spark.emptyDataFrame
-    // every LIVE bucket from the commit itself (base keys ∪ delta keys —
-    // deltas may hold buckets with no base yet), so full-table reads are
+    // every LIVE bucket from the commit itself, so full-table reads are
     // independent of the constructor's numBuckets (a reader — e.g. the
     // SQL facade — need not know the writer's bucket count)
-    case Some(c) => readCommit(spark, c,
-      (c.buckets.keySet ++ c.deltas.keySet).toSeq.map(_.toInt).sorted)
+    case Some(c) => readCommit(spark, c, c.liveBuckets.toSeq.sorted)
   }
 
   /** Snapshot read pruned to the given buckets (MERGE reads only the
@@ -370,11 +366,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     if (gone.nonEmpty) throw new IllegalArgumentException(
       s"version $version references vacuumed data (${gone.take(4).mkString(", ")}" +
         s"${if (gone.size > 4) ", …" else ""}) — outside the retention window")
-    val raw = readCommit(spark, c,
-      (c.buckets.keySet ++ c.deltas.keySet).toSeq.map(_.toInt).sorted)
-    if (raw.columns.contains("_deleted"))
-      raw.where(!coalesce(col("_deleted"), lit(false))).drop("_deleted")
-    else raw
+    LakeTable.dropTombstones(readCommit(spark, c, c.liveBuckets.toSeq.sorted))
   }
 
   /** The newest retained version whose txid high-watermark is ≤ `txid`
@@ -505,14 +497,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
           d.withColumnRenamed(oldName, curName)
         else d
       }
-      val live =
-        if (renamed.columns.contains("_deleted"))
-          renamed.where(!coalesce(col("_deleted"), lit(false)))
-        else renamed
-      live.select(outFields.map { f =>
-        if (live.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
+      LakeTable.align(LakeTable.dropTombstones(renamed), StructType(outFields))
     }
     val post = liveAs(readCommit(spark, to, touched))
     val pre = from.map(c => liveAs(readCommit(spark, c, touched)))
@@ -628,11 +613,6 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
           d.withColumnRenamed(oldName, curName)
         else d
       }
-    def castUp(df: DataFrame): DataFrame =
-      df.select(latest.fields.map { f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
     def readGroup(rels: Seq[String]): Option[DataFrame] = {
       if (rels.isEmpty) return None
       // data/cVVV[/...] for bases, data/cVVVd[/...] for delta dirs —
@@ -667,7 +647,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
             // read renamed columns as all-null
             case None => spark.read.parquet(paths: _*)
           }
-          castUp(applyRenames(scan))
+          LakeTable.align(applyRenames(scan), latest)
         }.reduce(_ unionByName _))
     }
     val baseDf = readGroup(base)
@@ -680,40 +660,46 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], c.schema)
     }
     // MERGE-ON-READ resolve: a key may appear in the base and in any
-    // number of delta files — the highest _txid wins (etag tiebreak for
-    // duplicated txids). Skipped entirely when no deltas exist. A
-    // max_by instead of a row_number window, and the ONE hash shuffle
-    // is keyed by (BUCKET, SALT) — both functions of the merge keys,
-    // appended as extra grouping columns: same shuffle volume (map-side
-    // combine almost never fired on the key-hashed form — base and
-    // delta rows of a key colocate per scan split only rarely), but
-    // the resolved rows come out CLUSTERED BY BUCKET, so a fold can
-    // stream them straight to its bucket-partitioned writer with no
-    // further exchange and ≤ SaltBuckets files per bucket. The salt
-    // keeps the aggregation's parallelism at numBuckets × SaltBuckets
-    // (not numBuckets) and spreads a hot bucket's resolve across
-    // SaltBuckets reducers instead of funneling it through one.
-    // A bucket with NO base and at most ONE delta dir cannot hold a
-    // duplicated key (each delta dir is one batch's per-key-unique
-    // winners; a consolidated dir is per-key resolved) — so a freshly
-    // bootstrapped delta-only table skips the resolve shuffle outright.
+    // number of delta files — the newest row wins (resolveLatest).
+    // Skipped entirely when no deltas exist. A bucket with NO base and
+    // at most ONE delta dir cannot hold a duplicated key (each delta
+    // dir is one batch's per-key-unique winners; a consolidated dir is
+    // per-key resolved) — so a freshly bootstrapped delta-only table
+    // skips the resolve shuffle outright.
     val resolveFree = base.isEmpty && buckets.forall(b =>
       c.deltas.getOrElse(b.toString, Nil).size <= 1)
     if (deltaDf.isEmpty || !resolve || resolveFree) combined
-    else {
-      val keys = graft.model.Model.MergeKeys
-      val allCols = combined.columns.toSeq
-      val p = spark.sessionState.conf.numShufflePartitions
-      val salt = pmod(xxhash64(col("conv_id"), col("turn_idx")),
-        lit(LakeTable.SaltBuckets.toLong))
-      combined.withColumn("__bkt", bucketCol(col("conv_id")))
-        .withColumn("__slt", salt)
-        .repartition(p, col("__bkt"), col("__slt"))
-        .groupBy((Seq(col("__bkt"), col("__slt")) ++ keys.map(col)): _*)
-        .agg(max_by(struct(allCols.map(col): _*),
-          struct(col("_txid"), coalesce(col("_etag"), lit("")))).as("__m"))
-        .select(col("__m.*"))
-    }
+    else resolveLatest(combined, LakeTable.SaltBuckets)
+  }
+
+  /** The engine's one merge rule — the newest row per (conv_id,
+    * turn_idx) wins (the reference's `sort -r | uniq`,
+    * manta/dc_inputs_2b.sh:33-35) — shared by the merge-on-read
+    * resolve, the fold, the consolidation and the bulk apply. `rows`
+    * must already be aligned to the stored schema (the bucket hash is
+    * type-directed). "Newest" is the greatest `order`,
+    * by default (_txid, _etag); the bulk apply slots a stored-row flag
+    * between the two so a stored row wins a _txid tie.
+    *
+    * A max_by instead of a row_number window, and the ONE hash shuffle
+    * is keyed by (BUCKET, SALT) — both functions of the merge keys,
+    * appended as extra grouping columns: the result comes out
+    * CLUSTERED BY BUCKET, so a bucket-partitioned writer consumes it
+    * with no further exchange and ≤ `salt` files per bucket. The salt
+    * keeps the aggregation's parallelism at numBuckets × salt (not
+    * numBuckets) and spreads a hot bucket's resolve across `salt`
+    * reducers instead of funneling it through one; `salt = 1` keeps
+    * each bucket whole in one reducer (one file per bucket). */
+  private[graft] def resolveLatest(rows: DataFrame, salt: Int,
+      order: Column = struct(col("_txid"), coalesce(col("_etag"), lit("")))): DataFrame = {
+    val keys = graft.model.Model.MergeKeys
+    val p = rows.sparkSession.sessionState.conf.numShufflePartitions
+    rows.withColumn("__bkt", bucketCol(col("conv_id")))
+      .withColumn("__slt", pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(salt.toLong)))
+      .repartition(p, col("__bkt"), col("__slt"))
+      .groupBy((Seq(col("__bkt"), col("__slt")) ++ keys.map(col)): _*)
+      .agg(max_by(struct(rows.columns.toSeq.map(col): _*), order).as("__m"))
+      .select(col("__m.*"))
   }
 
   def nextVersion: Long = currentCommit().map(_.version + 1).getOrElse(1L)
@@ -813,7 +799,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val log = cachedCommits()
     if (log.isEmpty) return Set.empty
     if (log.head.version > sinceVersion + 1)
-      return (log.last.buckets.keySet ++ log.last.deltas.keySet).map(_.toInt)
+      return log.last.liveBuckets
     // log.head's own predecessor (version == sinceVersion) is never in
     // the retained log, so sliding(2) can't see head's changes. When the
     // head itself is inside the conflict window — two writers racing on
@@ -822,7 +808,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     // visible predecessor to diff against; refusal is the safe answer).
     val headOwn: Set[Int] =
       if (log.head.version == sinceVersion + 1)
-        (log.head.buckets.keySet ++ log.head.deltas.keySet).map(_.toInt)
+        log.head.liveBuckets
       else Set.empty
     headOwn ++ log.sliding(2).collect {
       case Seq(a, b) if b.version > sinceVersion =>
@@ -1020,9 +1006,8 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       // base; rewriting them clears their delta stacks in commit().
       // `counts` are the fresh post-compaction row counts: the
       // tombstones just dropped must leave the per-bucket lineage too
-      val liveBuckets = c.buckets.keySet.map(_.toInt) ++ c.deltas.keySet.map(_.toInt)
       val rewritten: Map[Int, Option[String]] =
-        liveBuckets.map { b =>
+        c.liveBuckets.map { b =>
           b -> (if (dirs.contains(s"_bucket=$b")) Some(s"$rel/_bucket=$b") else None)
         }.toMap
       commit(c.schema, rewritten, counts, c.txidWatermark, -1L,
@@ -1078,8 +1063,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       s"table at $location is already laid out with $oldN buckets")
     val (rel, dirs, counts) = writeBase(readRaw(spark), c.version + 1,
       LakeTable.bucketColFor(col("conv_id"), newNumBuckets))
-    val allBuckets = c.buckets.keySet.map(_.toInt) ++
-      c.deltas.keySet.map(_.toInt) ++ (0 until newNumBuckets)
+    val allBuckets = c.liveBuckets ++ (0 until newNumBuckets)
     val rewritten: Map[Int, Option[String]] = allBuckets.map { b =>
       b -> (if (dirs.contains(s"_bucket=$b")) Some(s"$rel/_bucket=$b") else None)
     }.toMap
@@ -1153,6 +1137,22 @@ object LakeTable {
     * (see [[LakeTable.effectiveNumBuckets]]). */
   val NumBucketsKey = "numBuckets"
 
+  /** Project `df` onto `schema`: missing columns become typed nulls,
+    * present columns are cast to the schema's type (reader-side type
+    * promotion and the apply's alignment to the stored schema). */
+  private[graft] def align(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toSeq.map { f =>
+      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
+
+  /** The live rows of a raw read: delete tombstones filtered out, the
+    * `_deleted` marker dropped. */
+  private[graft] def dropTombstones(raw: DataFrame): DataFrame =
+    if (raw.columns.contains("_deleted"))
+      raw.where(!coalesce(col("_deleted"), lit(false))).drop("_deleted")
+    else raw
+
   /** The layout hash: conv → bucket id in a given hash space. */
   def bucketColFor(conv: org.apache.spark.sql.Column,
       n: Int): org.apache.spark.sql.Column =
@@ -1181,24 +1181,27 @@ object LakeTable {
     finally s.close()
   }
 
+  /** Read-only Hadoop conf shared by every footer read (building one
+    * parses the default resources; footerRowCounts reads from a pool). */
+  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+
   /** Open each part's footer and fold `f` over the readers — the one
     * shared open/close loop behind the row-count / column-bytes /
     * column-stats helpers. */
   private[graft] def withFooters[T](path: Path)(
-      f: org.apache.parquet.hadoop.ParquetFileReader => T): Seq[T] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): Seq[T] =
     parquetParts(path).map { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), conf)
+        new org.apache.hadoop.fs.Path(p.toUri), footerConf)
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try f(rd) finally rd.close()
     }
-  }
 
   /** Footer row count of the part-*.parquet files DIRECTLY under
-    * `dir` (no `_bucket=` partitioning) — the fallback truth source for
-    * flat writes like [[graft.cdc.CdcOut]]'s pull dirs when the write
-    * job's Observation metric was elided by a statically-empty plan.
+    * `dir` (no `_bucket=` partitioning) — one bucket's count in
+    * [[footerRowCounts]], and the fallback truth source for flat writes
+    * like [[graft.cdc.CdcOut]]'s pull dirs when the write job's
+    * Observation metric was elided by a statically-empty plan.
     * Driver-side metadata only, no Spark job. */
   def flatFooterRowCount(dir: Path): Long =
     withFooters(dir)(_.getRecordCount).sum
@@ -1231,7 +1234,6 @@ object LakeTable {
   def footerRowCounts(outDir: Path): Map[Int, Long] = {
     import scala.jdk.CollectionConverters._
     if (!Files.isDirectory(outDir)) return Map.empty
-    val conf = new org.apache.hadoop.conf.Configuration()
     val s = Files.list(outDir)
     val bucketDirs = try s.iterator().asScala
       .filter(_.getFileName.toString.startsWith("_bucket=")).toList
@@ -1248,18 +1250,8 @@ object LakeTable {
     try {
       val futures = bucketDirs.map { dir =>
         Future {
-          val bucket = dir.getFileName.toString.stripPrefix("_bucket=").toInt
-          val fs = Files.list(dir)
-          val parts = try fs.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toList
-          finally fs.close()
-          val n = parts.map { f =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.toUri), conf)
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try rd.getRecordCount finally rd.close()
-          }.sum
-          bucket -> n
+          dir.getFileName.toString.stripPrefix("_bucket=").toInt ->
+            flatFooterRowCount(dir)
         }
       }
       Await.result(Future.sequence(futures), Duration.Inf).toMap

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.cdc.CdcApply
 import graft.model.Corpus
+import graft.queries.Scratch
 import graft.table.LakeTable
 
 /** Two-cluster-size scaling evidence (BASELINE.json north rule): run the
@@ -30,11 +31,7 @@ object ScalingBench {
   }
 
   def runAt(cpus: Int, nEvents: Long, nBatches: Int, workDir: String): RunResult = {
-    val spark = Session.builder(s"graft-scaling-$cpus", cpus)
-      // hash join beats sort-merge for the full-outer MERGE (no sorts)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_SMJ", "true"))
-      .getOrCreate()
+    val spark = Session(s"graft-scaling-$cpus", cpus)
     replayBench(spark, cpus, nEvents, nBatches, workDir)
   }
 
@@ -66,8 +63,6 @@ object ScalingBench {
       .config("spark.executor.extraClassPath",
         System.getProperty("java.class.path"))
       .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_SMJ", "true"))
       .getOrCreate()
     replayBench(spark, cpus, nEvents, nBatches, workDir)
   }
@@ -111,10 +106,10 @@ object ScalingBench {
 
   /** Steady-state incremental apply: a pre-loaded table takes a train
     * of SMALL batches — the CDC shape the broadcast merge path exists
-    * for. `forceOuter` pins the old full-outer plan so the two paths'
+    * for. `forceBulk` pins the bulk merge plan so the two paths'
     * wall/CPU cost per event can be A/B'd on identical input. */
   def runSteady(cpus: Int, baseEvents: Long, batchEvents: Long,
-      nBatches: Int, forceOuter: Boolean, workDir: String,
+      nBatches: Int, forceBulk: Boolean, workDir: String,
       hotBuckets: Int = 0): RunResult = {
     val spark = Session(s"graft-steady-$cpus", cpus)
     val cpuListener = new CpuTimeListener
@@ -127,7 +122,7 @@ object ScalingBench {
           partitions = cpus * 4)
         .write.mode("overwrite").parquet(logDir)
       val events = spark.read.parquet(logDir)
-      val mode = if (forceOuter) "outer" else "bcast"
+      val mode = if (forceBulk) "bulk" else "bcast"
       val table = new LakeTable(s"$workDir/table-$cpus-$mode", numBuckets = 64)
       // base load (untimed): the table the steady batches merge into
       CdcApply.applyBatch(spark, table,
@@ -149,7 +144,7 @@ object ScalingBench {
         if (hotBuckets > 0) batch = batch.where(table.bucketCol(
           org.apache.spark.sql.functions.col("conv_id")) < hotBuckets)
         val st = CdcApply.applyBatch(spark, table, batch,
-          broadcastThreshold = if (forceOuter) 0L else CdcApply.BroadcastMergeMaxEvents)
+          broadcastThreshold = if (forceBulk) 0L else CdcApply.BroadcastMergeMaxEvents)
         appliedTotal += st.applied
         val folded = table.currentCommit()
           .flatMap(_.metrics.get("foldedBuckets")).getOrElse(0L)
@@ -186,15 +181,15 @@ object ScalingBench {
     // single pinned run (drive with `taskset -c 0-(N-1)` so local[N]
     // really has N cores — on one box the JVM otherwise borrows idle
     // cores for GC and shuffle threads, skewing the N vs 4N compare)
-    // steady-state A/B: runMain ... steady <cpus> <baseEvents> <batchEvents> <nBatches> <bcast|outer>
+    // steady-state A/B: runMain ... steady <cpus> <baseEvents> <batchEvents> <nBatches> <bcast|bulk>
     case Some("steady") =>
       val cpus = args(1).toInt
       val base = if (args.length > 2) args(2).toLong else 4000000L
       val per = if (args.length > 3) args(3).toLong else 100000L
       val nb = if (args.length > 4) args(4).toInt else 20
       val mode = if (args.length > 5) args(5) else "bcast"
-      val r = runSteady(cpus, base, per, nb, forceOuter = mode == "outer",
-        s"/root/repo/target/steady-$cpus-$mode-${System.nanoTime()}")
+      val r = runSteady(cpus, base, per, nb, forceBulk = mode == "bulk",
+        Scratch.dir(s"steady-$cpus-$mode-"))
       println(f"""{"bench":"cdc_steady","mode":"$mode","cpus":$cpus,""" +
         f""""base_events":$base,"batch_events":$per,"n_batches":$nb,""" +
         f""""secs":${r.secs}%.1f,"events_per_sec":${r.throughput}%.0f,""" +
@@ -207,8 +202,8 @@ object ScalingBench {
       val per = if (args.length > 3) args(3).toLong else 100000L
       val nb = if (args.length > 4) args(4).toInt else 27
       val hot = if (args.length > 5) args(5).toInt else 8
-      val r = runSteady(cpus, base, per, nb, forceOuter = false,
-        s"/root/repo/target/steadyhot-$cpus-${System.nanoTime()}", hotBuckets = hot)
+      val r = runSteady(cpus, base, per, nb, forceBulk = false,
+        Scratch.dir(s"steadyhot-$cpus-"), hotBuckets = hot)
       println(f"""{"bench":"cdc_steady_hot","cpus":$cpus,"base_events":$base,""" +
         f""""batch_events_prefilter":$per,"n_batches":$nb,"hot_buckets":$hot,""" +
         f""""applied":${r.events},"secs":${r.secs}%.1f,""" +
@@ -221,8 +216,7 @@ object ScalingBench {
       val mem = if (args.length > 3) args(3).toInt else 4096
       val nEvents = if (args.length > 4) args(4).toLong else 16000000L
       val nBatches = if (args.length > 5) args(5).toInt else 4
-      val r = runCluster(w, c, mem, nEvents, nBatches,
-        s"/root/repo/target/cluster-$w-$c-${System.nanoTime()}")
+      val r = runCluster(w, c, mem, nEvents, nBatches, Scratch.dir(s"cluster-$w-$c-"))
       println(f"""{"bench":"cdc_cluster","workers":$w,"cores_per_worker":$c,""" +
         f""""executor_mem_mb":$mem,"n_events":$nEvents,""" +
         f""""secs":${r.secs}%.1f,"events_per_sec":${r.throughput}%.0f,""" +
@@ -231,8 +225,7 @@ object ScalingBench {
       val cpus = args(1).toInt
       val nEvents = if (args.length > 2) args(2).toLong else 2000000L
       val nBatches = if (args.length > 3) args(3).toInt else 4
-      val r = runAt(cpus, nEvents, nBatches,
-        s"/root/repo/target/scaling-$cpus-$nEvents-${System.nanoTime()}")
+      val r = runAt(cpus, nEvents, nBatches, Scratch.dir(s"scaling-$cpus-$nEvents-"))
       println(f"""{"bench":"cdc_single","cpus":$cpus,"n_events":$nEvents,""" +
         f""""secs":${r.secs}%.1f,"events_per_sec":${r.throughput}%.0f,""" +
         f""""cpu_secs":${r.cpuSecs}%.1f,"events_per_cpu_sec":${r.perCpuThroughput}%.0f}""")
@@ -241,7 +234,7 @@ object ScalingBench {
       val nEvents = if (args.length > 0) args(0).toLong else 2000000L
       val nBatches = if (args.length > 1) args(1).toInt else 4
       val n = if (args.length > 2) args(2).toInt else 8
-      val work = s"/root/repo/target/scaling-$nEvents"
+      val work = Scratch.dir(s"scaling-$nEvents-")
       val rN = runAt(n, nEvents, nBatches, work)
       val r4N = runAt(n * 4, nEvents, nBatches, work)
       val efficiency = (r4N.throughput / rN.throughput) / 4.0

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc.CdcApply
 import graft.model.Corpus
+import graft.queries.Scratch
 import graft.table.LakeTable
 
 /** Hot-conversation skew evidence (north rule: "mitigates
@@ -47,7 +48,7 @@ object SkewBench {
     val spark = Session("graft-skew-bench", cpus)
     val listener = new StageTaskListener
     spark.sparkContext.addSparkListener(listener)
-    val work = s"/root/repo/target/skew-bench-${System.nanoTime()}"
+    val work = Scratch.dir("skew-bench-")
     try {
       val nConvs = math.max(1000, (nEvents / 200).toInt)
       val per = nEvents / 20

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.cdc.CdcApply
@@ -22,6 +24,16 @@ class CdcApplySpec extends SparkSpec {
     // distinct key's winner takes effect
     assert(stats.applied == events.select("conv_id", "turn_idx").distinct().count())
     assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+    // the bootstrap base is written once, one file per bucket — not
+    // rewritten again by the (salted) fold branch
+    val base = java.nio.file.Paths.get(table.location, "data", "c000000000001")
+    def list(d: java.nio.file.Path) = {
+      val s = java.nio.file.Files.list(d)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val perBucket = list(base).filter(_.getFileName.toString.startsWith("_bucket="))
+      .map(b => list(b).count(_.toString.endsWith(".parquet")))
+    assert(perBucket.nonEmpty && perBucket.forall(_ == 1), s"files per bucket: $perBucket")
   }
 
   test("multi-batch incremental replay matches the oracle") {
@@ -33,15 +45,29 @@ class CdcApplySpec extends SparkSpec {
 
   test("overlapping replay is idempotent (exactly-once via txid watermark)") {
     val events = corpus(1500)
-    val table = new LakeTable(tmpDir("overlap"), numBuckets = 16)
     val b1 = events.where(col("_txid") <= 1000)
     val b2 = events.where(col("_txid") > 500) // overlaps 501..1000
-    CdcApply.applyBatch(spark, table, b1)
-    CdcApply.applyBatch(spark, table, b2)
-    // replay everything again — must be a no-op
-    val s3 = CdcApply.applyBatch(spark, table, events)
-    assert(s3.applied == 0)
-    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+    // the default (broadcast/delta) path, and the bulk merge, where a
+    // stored row must win every _txid tie
+    Seq(CdcApply.BroadcastMergeMaxEvents, 0L).foreach { threshold =>
+      val table = new LakeTable(tmpDir(s"overlap-$threshold"), numBuckets = 16)
+      CdcApply.applyBatch(spark, table, b1, broadcastThreshold = threshold)
+      CdcApply.applyBatch(spark, table, b2, broadcastThreshold = threshold)
+      val head = table.currentCommit().get.version
+      def dataDirs = {
+        val s = java.nio.file.Files.list(java.nio.file.Paths.get(table.location, "data"))
+        try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+      }
+      val before = dataDirs
+      // replay everything again — must be a no-op
+      val s3 = CdcApply.applyBatch(spark, table, events, broadcastThreshold = threshold)
+      assert(s3.applied == 0, s"threshold=$threshold")
+      assert(table.currentCommit().get.version == head,
+        s"threshold=$threshold: a pure replay committed")
+      assert(dataDirs == before,
+        s"threshold=$threshold: replay left ${dataDirs -- before} behind")
+      assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+    }
   }
 
   test("batchId replay short-circuits") {
@@ -161,28 +187,37 @@ class CdcApplySpec extends SparkSpec {
     assert(rows.length == 1 && rows.head.getAs[String]("text") == "v30")
   }
 
-  test("delta, broadcast-rewrite and full-outer paths produce identical final state") {
+  test("delta, broadcast-rewrite and bulk paths produce identical final state") {
     val events = corpus(2000)
     val segs = Seq(
       events.where(col("_txid") <= 700),
       events.where(col("_txid") > 700 && col("_txid") <= 1400),
       events.where(col("_txid") > 1400))
     val tA = new LakeTable(tmpDir("path-delta"), numBuckets = 16)
-    val tB = new LakeTable(tmpDir("path-fullouter"), numBuckets = 16)
+    val tB = new LakeTable(tmpDir("path-bulk"), numBuckets = 16)
     val tC = new LakeTable(tmpDir("path-bcast-rw"), numBuckets = 16)
-    segs.foreach { s =>
+    val tD = new LakeTable(tmpDir("path-bulk-onto-deltas"), numBuckets = 16)
+    segs.zipWithIndex.foreach { case (s, i) =>
       CdcApply.applyBatch(spark, tA, s) // default: base then MoR deltas
-      CdcApply.applyBatch(spark, tB, s, broadcastThreshold = 0L) // full-outer
+      CdcApply.applyBatch(spark, tB, s, broadcastThreshold = 0L) // bulk
       CdcApply.applyBatch(spark, tC, s, maxDeltaDepth = 0) // broadcast rewrite
+      // base + a delta stack, then a bulk merge onto the stack
+      if (i < 2) CdcApply.applyBatch(spark, tD, s)
+      else {
+        assert(tD.currentCommit().get.deltaFiles.nonEmpty)
+        CdcApply.applyBatch(spark, tD, s, broadcastThreshold = 0L)
+      }
     }
     assert(tA.currentCommit().get.metrics("deltaCommit") == 1L)
     assert(tA.currentCommit().get.deltaFiles.nonEmpty)
     assert(tB.currentCommit().get.metrics("broadcastMerge") == 0L)
     assert(tC.currentCommit().get.metrics("broadcastMerge") == 1L)
     assert(tC.currentCommit().get.deltaFiles.isEmpty)
+    assert(tD.currentCommit().get.metrics("broadcastMerge") == 0L)
     assertSameRows(finalPayload(tA), finalPayload(tB))
     assertSameRows(finalPayload(tC), finalPayload(tB))
     assertSameRows(finalPayload(tA), Corpus.oracleFinalState(events))
+    assertSameRows(finalPayload(tD), Corpus.oracleFinalState(events))
   }
 
   test("delta depth is bounded: the apply folds deltas into a fresh base at the cap") {

@@ -284,55 +284,29 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("bulk merge write shuffles exactly twice — the merged table is never re-shuffled") {
-    // The full-outer bulk path pre-partitions BOTH sides on the
-    // functionally-dependent (__bkt, __slt) join keys, so the merge
-    // join is subset-co-partitioned and its output flows to the
-    // partitionBy writer with NO third exchange. Three exchanges here
-    // means the old shape is back: the entire merged table crossing
-    // the network a second time per bulk apply — at 100 TB, a full
-    // extra copy of the table per load.
-    val table = new LakeTable(tmpDir("planbulk"), numBuckets = 8)
-    val ev = Corpus.changeEvents(spark, 6000, nConvs = 60, maxTurns = 8)
-    // first bulk load seeds the table; the SECOND bulk apply is the
-    // interesting plan (non-empty target side)
-    CdcApply.applyBatch(spark, table, ev.where(col("_txid") <= 3000),
-      pruneBuckets = false)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.add(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val s = CdcApply.applyBatch(spark, table, ev.where(col("_txid") > 3000),
-        pruneBuckets = false)
-      assert(s.applied > 0)
+  /** Gate for one bulk apply of `ev` onto `table`: the merge is the
+    * shared latest-per-key resolve, so the write job has exactly ONE
+    * exchange — events ∪ stored rows hashed on (bucket, salt) — and no
+    * join at all, and files per bucket stay bounded by the salt width.
+    * A second exchange means the merged table crosses the network again
+    * (at 100 TB, a full extra copy of the table per load); a join means
+    * the full-outer merge is back. */
+  private def assertBulkWriteShape(table: LakeTable,
+      ev: org.apache.spark.sql.DataFrame): Unit =
+    withBulkApplyPlans(table, ev, pruneBuckets = false,
+        CdcApply.BroadcastMergeMaxEvents) { (_, writePlans) =>
       import scala.jdk.CollectionConverters._
-      def writePlans = plans.iterator().asScala.toSeq.filter { qe =>
-        val p = qe.executedPlan.toString
-        p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
-      }
-      var tries = 0
-      while (writePlans.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
-      assert(writePlans.nonEmpty, "no write-job plan captured")
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       writePlans.foreach { qe =>
         val nodes = flattenPlan(qe.executedPlan).distinct
         val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
-        assert(exchanges.size == 2,
-          s"bulk merge write has ${exchanges.size} exchanges (want 2 — " +
-            s"events + target, none above the join):\n${qe.executedPlan}")
-        // and the join must sit ABOVE both exchanges (merged output
-        // unshuffled): no exchange may contain a sort-merge join
-        val shuffledJoin = exchanges.exists(
-          e => flattenPlan(e).exists(_.nodeName.contains("SortMergeJoin")))
-        assert(!shuffledJoin,
-          s"merged join output re-shuffled:\n${qe.executedPlan}")
+        assert(exchanges.size == 1,
+          s"bulk merge write has ${exchanges.size} exchanges (want 1 — " +
+            s"events ∪ stored rows on (bucket, salt)):\n${qe.executedPlan}")
+        val joins = nodes.filter(_.nodeName.contains("Join"))
+        assert(joins.isEmpty,
+          s"bulk merge write plans a join (${joins.map(_.nodeName).mkString(", ")}):" +
+            s"\n${qe.executedPlan}")
       }
       // files-per-bucket stays bounded by the salt width
       val dataDir = java.nio.file.Paths.get(table.location, "data")
@@ -347,7 +321,90 @@ class PlanSpec extends SparkSpec {
         assert(nFiles <= CdcApply.SaltBuckets,
           s"bucket dir $b has $nFiles files (> salt width ${CdcApply.SaltBuckets})")
       }
+    }
+
+  /** Runs one bulk apply of `ev` onto `table` and hands `check` every
+    * plan the apply executed plus the subset that are file writes. */
+  private def withBulkApplyPlans(table: LakeTable,
+      ev: org.apache.spark.sql.DataFrame, pruneBuckets: Boolean,
+      broadcastThreshold: Long)(
+      check: (Seq[org.apache.spark.sql.execution.QueryExecution],
+        Seq[org.apache.spark.sql.execution.QueryExecution]) => Unit): Unit = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val s = CdcApply.applyBatch(spark, table, ev, pruneBuckets = pruneBuckets,
+        broadcastThreshold = broadcastThreshold)
+      assert(s.applied > 0)
+      assert(table.currentCommit().get.metrics("broadcastMerge") == 0L)
+      import scala.jdk.CollectionConverters._
+      def writePlans = plans.iterator().asScala.toSeq.filter { qe =>
+        val p = qe.executedPlan.toString
+        p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
+      }
+      var tries = 0
+      while (writePlans.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
+      assert(writePlans.nonEmpty, "no write-job plan captured")
+      check(plans.iterator().asScala.toSeq, writePlans)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("bulk merge write shuffles exactly twice — the merged table is never re-shuffled") {
+    // A bucket-pruned bulk apply end to end: one exchange in the
+    // pre-scan that collects the touched buckets (≤ numBuckets values),
+    // one in the merge write (events ∪ stored rows on (bucket, salt)).
+    // A third means the merged table crosses the network again — at
+    // 100 TB, a full extra copy of the table per load.
+    val table = new LakeTable(tmpDir("planbulk2"), numBuckets = 8)
+    val ev = Corpus.changeEvents(spark, 6000, nConvs = 60, maxTurns = 8)
+    CdcApply.applyBatch(spark, table, ev.where(col("_txid") <= 3000),
+      pruneBuckets = false)
+    withBulkApplyPlans(table, ev.where(col("_txid") > 3000),
+        pruneBuckets = true, broadcastThreshold = 0L) { (plans, writePlans) =>
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      def exchanges(qe: org.apache.spark.sql.execution.QueryExecution) =
+        flattenPlan(qe.executedPlan).distinct.collect { case e: ShuffleExchangeExec => e }
+      val total = plans.map(exchanges(_).size).sum
+      assert(total == 2,
+        s"bulk apply has $total exchanges (want 2 — pre-scan + merge write):\n" +
+          plans.map(_.executedPlan).mkString("\n"))
+      // the merged (aggregated) output is never under an exchange
+      writePlans.foreach { qe =>
+        val reshuffled = exchanges(qe).exists(e =>
+          flattenPlan(e.child).exists(_.nodeName.contains("Aggregate")))
+        assert(!reshuffled, s"merged output re-shuffled:\n${qe.executedPlan}")
+      }
+    }
+  }
+
+  test("bulk merge write shuffles exactly once, with no join — the merged table is never re-shuffled") {
+    val table = new LakeTable(tmpDir("planbulk"), numBuckets = 8)
+    val ev = Corpus.changeEvents(spark, 6000, nConvs = 60, maxTurns = 8)
+    // first bulk load seeds the table; the SECOND bulk apply is the
+    // interesting plan (non-empty target side)
+    CdcApply.applyBatch(spark, table, ev.where(col("_txid") <= 3000),
+      pruneBuckets = false)
+    assertBulkWriteShape(table, ev.where(col("_txid") > 3000))
+  }
+
+  test("bulk merge onto delta stacks shuffles exactly once, with no join") {
+    val table = new LakeTable(tmpDir("planbulkdelta"), numBuckets = 8)
+    val ev = Corpus.changeEvents(spark, 6000, nConvs = 60, maxTurns = 8)
+    CdcApply.applyBatch(spark, table, ev.where(col("_txid") <= 3000),
+      pruneBuckets = false)
+    // a broadcast-sized apply stacks deltas on the base
+    CdcApply.applyBatch(spark, table,
+      ev.where(col("_txid") > 3000 && col("_txid") <= 3500))
+    assert(table.currentCommit().get.deltaDepth >= 1)
+    assertBulkWriteShape(table, ev.where(col("_txid") > 3500))
   }
 
   test("text-analysis queries contain no UDFs (pure codegen expressions)") {

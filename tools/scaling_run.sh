@@ -8,16 +8,20 @@ REPS=${3:-3}
 # override the two pinned configs (cpus cpumask heap) via CFGS, e.g.
 #   CFGS="2 0-1 8g|8 0-7 16g" tools/scaling_run.sh
 CFGS=${CFGS:-"4 0-3 12g|16 0-15 24g"}
-OUT=${SCALING_OUT:-/root/repo/target/scaling_results.jsonl}
+cd "$(dirname "$0")/.."
+OUT=${SCALING_OUT:-$PWD/target/scaling_results.jsonl}
 : > "$OUT"
-cd /root/repo
+# corpora and tables live in per-run scratch roots (graft.queries.Scratch:
+# deleted at exit, swept after a kill); the 16M-event runs are GB-sized,
+# so keep them on disk rather than on the tmpfs default
+export GRAFT_SCRATCH_DIR=${GRAFT_SCRATCH_DIR:-$PWD/target/scaling-scratch}
 for i in $(seq 1 "$REPS"); do
   echo "$CFGS" | tr '|' '\n' | while read -r CFG; do
     set -- $CFG
     CPUS=$1; MASK=$2; MEM=$3
-    rm -rf /root/repo/target/scaling-* /dev/shm/graft-spark-local
+    rm -rf /dev/shm/graft-spark-local
     SPARK_DRIVER_MEM=$MEM taskset -c "$MASK" \
-      sbt -batch "runMain graft.tools.ScalingBench single $CPUS $EVENTS $BATCHES" 2>>/root/repo/target/scaling_stderr.log \
+      sbt -batch "runMain graft.tools.ScalingBench single $CPUS $EVENTS $BATCHES" 2>>target/scaling_stderr.log \
       | grep -o '{"bench".*}' >> "$OUT"
     echo "done rep=$i cpus=$CPUS" >&2
   done
