@@ -38,18 +38,25 @@ case class ApplyStats(
   *      duplication, or batch boundaries (exactly-once = idempotent
   *      keyed upsert; reference analogue: `_etag` change detection,
   *      /root/reference/lib/backup_state.js:135-143);
-  *   4. merge — every rewrite (bulk apply, fold, consolidation) runs
-  *      stored rows ∪ events through ONE shared latest-per-key resolve
+  *   4. one class per touched bucket — DELTA (append the gated
+  *      winners; on an empty table they are the bases), CONSOLIDATE
+  *      (stack ∪ winners → one delta dir, base untouched) or FOLD (base
+  *      ∪ stack ∪ batch → a fresh base; the bulk path folds every
+  *      touched bucket with the raw events as its batch). Both rewrite
+  *      classes run ONE shared latest-per-key resolve
   *      ([[LakeTable.resolveLatest]]), the same rule the merge-on-read
   *      reader applies; a stored row wins a _txid tie;
   *   5. that resolve's one exchange is salted within each bucket, so
   *      one hot conversation cannot serialize a whole bucket into one
   *      task (north-rule skew mandate — the reference has no skew
   *      handling, SURVEY.md §4.1), and its output reaches the
-  *      bucket-partitioned writer with no further exchange;
-  *   6. atomic commit with txid high-watermark + per-bucket lineage
-  *      counts. An entirely-ineffective batch (pure replay) commits
-  *      nothing.
+  *      bucket-partitioned writer with no further exchange. The
+  *      classes' parts are unioned and written by ONE observed write
+  *      into ONE dir (`data/cV` when any base is rewritten, else
+  *      `data/cVd`);
+  *   6. ONE atomic commit with txid high-watermark + per-bucket
+  *      lineage counts from that dir's footers. An entirely-ineffective
+  *      batch (pure replay) leaves no dir and commits nothing.
   *
   * Scale notes: the only full pass over the *batch* is one shuffle —
   * by bucket on the steady path, by (bucket, salt) on the bulk path.
@@ -130,7 +137,7 @@ object CdcApply {
 
   /** Per-batch event-count ceiling for the broadcast merge path: below
     * it, the batch's keys are broadcast and the target side is never
-    * shuffled (see `applyBatch` step 3a). 500k keys ≈ 20-40 MB
+    * shuffled (see `applyBatch` step 5). 500k keys ≈ 20-40 MB
     * broadcast — far under Spark's 8 GB broadcast limit, large enough
     * that every steady-state CDC micro-batch qualifies. */
   val BroadcastMergeMaxEvents = 500000L
@@ -180,9 +187,10 @@ object CdcApply {
       prunedHint: Option[(Seq[Int], Long)] = None): ApplyStats = {
     val prev = table.currentCommit()
     val prevWm = prev.map(_.txidWatermark).getOrElse(0L)
-    if (batchId >= 0 && table.hasBatch(batchId, queryId))
-      return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-        skippedReplay = true, prevWm, 0)
+    // every apply that changes nothing returns this
+    def unchanged(skipped: Boolean) = ApplyStats(prev.map(_.version).getOrElse(0L),
+      0, 0, 0, skippedReplay = skipped, prevWm, 0)
+    if (batchId >= 0 && table.hasBatch(batchId, queryId)) return unchanged(skipped = true)
 
     // Declared column renames (LakeTable.renameColumn): fold events from
     // late producers still emitting a retired key into its CURRENT
@@ -218,37 +226,29 @@ object CdcApply {
     // the batch IS the bucket set of the winners — no window, no
     // materialization, ≤ numBuckets values collected). For bulk replays
     // that touch ~every bucket anyway (pruneBuckets=false) the pre-scan
-    // is pure overhead and skipped. Callers that already run an O(batch)
-    // aggregation of their own (the streaming tail's lineage/drift
-    // summary) pass the bucket set and count as `prunedHint`, folding
-    // the pre-scan into that job — the steady-state micro-batch then
-    // pays exactly ONE pass over the batch before the write.
-    var batchCount = -1L
-    val touched: Seq[Int] = prunedHint match {
-      case Some((buckets, n)) =>
-        batchCount = n
-        if (n == 0L)
-          return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-            skippedReplay = false, prevWm, 0)
-        buckets.sorted
-      case None if !pruneBuckets => 0 until table.effectiveNumBuckets
+    // is pure overhead and skipped (count -1: unknown). Callers that
+    // already run an O(batch) aggregation of their own (the streaming
+    // tail's lineage/drift summary) pass the bucket set and count as
+    // `prunedHint`, folding the pre-scan into that job — the
+    // steady-state micro-batch then pays exactly ONE pass over the batch
+    // before the write.
+    val (touched: Seq[Int], batchCount: Long) = prunedHint match {
+      case Some((buckets, n)) => (buckets.sorted, n)
+      case None if !pruneBuckets => (0 until table.effectiveNumBuckets, -1L)
       case None =>
         // hash the CAST key — the winner tagging below hashes the key
         // cast to the stored type, and xxhash64 is type-directed, so an
         // uncast pre-scan (e.g. a batch whose conv_id inferred bigint
         // against a stored string column) would compute a DIFFERENT
         // bucket set: the gate would read the wrong buckets and a
-        // winner could fall outside every fold/cons/delta partition
+        // winner could fall outside every bucket class
         val eAgg = events.agg(
           collect_set(table.bucketCol(
             col("conv_id").cast(schema("conv_id").dataType))).as("buckets"),
           count(lit(1)).as("n")).head()
-        batchCount = eAgg.getAs[Long]("n")
-        if (batchCount == 0L)
-          return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-            skippedReplay = false, prevWm, 0)
-        eAgg.getSeq[Int](0).sorted
+        (eAgg.getSeq[Int](0).sorted, eAgg.getAs[Long]("n"))
     }
+    if (batchCount == 0L) return unchanged(skipped = false)
 
     // 2. latest event wins per key within the batch (§2.8 semantics) as
     // a partial-aggregable max_by instead of a row_number window — the
@@ -274,334 +274,194 @@ object CdcApply {
         struct(col("_txid"), coalesce(col("_etag"), lit("")))).as("__w"))
       .select(col("__bkt"), col("__w.*"))
 
-      // 3. align winners to the stored schema; deletes become tombstones
-      // with payload nulled (the per-key version gate needs them so a
-      // stale update arriving after a newer delete cannot resurrect).
-      // Shared by the steady/broadcast winners and the bulk path's raw
-      // events (collapsed by the shared resolve instead).
-      val keyCols = Model.MergeKeys.toSet
-      val isDel = col("_op") === "delete"
-      def alignWinnerCols(srcCols: Seq[String]): Seq[Column] =
-        schema.fields.map { f =>
-          if (f.name == "_deleted") isDel.as("_deleted")
-          else if (keyCols(f.name) || f.name == "_txid" || f.name == "_etag")
-            col(f.name).cast(f.dataType).as(f.name)
-          else if (srcCols.contains(f.name))
-            when(isDel, lit(null)).otherwise(col(f.name)).cast(f.dataType).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }.toSeq
-      val winnerRows = winners.select(
-        alignWinnerCols(winners.columns.toSeq) :+ col("__bkt"): _*)
+    // 3. align to the stored schema; deletes become tombstones with
+    // payload nulled (the per-key version gate needs them so a stale
+    // update arriving after a newer delete cannot resurrect). Shared by
+    // the broadcast path's winners and the bulk path's raw events
+    // (collapsed by the fold's resolve instead).
+    val keyCols = Model.MergeKeys.toSet
+    val isDel = col("_op") === "delete"
+    def alignWinnerCols(srcCols: Seq[String]): Seq[Column] =
+      schema.fields.map { f =>
+        if (f.name == "_deleted") isDel.as("_deleted")
+        else if (keyCols(f.name) || f.name == "_txid" || f.name == "_etag")
+          col(f.name).cast(f.dataType).as(f.name)
+        else if (srcCols.contains(f.name))
+          when(isDel, lit(null)).otherwise(col(f.name)).cast(f.dataType).as(f.name)
+        else lit(null).cast(f.dataType).as(f.name)
+      }.toSeq
+    val winnerRows = winners.select(
+      alignWinnerCols(winners.columns.toSeq) :+ col("__bkt"): _*)
 
-      val version = table.nextVersion
-      val rel = f"data/c$version%012d"
-      val deltaRel = f"data/c$version%012dd"
-      val outDir = Paths.get(table.location).resolve(rel)
-      val deltaOutDir = Paths.get(table.location).resolve(deltaRel)
-      val broadcastPath = batchCount >= 0 && batchCount <= broadcastThreshold
-      // Per-bucket maintenance policy: a touched bucket whose delta
-      // stack is at the depth cap is either FOLDED (base ∪ deltas ∪ its
-      // winners rewritten as a fresh base, stack cleared) when its stack
-      // has grown to FoldToBaseRatio of the base — or, cheaper,
-      // CONSOLIDATED (stack ∪ its winners re-resolved into ONE delta
-      // dir, base untouched). Every other touched bucket takes its
-      // winners as one more delta dir. The first commit folds everything
-      // (a delta with nothing under it is just a base with extra read
-      // cost); stacks without tracked row counts (pre-upgrade commits)
-      // fold too. A single commit records all three sides atomically.
-      val (foldBuckets: Seq[Int], consBuckets: Seq[Int]) =
-        if (prev.isEmpty || maxDeltaDepth <= 0 || !broadcastPath)
-          (touched, Seq.empty[Int])
-        else {
-          val c = prev.get
-          touched.filter(b => c.deltaDepthOf(b) >= maxDeltaDepth)
-            .partition { b =>
-              (c.deltaRowsOf(b), c.baseRowsOf(b)) match {
-                case (Some(d), Some(base)) if base > 0 =>
-                  d >= (base * foldRatio).toLong
-                case _ => true
-              }
+    // 4. every touched bucket falls in exactly ONE class:
+    //   DELTA       — the batch's gated winners append to its stack (on
+    //                 an empty table they ARE the bases: nothing under
+    //                 them to resolve against);
+    //   CONSOLIDATE — at the depth cap with a stack still small next to
+    //                 its base: stack ∪ winners re-resolve into ONE
+    //                 delta dir that replaces the stack, base untouched
+    //                 (O(stack), never O(base));
+    //   FOLD        — at the cap with a stack of FoldToBaseRatio of its
+    //                 base (or untracked counts, pre-upgrade commits):
+    //                 base ∪ stack ∪ batch re-resolve into a fresh base,
+    //                 stack cleared. The BULK path (batch ~ table size,
+    //                 count unknown or over the broadcast threshold) is
+    //                 the case where every touched bucket folds and the
+    //                 batch is the raw aligned events: the resolve is
+    //                 then also the within-batch collapse and the gate.
+    // A cold bucket is in no class at all, so cost follows churn.
+    val broadcastPath = batchCount >= 0 && batchCount <= broadcastThreshold
+    val (foldBuckets: Seq[Int], consBuckets: Seq[Int]) =
+      if (!broadcastPath) (touched, Nil)
+      else if (prev.isEmpty) (Nil, Nil)
+      else if (maxDeltaDepth <= 0) (touched, Nil)
+      else {
+        val c = prev.get
+        touched.filter(b => c.deltaDepthOf(b) >= maxDeltaDepth)
+          .partition { b =>
+            (c.deltaRowsOf(b), c.baseRowsOf(b)) match {
+              case (Some(d), Some(base)) if base > 0 =>
+                d >= (base * foldRatio).toLong
+              case _ => true
             }
-        }
-      val foldSet = foldBuckets.toSet
-      val consSet = consBuckets.toSet
-      val deltaBuckets: Seq[Int] = touched.filterNot(b => foldSet(b) || consSet(b))
-      // the RAW stored rows (base + deltas, unresolved) of `buckets`,
-      // aligned to this apply's schema — the stored side of every
-      // shared resolve below
-      def storedRows(buckets: Seq[Int]): DataFrame =
-        align(table.readBuckets(spark, buckets, resolve = false), schema)
-
-      val bucketOf = table.bucketCol(col("conv_id"))
-      val (nEff, nDeletes, maxTxRaw, deltaAdds, deltaReplaces) = if (broadcastPath) {
-        // 4a. BROADCAST MERGE (steady-state CDC): the batch's keys are
-        // small, so the gate never shuffles the TARGET side —
-        //   (i)  gate: target's (key, _txid) — a column-pruned narrow
-        //        scan — broadcast-joins the winner keys to find which
-        //        winners take effect (w._txid > stored _txid or new key);
-        //   (ii) plain buckets append the effective winners as one more
-        //        delta dir — the payload of the target is never read;
-        //   (iii) buckets at the depth cap consolidate (stack ∪ winners)
-        //        or fold (base ∪ stack ∪ winners) through the shared
-        //        resolve — O(stack) or O(bucket), for those buckets only.
-        // At 100 TB this is the difference between writing O(batch) per
-        // micro-batch and re-shuffling the touched buckets every batch.
-        val mergeKeys = Model.MergeKeys.map(col)
-        // gate over the RAW physical rows (base + deltas, unresolved):
-        // the broadcast inner join prunes to the batch's keys FIRST, so
-        // the per-key max-txid aggregation runs on ≤ |winners|·depth
-        // rows instead of window-resolving the whole touched table.
-        // An EMPTY table has nothing to gate against — every winner
-        // takes effect, so the whole gate subtree (scan, broadcast,
-        // agg) is skipped rather than planned over an empty relation.
-        val effectivePlan =
-          if (prev.isEmpty) winnerRows
-          else {
-            val rawKeys = storedRows(touched)
-              .select((mergeKeys :+ col("_txid").as("__t_txid")): _*)
-            val wKeys = winnerRows.select(mergeKeys: _*)
-            val matched = rawKeys.join(broadcast(wKeys), Model.MergeKeys.toSeq)
-              .groupBy(mergeKeys: _*).agg(max(col("__t_txid")).as("__t_txid"))
-            winnerRows
-              .join(broadcast(matched), Model.MergeKeys.toSeq, "left")
-              .where(col("__t_txid").isNull || col("_txid") > col("__t_txid"))
-              .drop("__t_txid")
           }
-
-        // ONE job writes the effective winners to `dir`, partitioned by
-        // bucket, with their stats riding an Observation: (rows,
-        // deletes, max _txid). Winners arrive already hashed by bucket
-        // (the batch's one shuffle, upstream of the winner groupBy):
-        // each bucket lands whole in one task, so the dir holds one file
-        // per bucket written in parallel with NO exchange here. Tiny
-        // batches: a lone writer task beats per-task overhead. Sorted so
-        // each bucket file's row groups carry tight conv_id min/max for
-        // later pruned reads. AQE may replace an all-stale (empty)
-        // winner subtree with an empty relation, dropping the
-        // CollectMetrics node — a missing metrics map therefore USUALLY
-        // means no rows, but never trust a silent no-op: fall back to
-        // the just-written dir (reading the O(batch) output back is
-        // cheap and only happens on that path). An empty dir is deleted
-        // again (no commit — idempotent no-op).
-        def writeObserved(name: String, dir: java.nio.file.Path): (Long, Long, Long) = {
-          val obs = new org.apache.spark.sql.Observation(name)
-          val observed = effectivePlan
-            .observe(obs,
-              count(lit(1)).as("n"),
-              coalesce(sum(col("_deleted").cast("long")), lit(0L)).as("nDel"),
-              max(col("_txid")).as("maxTx"))
-            .withColumn("_bucket", col("__bkt"))
-            .drop("__bkt")
-          val arranged =
-            if (batchCount >= 0 && batchCount < ParallelDeltaWriteMinEvents)
-              observed.coalesce(1)
-            else observed
-          arranged
-            .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-            .write.mode("overwrite").partitionBy("_bucket")
-            .parquet(dir.toString)
-          val m = obs.get
-          val stats =
-            if (m.get("n").exists(_ != null))
-              (m("n").asInstanceOf[Long],
-                m("nDel").asInstanceOf[Long],
-                Option(m("maxTx")).map(_.asInstanceOf[Long]).getOrElse(prevWm))
-            else if (LakeTable.footerRowCounts(dir).isEmpty) (0L, 0L, prevWm)
-            else {
-              val r = spark.read.parquet(dir.toString)
-                .agg(count(lit(1)), coalesce(sum(col("_deleted").cast("long")), lit(0L)),
-                  max(col("_txid"))).head()
-              (r.getLong(0), r.getLong(1), r.getLong(2))
-            }
-          if (stats._1 == 0L) LakeTable.deleteRecursively(dir)
-          stats
-        }
-
-        if (prev.isEmpty) {
-          // BOOTSTRAP fold — first commit of a broadcast-sized batch:
-          // every winner takes effect (nothing to gate against), so
-          // the base is written in ONE job with stats riding its
-          // Observation — no gate subtree, no persist, no separate
-          // stats job (the general fold branch pays all three). The
-          // table topology is unchanged: the first commit is a BASE,
-          // exactly as the maintenance policy (and its specs) expect.
-          val (n, nDel, maxTxObs) = writeObserved(s"boot-$version", outDir)
-          if (n == 0L) return ApplyStats(0L, 0, 0, 0, skippedReplay = false, prevWm, 0)
-          (n, nDel, maxTxObs,
-            Map.empty[Int, (String, Long)], Map.empty[Int, (String, Long)])
-        } else {
-          if (foldBuckets.isEmpty && consBuckets.isEmpty) {
-            // 4a-i. PURE DELTA commit — the steady-state fast path: the
-            // gate, the effectiveness stats (Observation) and the write
-            // run as ONE job — no persist, no separate stats job; a
-            // micro-batch's fixed cost is the prune pre-scan plus this
-            // single write. Winners land as one small bucket-partitioned
-            // parquet dir — O(batch) write regardless of table size; a
-            // single coalesced writer task measured ~40% of steady batch
-            // wall, so each bucket's file is written by its own task.
-            // Readers resolve base ∪ that bucket's deltas per key by max
-            // _txid.
-            val (n, nDel, maxTxObs) = writeObserved(s"delta-$version", deltaOutDir)
-            if (n == 0L)
-              return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-                skippedReplay = false, prevWm, 0)
-            val maxTx = math.max(prevWm, maxTxObs)
-            val adds = LakeTable.footerRowCounts(deltaOutDir).map { case (b, cnt) =>
-              b -> (s"$deltaRel/_bucket=$b", cnt)
-            }
-            table.commitDelta(schema, adds, maxTx, batchId, Map(
-              "events" -> n, "upserts" -> (n - nDel), "deletes" -> nDel,
-              "bucketsTouched" -> touched.length.toLong,
-              "deltaCommit" -> 1L, "deltaRows" -> n)
-              ++ extraMetrics, queryId)
-            return ApplyStats(version, n, n - nDel, nDel,
-              skippedReplay = false, maxTx, touched.length)
-          }
-          // fold/consolidate path: effective is reused (stats, delta
-          // split, consolidation and fold unions) — persist it once. The
-          // steady path's __bkt tag is dropped here: these branches
-          // re-derive buckets from bucketOf where needed
-          val effective = effectivePlan.drop("__bkt")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val eff = effective.agg(count(lit(1)).as("n"),
-              coalesce(sum(col("_deleted").cast("long")), lit(0L)).as("nDel"),
-              max(col("_txid")).as("maxTx")).head()
-            val n = eff.getLong(0)
-            if (n == 0L)
-              return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-                skippedReplay = false, prevWm, 0)
-            // One bucket-partitioned delta dir serves two roles, disjoint
-            // by bucket: plain buckets APPEND their winners to their
-            // stacks; at-cap-but-small stacks are CONSOLIDATED — stack ∪
-            // winners re-resolved per key (tombstones kept; only a fold
-            // may drop them) into that same dir, which then REPLACES the
-            // stack. Consolidation reads O(stack), never the base.
-            val (adds, replaces) =
-              if (deltaBuckets.isEmpty && consBuckets.isEmpty)
-                (Map.empty[Int, (String, Long)], Map.empty[Int, (String, Long)])
-              else {
-                val plainPart =
-                  if (deltaBuckets.isEmpty) None
-                  else Some(effective
-                    .where(bucketOf.isin(deltaBuckets.map(Integer.valueOf): _*))
-                    .repartition(bucketOf))
-                val consPart =
-                  if (consBuckets.isEmpty) None
-                  // salt 1: one reducer (and so one file) per consolidated
-                  // bucket — the dir lives until the bucket's fold
-                  else Some(table.resolveLatest(
-                    align(table.readDeltaStacks(spark, consBuckets), schema)
-                      .unionByName(effective
-                        .where(bucketOf.isin(consBuckets.map(Integer.valueOf): _*))),
-                    salt = 1))
-                val deltaDf = (plainPart, consPart) match {
-                  case (Some(p), Some(c)) => p.unionByName(c)
-                  case (Some(p), None) => p
-                  case (None, c) => c.get
-                }
-                deltaDf.withColumn("_bucket", bucketOf)
-                  .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-                  .write.mode("overwrite").partitionBy("_bucket")
-                  .parquet(deltaOutDir.toString)
-                val counts = LakeTable.footerRowCounts(deltaOutDir).map { case (b, cnt) =>
-                  b -> (s"$deltaRel/_bucket=$b", cnt)
-                }
-                (counts.view.filterKeys(b => !consSet(b)).toMap,
-                  counts.view.filterKeys(consSet).toMap)
-              }
-            val nDel = eff.getLong(1)
-            // 4a-ii. broadcast FOLD: rewrite ONLY the buckets whose stacks
-            // earned it — their raw bases + delta stacks ∪ this batch's
-            // winners go through the shared resolve once and become fresh
-            // bases; their stacks clear. The gate already made every
-            // effective winner's _txid beat the stored one, so the default
-            // order picks it. The resolve's one exchange leaves the rows
-            // clustered by bucket, ≤ SaltBuckets files per bucket. Fold
-            // cost is proportional to the folded (hot, churn-heavy)
-            // buckets, never the table.
-            if (foldBuckets.nonEmpty) {
-              val effFold =
-                if (deltaBuckets.isEmpty && consBuckets.isEmpty) effective
-                else effective.where(bucketOf.isin(foldBuckets.map(Integer.valueOf): _*))
-              table.resolveLatest(storedRows(foldBuckets).unionByName(effFold), SaltBuckets)
-                .withColumn("_bucket", bucketOf)
-                .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-                .write.mode("overwrite").partitionBy("_bucket")
-                .parquet(outDir.toString)
-            }
-            (n, nDel, eff.getLong(2), adds, replaces)
-          } finally effective.unpersist()
-        }
-      } else {
-        // 4b. BULK MERGE (bulk loads/replays, batch ~ table size): the
-        // batch's raw events, aligned to the stored schema, ∪ the RAW
-        // stored rows (base + deltas) of the touched buckets go through
-        // the shared resolve ONCE — one exchange on (bucket, salt), and
-        // its output reaches the writer already clustered by bucket,
-        // each bucket over ≤ saltBuckets reducers (files). The salt
-        // spreads every bucket — and so every hot conversation's — over
-        // saltBuckets reducers. The within-batch collapse, the version
-        // gate and the merge are that one max_by: a stored row ranks
-        // above an event with the same _txid, so an event takes effect
-        // only if its _txid exceeds the stored row's and a re-applied
-        // batch changes nothing. An EMPTY table is the same plan with
-        // nothing to union.
-        val batchRows = events.select(alignWinnerCols(eventCols) :+ lit(true).as("__ev"): _*)
-        val rows =
-          if (prev.isEmpty) batchRows
-          else storedRows(touched).withColumn("__ev", lit(false)).unionByName(batchRows)
-        val obs = new org.apache.spark.sql.Observation(s"apply-$version")
-        table.resolveLatest(rows, saltBuckets,
-            struct(col("_txid"), !col("__ev"), coalesce(col("_etag"), lit(""))))
-          .observe(obs,
-            sum(col("__ev").cast("long")).as("nEff"),
-            sum((col("__ev") && coalesce(col("_deleted"), lit(false))).cast("long")).as("nDel"),
-            max(when(col("__ev"), col("_txid"))).as("maxTx"))
-          .drop("__ev")
-          .withColumn("_bucket", bucketOf)
-          .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-          .write.mode("overwrite").partitionBy("_bucket")
-          .parquet(outDir.toString)
-
-        // AQE may rewrite an all-empty merge to an empty relation and
-        // drop the CollectMetrics node (same hazard the delta path
-        // guards): a missing map means nothing was written
-        val metrics0 = obs.get
-        val n = metrics0.get("nEff").flatMap(Option(_))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        val nDel = metrics0.get("nDel").flatMap(Option(_))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        if (n == 0L) {
-          // pure replay: nothing took effect — discard the rewrite,
-          // keep the previous snapshot (idempotent no-op)
-          LakeTable.deleteRecursively(outDir)
-          return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-            skippedReplay = false, prevWm, 0)
-        }
-        (n, nDel, metrics0("maxTx").asInstanceOf[Long],
-          Map.empty[Int, (String, Long)], Map.empty[Int, (String, Long)])
       }
-      val maxTx = math.max(prevWm, maxTxRaw)
+    val consSet = consBuckets.toSet
+    val deltaBuckets = touched.filterNot((foldBuckets ++ consBuckets).toSet)
+    // the buckets whose BASE this commit writes; the dir name keeps
+    // base-rewriting applies (cV, like compaction) apart from
+    // delta-only ones (cVd)
+    val baseBuckets = if (prev.isEmpty) touched else foldBuckets
+    val version = table.nextVersion
+    val rel = f"data/c$version%012d" + (if (baseBuckets.isEmpty) "d" else "")
+    val outDir = Paths.get(table.location).resolve(rel)
+    val bucketOf = table.bucketCol(col("conv_id"))
+    // the RAW stored rows (base + deltas, unresolved) of `buckets`,
+    // aligned to this apply's schema
+    def storedRows(buckets: Seq[Int]): DataFrame =
+      align(table.readBuckets(spark, buckets, resolve = false), schema)
 
-      // 6. lineage: per-bucket row counts straight from the parquet
-      // footers of the just-written files — driver-side metadata reads,
-      // no Spark job, no scheduling latency
-      val countsByBucket: Map[Int, Long] = LakeTable.footerRowCounts(outDir)
-      val rewritten: Map[Int, Option[String]] = foldBuckets.map { b =>
-        b -> (if (countsByBucket.contains(b)) Some(s"$rel/_bucket=$b") else None)
-      }.toMap
-      table.commit(schema, rewritten, countsByBucket, maxTx, batchId, Map(
-        "events" -> nEff, "upserts" -> (nEff - nDeletes), "deletes" -> nDeletes,
+    // 5. the batch side, tagged __ev = true. On the broadcast path it is
+    // the winners that TAKE EFFECT: the target's (key, _txid) — a
+    // column-pruned narrow scan of the raw physical rows — broadcast-
+    // joins the winner keys FIRST, so the per-key max-txid aggregation
+    // runs on ≤ |winners|·depth rows and the TARGET side is never
+    // shuffled; a winner takes effect if its _txid beats the stored one
+    // or its key is new. An EMPTY table has nothing to gate against, so
+    // the whole gate subtree is skipped. At 100 TB this is the
+    // difference between writing O(batch) per micro-batch and
+    // re-shuffling the touched buckets every batch.
+    val batchRows: DataFrame =
+      if (!broadcastPath)
+        events.select(alignWinnerCols(eventCols) :+ lit(true).as("__ev"): _*)
+      else if (prev.isEmpty) winnerRows.withColumn("__ev", lit(true))
+      else {
+        val mergeKeys = Model.MergeKeys.map(col)
+        val rawKeys = storedRows(touched)
+          .select((mergeKeys :+ col("_txid").as("__t_txid")): _*)
+        val matched = rawKeys.join(broadcast(winnerRows.select(mergeKeys: _*)),
+            Model.MergeKeys.toSeq)
+          .groupBy(mergeKeys: _*).agg(max(col("__t_txid")).as("__t_txid"))
+        winnerRows
+          .join(broadcast(matched), Model.MergeKeys.toSeq, "left")
+          .where(col("__t_txid").isNull || col("_txid") > col("__t_txid"))
+          .drop("__t_txid")
+          .withColumn("__ev", lit(true))
+      }
+    // a consolidate or fold part reads the gated winners too: persist
+    // them so the gate runs once (and neither part scans a base for it)
+    val shared = broadcastPath && (foldBuckets.nonEmpty || consBuckets.nonEmpty)
+    if (shared) batchRows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def batchIn(buckets: Seq[Int]): DataFrame =
+      if (buckets.size == touched.size) batchRows
+      else batchRows.where(col("__bkt").isin(buckets.map(Integer.valueOf): _*))
+    // the one merge rule over stored rows ∪ the batch's rows of
+    // `buckets`: a stored row ranks above an event with the same _txid,
+    // so an event takes effect only if its _txid exceeds the stored
+    // row's and a re-applied batch changes nothing. The resolve's one
+    // exchange leaves each bucket over ≤ `salt` reducers (files)
+    def merged(stored: Option[DataFrame], buckets: Seq[Int], salt: Int): DataFrame = {
+      val ev = batchIn(buckets).drop("__bkt")
+      table.resolveLatest(
+          stored.fold(ev)(_.withColumn("__ev", lit(false)).unionByName(ev)), salt,
+          struct(col("_txid"), !col("__ev"), coalesce(col("_etag"), lit(""))))
+        .withColumn("_bucket", bucketOf)
+    }
+    val parts: Seq[DataFrame] = Seq(
+      // delta winners arrive already hashed by bucket (the batch's one
+      // shuffle): each bucket lands whole in one task, one file per
+      // bucket, no exchange here. Tiny batches: a lone writer task
+      // beats per-task overhead
+      Option.when(deltaBuckets.nonEmpty) {
+        val d = batchIn(deltaBuckets).withColumnRenamed("__bkt", "_bucket")
+        if (batchCount >= 0 && batchCount < ParallelDeltaWriteMinEvents) d.coalesce(1)
+        else d
+      },
+      // salt 1: one reducer (and so one file) per consolidated bucket —
+      // the dir lives until the bucket's fold
+      Option.when(consBuckets.nonEmpty)(merged(
+        Some(align(table.readDeltaStacks(spark, consBuckets), schema)), consBuckets, 1)),
+      Option.when(foldBuckets.nonEmpty)(merged(
+        prev.map(_ => storedRows(foldBuckets)), foldBuckets, saltBuckets))).flatten
+
+    // 6. ONE write puts every class's part into ONE bucket-partitioned
+    // dir, sorted so each bucket file's row groups carry tight conv_id
+    // min/max for later pruned reads, with the apply's stats riding an
+    // Observation over the batch's rows (__ev): effective events,
+    // deletes, max _txid — no separate stats job. A batch where nothing
+    // took effect (a pure replay) leaves no dir and commits nothing —
+    // idempotent no-op.
+    val obs = new org.apache.spark.sql.Observation(s"apply-$version")
+    try parts.reduce(_ unionByName _)
+      .observe(obs,
+        coalesce(sum(col("__ev").cast("long")), lit(0L)).as("nEff"),
+        coalesce(sum((col("__ev") && coalesce(col("_deleted"), lit(false)))
+          .cast("long")), lit(0L)).as("nDel"),
+        max(when(col("__ev"), col("_txid"))).as("maxTx"))
+      .drop("__ev")
+      .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
+      .write.mode("overwrite").partitionBy("_bucket")
+      .parquet(outDir.toString)
+    finally if (shared) batchRows.unpersist()
+    // per-bucket row counts straight from the parquet footers of the
+    // just-written files — driver-side metadata reads, no Spark job
+    val counts = LakeTable.footerRowCounts(outDir)
+    // AQE may replace an all-empty plan with an empty relation and drop
+    // the CollectMetrics node: a missing map is a no-op only when the
+    // write left no rows — never trust a silent one
+    val m = obs.get
+    if (!m.contains("nEff") && counts.nonEmpty) throw new IllegalStateException(
+      s"apply of version $version wrote rows at $outDir but its stats were not observed")
+    val nEff = m.get("nEff").map(_.asInstanceOf[Long]).getOrElse(0L)
+    if (nEff == 0L) {
+      LakeTable.deleteRecursively(outDir)
+      return unchanged(skipped = false)
+    }
+    val nDel = m("nDel").asInstanceOf[Long]
+    val maxTx = math.max(prevWm, Option(m("maxTx")).fold(prevWm)(_.asInstanceOf[Long]))
+
+    // 7. ONE atomic commit: fold (and first-commit) buckets get fresh
+    // bases, consolidated stacks are replaced by their one dir, every
+    // other bucket appends its dir to its stack — with the txid
+    // high-watermark and per-bucket lineage counts
+    val baseSet = baseBuckets.toSet
+    val (deltaAdds, deltaReplaces) = (counts -- baseBuckets)
+      .map { case (b, n) => b -> (s"$rel/_bucket=$b", n) }
+      .partition { case (b, _) => !consSet(b) }
+    val c = table.commit(schema,
+      baseBuckets.map(b => b -> counts.get(b).map(_ => s"$rel/_bucket=$b")).toMap,
+      counts.filter { case (b, _) => baseSet(b) }, maxTx, batchId, Map(
+        "events" -> nEff, "upserts" -> (nEff - nDel), "deletes" -> nDel,
         "bucketsTouched" -> touched.length.toLong,
-        "foldedBuckets" -> foldBuckets.length.toLong,
+        "foldedBuckets" -> baseBuckets.length.toLong,
         "consolidatedBuckets" -> consBuckets.length.toLong,
         "consolidatedRows" -> deltaReplaces.values.map(_._2).sum,
         "deltaRows" -> deltaAdds.values.map(_._2).sum,
+        "deltaCommit" -> (if (baseBuckets.isEmpty && consBuckets.isEmpty) 1L else 0L),
         "broadcastMerge" -> (if (broadcastPath) 1L else 0L)) ++ extraMetrics,
-        queryId, deltaAdds = deltaAdds, deltaReplaces = deltaReplaces)
-      ApplyStats(version, nEff, nEff - nDeletes, nDeletes,
-        skippedReplay = false, maxTx, touched.length)
+      queryId, deltaAdds = deltaAdds, deltaReplaces = deltaReplaces)
+    ApplyStats(c.version, nEff, nEff - nDel, nDel,
+      skippedReplay = false, maxTx, touched.length)
   }
 
   /** Replay a changelog in `nBatches` txid-ordered batches (batch-mode
@@ -612,6 +472,8 @@ object CdcApply {
       events: DataFrame,
       nBatches: Int): Seq[ApplyStats] = {
     val bounds = events.agg(min("_txid"), max("_txid"), count(lit(1))).head()
+    // an empty changelog has no txid range (min/max are null)
+    if (bounds.getLong(2) == 0L) return Seq.empty
     val (lo, hi, n) = (bounds.getLong(0), bounds.getLong(1), bounds.getLong(2))
     val step = math.max(1L, (hi - lo + nBatches) / nBatches)
     // Per-batch path choice: the FIRST batch always takes the bulk

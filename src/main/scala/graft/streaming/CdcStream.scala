@@ -44,9 +44,11 @@ import graft.table.LakeTable
   * like commit idempotence, so a later stream on the same table never
   * overwrites an earlier stream's evidence) and, when the batch
   * commits, the commit records a `corruptRows` metric. A batch whose
-  * rows are ALL corrupt applies nothing and so publishes no commit —
-  * its quarantine directory is the record for that case — observable,
-  * re-drivable loss, never silent.
+  * rows are ALL corrupt — or, before the schema is cached, one whose
+  * lines yield no `_txid`-bearing schema at all (quarantined whole) —
+  * applies nothing and so publishes no commit — its quarantine
+  * directory is the record for that case — observable, re-drivable
+  * loss, never silent.
   *
   * Lineage (reference P6, lib/moraydump_reorg.js:179-192,589-592):
   * every line carries its source file via the file source's
@@ -208,6 +210,25 @@ object CdcStream {
     // (greedy .* ≡ last occurrence; the trailing /.* ≡ "tail has more
     // path"; [^/]+ ≡ non-empty component).
     val dcMarker = "/" + rootBase + "/"
+    // the lineage columns of a line, from its `_path`: source file and
+    // datacenter. The dc is the component after the last occurrence of
+    // "/<root>/" that still has a file below it; the -2 fallback
+    // reproduces the old greedy regex's backtrack when a dc's subtree
+    // reuses the root dir's name (root "log", file
+    // ".../log/dc1/log/part-0.json": the last marker's tail is just the
+    // filename, so the second-to-last yields dc1 — deeper repeats of
+    // that pathological shape fall to "default")
+    val originFile = substring_index(col("_path"), "/", -1).as("_origin_file")
+    val originDc = {
+      def dcFrom(tail: org.apache.spark.sql.Column) = {
+        val dc = substring_index(tail, "/", 1)
+        when(tail =!= col("_path") && length(dc) > 0 && instr(tail, "/") > 0, dc)
+      }
+      coalesce(
+        dcFrom(substring_index(col("_path"), dcMarker, -1)),
+        dcFrom(substring_index(col("_path"), dcMarker, -2)),
+        lit("default")).as("_origin_dc")
+    }
 
     // per-stream mutable state: the cached event schema (re-inferred
     // only on detected drift) and the resolved stream identity
@@ -239,11 +260,27 @@ object CdcStream {
               .as[String](org.apache.spark.sql.Encoders.STRING)).schema
             StructType(s.fields.filterNot(_.name == "_corrupt_record"))
           }
+          // dead-letter quarantine: raw line plus lineage under the
+          // table's _quarantine/ (idempotent per-batch dir, so a
+          // crash-replayed batch overwrites rather than duplicates).
+          // Scoped by queryId like commit idempotence: batch ids restart
+          // at 0 per checkpoint, so a later stream on the same table
+          // must not overwrite an earlier stream's preserved evidence
+          def quarantine(rows: DataFrame): Unit =
+            rows.write.mode("overwrite")
+              .json(s"${table.location}/_quarantine/$queryId/batch-$batchId")
           if (schemaCache == null) {
             val inf = inferSchema() // once per stream, not per batch
             if (inf.fieldNames.contains("_txid")) schemaCache = inf
           }
-          if (schemaCache != null) {
+          if (schemaCache == null) {
+            // no change-event schema (no `_txid`) can be inferred from
+            // this batch: nothing in it can apply, but its lines are
+            // evidence — quarantined whole for a later redrive, never
+            // silently passed over by the advancing checkpoint
+            if (!batch.isEmpty)
+              quarantine(batch.select(col("value").as("raw"), originDc, originFile))
+          } else {
             val t0 = System.nanoTime()
             def parseWith(schema: StructType): DataFrame = {
               val parseSchema = StructType(
@@ -253,26 +290,7 @@ object CdcStream {
                     Map("columnNameOfCorruptRecord" -> CorruptCol)).as("e"),
                   novelKeysExpr(col("value"), schema, ignoreFields).as("__novel"),
                   col("_path"))
-                .select(col("e.*"), col("__novel"),
-                  substring_index(col("_path"), "/", -1).as("_origin_file"), {
-                    // the dc is the component after the last occurrence
-                    // of "/<root>/" that still has a file below it; the
-                    // -2 fallback reproduces the old greedy regex's
-                    // backtrack when a dc's subtree reuses the root
-                    // dir's name (".../root/dc1/root/part-0.json": the
-                    // last marker's tail is just the filename, so the
-                    // second-to-last yields dc1 — deeper repeats of
-                    // that pathological shape fall to "default")
-                    def dcFrom(tail: org.apache.spark.sql.Column) = {
-                      val dc = substring_index(tail, "/", 1)
-                      when(tail =!= col("_path") && length(dc) > 0 &&
-                        instr(tail, "/") > 0, dc)
-                    }
-                    coalesce(
-                      dcFrom(substring_index(col("_path"), dcMarker, -1)),
-                      dcFrom(substring_index(col("_path"), dcMarker, -2)),
-                      lit("default")).as("_origin_dc")
-                  })
+                .select(col("e.*"), col("__novel"), originFile, originDc)
             }
             var enriched = parseWith(schemaCache)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -324,27 +342,17 @@ object CdcStream {
                   summary = summarize(enriched)
                 }
               }
-              // dead-letter quarantine: a line still malformed after
-              // drift re-inference is DROPPED from the apply, but never
-              // silently — the raw line plus lineage lands under the
-              // table's _quarantine/ (idempotent per-batch dir, so a
-              // crash-replayed batch overwrites rather than duplicates)
-              // and the commit records the count. Reference contrast:
-              // the dump pipeline hand-patched corrupt dump lines with
-              // site-specific kludges (README F10); here the engine
-              // preserves the evidence for inspection or re-drive.
+              // a line still malformed after drift re-inference is
+              // DROPPED from the apply, but never silently — it is
+              // quarantined and the commit records the count. Reference
+              // contrast: the dump pipeline hand-patched corrupt dump
+              // lines with site-specific kludges (README F10); here the
+              // engine preserves the evidence for inspection or re-drive.
               val nCorruptFinal = summary.map(_.getLong(4)).sum
-              if (nCorruptFinal > 0) {
-                // scoped by queryId like commit idempotence: batch ids
-                // restart at 0 per checkpoint, so a later stream on the
-                // same table must not overwrite an earlier stream's
-                // preserved evidence
-                enriched.where(col(CorruptCol).isNotNull)
+              if (nCorruptFinal > 0)
+                quarantine(enriched.where(col(CorruptCol).isNotNull)
                   .select(col(CorruptCol).as("raw"),
-                    col("_origin_dc"), col("_origin_file"))
-                  .write.mode("overwrite")
-                  .json(s"${table.location}/_quarantine/$queryId/batch-$batchId")
-              }
+                    col("_origin_dc"), col("_origin_file")))
               val lineage: Map[String, Long] = summary
                 .map(r => s"dc:${r.getString(0)}" -> r.getLong(1)).toMap
               val nFiles = summary.map(_.getLong(2)).sum

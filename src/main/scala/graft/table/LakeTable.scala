@@ -31,7 +31,9 @@ import org.json4s.jackson.Serialization
   *                       exactly-once is scoped (queryId, batchId))
   * @param deltas         MERGE-ON-READ delta dirs PER BUCKET: bucket id ->
   *                       the stack of small parquet dirs (each
-  *                       `data/cVVVd/_bucket=B`) appended since that
+  *                       `data/cVVV[d]/_bucket=B`: `data/cVVVd` from a
+  *                       delta-only apply, `data/cVVV` when the same
+  *                       apply also rewrote a base) appended since that
   *                       bucket's last fold. Per-bucket tracking makes the
   *                       three costly operations proportional to the HOT
   *                       data, not the table: reads prune delta paths by
@@ -564,17 +566,21 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * manifests; until commits track file names, driver-side listing
     * of O(buckets × depth) dirs is the equivalent. Conf is restored
     * after the scans are built (listing happens eagerly at
-    * `spark.read`); the engine's single-writer-per-session model (see
-    * commit()) makes the temporary session flip safe. */
-  private def withDriverListing[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "8192")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    * `spark.read`). One JVM-wide lock spans set → build → restore:
+    * two readers interleaving on one session would otherwise leak the
+    * flipped value (A saves 32, B saves A's 8192, A restores 32, B
+    * restores 8192), and no session-global state may change under a
+    * reader. */
+  private def withDriverListing[T](spark: SparkSession)(f: => T): T =
+    LakeTable.DriverListingLock.synchronized {
+      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "8192")
+      try f finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
     }
-  }
 
   private def readCommit(spark: SparkSession, c: Commit, buckets: Seq[Int],
       resolve: Boolean = true, includeBase: Boolean = true): DataFrame =
@@ -615,8 +621,8 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       }
     def readGroup(rels: Seq[String]): Option[DataFrame] = {
       if (rels.isEmpty) return None
-      // data/cVVV[/...] for bases, data/cVVVd[/...] for delta dirs —
-      // both were written under commit VVV's schema
+      // data/cVVV[/...] or data/cVVVd[/...], base or delta — either
+      // was written under commit VVV's schema
       val byVersion = rels.groupBy(rel => rel.split("/")(1).stripSuffix("d"))
       val distinctSchemas = byVersion.keys.flatMap(schemas.get).map(_.json).toSet
       // fast path (one scan) only when EVERY dir's writer schema is
@@ -715,7 +721,10 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * two-level merge: the stack was resolved into a single delta, base
     * untouched). A single commit may fold some buckets, consolidate
     * others, and delta the rest (the steady-state mixed apply),
-    * atomically. */
+    * atomically. A delta-only commit carries every base forward: the
+    * steady-state CDC apply is an O(batch) write, no table rewrite
+    * (reference contrast: the dump pipeline rewrites everything every
+    * cycle, manta/dc_inputs_4.sh). */
   def commit(
       schema: StructType,
       rewritten: Map[Int, Option[String]],
@@ -737,9 +746,10 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     // against the new snapshot (a crash-replayed stream batch does
     // this for free via checkpoint replay). Writers of the same kind
     // racing on the same version also race on the data-dir NAME
-    // (data/cV vs cVd separates fold/compaction from delta commits,
-    // but two delta writers share cVd) — the supported topology is one
-    // streaming tail plus maintenance jobs, which never collide there.
+    // (data/cV vs cVd separates base-rewriting commits — compaction,
+    // rebucket, and applies that fold — from delta-only applies, but
+    // two writers of one kind share a name) — the supported topology is
+    // one streaming tail plus maintenance jobs, which never collide there.
     // intra-JVM: one attempt at a time per table handle (the base
     // version bookkeeping is per-instance); cross-process concurrency
     // is what the ATOMIC_MOVE + retry protocol arbitrates
@@ -895,21 +905,6 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       queryId, newDeltas, newDeltaCounts,
       prev.map(_.renames).getOrElse(Map.empty)))
   }
-
-  /** Atomically publish a pure MERGE-ON-READ delta commit: per-bucket
-    * delta dirs appended to their stacks; every base carries forward
-    * untouched. Steady-state CDC applies land here — O(batch) write, no
-    * table rewrite (reference contrast: the dump pipeline rewrites
-    * everything every cycle, manta/dc_inputs_4.sh). */
-  def commitDelta(
-      schema: StructType,
-      deltaAdds: Map[Int, (String, Long)],
-      txidWatermark: Long,
-      batchId: Long,
-      metrics: Map[String, Long],
-      queryId: String = ""): Commit =
-    commit(schema, Map.empty, Map.empty, txidWatermark, batchId, metrics,
-      queryId, deltaAdds)
 
   /** Rename a payload column — Iceberg ALTER TABLE RENAME COLUMN
     * semantics (north rule: "renamed transcript fields like tool"): a
@@ -1127,6 +1122,10 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
 }
 
 object LakeTable {
+  /** Held by every table's `withDriverListing` across its session-conf
+    * flip, so concurrent readers cannot interleave set and restore. */
+  private object DriverListingLock
+
   /** Within-bucket salt width shared by the resolve's shuffle and the
     * merge paths (CdcApply.SaltBuckets aliases this): a bucket's rows
     * spread over this many reducers, so hot buckets don't serialize a

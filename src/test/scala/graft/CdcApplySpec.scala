@@ -47,12 +47,29 @@ class CdcApplySpec extends SparkSpec {
     val events = corpus(1500)
     val b1 = events.where(col("_txid") <= 1000)
     val b2 = events.where(col("_txid") > 500) // overlaps 501..1000
-    // the default (broadcast/delta) path, and the bulk merge, where a
-    // stored row must win every _txid tie
-    Seq(CdcApply.BroadcastMergeMaxEvents, 0L).foreach { threshold =>
-      val table = new LakeTable(tmpDir(s"overlap-$threshold"), numBuckets = 16)
+    // the default (broadcast/delta) path; the bulk merge, where a
+    // stored row must win every _txid tie; and a replay onto stacks at
+    // the depth cap, which runs the consolidate and fold parts
+    Seq("delta", "bulk", "capped").foreach { mode =>
+      val threshold = if (mode == "bulk") 0L else CdcApply.BroadcastMergeMaxEvents
+      val table = new LakeTable(tmpDir(s"overlap-$mode"), numBuckets = 16)
       CdcApply.applyBatch(spark, table, b1, broadcastThreshold = threshold)
       CdcApply.applyBatch(spark, table, b2, broadcastThreshold = threshold)
+      val (depth, ratio) =
+        if (mode != "capped") (CdcApply.MaxDeltaDepth, CdcApply.FoldToBaseRatio)
+        else {
+          // b2's delta put every bucket it touched at a cap of 1; a fold
+          // ratio between the stacks' smallest and largest share of
+          // their bases folds some and consolidates the others
+          val c = table.currentCommit().get
+          val capped = c.deltas.keys.map(_.toInt).toSeq.filter(b => c.baseRowsOf(b).exists(_ > 0))
+          val shares = capped.map(b => c.deltaRowsOf(b).get.toDouble / c.baseRowsOf(b).get)
+          val r = (shares.min + shares.max) / 2
+          def folds(b: Int) = c.deltaRowsOf(b).get >= (c.baseRowsOf(b).get * r).toLong
+          assert(capped.exists(folds) && capped.exists(b => !folds(b)),
+            s"replay must both fold and consolidate: shares $shares")
+          (1, r)
+        }
       val head = table.currentCommit().get.version
       def dataDirs = {
         val s = java.nio.file.Files.list(java.nio.file.Paths.get(table.location, "data"))
@@ -60,14 +77,23 @@ class CdcApplySpec extends SparkSpec {
       }
       val before = dataDirs
       // replay everything again — must be a no-op
-      val s3 = CdcApply.applyBatch(spark, table, events, broadcastThreshold = threshold)
-      assert(s3.applied == 0, s"threshold=$threshold")
+      val s3 = CdcApply.applyBatch(spark, table, events, broadcastThreshold = threshold,
+        maxDeltaDepth = depth, foldRatio = ratio)
+      assert(s3.applied == 0, s"mode=$mode")
       assert(table.currentCommit().get.version == head,
-        s"threshold=$threshold: a pure replay committed")
+        s"mode=$mode: a pure replay committed")
       assert(dataDirs == before,
-        s"threshold=$threshold: replay left ${dataDirs -- before} behind")
+        s"mode=$mode: replay left ${dataDirs -- before} behind")
       assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
     }
+  }
+
+  test("replay of an empty changelog applies nothing and commits nothing") {
+    val table = new LakeTable(tmpDir("empty-replay"), numBuckets = 8)
+    val stats = CdcApply.replay(spark, table, corpus(100).where(lit(false)), nBatches = 3)
+    assert(stats.isEmpty)
+    assert(table.currentCommit().isEmpty)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(table.location, "data")))
   }
 
   test("batchId replay short-circuits") {
@@ -299,6 +325,93 @@ class CdcApplySpec extends SparkSpec {
         $"conv_id".isin(hot, cold))
       .select("conv_id", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got(hot) == "p100003" && got(cold) == "p100004")
+  }
+
+  test("one batch folds, consolidates and appends: one write, one dir, one commit") {
+    import spark.implicits._
+    val events = corpus(2000)
+    val table = new LakeTable(tmpDir("oneplan"), numBuckets = 8)
+    CdcApply.applyBatch(spark, table, events)
+    val base = table.currentCommit().get
+    def bucketOf(conv: String) =
+      spark.range(1).select(table.bucketCol(lit(conv))).head.getInt(0)
+    // one corpus conv per bucket, buckets ordered by base size: the
+    // smallest base will fold, the largest consolidate, one more append
+    val byBase = (0 until 50).map(i => f"conv$i%08d").groupBy(bucketOf)
+      .map { case (b, cs) => (b, cs.min) }.toSeq
+      .sortBy { case (b, _) => base.baseRowsOf(b).getOrElse(0L) }
+    assert(byBase.size >= 3, s"corpus convs cover only ${byBase.size} buckets")
+    val Seq((fB, fConv), (dB, dConv), (cB, cConv)) =
+      Seq(byBase.head, byBase(byBase.size / 2), byBase.last)
+    val patches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    def apply(rows: Seq[(Long, String, Int)]) = {
+      val df = rows.map { case (txid, conv, turn) =>
+        (txid, "update", s"e$txid", conv, turn, "user", s"p$txid",
+          null: String, java.sql.Timestamp.valueOf("2014-03-12 00:00:00"))
+      }.toDF("_txid", "_op", "_etag", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+      patches += df
+      CdcApply.applyBatch(spark, table, df, maxDeltaDepth = 2)
+    }
+    // two batches stack the fold bucket with 50 new keys each and the
+    // consolidate bucket with one patched key, up to the cap of 2
+    (0 until 2).foreach { i =>
+      apply((0 until 50).map(k => (100000L + 100 * i + k, fConv, 1000 + 100 * i + k)) :+
+        ((100090L + 100 * i, cConv, 0)))
+    }
+    val stacked = table.currentCommit().get
+    def reachesRatio(b: Int) = stacked.deltaRowsOf(b).get >=
+      (stacked.baseRowsOf(b).get * CdcApply.FoldToBaseRatio).toLong
+    assert(stacked.deltaDepthOf(fB) == 2 && stacked.deltaDepthOf(cB) == 2 &&
+      stacked.deltaDepthOf(dB) == 0)
+    assert(reachesRatio(fB) && !reachesRatio(cB),
+      s"fold bucket $fB must reach the ratio and consolidate bucket $cB must not")
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    }
+    def dataDirs = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(table.location, "data"))
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val dirsBefore = dataDirs
+    val commitsBefore = table.commitLog().size
+    spark.listenerManager.register(listener)
+    try {
+      val s = apply(Seq((100500L, fConv, 0), (100501L, cConv, 0), (100502L, dConv, 0)))
+      assert(s.applied == 3)
+      // listener delivery is async but in order: once a marker query
+      // is seen, every plan the apply ran has been delivered
+      spark.range(3).toDF("apply_marker").collect()
+      var tries = 0
+      while (!plans.asScala.exists(_.analyzed.output.exists(_.name == "apply_marker")) &&
+          tries < 100) { Thread.sleep(100); tries += 1 }
+    } finally spark.listenerManager.unregister(listener)
+    val writes = plans.asScala.count { qe =>
+      val p = qe.executedPlan.toString
+      p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
+    }
+    assert(writes == 1, s"the apply ran $writes file writes")
+    assert((dataDirs -- dirsBefore).size == 1, s"new dirs: ${dataDirs -- dirsBefore}")
+    assert(table.commitLog().size == commitsBefore + 1)
+    val c = table.currentCommit().get
+    Seq("events" -> 3L, "upserts" -> 3L, "deletes" -> 0L, "bucketsTouched" -> 3L,
+      "foldedBuckets" -> 1L, "consolidatedBuckets" -> 1L, "consolidatedRows" -> 1L,
+      "deltaRows" -> 1L, "broadcastMerge" -> 1L).foreach { case (k, v) =>
+      assert(c.metrics.get(k).contains(v), s"metric $k = ${c.metrics.get(k)}, want $v")
+    }
+    assert(c.metrics.getOrElse("deltaCommit", 0L) == 0L)
+    assert(c.deltaDepthOf(fB) == 0 && c.deltaDepthOf(cB) == 1 && c.deltaDepthOf(dB) == 1)
+    assert(c.buckets(fB.toString) != base.buckets(fB.toString))
+    assert(c.buckets(cB.toString) == base.buckets(cB.toString) &&
+      c.buckets(dB.toString) == base.buckets(dB.toString))
+    assertSameRows(finalPayload(table),
+      Corpus.oracleFinalState(patches.foldLeft(events)(_ unionByName _)))
   }
 
   test("at-cap stack CONSOLIDATES into one delta dir; the base is not rewritten") {

@@ -308,6 +308,29 @@ class CdcStreamSpec extends SparkSpec {
       "corruptRows metric missing from the commit log")
   }
 
+  test("a batch with no inferable change-event schema is quarantined, not skipped") {
+    import java.nio.file.{Files, Paths}
+    val events = Corpus.changeEvents(spark, 400, nConvs = 10, maxTurns = 4)
+    val dir = tmpDir("noschema-log")
+    // the FIRST trigger reads only malformed lines: no `_txid` schema
+    // can be inferred from it, and the checkpoint moves past it anyway
+    val bad = Paths.get(s"$dir/chunk0/bad.json")
+    Files.createDirectories(bad.getParent)
+    Files.writeString(bad, "{broken json!!\nnot json either\n")
+    Files.setLastModifiedTime(bad, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 60000L))
+    CdcStream.writeSegment(Corpus.shuffled(events), s"$dir/chunk1")
+    val table = new LakeTable(tmpDir("noschema-table"), numBuckets = 8)
+    CdcStream.runOnce(spark, s"$dir/chunk*", table, tmpDir("noschema-ckpt"),
+      maxFilesPerTrigger = 1)
+    val q = spark.read.json(s"${table.location}/_quarantine/*/*")
+    val rows = q.select("raw", "_origin_file").collect()
+    assert(rows.length == 2, s"quarantined ${rows.length} rows")
+    assert(rows.map(_.getString(0)).toSet == Set("{broken json!!", "not json either"))
+    assert(rows.forall(_.getString(1) == "bad.json"))
+    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+  }
+
   test("quarantine redrive: merge-key type drift applied once fixed; garbage stays") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._

@@ -50,8 +50,10 @@ class ConcurrentCommitSpec extends SparkSpec {
     val (relB, nB, convB, txB) = writeDelta(b, v0 + 1, bucket = 2, "from-B")
     val (relA, nA, convA, txA) = writeDelta(table, v0 + 2, bucket = 5, "from-A")
     table.testBeforePublish = () =>
-      b.commitDelta(schema, Map(2 -> (relB, nB)), txB, -1L, Map("writer" -> 2L))
-    table.commitDelta(schema, Map(5 -> (relA, nA)), txA, -1L, Map("writer" -> 1L))
+      b.commit(schema, Map.empty, Map.empty, txB, -1L, Map("writer" -> 2L),
+        deltaAdds = Map(2 -> (relB, nB)))
+    table.commit(schema, Map.empty, Map.empty, txA, -1L, Map("writer" -> 1L),
+      deltaAdds = Map(5 -> (relA, nA)))
 
     val head = table.currentCommit().get
     assert(head.version == v0 + 2, s"expected both commits, head=$head")
@@ -74,15 +76,18 @@ class ConcurrentCommitSpec extends SparkSpec {
     val (relB, nB, _, txB) = writeDelta(b, v0 + 1, bucket = 3, "winner")
     val (relA, nA, _, txA) = writeDelta(table, v0 + 2, bucket = 3, "stale")
     table.testBeforePublish = () =>
-      b.commitDelta(schema, Map(3 -> (relB, nB)), txB, -1L, Map.empty)
+      b.commit(schema, Map.empty, Map.empty, txB, -1L, Map.empty,
+        deltaAdds = Map(3 -> (relB, nB)))
     val e = intercept[java.util.ConcurrentModificationException] {
-      table.commitDelta(schema, Map(3 -> (relA, nA)), txA, -1L, Map.empty)
+      table.commit(schema, Map.empty, Map.empty, txA, -1L, Map.empty,
+        deltaAdds = Map(3 -> (relA, nA)))
     }
     assert(e.getMessage.contains("buckets 3"), e.getMessage)
     assert(table.currentCommit().get.version == v0 + 1) // only B landed
     // redo against the new snapshot (fresh read → fresh delta) lands
     val (relA2, nA2, convA2, txA2) = writeDelta(table, v0 + 2, bucket = 3, "redo")
-    table.commitDelta(schema, Map(3 -> (relA2, nA2)), txA2, -1L, Map.empty)
+    table.commit(schema, Map.empty, Map.empty, txA2, -1L, Map.empty,
+      deltaAdds = Map(3 -> (relA2, nA2)))
     assert(table.currentCommit().get.version == v0 + 2)
     val got = table.read(spark)
       .where(col("conv_id") === convA2 && col("_txid") === txA2)
@@ -131,7 +136,8 @@ class ConcurrentCommitSpec extends SparkSpec {
     table.testBeforePublish = () =>
       compactor.compact(spark, tombstoneHorizon = compactor.txidWatermark)
     intercept[java.util.ConcurrentModificationException] {
-      table.commitDelta(schema, Map(1 -> (relA, nA)), txA, -1L, Map.empty)
+      table.commit(schema, Map.empty, Map.empty, txA, -1L, Map.empty,
+        deltaAdds = Map(1 -> (relA, nA)))
     }
     // the compaction snapshot is intact and fully readable
     val after = table.currentCommit().get
@@ -151,7 +157,8 @@ class ConcurrentCommitSpec extends SparkSpec {
     // refuse — composing would resurrect the pre-delta bucket contents
     val (relB, nB, convB, txB) = writeDelta(tail, v0 + 1, bucket = 4, "tail-won")
     table.testBeforePublish = () =>
-      tail.commitDelta(schema, Map(4 -> (relB, nB)), txB, -1L, Map.empty)
+      tail.commit(schema, Map.empty, Map.empty, txB, -1L, Map.empty,
+        deltaAdds = Map(4 -> (relB, nB)))
     intercept[java.util.ConcurrentModificationException] {
       table.rebucket(spark, 16)
     }
@@ -183,7 +190,8 @@ class ConcurrentCommitSpec extends SparkSpec {
     val (relA, nA, _, txA) = writeDelta(table, v0 + 2, bucket = 1, "stale-layout")
     table.testBeforePublish = () => { maintenance.rebucket(spark, 16); () }
     intercept[java.util.ConcurrentModificationException] {
-      table.commitDelta(schema, Map(1 -> (relA, nA)), txA, -1L, Map.empty)
+      table.commit(schema, Map.empty, Map.empty, txA, -1L, Map.empty,
+        deltaAdds = Map(1 -> (relA, nA)))
     }
     assert(table.effectiveNumBuckets == 16)
     // checkpoint replay redoes the batch against the CURRENT snapshot:
@@ -212,5 +220,24 @@ class ConcurrentCommitSpec extends SparkSpec {
       Corpus.oracleFinalState(events)
         .where(!(col("conv_id") === conv && col("turn_idx") === turn))
         .select("conv_id", "turn_idx", "text"))
+  }
+
+  test("concurrent readers leave the listing threshold at its pre-read value") {
+    // every read flips this session-global key while it builds its
+    // scans; interleaved set/restore pairs on two threads would leak
+    // the flipped value to every later query of the session
+    val (table, _) = seeded()
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val before = spark.conf.get(key)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      (0 until 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until 25).foreach(_ => table.read(spark))
+        })
+      }.foreach(_.get())
+    } finally pool.shutdown()
+    assert(spark.conf.get(key) == before,
+      s"$key is ${spark.conf.get(key)} after concurrent reads, was $before")
   }
 }

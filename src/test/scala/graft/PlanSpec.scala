@@ -208,11 +208,14 @@ class PlanSpec extends SparkSpec {
       }
       while (writePlans.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
       assert(writePlans.nonEmpty, "no write-job plan captured")
-      // base dirs are data/c<digits>/_bucket=N; delta dirs data/c<digits>d/...
-      val baseDir = raw"data/c\d+/_bucket".r
+      // the bases are whatever the commit says they are (a delta may
+      // sit in an undecorated data/cV dir), each matched as a whole path
+      // component so _bucket=1 never matches _bucket=10
+      val bases = c.buckets.values.toSeq.map(b => (java.util.regex.Pattern.quote(b) + "(?![0-9])").r)
+      assert(bases.nonEmpty)
       writePlans.foreach { qe =>
         val p = qe.executedPlan.toString
-        assert(baseDir.findFirstIn(p).isEmpty,
+        assert(bases.forall(_.findFirstIn(p).isEmpty),
           s"consolidation write scans a BASE file (O(stack) promise broken):\n$p")
       }
     } finally spark.listenerManager.unregister(listener)
