@@ -2,13 +2,15 @@ package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge for wrapping custom Catalyst expressions into user-facing
   * Columns: `ExpressionUtils` is `private[sql]` in Spark 4's classic
   * module, so the (one-line) accessors live in this package. No Spark
   * internals are modified — this only re-exports the supported
-  * Column ⇄ Expression conversion, and the listener-bus drain the
-  * profiler needs before it reads what its job listener collected.
+  * Column ⇄ Expression conversion, the listener-bus drain the
+  * profiler needs before it reads what its job listener collected, and
+  * the nullable data schema every file relation is built with.
   */
 object graftshim {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -16,4 +18,6 @@ object graftshim {
 
   /** Blocks until every posted listener event has been delivered. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+
+  def asNullable(s: StructType): StructType = s.asNullable
 }

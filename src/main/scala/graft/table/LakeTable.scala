@@ -1,9 +1,13 @@
 package graft.table
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HadoopPath}
+import org.apache.spark.sql.{graftshim, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.json4s._
@@ -129,8 +133,10 @@ private[table] case class LogCheckpoint(
   *
   * No Iceberg/Delta jars exist in this sandbox, so the transactional
   * behaviors the north rule needs are implemented directly:
-  *   - snapshot isolation: readers pin the latest commit file; data files
-  *     are immutable; a commit is a single atomic rename;
+  *   - snapshot isolation: readers pin the latest commit file and scan
+  *     exactly the data dirs it names, pre-listed on the driver (no
+  *     listing job, no session-conf change); data files are immutable;
+  *     a commit is a single atomic rename;
   *   - atomic commits: write `_commits/.tmp-*` then ATOMIC_MOVE to
   *     `_commits/%012d.json` (fails if a concurrent writer won);
   *   - schema evolution: every commit records its schema; readers apply
@@ -272,7 +278,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val (prevCkpt, later) = cachedState()
     val current = currentCommit().getOrElse(return)
     val live: Set[String] = (current.buckets.values ++ current.deltas.values.flatten)
-      .map(rel => rel.split("/")(1).stripSuffix("d")).toSet
+      .map(LakeTable.schemaKeyOf).toSet
     val schemas = schemasByVersion().filter { case (v, _) => live.contains(v) }
     val maxBatch: Map[String, Long] = {
       val base = prevCkpt.map(_._1.maxBatchIdByQuery).getOrElse(Map.empty)
@@ -363,12 +369,17 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       throw new IllegalArgumentException(
         s"version $version is not in the retained commit log at $location " +
           "(never existed, or rolled up by checkpointLog)"))
-    val gone = (c.buckets.values ++ c.deltaFiles)
-      .filterNot(rel => Files.exists(root.resolve(rel))).toSeq.distinct
-    if (gone.nonEmpty) throw new IllegalArgumentException(
-      s"version $version references vacuumed data (${gone.take(4).mkString(", ")}" +
-        s"${if (gone.size > 4) ", …" else ""}) — outside the retention window")
+    requireRetained(c, c.buckets.values ++ c.deltaFiles, "snapshot")
     LakeTable.dropTombstones(readCommit(spark, c, c.liveBuckets.toSeq.sorted))
+  }
+
+  /** Refuse a read of `c` once any of its data dirs `rels` was vacuumed
+    * — an explicit error naming the dirs, never a partial result. */
+  private def requireRetained(c: Commit, rels: Iterable[String], what: String): Unit = {
+    val gone = rels.toSeq.distinct.filterNot(rel => Files.exists(root.resolve(rel)))
+    if (gone.nonEmpty) throw new IllegalArgumentException(
+      s"version ${c.version} references vacuumed data (${gone.take(4).mkString(", ")}" +
+        s"${if (gone.size > 4) ", …" else ""}) — $what outside the retention window")
   }
 
   /** The newest retained version whose txid high-watermark is ≤ `txid`
@@ -476,36 +487,21 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val outFields = to.schema.fields.filterNot(_.name == "_deleted").toSeq
     val outSchema = StructType(outFields :+
       StructField("_change_type", org.apache.spark.sql.types.StringType))
-    def emptyOut = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    if (touched.isEmpty) return emptyOut
+    if (touched.isEmpty) return LakeTable.emptyFrame(spark, outSchema)
     // retention check scoped to the dirs this diff will actually read
     Seq(Some(to), from).flatten.foreach { c =>
-      val rels = touched.flatMap(b => c.buckets.get(b.toString)) ++
-        touched.flatMap(b => c.deltas.getOrElse(b.toString, Nil))
-      val gone = rels.distinct.filterNot(rel => Files.exists(root.resolve(rel)))
-      if (gone.nonEmpty) throw new IllegalArgumentException(
-        s"version ${c.version} references vacuumed data " +
-          s"(${gone.take(4).mkString(", ")}${if (gone.size > 4) ", …" else ""}) " +
-          "— changelog range outside the retention window")
+      requireRetained(c, touched.flatMap(b => c.buckets.get(b.toString)) ++
+        touched.flatMap(b => c.deltas.getOrElse(b.toString, Nil)), "changelog range")
     }
     // both endpoint states on toVersion's column names and types: map
     // names the TO-version has since retired onto their current names
     // (readCommit already applied each endpoint's OWN rename registry),
     // drop tombstoned rows, then cast up
-    def liveAs(df: DataFrame): DataFrame = {
-      val renamed = to.renames.foldLeft(df) { case (d, (oldName, curName)) =>
-        if (d.columns.contains(oldName) && !d.columns.contains(curName))
-          d.withColumnRenamed(oldName, curName)
-        else d
-      }
-      LakeTable.align(LakeTable.dropTombstones(renamed), StructType(outFields))
-    }
+    def liveAs(df: DataFrame): DataFrame = LakeTable.align(
+      LakeTable.dropTombstones(LakeTable.withRenames(df, to.renames)), StructType(outFields))
     val post = liveAs(readCommit(spark, to, touched))
     val pre = from.map(c => liveAs(readCommit(spark, c, touched)))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(outFields)))
+      .getOrElse(LakeTable.emptyFrame(spark, StructType(outFields)))
     // churn-sized full-outer diff on the merge keys; version identity is
     // the null-safe (_txid, _etag) pair, so maintenance-only rewrites
     // (same logical rows, new files) compare equal and emit nothing.
@@ -553,50 +549,14 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     }
   }
 
-
-  /** Build `f`'s scans with file listing kept ON THE DRIVER: the
-    * engine's data dirs are a manifest-known layout (one `_bucket=N`
-    * dir per bucket, written by this table's own commits), so Spark's
-    * distributed listing job — launched whenever a read spans more
-    * than `parallelPartitionDiscovery.threshold` (default 32) paths —
-    * is pure overhead: ~0.1-0.6 s of job scheduling PER READ, growing
-    * with delta-stack depth (measured 0.7 s/batch of the steady-state
-    * CDC floor at depth 5), to list dirs the driver can stat in
-    * microseconds. Iceberg/Delta avoid the same cost by carrying file
-    * manifests; until commits track file names, driver-side listing
-    * of O(buckets × depth) dirs is the equivalent. Conf is restored
-    * after the scans are built (listing happens eagerly at
-    * `spark.read`). One JVM-wide lock spans set → build → restore:
-    * two readers interleaving on one session would otherwise leak the
-    * flipped value (A saves 32, B saves A's 8192, A restores 32, B
-    * restores 8192), and no session-global state may change under a
-    * reader. */
-  private def withDriverListing[T](spark: SparkSession)(f: => T): T =
-    LakeTable.DriverListingLock.synchronized {
-      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "8192")
-      try f finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-
   private def readCommit(spark: SparkSession, c: Commit, buckets: Seq[Int],
-      resolve: Boolean = true, includeBase: Boolean = true): DataFrame =
-    withDriverListing(spark) {
-      readCommitInner(spark, c, buckets, resolve, includeBase)
-    }
-
-  private def readCommitInner(spark: SparkSession, c: Commit, buckets: Seq[Int],
-      resolve: Boolean, includeBase: Boolean): DataFrame = {
+      resolve: Boolean = true, includeBase: Boolean = true): DataFrame = {
     val base =
       if (includeBase) buckets.flatMap(b => c.buckets.get(b.toString)) else Nil
     // delta dirs are bucket-partitioned, so pruning is PATH selection —
     // no per-row filter, and buckets without deltas skip resolve cost
     val deltaRels = buckets.flatMap(b => c.deltas.getOrElse(b.toString, Nil))
-    if (base.isEmpty && deltaRels.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], c.schema)
+    if (base.isEmpty && deltaRels.isEmpty) return LakeTable.emptyFrame(spark, c.schema)
     // Each data dir was written by exactly one commit (path encodes the
     // version), under that commit's schema. Schema evolution may PROMOTE
     // column types (int→double→string), which parquet cannot coerce at
@@ -607,64 +567,33 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       case (v, j) => v -> DataType.fromJson(j).asInstanceOf[StructType]
     }
     val latest = c.schema
-    // declared renames (metadata-only — data files keep the retired
-    // name): map each pre-rename dir's columns onto the current names
-    // before the cast-up projection. Stored dirs hold at most ONE of
-    // {retired, current} (the apply path folds late old-key producers
-    // into the current column before writing), so a plain rename
-    // suffices — no per-row coalesce on the read path.
-    def applyRenames(df: DataFrame): DataFrame =
-      c.renames.foldLeft(df) { case (d, (oldName, curName)) =>
-        if (d.columns.contains(oldName) && !d.columns.contains(curName))
-          d.withColumnRenamed(oldName, curName)
-        else d
-      }
     def readGroup(rels: Seq[String]): Option[DataFrame] = {
       if (rels.isEmpty) return None
-      // data/cVVV[/...] or data/cVVVd[/...], base or delta — either
-      // was written under commit VVV's schema
-      val byVersion = rels.groupBy(rel => rel.split("/")(1).stripSuffix("d"))
-      val distinctSchemas = byVersion.keys.flatMap(schemas.get).map(_.json).toSet
+      val byVersion = rels.groupBy(LakeTable.schemaKeyOf)
       // fast path (one scan) only when EVERY dir's writer schema is
       // known and nothing needs reader-side promotion; add-only
       // evolution is fine (missing columns → null) but a dir written
       // under a since-retired column name is not — a single
       // latest-schema scan would read the renamed column as all-null
       // instead of mapping the retired name onto it
-      val addOnly = byVersion.keys.forall(schemas.contains) &&
-        distinctSchemas.forall { sj =>
-          val s = DataType.fromJson(sj).asInstanceOf[StructType]
-          s.fields.forall(f => !c.renames.contains(f.name) &&
-            latest.find(_.name == f.name).exists(_.dataType == f.dataType))
-        }
+      val addOnly = byVersion.keys.forall(v => schemas.get(v).exists(_.fields.forall(f =>
+        !c.renames.contains(f.name) &&
+          latest.find(_.name == f.name).exists(_.dataType == f.dataType))))
       Some(
-        if (addOnly)
-          spark.read.schema(latest).parquet(rels.map(r => root.resolve(r).toString): _*)
+        if (addOnly) scan(spark, rels, Some(latest))
+        // a dir whose writer schema was pruned from the retained log (a
+        // lagging consumer's endpoint commit after checkpointLog rolled
+        // history up) scans under its footers' schema — exactly what was
+        // written — and is promoted/renamed as usual: old files under the
+        // latest schema would crash on promoted types or read renamed
+        // columns as all-null
         else byVersion.toSeq.sortBy(_._1).map { case (ver, grp) =>
-          val paths = grp.map(r => root.resolve(r).toString)
-          val scan = schemas.get(ver) match {
-            case Some(ws) => spark.read.schema(ws).parquet(paths: _*)
-            // a dir whose writer schema was pruned from the retained
-            // log (a lagging consumer's endpoint commit after
-            // checkpointLog rolled history up): the parquet footers
-            // carry the written schema exactly, so infer from them and
-            // promote/rename as usual — never scan old files under the
-            // latest schema, which would crash on promoted types or
-            // read renamed columns as all-null
-            case None => spark.read.parquet(paths: _*)
-          }
-          LakeTable.align(applyRenames(scan), latest)
+          LakeTable.align(
+            LakeTable.withRenames(scan(spark, grp, schemas.get(ver)), c.renames), latest)
         }.reduce(_ unionByName _))
     }
-    val baseDf = readGroup(base)
     val deltaDf = readGroup(deltaRels.distinct)
-    val combined = (baseDf, deltaDf) match {
-      case (Some(b), Some(d)) => b.unionByName(d)
-      case (Some(b), None) => b
-      case (None, Some(d)) => d
-      case (None, None) => return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], c.schema)
-    }
+    val combined = (readGroup(base) ++ deltaDf).reduce(_ unionByName _)
     // MERGE-ON-READ resolve: a key may appear in the base and in any
     // number of delta files — the newest row wins (resolveLatest).
     // Skipped entirely when no deltas exist. A bucket with NO base and
@@ -676,6 +605,46 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       c.deltas.getOrElse(b.toString, Nil).size <= 1)
     if (deltaDf.isEmpty || !resolve || resolveFree) combined
     else resolveLatest(combined, LakeTable.SaltBuckets)
+  }
+
+  /** One parquet scan over the data dirs `rels`, under `schema` (the
+    * footers' schema when None): the relation `DataFrameReader.parquet`
+    * resolves the dirs to — same scan node, dir order, sizes and input
+    * files — but with every part file handed to the index pre-listed,
+    * so no listing job runs however many dirs the read spans (Spark
+    * lists past `parallelPartitionDiscovery.threshold` paths with a
+    * distributed job, ~0.1-0.6 s) and no session conf is touched. A
+    * missing dir fails the read by name, never scans as empty. */
+  private def scan(spark: SparkSession, rels: Seq[String],
+      schema: Option[StructType]): DataFrame = {
+    val fs = FileSystem.get(spark.sessionState.newHadoopConf())
+    val listed = rels.map { rel =>
+      val local = root.resolve(rel)
+      // qualified, no trailing slash: each part's parent must equal its
+      // root, or partition inference sees conflicting dir structures
+      val dir = fs.makeQualified(new HadoopPath(local.toString))
+      if (!Files.isDirectory(local)) throw new java.io.FileNotFoundException(
+        s"data dir $dir referenced by the commit does not exist")
+      dir -> LakeTable.parquetParts(local).sortBy(_.getFileName.toString).map { p =>
+        val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+        // named as Hadoop's local listing names a file (file:///…)
+        new FileStatus(a.size, false, 1, fs.getDefaultBlockSize(dir), a.lastModifiedTime.toMillis,
+          fs.makeQualified(new HadoopPath(dir.toUri.getPath, p.getFileName.toString)))
+      }.toArray
+    }
+    val cache = new FileStatusCache {
+      private val byDir = listed.toMap
+      override def getLeafFiles(path: HadoopPath) = byDir.get(path)
+      def putLeafFiles(path: HadoopPath, files: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, listed.map(_._1), Map.empty, schema, cache)
+    val format = new ParquetFileFormat
+    val dataSchema = schema.orElse(format.inferSchema(spark, Map.empty, index.allFiles()))
+      .getOrElse(throw new IllegalStateException(
+        s"no parquet footer to infer a schema from under ${rels.mkString(", ")}"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      graftshim.asNullable(dataSchema), None, format, Map.empty)(spark))
   }
 
   /** The engine's one merge rule — the newest row per (conv_id,
@@ -1085,7 +1054,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val latest = log.last.version
     val referenced: Set[String] = log.takeRight(math.max(1, retainCommits))
       .flatMap(c => (c.buckets.values ++ c.deltas.values.flatten)
-        .map(rel => rel.split("/")(1))).toSet
+        .map(LakeTable.dataDirOf)).toSet
     val dataDir = root.resolve("data")
     if (!Files.isDirectory(dataDir)) return Nil
     val s = Files.list(dataDir)
@@ -1122,10 +1091,6 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
 }
 
 object LakeTable {
-  /** Held by every table's `withDriverListing` across its session-conf
-    * flip, so concurrent readers cannot interleave set and restore. */
-  private object DriverListingLock
-
   /** Within-bucket salt width shared by the resolve's shuffle and the
     * merge paths (CdcApply.SaltBuckets aliases this): a bucket's rows
     * spread over this many reducers, so hot buckets don't serialize a
@@ -1144,6 +1109,29 @@ object LakeTable {
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
+
+  /** Map each column `df` still carries under a retired name onto its
+    * current one ([[Commit.renames]]: retired → current, flattened).
+    * Stored dirs hold at most ONE of {retired, current} (the apply path
+    * folds late old-key producers into the current column before
+    * writing), so a plain rename suffices — no per-row coalesce. */
+  private[graft] def withRenames(df: DataFrame, renames: Map[String, String]): DataFrame =
+    renames.foldLeft(df) { case (d, (oldName, curName)) =>
+      if (d.columns.contains(oldName) && !d.columns.contains(curName))
+        d.withColumnRenamed(oldName, curName)
+      else d
+    }
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** The commit-stamped dir a data path lives in: "data/cVVV[d]/…" →
+    * "cVVV[d]" (vacuum's unit of deletion). */
+  private def dataDirOf(rel: String): String = rel.split("/")(1)
+
+  /** The writer-schema key of a data path, base (cVVV) or delta (cVVVd)
+    * alike: "cVVV", the commit whose schema wrote it. */
+  private def schemaKeyOf(rel: String): String = dataDirOf(rel).stripSuffix("d")
 
   /** The live rows of a raw read: delete tombstones filtered out, the
     * `_deleted` marker dropped. */
