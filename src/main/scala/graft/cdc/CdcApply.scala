@@ -20,6 +20,12 @@ case class ApplyStats(
     txidWatermark: Long,
     bucketsTouched: Int)
 
+/** What a caller's own pass over a batch already knows, so the apply
+  * can skip its pre-scan: the touched bucket set, the event count, and
+  * the txid floor — `Some(lo)` when every event carries a non-null
+  * `_txid` (cast to bigint, as the apply stores it) of at least `lo`. */
+case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
+
 /** The MERGE-apply stage: one micro-batch of change events → one new
   * snapshot of the target [[LakeTable]].
   *
@@ -31,7 +37,11 @@ case class ApplyStats(
   *      are read and rewritten (reference analogue: per-split map
   *      tasks, /root/reference/manta/dc_inputs.sh:57-66);
   *   3. per-key version gate — an event takes effect only if its _txid
-  *      exceeds the stored row's _txid. Deletes become TOMBSTONES
+  *      exceeds the stored row's _txid. Every stored row's _txid is at
+  *      most the commit's txidWatermark, so a batch whose txid floor
+  *      (every event has a non-null _txid ≥ it) exceeds the watermark
+  *      passes the gate whole and skips it: an in-order tail never
+  *      reads the table to gate. Deletes become TOMBSTONES
   *      (_deleted=true rows), so a stale update arriving after a newer
   *      delete cannot resurrect the key. This makes the final state a
   *      pure function of the event set — independent of arrival order,
@@ -61,10 +71,11 @@ case class ApplyStats(
   * Scale notes: the only full pass over the *batch* is one shuffle —
   * by bucket on the steady path, by (bucket, salt) on the bulk path.
   * The target table is touched only on affected buckets; the steady
-  * path's version gate is a broadcast join keyed on the merge key.
-  * Nothing scans unaffected data. Tombstones accumulate only for
-  * deleted keys; compact() can drop them once no older txids can
-  * arrive (watermark-bounded).
+  * path's version gate is a broadcast join keyed on the merge key, and
+  * only a batch at or below the watermark (late, overlapping, or with
+  * a null _txid) runs it. Nothing scans unaffected data. Tombstones
+  * accumulate only for deleted keys; compact() can drop them once no
+  * older txids can arrive (watermark-bounded).
   */
 object CdcApply {
 
@@ -136,7 +147,7 @@ object CdcApply {
       StructField("_deleted", BooleanType)))
 
   /** Per-batch event-count ceiling for the broadcast merge path: below
-    * it, the batch's keys are broadcast and the target side is never
+    * it, a gated batch's keys are broadcast and the target side is never
     * shuffled (see `applyBatch` step 5). 500k keys ≈ 20-40 MB
     * broadcast — far under Spark's 8 GB broadcast limit, large enough
     * that every steady-state CDC micro-batch qualifies. */
@@ -184,7 +195,7 @@ object CdcApply {
       broadcastThreshold: Long = BroadcastMergeMaxEvents,
       maxDeltaDepth: Int = MaxDeltaDepth,
       foldRatio: Double = FoldToBaseRatio,
-      prunedHint: Option[(Seq[Int], Long)] = None): ApplyStats = {
+      prunedHint: Option[BatchHint] = None): ApplyStats = {
     val prev = table.currentCommit()
     val prevWm = prev.map(_.txidWatermark).getOrElse(0L)
     // every apply that changes nothing returns this
@@ -221,20 +232,21 @@ object CdcApply {
     val payload = evolveSchema(prevPayload, payloadIn, ignoreFields)
     val schema = storedSchema(payload)
 
-    // 1. bucket pruning + emptiness in ONE cheap job over the raw batch
-    // (every event's key appears among the winners, so the bucket set of
-    // the batch IS the bucket set of the winners — no window, no
-    // materialization, ≤ numBuckets values collected). For bulk replays
-    // that touch ~every bucket anyway (pruneBuckets=false) the pre-scan
-    // is pure overhead and skipped (count -1: unknown). Callers that
-    // already run an O(batch) aggregation of their own (the streaming
-    // tail's lineage/drift summary) pass the bucket set and count as
-    // `prunedHint`, folding the pre-scan into that job — the
-    // steady-state micro-batch then pays exactly ONE pass over the batch
-    // before the write.
-    val (touched: Seq[Int], batchCount: Long) = prunedHint match {
-      case Some((buckets, n)) => (buckets.sorted, n)
-      case None if !pruneBuckets => (0 until table.effectiveNumBuckets, -1L)
+    // 1. bucket pruning, emptiness and the txid floor in ONE cheap job
+    // over the raw batch (every event's key appears among the winners,
+    // so the bucket set of the batch IS the bucket set of the winners —
+    // no window, no materialization, ≤ numBuckets values collected).
+    // For bulk replays that touch ~every bucket anyway
+    // (pruneBuckets=false) the pre-scan is pure overhead and skipped
+    // (count -1: unknown; the bulk path's resolve needs no floor).
+    // Callers that already run an O(batch) aggregation of their own (the
+    // streaming tail's lineage/drift summary) pass the bucket set, count
+    // and floor as `prunedHint`, folding the pre-scan into that job —
+    // the steady-state micro-batch then pays exactly ONE pass over the
+    // batch before the write.
+    val BatchHint(touched, batchCount, txidFloor) = prunedHint match {
+      case Some(h) => h.copy(buckets = h.buckets.sorted)
+      case None if !pruneBuckets => BatchHint(0 until table.effectiveNumBuckets, -1L, None)
       case None =>
         // hash the CAST key — the winner tagging below hashes the key
         // cast to the stored type, and xxhash64 is type-directed, so an
@@ -242,11 +254,17 @@ object CdcApply {
         // against a stored string column) would compute a DIFFERENT
         // bucket set: the gate would read the wrong buckets and a
         // winner could fall outside every bucket class
+        // (the floor reads _txid cast as the apply stores it: a
+        // string-inferred _txid would compare lexically)
+        val tx = col("_txid").cast(LongType)
         val eAgg = events.agg(
           collect_set(table.bucketCol(
             col("conv_id").cast(schema("conv_id").dataType))).as("buckets"),
-          count(lit(1)).as("n")).head()
-        (eAgg.getSeq[Int](0).sorted, eAgg.getAs[Long]("n"))
+          count(lit(1)).as("n"), min(tx).as("lo"),
+          count(when(tx.isNull, 1)).as("nullTx")).head()
+        BatchHint(eAgg.getSeq[Int](0).sorted, eAgg.getAs[Long]("n"),
+          Option.when(eAgg.getAs[Long]("nullTx") == 0L && !eAgg.isNullAt(2))(
+            eAgg.getAs[Long]("lo")))
     }
     if (batchCount == 0L) return unchanged(skipped = false)
 
@@ -347,14 +365,17 @@ object CdcApply {
     // joins the winner keys FIRST, so the per-key max-txid aggregation
     // runs on ≤ |winners|·depth rows and the TARGET side is never
     // shuffled; a winner takes effect if its _txid beats the stored one
-    // or its key is new. An EMPTY table has nothing to gate against, so
-    // the whole gate subtree is skipped. At 100 TB this is the
-    // difference between writing O(batch) per micro-batch and
-    // re-shuffling the touched buckets every batch.
+    // or its key is new. At 100 TB this is the difference between
+    // writing O(batch) per micro-batch and re-shuffling the touched
+    // buckets every batch. The gate has nothing to reject, so its whole
+    // subtree is skipped, when the table is EMPTY or the batch is
+    // strictly newer than it: every stored _txid is ≤ the watermark, so
+    // a txid floor above the watermark beats every stored row.
+    val gated = broadcastPath && prev.nonEmpty && !txidFloor.exists(_ > prevWm)
     val batchRows: DataFrame =
       if (!broadcastPath)
         events.select(alignWinnerCols(eventCols) :+ lit(true).as("__ev"): _*)
-      else if (prev.isEmpty) winnerRows.withColumn("__ev", lit(true))
+      else if (!gated) winnerRows.withColumn("__ev", lit(true))
       else {
         val mergeKeys = Model.MergeKeys.map(col)
         val rawKeys = storedRows(touched)
@@ -458,10 +479,12 @@ object CdcApply {
         "consolidatedRows" -> deltaReplaces.values.map(_._2).sum,
         "deltaRows" -> deltaAdds.values.map(_._2).sum,
         "deltaCommit" -> (if (baseBuckets.isEmpty && consBuckets.isEmpty) 1L else 0L),
-        "broadcastMerge" -> (if (broadcastPath) 1L else 0L)) ++ extraMetrics,
+        "broadcastMerge" -> (if (broadcastPath) 1L else 0L),
+        // 1 when step 5's gate join ran (the bulk path's resolve is its own gate)
+        "versionGate" -> (if (gated) 1L else 0L)) ++ extraMetrics,
       queryId, deltaAdds = deltaAdds, deltaReplaces = deltaReplaces)
     ApplyStats(c.version, nEff, nEff - nDel, nDel,
-      skippedReplay = false, maxTx, touched.length)
+      skippedReplay = false, c.txidWatermark, touched.length)
   }
 
   /** Replay a changelog in `nBatches` txid-ordered batches (batch-mode
@@ -496,18 +519,22 @@ object CdcApply {
         // all-buckets hint with the estimated count: a replay batch of
         // an evenly split changelog touches ~every bucket, so the
         // per-batch prune pre-scan job would re-derive a set we
-        // already know a correct superset of. The estimate is safe
-        // even under total txid-density skew: an empty range falls
-        // through to the write's n==0 no-commit path; the broadcast of
-        // winner keys is bounded by the WHOLE changelog, which the
-        // n ≤ 2×threshold guard caps at ~1M keys (tens of MB); and
-        // the hint count is floored at the parallel-write threshold so
-        // an under-estimate can never serialize a big delta through a
-        // single coalesced writer task.
+        // already know a correct superset of. The range's `from` is
+        // the batch's txid floor (the filter drops null _txids): a
+        // first replay is in order and skips the version gate, so no
+        // winner keys are broadcast; only a replay over a table that
+        // already holds the range (a re-run) gates, and its broadcast
+        // of winner keys is bounded by the WHOLE changelog, which the
+        // n ≤ 2×threshold guard caps at ~1M keys (tens of MB). The
+        // estimate is safe even under total txid-density skew: an
+        // empty range falls through to the write's n==0 no-commit
+        // path, and the hint count is floored at the parallel-write
+        // threshold so an under-estimate can never serialize a big
+        // delta through a single coalesced writer task.
         applyBatch(spark, table,
           events.where(col("_txid") >= from && col("_txid") < to), batchId = -1L,
-          prunedHint = Some((0 until table.effectiveNumBuckets,
-            math.max(estBatch, ParallelDeltaWriteMinEvents))))
+          prunedHint = Some(BatchHint(0 until table.effectiveNumBuckets,
+            math.max(estBatch, ParallelDeltaWriteMinEvents), Some(from))))
       else
         applyBatch(spark, table,
           events.where(col("_txid") >= from && col("_txid") < to), batchId = -1L,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.cdc.CdcApply
+import graft.cdc.{BatchHint, CdcApply}
 import graft.table.LakeTable
 
 /** The streaming CDC tail: an NDJSON changelog directory (the
@@ -298,10 +298,12 @@ object CdcStream {
               // ONE pass over the batch: per-DC lineage counters, distinct
               // origin files, newest event time (ingest-lag input), novel
               // keys and corrupt rows (drift detection), PLUS the apply
-              // stage's bucket-prune inputs (touched-bucket set + clean
-              // row count over non-corrupt rows) — a single job that
-              // also materializes the cache every later job reads, so
-              // applyBatch skips its own pre-scan entirely. hasTs reads
+              // stage's prunedHint over non-corrupt rows (touched-bucket
+              // set, clean row count, and the txid floor: min and null
+              // count of _txid) — a single job that also materializes the
+              // cache every later job reads, so applyBatch skips its own
+              // pre-scan entirely, and an in-order batch (floor above the
+              // table's watermark) skips the version gate. hasTs reads
               // schemaCache at CALL time: a drift re-inference that
               // introduces `ts` mid-batch must be visible to the second
               // summarize or the batch records no ingest-lag reading.
@@ -310,9 +312,13 @@ object CdcStream {
                 // cast before hashing: xxhash64 is type-directed, and
                 // this bucket set becomes applyBatch's prunedHint —
                 // normalize() will cast conv_id to string before the
-                // apply hashes it, so the hint must hash the same value
-                val okBucket = when(col(CorruptCol).isNull,
+                // apply hashes it, so the hint must hash the same value.
+                // _txid is cast as normalize() casts it too: a
+                // string-inferred _txid would compare lexically
+                val clean = col(CorruptCol).isNull
+                val okBucket = when(clean,
                   table.bucketCol(col("conv_id").cast("string")))
+                val okTx = col("_txid").cast("bigint")
                 df.groupBy("_origin_dc").agg(
                   count(lit(1)).as("n"),
                   countDistinct(col("_origin_file")).as("nf"),
@@ -320,7 +326,9 @@ object CdcStream {
                    else lit(null).cast("long")).as("maxTs"),
                   sum(col(CorruptCol).isNotNull.cast("long")).as("nCorrupt"),
                   array_distinct(flatten(collect_set(col("__novel")))).as("novel"),
-                  collect_set(okBucket).as("buckets"))
+                  collect_set(okBucket).as("buckets"),
+                  min(when(clean, okTx)).as("minTx"),
+                  count(when(clean && okTx.isNull, 1)).as("nullTx"))
                   .collect()
               }
               var summary = summarize(enriched)
@@ -358,10 +366,13 @@ object CdcStream {
               val nFiles = summary.map(_.getLong(2)).sum
               val maxTs = summary.flatMap(r =>
                 if (r.isNullAt(3)) None else Some(r.getLong(3)))
-              // bucket-prune inputs, already paid for by the summary job
+              // prunedHint, already paid for by the summary job
               val nClean = summary.map(r => r.getLong(1) - r.getLong(4)).sum
               val touchedBuckets = summary
                 .flatMap(_.getSeq[Int](6)).distinct.toSeq
+              val minTx = summary.filterNot(_.isNullAt(7)).map(_.getLong(7))
+              val txidFloor = Option.when(
+                minTx.nonEmpty && summary.forall(_.getLong(8) == 0L))(minTx.min)
               val events = normalize(enriched
                 .where(col(CorruptCol).isNull)
                 .drop(CorruptCol, "__novel"))
@@ -370,7 +381,7 @@ object CdcStream {
                 extraMetrics = lineage + ("originFiles" -> nFiles) ++
                   (if (nCorruptFinal > 0)
                     Map("corruptRows" -> nCorruptFinal) else Map.empty),
-                prunedHint = Some((touchedBuckets, nClean)))
+                prunedHint = Some(BatchHint(touchedBuckets, nClean, txidFloor)))
               val ms = (System.nanoTime() - t0) / 1000000
               // ingest lag: wall-clock minus newest event time in the batch
               // (north-star metric; negative/absent ts → no lag reading)

@@ -18,7 +18,8 @@ import org.json4s.jackson.Serialization
   * @param version        monotonically increasing snapshot id
   * @param batchId        streaming micro-batch id that produced it (-1 for batch jobs)
   * @param txidWatermark  highest change-event _txid applied so far — the
-  *                       exactly-once high-watermark (reference analogue:
+  *                       exactly-once high-watermark; it never decreases
+  *                       and bounds every stored row's _txid (reference analogue:
   *                       _etag state extraction for snapshot diffing,
   *                       /root/reference/lib/backup_state.js:135-143)
   * @param schemaJson     table schema (Spark DataType JSON) as of this commit —
@@ -863,8 +864,12 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val hook = testBeforePublish
     testBeforePublish = () => ()
     hook()
+    // the watermark never falls: a retry rebuilt against a head that a
+    // disjoint writer moved higher keeps that writer's watermark (the
+    // version gate's skip and versionAt both read it as an upper bound)
     publish(Commit(
-      prev.map(_.version + 1).getOrElse(1L), batchId, txidWatermark, schema.json,
+      prev.map(_.version + 1).getOrElse(1L), batchId,
+      prev.fold(txidWatermark)(p => math.max(txidWatermark, p.txidWatermark)), schema.json,
       (carried -- dropped) ++ rewritten.collect { case (k, Some(v)) => k.toString -> v },
       counts, metrics + ("deletesSinceCompaction" -> delSince) +
         // persist the layout's bucket count forward; a caller-supplied

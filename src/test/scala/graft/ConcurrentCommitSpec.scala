@@ -240,4 +240,25 @@ class ConcurrentCommitSpec extends SparkSpec {
     assert(spark.conf.get(key) == before,
       s"$key is ${spark.conf.get(key)} after concurrent reads, was $before")
   }
+
+  test("a retried commit never lowers the watermark a disjoint writer raised") {
+    val (table, _) = seeded()
+    val c0 = table.currentCommit().get
+    val (v0, wm, schema) = (c0.version, c0.txidWatermark, c0.schema)
+    val b = new LakeTable(table.location, numBuckets = 8)
+    val (relB, nB, _, _) = writeDelta(b, v0 + 1, bucket = 2, "from-B")
+    val (relA, nA, _, _) = writeDelta(table, v0 + 2, bucket = 5, "from-A")
+    // B (say a redrive) publishes a higher watermark inside A's window;
+    // A (say the tail) retries onto B's commit
+    table.testBeforePublish = () =>
+      b.commit(schema, Map.empty, Map.empty, wm + 10, -1L, Map.empty,
+        deltaAdds = Map(2 -> (relB, nB)))
+    val a = table.commit(schema, Map.empty, Map.empty, wm + 1, -1L, Map.empty,
+      deltaAdds = Map(5 -> (relA, nA)))
+    assert(a.version == v0 + 2 && table.currentCommit().get.txidWatermark == wm + 10,
+      s"head watermark ${table.currentCommit().get.txidWatermark}, want ${wm + 10}")
+    val marks = table.commitLog().map(_.txidWatermark)
+    assert(marks == marks.sorted, s"watermarks not monotone: $marks")
+    assert(table.versionAt(wm + 10) == Some(v0 + 2))
+  }
 }

@@ -433,4 +433,82 @@ class PlanSpec extends SparkSpec {
       p36.toLowerCase.contains("image_meta"),
       s"q36 plan lost the native decode expression:\n$p36")
   }
+
+  /** Runs `f` and returns its result plus the root paths of every file
+    * scan that a query executed during it planned. */
+  private def scannedRootsDuring[T](f: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    org.apache.spark.sql.graftshim.drainListeners(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = f
+      org.apache.spark.sql.graftshim.drainListeners(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      val qes = plans.iterator().asScala.toSeq
+      assert(qes.exists(_.executedPlan.toString.contains("Aggregate")),
+        "no apply query captured")
+      (out, qes.flatMap(qe => flattenPlan(qe.executedPlan).collect {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+      }.flatten))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** A 16-bucket table holding events 1..2000 (watermark 2000), the
+    * corpus it came from, and the absolute prefix of its data dirs. */
+  private def gateTable(name: String) = {
+    val table = new LakeTable(tmpDir(name), numBuckets = 16)
+    val events = Corpus.changeEvents(spark, 3000, nConvs = 50, maxTurns = 8)
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") <= 2000))
+    assert(table.txidWatermark == 2000L)
+    (table, events, java.nio.file.Paths.get(table.location, "data").toAbsolutePath.toString)
+  }
+
+  test("watermark skip: an in-order apply scans no stored data dir") {
+    val (table, events, dataDir) = gateTable("planskip")
+    val (s, roots) = scannedRootsDuring(CdcApply.applyBatch(spark, table,
+      events.where(col("_txid") > 2000 && col("_txid") <= 2300)))
+    assert(s.applied > 0 && table.currentCommit().get.deltaDepth == 1)
+    assert(!roots.exists(_.contains(dataDir)),
+      s"in-order apply scanned stored dirs: ${roots.filter(_.contains(dataDir)).take(4)}")
+    assert(table.currentCommit().get.metrics("versionGate") == 0L)
+    assertSameRows(table.read(spark).select("conv_id", "turn_idx", "text"),
+      Corpus.oracleFinalState(events.where(col("_txid") <= 2300))
+        .select("conv_id", "turn_idx", "text"))
+  }
+
+  test("watermark skip: re-emitting the watermark's own event still gates and commits nothing") {
+    val (table, events, dataDir) = gateTable("planskipeq")
+    val v = table.currentCommit().get.version
+    val (s, roots) = scannedRootsDuring(CdcApply.applyBatch(spark, table,
+      events.where(col("_txid") === 2000)))
+    assert(s.applied == 0L && table.currentCommit().get.version == v)
+    assert(roots.exists(_.contains(dataDir)), s"the gate scanned no stored dir: $roots")
+  }
+
+  test("watermark skip: a null-_txid update keeps the gate and never overwrites its key") {
+    import spark.implicits._
+    val (table, _, dataDir) = gateTable("planskipnull")
+    val key = table.read(spark).orderBy("conv_id", "turn_idx").limit(1)
+      .select("conv_id", "turn_idx", "text").head()
+    val ts = java.sql.Timestamp.valueOf("2014-03-12 00:00:00")
+    val batch = Seq(
+      (None: Option[Long], "update", "enull", key.getString(0), key.getInt(1), "user",
+        "overwritten", null: String, ts),
+      (Some(2001L), "insert", "enew", "convNEW", 0, "user", "new", null: String, ts))
+      .toDF("_txid", "_op", "_etag", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val (s, roots) = scannedRootsDuring(CdcApply.applyBatch(spark, table, batch))
+    assert(s.applied == 1L && table.currentCommit().get.metrics("versionGate") == 1L)
+    assert(roots.exists(_.contains(dataDir)), s"the gate scanned no stored dir: $roots")
+    def textOf(conv: String, turn: Int) = table.read(spark)
+      .where(col("conv_id") === conv && col("turn_idx") === turn)
+      .select("text").collect().map(_.getString(0)).toSeq
+    assert(textOf(key.getString(0), key.getInt(1)) == Seq(key.getString(2)))
+    assert(textOf("convNEW", 0) == Seq("new"))
+  }
 }
