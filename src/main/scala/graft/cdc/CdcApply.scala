@@ -21,9 +21,10 @@ case class ApplyStats(
     bucketsTouched: Int)
 
 /** What a caller's own pass over a batch already knows, so the apply
-  * can skip its pre-scan: the touched bucket set, the event count, and
-  * the txid floor — `Some(lo)` when every event carries a non-null
-  * `_txid` (cast to bigint, as the apply stores it) of at least `lo`. */
+  * can skip its pre-scan: the touched bucket set, the event count (-1
+  * when unknown), and the txid floor — `Some(lo)` when every event
+  * carries a non-null `_txid` (cast to bigint, as the apply stores it)
+  * of at least `lo`. */
 case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
 
 /** The MERGE-apply stage: one micro-batch of change events → one new
@@ -48,14 +49,18 @@ case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
   *      duplication, or batch boundaries (exactly-once = idempotent
   *      keyed upsert; reference analogue: `_etag` change detection,
   *      /root/reference/lib/backup_state.js:135-143);
-  *   4. one class per touched bucket — DELTA (append the gated
-  *      winners; on an empty table they are the bases), CONSOLIDATE
-  *      (stack ∪ winners → one delta dir, base untouched) or FOLD (base
-  *      ∪ stack ∪ batch → a fresh base; the bulk path folds every
-  *      touched bucket with the raw events as its batch). Both rewrite
-  *      classes run ONE shared latest-per-key resolve
+  *   4. one class per touched bucket, chosen from what the apply knows
+  *      of the batch (a [[BatchHint]] or its own pre-scan) and the
+  *      bucket's stack, never from the batch's size — DELTA (append the
+  *      gated winners; on an empty table they are the bases),
+  *      CONSOLIDATE (stack ∪ winners → one delta dir, base untouched) or
+  *      FOLD (base ∪ stack ∪ the bucket's raw events → a fresh base; a
+  *      batch the apply knows nothing of folds every touched bucket).
+  *      Both rewrite classes run ONE shared latest-per-key resolve
   *      ([[LakeTable.resolveLatest]]), the same rule the merge-on-read
-  *      reader applies; a stored row wins a _txid tie;
+  *      reader applies; a stored row wins a _txid tie, so FOLD's resolve
+  *      is also its collapse and its gate, and steps 1 and 3 run only
+  *      for DELTA and CONSOLIDATE buckets;
   *   5. that resolve's one exchange is salted within each bucket, so
   *      one hot conversation cannot serialize a whole bucket into one
   *      task (north-rule skew mandate — the reference has no skew
@@ -69,13 +74,16 @@ case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
   *      batch (pure replay) leaves no dir and commits nothing.
   *
   * Scale notes: the only full pass over the *batch* is one shuffle —
-  * by bucket on the steady path, by (bucket, salt) on the bulk path.
-  * The target table is touched only on affected buckets; the steady
-  * path's version gate is a broadcast join keyed on the merge key, and
-  * only a batch at or below the watermark (late, overlapping, or with
-  * a null _txid) runs it. Nothing scans unaffected data. Tombstones
-  * accumulate only for deleted keys; compact() can drop them once no
-  * older txids can arrive (watermark-bounded).
+  * by bucket for the DELTA/CONSOLIDATE winners, by (bucket, salt) for
+  * the FOLD buckets' raw events. The target table is touched only on
+  * affected buckets; the version gate is a broadcast join keyed on the
+  * merge key, and only the DELTA/CONSOLIDATE buckets of a batch at or
+  * below the watermark (late, overlapping, or with a null _txid) run
+  * it. Its broadcast of winner keys is bounded by the caller's batch:
+  * the stream's by `maxFilesPerTrigger`, a redrive by its one
+  * quarantined batch; a replay never gates. Nothing scans unaffected
+  * data. Tombstones accumulate only for deleted keys; compact() can
+  * drop them once no older txids can arrive (watermark-bounded).
   */
 object CdcApply {
 
@@ -146,13 +154,6 @@ object CdcApply {
       StructField("_txid", LongType), StructField("_etag", StringType),
       StructField("_deleted", BooleanType)))
 
-  /** Per-batch event-count ceiling for the broadcast merge path: below
-    * it, a gated batch's keys are broadcast and the target side is never
-    * shuffled (see `applyBatch` step 5). 500k keys ≈ 20-40 MB
-    * broadcast — far under Spark's 8 GB broadcast limit, large enough
-    * that every steady-state CDC micro-batch qualifies. */
-  val BroadcastMergeMaxEvents = 500000L
-
   /** Delta dirs a bucket may stack up before the next apply merges THAT
     * BUCKET's stack (MERGE-ON-READ depth bound, tracked per bucket).
     * Read amplification and resolve-window width stay O(MaxDeltaDepth).
@@ -192,7 +193,6 @@ object CdcApply {
       queryId: String = "",
       ignoreFields: Set[String] = Set.empty,
       extraMetrics: Map[String, Long] = Map.empty,
-      broadcastThreshold: Long = BroadcastMergeMaxEvents,
       maxDeltaDepth: Int = MaxDeltaDepth,
       foldRatio: Double = FoldToBaseRatio,
       prunedHint: Option[BatchHint] = None): ApplyStats = {
@@ -232,22 +232,19 @@ object CdcApply {
     val payload = evolveSchema(prevPayload, payloadIn, ignoreFields)
     val schema = storedSchema(payload)
 
-    // 1. bucket pruning, emptiness and the txid floor in ONE cheap job
-    // over the raw batch (every event's key appears among the winners,
-    // so the bucket set of the batch IS the bucket set of the winners —
-    // no window, no materialization, ≤ numBuckets values collected).
-    // For bulk replays that touch ~every bucket anyway
-    // (pruneBuckets=false) the pre-scan is pure overhead and skipped
-    // (count -1: unknown; the bulk path's resolve needs no floor).
-    // Callers that already run an O(batch) aggregation of their own (the
-    // streaming tail's lineage/drift summary) pass the bucket set, count
-    // and floor as `prunedHint`, folding the pre-scan into that job —
-    // the steady-state micro-batch then pays exactly ONE pass over the
-    // batch before the write.
-    val BatchHint(touched, batchCount, txidFloor) = prunedHint match {
-      case Some(h) => h.copy(buckets = h.buckets.sorted)
-      case None if !pruneBuckets => BatchHint(0 until table.effectiveNumBuckets, -1L, None)
-      case None =>
+    // 1. the batch's facts — touched buckets, event count, txid floor —
+    // in ONE cheap job over the raw batch (every event's key appears
+    // among the winners, so the bucket set of the batch IS the bucket
+    // set of the winners — no window, no materialization, ≤ numBuckets
+    // values collected). Callers that already run an O(batch)
+    // aggregation of their own (the streaming tail's lineage/drift
+    // summary) pass the facts as `prunedHint`, folding the pre-scan into
+    // that job — the steady-state micro-batch then pays exactly ONE pass
+    // over the batch before the write. With no hint and
+    // pruneBuckets=false the apply has no facts: the pre-scan is
+    // skipped and every bucket folds (step 2).
+    val hint = prunedHint.map(h => h.copy(buckets = h.buckets.sorted))
+      .orElse(Option.when(pruneBuckets) {
         // hash the CAST key — the winner tagging below hashes the key
         // cast to the stored type, and xxhash64 is type-directed, so an
         // uncast pre-scan (e.g. a batch whose conv_id inferred bigint
@@ -265,53 +262,14 @@ object CdcApply {
         BatchHint(eAgg.getSeq[Int](0).sorted, eAgg.getAs[Long]("n"),
           Option.when(eAgg.getAs[Long]("nullTx") == 0L && !eAgg.isNullAt(2))(
             eAgg.getAs[Long]("lo")))
-    }
+      })
+    val BatchHint(touched, batchCount, txidFloor) =
+      hint.getOrElse(BatchHint(0 until table.effectiveNumBuckets, -1L, None))
     if (batchCount == 0L) return unchanged(skipped = false)
 
-    // 2. latest event wins per key within the batch (§2.8 semantics) as
-    // a partial-aggregable max_by instead of a row_number window — the
-    // scalable form of `sort -r | uniq`. _etag is the tiebreak for
-    // duplicated txids (identical payloads). The batch is hashed ONCE,
-    // by bucket (cast-typed key — xxhash64 is type-directed): the
-    // winner groupBy keeps that layout (bucket is a subset of the
-    // group keys) and so does the broadcast gate below, so the
-    // steady-state delta write consumes winners ALREADY clustered by
-    // bucket and needs no exchange of its own — a micro-batch pays
-    // exactly one O(batch) shuffle end to end (was two: the groupBy
-    // hash plus the writer's by-bucket repartition, one extra stage of
-    // scheduling latency on every batch of the stream's lifetime).
-    val eventCols = events.columns.toSeq
-    val bktTyped = table.bucketCol(col("conv_id").cast(schema("conv_id").dataType))
-    val stdShufflePartitions = spark.sessionState.conf.numShufflePartitions
-    val winners = events
-      .withColumn("__bkt", bktTyped)
-      .repartition(stdShufflePartitions, col("__bkt"))
-      .groupBy((col("__bkt") +: Model.MergeKeys.map(col)): _*)
-      .agg(max_by(
-        struct(eventCols.map(col): _*),
-        struct(col("_txid"), coalesce(col("_etag"), lit("")))).as("__w"))
-      .select(col("__bkt"), col("__w.*"))
-
-    // 3. align to the stored schema; deletes become tombstones with
-    // payload nulled (the per-key version gate needs them so a stale
-    // update arriving after a newer delete cannot resurrect). Shared by
-    // the broadcast path's winners and the bulk path's raw events
-    // (collapsed by the fold's resolve instead).
-    val keyCols = Model.MergeKeys.toSet
-    val isDel = col("_op") === "delete"
-    def alignWinnerCols(srcCols: Seq[String]): Seq[Column] =
-      schema.fields.map { f =>
-        if (f.name == "_deleted") isDel.as("_deleted")
-        else if (keyCols(f.name) || f.name == "_txid" || f.name == "_etag")
-          col(f.name).cast(f.dataType).as(f.name)
-        else if (srcCols.contains(f.name))
-          when(isDel, lit(null)).otherwise(col(f.name)).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }.toSeq
-    val winnerRows = winners.select(
-      alignWinnerCols(winners.columns.toSeq) :+ col("__bkt"): _*)
-
-    // 4. every touched bucket falls in exactly ONE class:
+    // 2. every touched bucket falls in exactly ONE class, chosen from
+    // the batch's facts and the bucket's stack, never from the batch's
+    // size:
     //   DELTA       — the batch's gated winners append to its stack (on
     //                 an empty table they ARE the bases: nothing under
     //                 them to resolve against);
@@ -321,16 +279,14 @@ object CdcApply {
     //                 (O(stack), never O(base));
     //   FOLD        — at the cap with a stack of FoldToBaseRatio of its
     //                 base (or untracked counts, pre-upgrade commits):
-    //                 base ∪ stack ∪ batch re-resolve into a fresh base,
-    //                 stack cleared. The BULK path (batch ~ table size,
-    //                 count unknown or over the broadcast threshold) is
-    //                 the case where every touched bucket folds and the
-    //                 batch is the raw aligned events: the resolve is
-    //                 then also the within-batch collapse and the gate.
+    //                 base ∪ stack ∪ the bucket's RAW events re-resolve
+    //                 into a fresh base, stack cleared — that resolve is
+    //                 also the within-batch collapse and the gate. A
+    //                 batch without facts (the bulk load) folds every
+    //                 touched bucket.
     // A cold bucket is in no class at all, so cost follows churn.
-    val broadcastPath = batchCount >= 0 && batchCount <= broadcastThreshold
     val (foldBuckets: Seq[Int], consBuckets: Seq[Int]) =
-      if (!broadcastPath) (touched, Nil)
+      if (hint.isEmpty) (touched, Nil)
       else if (prev.isEmpty) (Nil, Nil)
       else if (maxDeltaDepth <= 0) (touched, Nil)
       else {
@@ -345,7 +301,9 @@ object CdcApply {
           }
       }
     val consSet = consBuckets.toSet
-    val deltaBuckets = touched.filterNot((foldBuckets ++ consBuckets).toSet)
+    // the buckets that take the batch's collapsed winners
+    val winnerBuckets = touched.filterNot(foldBuckets.toSet)
+    val deltaBuckets = winnerBuckets.filterNot(consSet)
     // the buckets whose BASE this commit writes; the dir name keeps
     // base-rewriting applies (cV, like compaction) apart from
     // delta-only ones (cVd)
@@ -358,27 +316,72 @@ object CdcApply {
     // aligned to this apply's schema
     def storedRows(buckets: Seq[Int]): DataFrame =
       align(table.readBuckets(spark, buckets, resolve = false), schema)
+    // the rows of `df` (spanning the buckets `of`) whose bucket `bkt` is
+    // in `buckets`
+    def within(df: DataFrame, bkt: Column, buckets: Seq[Int], of: Seq[Int]): DataFrame =
+      if (buckets.size == of.size) df
+      else df.where(bkt.isin(buckets.map(Integer.valueOf): _*))
 
-    // 5. the batch side, tagged __ev = true. On the broadcast path it is
-    // the winners that TAKE EFFECT: the target's (key, _txid) — a
-    // column-pruned narrow scan of the raw physical rows — broadcast-
-    // joins the winner keys FIRST, so the per-key max-txid aggregation
-    // runs on ≤ |winners|·depth rows and the TARGET side is never
-    // shuffled; a winner takes effect if its _txid beats the stored one
-    // or its key is new. At 100 TB this is the difference between
-    // writing O(batch) per micro-batch and re-shuffling the touched
-    // buckets every batch. The gate has nothing to reject, so its whole
-    // subtree is skipped, when the table is EMPTY or the batch is
-    // strictly newer than it: every stored _txid is ≤ the watermark, so
-    // a txid floor above the watermark beats every stored row.
-    val gated = broadcastPath && prev.nonEmpty && !txidFloor.exists(_ > prevWm)
+    // 3. align to the stored schema; deletes become tombstones with
+    // payload nulled (the per-key version gate needs them so a stale
+    // update arriving after a newer delete cannot resurrect). Shared by
+    // the winners and the fold's raw events.
+    val keyCols = Model.MergeKeys.toSet
+    val isDel = col("_op") === "delete"
+    def alignWinnerCols(srcCols: Seq[String]): Seq[Column] =
+      schema.fields.map { f =>
+        if (f.name == "_deleted") isDel.as("_deleted")
+        else if (keyCols(f.name) || f.name == "_txid" || f.name == "_etag")
+          col(f.name).cast(f.dataType).as(f.name)
+        else if (srcCols.contains(f.name))
+          when(isDel, lit(null)).otherwise(col(f.name)).cast(f.dataType).as(f.name)
+        else lit(null).cast(f.dataType).as(f.name)
+      }.toSeq
+
+    // 4. the DELTA and CONSOLIDATE buckets' batch side, tagged __ev =
+    // true: the latest event per key within the batch (§2.8 semantics)
+    // as a partial-aggregable max_by instead of a row_number window —
+    // the scalable form of `sort -r | uniq` — ranked by _txid cast as
+    // the apply stores it (a string _txid would rank "9" above "10"),
+    // then _etag (duplicated txids carry identical payloads). The batch
+    // is hashed ONCE, by bucket (cast-typed key — xxhash64 is
+    // type-directed): the winner groupBy keeps that layout (bucket is a
+    // subset of the group keys) and so does the broadcast gate below,
+    // so the delta write consumes winners ALREADY clustered by bucket
+    // and needs no exchange of its own — a micro-batch pays exactly one
+    // O(batch) shuffle end to end.
+    val eventCols = events.columns.toSeq
+    val stdShufflePartitions = spark.sessionState.conf.numShufflePartitions
+    val winners = within(
+        events.withColumn("__bkt",
+          table.bucketCol(col("conv_id").cast(schema("conv_id").dataType))),
+        col("__bkt"), winnerBuckets, touched)
+      .repartition(stdShufflePartitions, col("__bkt"))
+      .groupBy((col("__bkt") +: Model.MergeKeys.map(col)): _*)
+      .agg(max_by(
+        struct(eventCols.map(col): _*),
+        struct(col("_txid").cast(LongType), coalesce(col("_etag"), lit("")))).as("__w"))
+      .select(col("__bkt"), col("__w.*"))
+    val winnerRows = winners.select(
+      alignWinnerCols(winners.columns.toSeq) :+ col("__bkt"): _*)
+    // The version gate keeps the winners that TAKE EFFECT: the stored
+    // (key, _txid) of the winner buckets — a column-pruned narrow scan
+    // of the raw physical rows — broadcast-joins the winner keys FIRST,
+    // so the per-key max-txid aggregation runs on ≤ |winners|·depth
+    // rows and the TARGET side is never shuffled; a winner takes effect
+    // if its _txid beats the stored one or its key is new. At 100 TB
+    // this is the difference between writing O(batch) per micro-batch
+    // and re-shuffling the touched buckets every batch. The gate has
+    // nothing to reject, so its whole subtree is skipped, when the
+    // table is EMPTY or the batch is strictly newer than it: every
+    // stored _txid is ≤ the watermark, so a txid floor above the
+    // watermark beats every stored row.
+    val gated = prev.nonEmpty && winnerBuckets.nonEmpty && !txidFloor.exists(_ > prevWm)
     val batchRows: DataFrame =
-      if (!broadcastPath)
-        events.select(alignWinnerCols(eventCols) :+ lit(true).as("__ev"): _*)
-      else if (!gated) winnerRows.withColumn("__ev", lit(true))
+      if (!gated) winnerRows.withColumn("__ev", lit(true))
       else {
         val mergeKeys = Model.MergeKeys.map(col)
-        val rawKeys = storedRows(touched)
+        val rawKeys = storedRows(winnerBuckets)
           .select((mergeKeys :+ col("_txid").as("__t_txid")): _*)
         val matched = rawKeys.join(broadcast(winnerRows.select(mergeKeys: _*)),
             Model.MergeKeys.toSeq)
@@ -389,43 +392,45 @@ object CdcApply {
           .drop("__t_txid")
           .withColumn("__ev", lit(true))
       }
-    // a consolidate or fold part reads the gated winners too: persist
-    // them so the gate runs once (and neither part scans a base for it)
-    val shared = broadcastPath && (foldBuckets.nonEmpty || consBuckets.nonEmpty)
+    // the consolidate part reads the gated winners too: persist them so
+    // the gate runs once
+    val shared = deltaBuckets.nonEmpty && consBuckets.nonEmpty
     if (shared) batchRows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def batchIn(buckets: Seq[Int]): DataFrame =
-      if (buckets.size == touched.size) batchRows
-      else batchRows.where(col("__bkt").isin(buckets.map(Integer.valueOf): _*))
-    // the one merge rule over stored rows ∪ the batch's rows of
-    // `buckets`: a stored row ranks above an event with the same _txid,
-    // so an event takes effect only if its _txid exceeds the stored
-    // row's and a re-applied batch changes nothing. The resolve's one
-    // exchange leaves each bucket over ≤ `salt` reducers (files)
-    def merged(stored: Option[DataFrame], buckets: Seq[Int], salt: Int): DataFrame = {
-      val ev = batchIn(buckets).drop("__bkt")
+    // the one merge rule over stored rows ∪ the batch side `ev`: a
+    // stored row ranks above an event with the same _txid, so an event
+    // takes effect only if its _txid exceeds the stored row's and a
+    // re-applied batch changes nothing. The resolve's one exchange
+    // leaves each bucket over ≤ `salt` reducers (files)
+    def merged(stored: Option[DataFrame], ev: DataFrame, salt: Int): DataFrame =
       table.resolveLatest(
           stored.fold(ev)(_.withColumn("__ev", lit(false)).unionByName(ev)), salt,
           struct(col("_txid"), !col("__ev"), coalesce(col("_etag"), lit(""))))
         .withColumn("_bucket", bucketOf)
-    }
     val parts: Seq[DataFrame] = Seq(
       // delta winners arrive already hashed by bucket (the batch's one
       // shuffle): each bucket lands whole in one task, one file per
       // bucket, no exchange here. Tiny batches: a lone writer task
       // beats per-task overhead
       Option.when(deltaBuckets.nonEmpty) {
-        val d = batchIn(deltaBuckets).withColumnRenamed("__bkt", "_bucket")
+        val d = within(batchRows, col("__bkt"), deltaBuckets, winnerBuckets)
+          .withColumnRenamed("__bkt", "_bucket")
         if (batchCount >= 0 && batchCount < ParallelDeltaWriteMinEvents) d.coalesce(1)
         else d
       },
       // salt 1: one reducer (and so one file) per consolidated bucket —
       // the dir lives until the bucket's fold
       Option.when(consBuckets.nonEmpty)(merged(
-        Some(align(table.readDeltaStacks(spark, consBuckets), schema)), consBuckets, 1)),
+        Some(align(table.readDeltaStacks(spark, consBuckets), schema)),
+        within(batchRows, col("__bkt"), consBuckets, winnerBuckets).drop("__bkt"), 1)),
+      // the fold buckets' RAW aligned events: the salted resolve
+      // collapses, gates and merges them in its one exchange
       Option.when(foldBuckets.nonEmpty)(merged(
-        prev.map(_ => storedRows(foldBuckets)), foldBuckets, saltBuckets))).flatten
+        prev.map(_ => storedRows(foldBuckets)),
+        within(events.select(alignWinnerCols(eventCols) :+ lit(true).as("__ev"): _*),
+          bucketOf, foldBuckets, touched),
+        saltBuckets))).flatten
 
-    // 6. ONE write puts every class's part into ONE bucket-partitioned
+    // 5. ONE write puts every class's part into ONE bucket-partitioned
     // dir, sorted so each bucket file's row groups carry tight conv_id
     // min/max for later pruned reads, with the apply's stats riding an
     // Observation over the batch's rows (__ev): effective events,
@@ -461,7 +466,7 @@ object CdcApply {
     val nDel = m("nDel").asInstanceOf[Long]
     val maxTx = math.max(prevWm, Option(m("maxTx")).fold(prevWm)(_.asInstanceOf[Long]))
 
-    // 7. ONE atomic commit: fold (and first-commit) buckets get fresh
+    // 6. ONE atomic commit: fold (and first-commit) buckets get fresh
     // bases, consolidated stacks are replaced by their one dir, every
     // other bucket appends its dir to its stack — with the txid
     // high-watermark and per-bucket lineage counts
@@ -479,8 +484,7 @@ object CdcApply {
         "consolidatedRows" -> deltaReplaces.values.map(_._2).sum,
         "deltaRows" -> deltaAdds.values.map(_._2).sum,
         "deltaCommit" -> (if (baseBuckets.isEmpty && consBuckets.isEmpty) 1L else 0L),
-        "broadcastMerge" -> (if (broadcastPath) 1L else 0L),
-        // 1 when step 5's gate join ran (the bulk path's resolve is its own gate)
+        // 1 when step 4's gate join ran (a fold's resolve is its own gate)
         "versionGate" -> (if (gated) 1L else 0L)) ++ extraMetrics,
       queryId, deltaAdds = deltaAdds, deltaReplaces = deltaReplaces)
     ApplyStats(c.version, nEff, nEff - nDel, nDel,
@@ -488,57 +492,30 @@ object CdcApply {
   }
 
   /** Replay a changelog in `nBatches` txid-ordered batches (batch-mode
-    * equivalent of the streaming tail; used by tests and Verify). */
+    * equivalent of the streaming tail; used by tests and Verify). A
+    * batch whose range starts above the table's txidWatermark is in
+    * order: its range's start is its txid floor (the filter drops null
+    * _txids), so it lands as a delta with no version gate. Every other
+    * batch — the first load, or a re-run over data the table already
+    * holds — has no facts and folds its buckets from its raw events, so
+    * a replay never broadcasts winner keys, however long the changelog. */
   def replay(
       spark: SparkSession,
       table: LakeTable,
       events: DataFrame,
       nBatches: Int): Seq[ApplyStats] = {
-    val bounds = events.agg(min("_txid"), max("_txid"), count(lit(1))).head()
+    val bounds = events.agg(min("_txid"), max("_txid")).head()
     // an empty changelog has no txid range (min/max are null)
-    if (bounds.getLong(2) == 0L) return Seq.empty
-    val (lo, hi, n) = (bounds.getLong(0), bounds.getLong(1), bounds.getLong(2))
+    if (bounds.isNullAt(0)) return Seq.empty
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val step = math.max(1L, (hi - lo + nBatches) / nBatches)
-    // Per-batch path choice: the FIRST batch always takes the bulk
-    // path (the table is empty — nothing to gate
-    // against, and the pre-scan would be pure overhead); later batches
-    // small enough for the broadcast merge (estimated by even split)
-    // run with bucket pruning, so each lands as an O(batch)
-    // MERGE-ON-READ delta commit instead of a bulk full rewrite —
-    // replay cost becomes O(events + one resolve at read)
-    // instead of O(nBatches × table). Bulk-sized batches keep the
-    // no-pre-scan bulk path (the estimate only decides
-    // whether to pay the pre-scan; the apply still measures the exact
-    // batch count there before choosing the merge strategy).
-    val estBatch = n / math.max(1, nBatches)
     (0 until nBatches).map { i =>
       val from = lo + i * step
       val to = if (i == nBatches - 1) hi + 1 else math.min(lo + (i + 1) * step, hi + 1)
-      if (i > 0 && estBatch <= BroadcastMergeMaxEvents
-          && n <= 2 * BroadcastMergeMaxEvents)
-        // all-buckets hint with the estimated count: a replay batch of
-        // an evenly split changelog touches ~every bucket, so the
-        // per-batch prune pre-scan job would re-derive a set we
-        // already know a correct superset of. The range's `from` is
-        // the batch's txid floor (the filter drops null _txids): a
-        // first replay is in order and skips the version gate, so no
-        // winner keys are broadcast; only a replay over a table that
-        // already holds the range (a re-run) gates, and its broadcast
-        // of winner keys is bounded by the WHOLE changelog, which the
-        // n ≤ 2×threshold guard caps at ~1M keys (tens of MB). The
-        // estimate is safe even under total txid-density skew: an
-        // empty range falls through to the write's n==0 no-commit
-        // path, and the hint count is floored at the parallel-write
-        // threshold so an under-estimate can never serialize a big
-        // delta through a single coalesced writer task.
-        applyBatch(spark, table,
-          events.where(col("_txid") >= from && col("_txid") < to), batchId = -1L,
-          prunedHint = Some(BatchHint(0 until table.effectiveNumBuckets,
-            math.max(estBatch, ParallelDeltaWriteMinEvents), Some(from))))
-      else
-        applyBatch(spark, table,
-          events.where(col("_txid") >= from && col("_txid") < to), batchId = -1L,
-          pruneBuckets = false)
+      applyBatch(spark, table,
+        events.where(col("_txid") >= from && col("_txid") < to), pruneBuckets = false,
+        prunedHint = Option.when(table.currentCommit().exists(_.txidWatermark < from))(
+          BatchHint(0 until table.effectiveNumBuckets, -1L, Some(from))))
     }
   }
 }

@@ -282,6 +282,9 @@ object CdcStream {
               quarantine(batch.select(col("value").as("raw"), originDc, originFile))
           } else {
             val t0 = System.nanoTime()
+            // a line whose _txid parses but is no number (a string
+            // "x") is corrupt too: the apply casts _txid to bigint, and
+            // an ANSI cast of it would fail the whole batch
             def parseWith(schema: StructType): DataFrame = {
               val parseSchema = StructType(
                 schema.fields :+ StructField(CorruptCol, StringType))
@@ -289,8 +292,12 @@ object CdcStream {
                   from_json(col("value"), parseSchema,
                     Map("columnNameOfCorruptRecord" -> CorruptCol)).as("e"),
                   novelKeysExpr(col("value"), schema, ignoreFields).as("__novel"),
-                  col("_path"))
-                .select(col("e.*"), col("__novel"), originFile, originDc)
+                  col("_path"), col("value").as("__raw"))
+                .select(col("e.*"), col("__novel"), originFile, originDc, col("__raw"))
+                .withColumn(CorruptCol, coalesce(col(CorruptCol),
+                  when(col("_txid").isNotNull && col("_txid").try_cast("bigint").isNull,
+                    col("__raw"))))
+                .drop("__raw")
             }
             var enriched = parseWith(schemaCache)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -314,11 +321,12 @@ object CdcStream {
                 // normalize() will cast conv_id to string before the
                 // apply hashes it, so the hint must hash the same value.
                 // _txid is cast as normalize() casts it too: a
-                // string-inferred _txid would compare lexically
+                // string-inferred _txid would compare lexically (a try_cast:
+                // a clean row's _txid casts, a corrupt one's need not)
                 val clean = col(CorruptCol).isNull
                 val okBucket = when(clean,
                   table.bucketCol(col("conv_id").cast("string")))
-                val okTx = col("_txid").cast("bigint")
+                val okTx = col("_txid").try_cast("bigint")
                 df.groupBy("_origin_dc").agg(
                   count(lit(1)).as("n"),
                   countDistinct(col("_origin_file")).as("nf"),
@@ -515,12 +523,13 @@ object CdcStream {
               col("__q_raw"), col("__q_dc"), col("__q_file"))
             .select(col("e.*"), col("__q_raw"),
               col("__q_dc"), col("__q_file"))
-          // row-level contract mirrors the schema-level one: EVERY
-          // merge key non-null (a row missing turn_idx must stay
+          // row-level contract mirrors the schema-level one: a _txid
+          // that casts to bigint (a string "x" stays preserved) and
+          // EVERY merge key non-null (a row missing turn_idx must stay
           // preserved, not be upserted under a null key no well-formed
           // event could ever address)
           val usable = graft.model.Model.MergeKeys
-            .foldLeft(col(CorruptCol).isNull && col("_txid").isNotNull) {
+            .foldLeft(col(CorruptCol).isNull && col("_txid").try_cast("bigint").isNotNull) {
               (acc, k) => acc && col(k).isNotNull
             }
           // optional envelope columns the apply references

@@ -105,9 +105,11 @@ object ScalingBench {
   }
 
   /** Steady-state incremental apply: a pre-loaded table takes a train
-    * of SMALL batches — the CDC shape the broadcast merge path exists
-    * for. `forceBulk` pins the bulk merge plan so the two paths'
-    * wall/CPU cost per event can be A/B'd on identical input. */
+    * of SMALL batches — the CDC shape the per-bucket delta classes
+    * exist for. `forceBulk` applies each batch without facts
+    * (`pruneBuckets = false`), so every touched bucket folds from the
+    * raw events, and the two plans' wall/CPU cost per event can be
+    * A/B'd on identical input. */
   def runSteady(cpus: Int, baseEvents: Long, batchEvents: Long,
       nBatches: Int, forceBulk: Boolean, workDir: String,
       hotBuckets: Int = 0): RunResult = {
@@ -143,8 +145,7 @@ object ScalingBench {
           org.apache.spark.sql.functions.col("_txid").between(lo, hi))
         if (hotBuckets > 0) batch = batch.where(table.bucketCol(
           org.apache.spark.sql.functions.col("conv_id")) < hotBuckets)
-        val st = CdcApply.applyBatch(spark, table, batch,
-          broadcastThreshold = if (forceBulk) 0L else CdcApply.BroadcastMergeMaxEvents)
+        val st = CdcApply.applyBatch(spark, table, batch, pruneBuckets = !forceBulk)
         appliedTotal += st.applied
         val folded = table.currentCommit()
           .flatMap(_.metrics.get("foldedBuckets")).getOrElse(0L)

@@ -47,14 +47,14 @@ class CdcApplySpec extends SparkSpec {
     val events = corpus(1500)
     val b1 = events.where(col("_txid") <= 1000)
     val b2 = events.where(col("_txid") > 500) // overlaps 501..1000
-    // the default (broadcast/delta) path; the bulk merge, where a
-    // stored row must win every _txid tie; and a replay onto stacks at
+    // the default (pre-scanned, gated delta) plan; the unpruned fold,
+    // where a stored row must win every _txid tie; and a replay onto stacks at
     // the depth cap, which runs the consolidate and fold parts
     Seq("delta", "bulk", "capped").foreach { mode =>
-      val threshold = if (mode == "bulk") 0L else CdcApply.BroadcastMergeMaxEvents
+      val prune = mode != "bulk"
       val table = new LakeTable(tmpDir(s"overlap-$mode"), numBuckets = 16)
-      CdcApply.applyBatch(spark, table, b1, broadcastThreshold = threshold)
-      CdcApply.applyBatch(spark, table, b2, broadcastThreshold = threshold)
+      CdcApply.applyBatch(spark, table, b1, pruneBuckets = prune)
+      CdcApply.applyBatch(spark, table, b2, pruneBuckets = prune)
       val (depth, ratio) =
         if (mode != "capped") (CdcApply.MaxDeltaDepth, CdcApply.FoldToBaseRatio)
         else {
@@ -77,7 +77,7 @@ class CdcApplySpec extends SparkSpec {
       }
       val before = dataDirs
       // replay everything again — must be a no-op
-      val s3 = CdcApply.applyBatch(spark, table, events, broadcastThreshold = threshold,
+      val s3 = CdcApply.applyBatch(spark, table, events, pruneBuckets = prune,
         maxDeltaDepth = depth, foldRatio = ratio)
       assert(s3.applied == 0, s"mode=$mode")
       assert(table.currentCommit().get.version == head,
@@ -85,6 +85,33 @@ class CdcApplySpec extends SparkSpec {
       assert(dataDirs == before,
         s"mode=$mode: replay left ${dataDirs -- before} behind")
       assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+    }
+  }
+
+  test("the within-batch collapse ranks a string _txid as a number: \"10\" beats \"9\"") {
+    import spark.implicits._
+    def batch(rows: (String, String, String)*) =
+      rows.map { case (tx, conv, text) => (tx, "update", s"e$tx", conv, 0, text) }
+        .toDF("_txid", "_op", "_etag", "conv_id", "turn_idx", "text")
+    val pair = batch(("9", "convK", "t9"), ("10", "convK", "t10"))
+    def stored(t: LakeTable) = t.read(spark).where(col("conv_id") === "convK")
+      .select("_txid", "text").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    // an empty table: the pre-scanned winners are the bases
+    val empty = new LakeTable(tmpDir("strtx-empty"), numBuckets = 4)
+    CdcApply.applyBatch(spark, empty, pair)
+    // stored rows below the batch's floor: a pre-scanned, ungated delta
+    val delta = new LakeTable(tmpDir("strtx-delta"), numBuckets = 4)
+    CdcApply.applyBatch(spark, delta, batch(("1", "convA", "a1")))
+    CdcApply.applyBatch(spark, delta, pair)
+    assert(delta.currentCommit().get.metrics("deltaCommit") == 1L)
+    // no facts: the fold's resolve collapses the raw events
+    val fold = new LakeTable(tmpDir("strtx-fold"), numBuckets = 4)
+    CdcApply.applyBatch(spark, fold, batch(("1", "convA", "a1")))
+    CdcApply.applyBatch(spark, fold, pair, pruneBuckets = false)
+    val m = fold.currentCommit().get.metrics
+    assert(m("foldedBuckets") == m("bucketsTouched"))
+    Seq("empty" -> empty, "delta" -> delta, "fold" -> fold).foreach { case (name, t) =>
+      assert(stored(t) == Seq((10L, "t10")), s"$name stored ${stored(t)}")
     }
   }
 
@@ -225,21 +252,25 @@ class CdcApplySpec extends SparkSpec {
     val tD = new LakeTable(tmpDir("path-bulk-onto-deltas"), numBuckets = 16)
     segs.zipWithIndex.foreach { case (s, i) =>
       CdcApply.applyBatch(spark, tA, s) // default: base then MoR deltas
-      CdcApply.applyBatch(spark, tB, s, broadcastThreshold = 0L) // bulk
-      CdcApply.applyBatch(spark, tC, s, maxDeltaDepth = 0) // broadcast rewrite
+      CdcApply.applyBatch(spark, tB, s, pruneBuckets = false) // bulk
+      CdcApply.applyBatch(spark, tC, s, maxDeltaDepth = 0) // pre-scanned, all fold
       // base + a delta stack, then a bulk merge onto the stack
       if (i < 2) CdcApply.applyBatch(spark, tD, s)
       else {
         assert(tD.currentCommit().get.deltaFiles.nonEmpty)
-        CdcApply.applyBatch(spark, tD, s, broadcastThreshold = 0L)
+        CdcApply.applyBatch(spark, tD, s, pruneBuckets = false)
       }
     }
     assert(tA.currentCommit().get.metrics("deltaCommit") == 1L)
     assert(tA.currentCommit().get.deltaFiles.nonEmpty)
-    assert(tB.currentCommit().get.metrics("broadcastMerge") == 0L)
-    assert(tC.currentCommit().get.metrics("broadcastMerge") == 1L)
+    def foldsAll(t: LakeTable) = {
+      val m = t.currentCommit().get.metrics
+      m("foldedBuckets") == m("bucketsTouched")
+    }
+    assert(foldsAll(tB))
+    assert(foldsAll(tC))
     assert(tC.currentCommit().get.deltaFiles.isEmpty)
-    assert(tD.currentCommit().get.metrics("broadcastMerge") == 0L)
+    assert(foldsAll(tD))
     assertSameRows(finalPayload(tA), finalPayload(tB))
     assertSameRows(finalPayload(tC), finalPayload(tB))
     assertSameRows(finalPayload(tA), Corpus.oracleFinalState(events))
@@ -402,7 +433,7 @@ class CdcApplySpec extends SparkSpec {
     val c = table.currentCommit().get
     Seq("events" -> 3L, "upserts" -> 3L, "deletes" -> 0L, "bucketsTouched" -> 3L,
       "foldedBuckets" -> 1L, "consolidatedBuckets" -> 1L, "consolidatedRows" -> 1L,
-      "deltaRows" -> 1L, "broadcastMerge" -> 1L).foreach { case (k, v) =>
+      "deltaRows" -> 1L).foreach { case (k, v) =>
       assert(c.metrics.get(k).contains(v), s"metric $k = ${c.metrics.get(k)}, want $v")
     }
     assert(c.metrics.getOrElse("deltaCommit", 0L) == 0L)

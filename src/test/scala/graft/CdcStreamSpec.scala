@@ -308,6 +308,40 @@ class CdcStreamSpec extends SparkSpec {
       "corruptRows metric missing from the commit log")
   }
 
+  test("a non-numeric string _txid is quarantined, not fatal; redrive keeps it preserved") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val events = Corpus.changeEvents(spark, 400, nConvs = 10, maxTurns = 4)
+    val dir = tmpDir("badtx-log")
+    // every _txid a JSON string, so the stream infers the column as one
+    CdcStream.writeSegment(
+      Corpus.shuffled(events.withColumn("_txid", col("_txid").cast("string"))),
+      s"$dir/chunk0")
+    val bad = """{"_txid":"x","_op":"update","_etag":"ex",""" +
+      """"conv_id":"conv00000001","turn_idx":0,"text":"bad"}"""
+    Files.writeString(Paths.get(s"$dir/chunk0/zz-bad.json"), bad + "\n")
+    val table = new LakeTable(tmpDir("badtx-table"), numBuckets = 8)
+    val ckpt = tmpDir("badtx-ckpt")
+    CdcStream.runOnce(spark, s"$dir/chunk*", table, ckpt)
+    // every other row committed; the one line is preserved and counted
+    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+    val queryId = CdcStream.queryIdFor(ckpt)
+    val qroot = Paths.get(s"${table.location}/_quarantine/$queryId")
+    val batches = Files.list(qroot).iterator().asScala.map(_.getFileName.toString).toList
+    assert(batches.size == 1, s"quarantined batches: $batches")
+    assert(spark.read.json(qroot.resolve(batches.head).toString)
+      .select("raw").collect().map(_.getString(0)).toSeq == Seq(bad))
+    assert(table.commitLog().exists(_.metrics.get("corruptRows").contains(1L)))
+    // fresh inference still reads that _txid as a string: the redrive
+    // applies nothing and leaves the line in -remaining
+    val batchId = batches.head.stripPrefix("batch-").toLong
+    val r = CdcStream.redrive(spark, table, queryId, batchId)
+    assert(r.applied == 0L && r.remaining == 1L)
+    assert(spark.read.json(s"$qroot/batch-$batchId-remaining")
+      .select("raw").collect().map(_.getString(0)).toSeq == Seq(bad))
+    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+  }
+
   test("a batch with no inferable change-event schema is quarantined, not skipped") {
     import java.nio.file.{Files, Paths}
     val events = Corpus.changeEvents(spark, 400, nConvs = 10, maxTurns = 4)

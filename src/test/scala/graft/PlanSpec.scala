@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 import graft.table.LakeTable
@@ -25,13 +26,14 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
-  /** Expand through AQE plans and query stages (incl. Spark 4's
-    * ResultQueryStage): their inner plans are internal state, not
-    * children, so a plain .collect stops at them. */
+  /** Expand through AQE plans, query stages (incl. Spark 4's
+    * ResultQueryStage) and cached relations: their inner plans are
+    * internal state, not children, so a plain .collect stops at them. */
   private def flattenPlan(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
     case a: AdaptiveSparkPlanExec => flattenPlan(a.executedPlan)
     case s: QueryStageExec => flattenPlan(s.plan)
     case r: ReusedExchangeExec => flattenPlan(r.child)
+    case m: InMemoryTableScanExec => flattenPlan(m.relation.cachedPlan)
     case other => other.children.flatMap(flattenPlan)
   })
 
@@ -93,18 +95,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("broadcast merge: the TARGET side is never shuffled (batch-side collapse only)") {
-    val table = new LakeTable(tmpDir("planbcast"), numBuckets = 16)
     val events = Corpus.changeEvents(spark, 3000, nConvs = 50, maxTurns = 8)
-    CdcApply.applyBatch(spark, table, events.where(col("_txid") <= 2000))
-    // capture every query execution during the incremental apply
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    def loaded(name: String) = {
+      val t = new LakeTable(tmpDir(name), numBuckets = 16)
+      CdcApply.applyBatch(spark, t, events.where(col("_txid") <= 2000))
+      t
     }
     // the steady-state delta write is ONE job: it is allowed to contain
     // the O(batch) winner-collapse exchanges, but NO exchange may sit
@@ -128,49 +123,75 @@ class PlanSpec extends SparkSpec {
             r.child.treeString.contains(tableLoc) => r.child.treeString
       }
     }
-    spark.listenerManager.register(listener)
-    try {
-      val s = CdcApply.applyBatch(spark, table, events.where(col("_txid") > 2000))
-      assert(s.applied > 0)
-      // listener delivery is async — poll for the write-job plan
-      import scala.jdk.CollectionConverters._
-      def writePlans = plans.iterator().asScala.toSeq.filter { qe =>
-        val p = qe.executedPlan.toString
-        p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
+    // applies `batch` onto `table`, capturing every query execution
+    // during the apply, checks the write plans and returns them
+    def checkedApply(table: LakeTable, batch: org.apache.spark.sql.DataFrame) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+        org.apache.spark.sql.execution.QueryExecution]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+          plans.add(qe)
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
       }
-      var tries = 0
-      while (writePlans.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
-      val wp = writePlans
-      assert(wp.nonEmpty, "no write-job plan captured")
-      wp.foreach { qe =>
-        // the write job must actually read the table (the gate scan)...
-        assert(qe.executedPlan.toString.contains(table.location) ||
-          wp.size > 1, s"write plan reads no table files:\n${qe.executedPlan}")
-        // ...but never through a shuffle
-        val bad = targetShuffles(qe.executedPlan, table.location)
-        assert(bad.isEmpty,
-          "table scan under a shuffle exchange in the delta write plan:\n" +
-            bad.headOption.getOrElse(""))
-      }
-      // and the steady write moves PAYLOAD through exactly one
-      // exchange — the batch's by-bucket hash (the winner groupBy,
-      // broadcast gate and writer all keep that layout). The only
-      // other exchange permitted is the gate's per-key max-txid
-      // aggregation, which is NARROW (merge keys + txid, no payload
-      // columns) and O(batch·depth) rows — every other shape (a
-      // writer repartition, a table-side shuffle) is a regression.
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      val shuffles = wp.flatMap(qe => flattenPlan(qe.executedPlan).distinct
-        .collect { case e: ShuffleExchangeExec => e })
-      val payloadShuffles = shuffles.filterNot(_.output.length <= 3)
-      assert(payloadShuffles.size == 1,
-        s"steady delta write has ${payloadShuffles.size} payload-bearing " +
-          s"exchanges (want exactly 1: the batch's by-bucket hash):\n" +
-          payloadShuffles.map(_.treeString.take(400)).mkString("\n"))
-      assert(payloadShuffles.head.outputPartitioning.toString.contains("__bkt"),
-        "the one payload exchange is not the by-bucket hash: " +
-          payloadShuffles.head.outputPartitioning.toString)
-    } finally spark.listenerManager.unregister(listener)
+      spark.listenerManager.register(listener)
+      try {
+        val s = CdcApply.applyBatch(spark, table, batch)
+        assert(s.applied > 0)
+        // listener delivery is async — poll for the write-job plan
+        import scala.jdk.CollectionConverters._
+        def writePlans = plans.iterator().asScala.toSeq.filter { qe =>
+          val p = qe.executedPlan.toString
+          p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
+        }
+        var tries = 0
+        while (writePlans.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
+        val wp = writePlans
+        assert(wp.nonEmpty, "no write-job plan captured")
+        wp.foreach { qe =>
+          // the write job must actually read the table (the gate scan)...
+          assert(qe.executedPlan.toString.contains(table.location) ||
+            wp.size > 1, s"write plan reads no table files:\n${qe.executedPlan}")
+          // ...but never through a shuffle
+          val bad = targetShuffles(qe.executedPlan, table.location)
+          assert(bad.isEmpty,
+            "table scan under a shuffle exchange in the delta write plan:\n" +
+              bad.headOption.getOrElse(""))
+        }
+        // and the steady write moves PAYLOAD through exactly one
+        // exchange — the batch's by-bucket hash (the winner groupBy,
+        // broadcast gate and writer all keep that layout). The only
+        // other exchange permitted is the gate's per-key max-txid
+        // aggregation, which is NARROW (merge keys + txid, no payload
+        // columns) and O(batch·depth) rows — every other shape (a
+        // writer repartition, a table-side shuffle) is a regression.
+        import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+        val shuffles = wp.flatMap(qe => flattenPlan(qe.executedPlan).distinct
+          .collect { case e: ShuffleExchangeExec => e })
+        val payloadShuffles = shuffles.filterNot(_.output.length <= 3)
+        assert(payloadShuffles.size == 1,
+          s"steady delta write has ${payloadShuffles.size} payload-bearing " +
+            s"exchanges (want exactly 1: the batch's by-bucket hash):\n" +
+            payloadShuffles.map(_.treeString.take(400)).mkString("\n"))
+        assert(payloadShuffles.head.outputPartitioning.toString.contains("__bkt"),
+          "the one payload exchange is not the by-bucket hash: " +
+            payloadShuffles.head.outputPartitioning.toString)
+        wp
+      } finally spark.listenerManager.unregister(listener)
+    }
+    checkedApply(loaded("planbcast"), events.where(col("_txid") > 2000))
+    // an overlapping batch (1501..3000 onto 1..2000) runs the gate: its
+    // write plan scans the stored data dirs, and the same checks hold
+    val over = loaded("planbcast-over")
+    val wp = checkedApply(over, events.where(col("_txid") > 1500))
+    assert(over.currentCommit().get.metrics("versionGate") == 1L)
+    val dataDir = java.nio.file.Paths.get(over.location, "data").toAbsolutePath.toString
+    assert(wp.exists(qe => flattenPlan(qe.executedPlan).exists {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.toString.contains(dataDir))
+        case _ => false
+      }), s"the gated write plan scans no stored data dir:\n${wp.map(_.executedPlan).mkString("\n")}")
   }
 
   test("consolidation write reads only delta stacks — never a base file") {
@@ -297,7 +318,7 @@ class PlanSpec extends SparkSpec {
   private def assertBulkWriteShape(table: LakeTable,
       ev: org.apache.spark.sql.DataFrame): Unit =
     withBulkApplyPlans(table, ev, pruneBuckets = false,
-        CdcApply.BroadcastMergeMaxEvents) { (_, writePlans) =>
+        CdcApply.MaxDeltaDepth) { (_, writePlans) =>
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       writePlans.foreach { qe =>
@@ -330,7 +351,7 @@ class PlanSpec extends SparkSpec {
     * plan the apply executed plus the subset that are file writes. */
   private def withBulkApplyPlans(table: LakeTable,
       ev: org.apache.spark.sql.DataFrame, pruneBuckets: Boolean,
-      broadcastThreshold: Long)(
+      maxDeltaDepth: Int)(
       check: (Seq[org.apache.spark.sql.execution.QueryExecution],
         Seq[org.apache.spark.sql.execution.QueryExecution]) => Unit): Unit = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[
@@ -345,9 +366,10 @@ class PlanSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       val s = CdcApply.applyBatch(spark, table, ev, pruneBuckets = pruneBuckets,
-        broadcastThreshold = broadcastThreshold)
+        maxDeltaDepth = maxDeltaDepth)
       assert(s.applied > 0)
-      assert(table.currentCommit().get.metrics("broadcastMerge") == 0L)
+      val m = table.currentCommit().get.metrics
+      assert(m("foldedBuckets") == m("bucketsTouched"))
       import scala.jdk.CollectionConverters._
       def writePlans = plans.iterator().asScala.toSeq.filter { qe =>
         val p = qe.executedPlan.toString
@@ -361,9 +383,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bulk merge write shuffles exactly twice — the merged table is never re-shuffled") {
-    // A bucket-pruned bulk apply end to end: one exchange in the
-    // pre-scan that collects the touched buckets (≤ numBuckets values),
-    // one in the merge write (events ∪ stored rows on (bucket, salt)).
+    // A pre-scanned apply that folds every touched bucket (depth cap 0)
+    // end to end: one exchange in the pre-scan that collects the touched
+    // buckets (≤ numBuckets values), one in the merge write (raw events
+    // ∪ stored rows on (bucket, salt)).
     // A third means the merged table crosses the network again — at
     // 100 TB, a full extra copy of the table per load.
     val table = new LakeTable(tmpDir("planbulk2"), numBuckets = 8)
@@ -371,7 +394,7 @@ class PlanSpec extends SparkSpec {
     CdcApply.applyBatch(spark, table, ev.where(col("_txid") <= 3000),
       pruneBuckets = false)
     withBulkApplyPlans(table, ev.where(col("_txid") > 3000),
-        pruneBuckets = true, broadcastThreshold = 0L) { (plans, writePlans) =>
+        pruneBuckets = true, maxDeltaDepth = 0) { (plans, writePlans) =>
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       def exchanges(qe: org.apache.spark.sql.execution.QueryExecution) =
         flattenPlan(qe.executedPlan).distinct.collect { case e: ShuffleExchangeExec => e }
@@ -434,10 +457,10 @@ class PlanSpec extends SparkSpec {
       s"q36 plan lost the native decode expression:\n$p36")
   }
 
-  /** Runs `f` and returns its result plus the root paths of every file
-    * scan that a query executed during it planned. */
-  private def scannedRootsDuring[T](f: => T): (T, Seq[String]) = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+  /** Runs `f` and returns its result plus every query it executed. */
+  private def plansDuring[T](f: => T)
+      : (T, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    import org.apache.spark.sql.execution.QueryExecution
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, d: Long): Unit =
@@ -450,13 +473,20 @@ class PlanSpec extends SparkSpec {
       val out = f
       org.apache.spark.sql.graftshim.drainListeners(spark.sparkContext)
       import scala.jdk.CollectionConverters._
-      val qes = plans.iterator().asScala.toSeq
-      assert(qes.exists(_.executedPlan.toString.contains("Aggregate")),
-        "no apply query captured")
-      (out, qes.flatMap(qe => flattenPlan(qe.executedPlan).collect {
-        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
-      }.flatten))
+      (out, plans.iterator().asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Runs `f` and returns its result plus the root paths of every file
+    * scan that a query executed during it planned. */
+  private def scannedRootsDuring[T](f: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val (out, qes) = plansDuring(f)
+    assert(qes.exists(_.executedPlan.toString.contains("Aggregate")),
+      "no apply query captured")
+    (out, qes.flatMap(qe => flattenPlan(qe.executedPlan).collect {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+    }.flatten))
   }
 
   /** A 16-bucket table holding events 1..2000 (watermark 2000), the
@@ -510,5 +540,31 @@ class PlanSpec extends SparkSpec {
       .select("text").collect().map(_.getString(0)).toSeq
     assert(textOf(key.getString(0), key.getInt(1)) == Seq(key.getString(2)))
     assert(textOf("convNEW", 0) == Seq("new"))
+  }
+
+  test("replay re-run over a table that holds the changelog broadcasts nothing and commits nothing") {
+    val table = new LakeTable(tmpDir("replayrerun"), numBuckets = 8)
+    val events = Corpus.changeEvents(spark, 3000, nConvs = 50, maxTurns = 8)
+    CdcApply.replay(spark, table, events, nBatches = 3)
+    val versions = table.commitLog().map(_.version)
+    def dataDirs = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(table.location, "data"))
+      import scala.jdk.CollectionConverters._
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val before = dataDirs
+    // every range starts at or below the watermark: each batch is
+    // unpruned and folds from its raw events — no winner keys broadcast
+    val (stats, qes) = plansDuring(CdcApply.replay(spark, table, events, nBatches = 3))
+    assert(stats.size == 3 && stats.forall(_.applied == 0L), s"re-run applied: $stats")
+    assert(table.commitLog().map(_.version) == versions, "a re-run committed")
+    assert(dataDirs == before, s"a re-run left ${dataDirs -- before} behind")
+    assert(table.commitLog().forall(_.metrics.get("versionGate").contains(0L)))
+    assert(qes.exists(_.executedPlan.toString.contains("Aggregate")), "no apply query captured")
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val bcast = qes.filter(qe => flattenPlan(qe.executedPlan).exists(_.isInstanceOf[BroadcastExchangeExec]))
+    assert(bcast.isEmpty, s"a re-run broadcast:\n${bcast.map(_.executedPlan).mkString("\n")}")
+    assertSameRows(table.read(spark).select("conv_id", "turn_idx", "text"),
+      Corpus.oracleFinalState(events).select("conv_id", "turn_idx", "text"))
   }
 }

@@ -39,15 +39,15 @@ class SkewSpec extends SparkSpec {
       .select(pmod(xxhash64(lit("convHOT")), lit(8L)).cast("int"))
       .head().getInt(0)
 
-    // the salt lives in the FULL-OUTER (bulk) merge path — the
-    // broadcast path has no key-based shuffle for a hot key to skew,
-    // so force the bulk path here
+    // the salt lives in the FOLD class's resolve — a delta append has
+    // no key-based shuffle for a hot key to skew — so apply the batch
+    // without facts, which folds every touched bucket
     val salted = new LakeTable(tmpDir("skew-salted"), numBuckets = 8)
     CdcApply.applyBatch(spark, salted, events, saltBuckets = 8,
-      broadcastThreshold = 0L)
+      pruneBuckets = false)
     val unsalted = new LakeTable(tmpDir("skew-unsalted"), numBuckets = 8)
     CdcApply.applyBatch(spark, unsalted, events, saltBuckets = 1,
-      broadcastThreshold = 0L)
+      pruneBuckets = false)
 
     val spread = partFiles(salted, hotBucket)
     val serial = partFiles(unsalted, hotBucket)
