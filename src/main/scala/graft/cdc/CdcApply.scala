@@ -61,14 +61,16 @@ case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
   *      reader applies; a stored row wins a _txid tie, so FOLD's resolve
   *      is also its collapse and its gate, and steps 1 and 3 run only
   *      for DELTA and CONSOLIDATE buckets;
-  *   5. that resolve's one exchange is salted within each bucket, so
-  *      one hot conversation cannot serialize a whole bucket into one
-  *      task (north-rule skew mandate — the reference has no skew
+  *   5. the FOLD resolve's one exchange is salted within each bucket,
+  *      so one hot conversation cannot serialize a whole bucket into
+  *      one task (north-rule skew mandate — the reference has no skew
   *      handling, SURVEY.md §4.1), and its output reaches the
-  *      bucket-partitioned writer with no further exchange. The
-  *      classes' parts are unioned and written by ONE observed write
-  *      into ONE dir (`data/cV` when any base is rewritten, else
-  *      `data/cVd`);
+  *      bucket-partitioned writer with no further exchange. DELTA and
+  *      CONSOLIDATE winners collapse per bucket unsalted, so a known
+  *      batch's hot bucket (a pre-scanned first load too) resolves in
+  *      one task and one file at any size (SkewSpec). The classes'
+  *      parts are unioned and written by ONE observed write into ONE
+  *      dir (`data/cV` when any base is rewritten, else `data/cVd`);
   *   6. ONE atomic commit with txid high-watermark + per-bucket
   *      lineage counts from that dir's footers. An entirely-ineffective
   *      batch (pure replay) leaves no dir and commits nothing.
@@ -76,14 +78,16 @@ case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
   * Scale notes: the only full pass over the *batch* is one shuffle —
   * by bucket for the DELTA/CONSOLIDATE winners, by (bucket, salt) for
   * the FOLD buckets' raw events. The target table is touched only on
-  * affected buckets; the version gate is a broadcast join keyed on the
-  * merge key, and only the DELTA/CONSOLIDATE buckets of a batch at or
-  * below the watermark (late, overlapping, or with a null _txid) run
-  * it. Its broadcast of winner keys is bounded by the caller's batch:
-  * the stream's by `maxFilesPerTrigger`, a redrive by its one
-  * quarantined batch; a replay never gates. Nothing scans unaffected
-  * data. Tombstones accumulate only for deleted keys; compact() can
-  * drop them once no older txids can arrive (watermark-bounded).
+  * affected buckets; the version gate is a join keyed on the merge
+  * key, and only the DELTA/CONSOLIDATE buckets of a batch at or below
+  * the watermark (late, overlapping, or with a null _txid) run it. It
+  * broadcasts the winner keys only under Spark's
+  * autoBroadcastJoinThreshold; a larger batch (a re-apply of a whole
+  * changelog, a stream backfill of large late segments) sort-merge
+  * joins the narrow stored keys instead. A replay never gates.
+  * Nothing scans unaffected data.
+  * Tombstones accumulate only for deleted keys; compact() can drop
+  * them once no older txids can arrive (watermark-bounded).
   */
 object CdcApply {
 
@@ -346,10 +350,10 @@ object CdcApply {
     // then _etag (duplicated txids carry identical payloads). The batch
     // is hashed ONCE, by bucket (cast-typed key — xxhash64 is
     // type-directed): the winner groupBy keeps that layout (bucket is a
-    // subset of the group keys) and so does the broadcast gate below,
-    // so the delta write consumes winners ALREADY clustered by bucket
-    // and needs no exchange of its own — a micro-batch pays exactly one
-    // O(batch) shuffle end to end.
+    // subset of the group keys) and so does the gate below when it
+    // broadcasts, so the delta write consumes winners ALREADY clustered
+    // by bucket and needs no exchange of its own — a micro-batch pays
+    // exactly one O(batch) shuffle end to end.
     val eventCols = events.columns.toSeq
     val stdShufflePartitions = spark.sessionState.conf.numShufflePartitions
     val winners = within(
@@ -366,9 +370,10 @@ object CdcApply {
       alignWinnerCols(winners.columns.toSeq) :+ col("__bkt"): _*)
     // The version gate keeps the winners that TAKE EFFECT: the stored
     // (key, _txid) of the winner buckets — a column-pruned narrow scan
-    // of the raw physical rows — broadcast-joins the winner keys FIRST,
-    // so the per-key max-txid aggregation runs on ≤ |winners|·depth
-    // rows and the TARGET side is never shuffled; a winner takes effect
+    // of the raw physical rows — joins the winner keys FIRST, so the
+    // per-key max-txid aggregation runs on ≤ |winners|·depth rows and,
+    // with the winner keys broadcast, the TARGET side is never
+    // shuffled; a winner takes effect
     // if its _txid beats the stored one or its key is new. At 100 TB
     // this is the difference between writing O(batch) per micro-batch
     // and re-shuffling the touched buckets every batch. The gate has
@@ -376,18 +381,30 @@ object CdcApply {
     // table is EMPTY or the batch is strictly newer than it: every
     // stored _txid is ≤ the watermark, so a txid floor above the
     // watermark beats every stored row.
+    // The winner keys (and the matched keys, one row per winner at
+    // most) are broadcast only when their plan statistics fit
+    // spark.sql.autoBroadcastJoinThreshold; past it both joins
+    // sort-merge, so no batch is collected to be broadcast. Not left to
+    // Spark: it sizes the second join as a product (a tiny batch would
+    // shuffle) and the stored side by its compressed files (a 630k-key
+    // scan was broadcast at 100 MB).
     val gated = prev.nonEmpty && winnerBuckets.nonEmpty && !txidFloor.exists(_ > prevWm)
     val batchRows: DataFrame =
       if (!gated) winnerRows.withColumn("__ev", lit(true))
       else {
         val mergeKeys = Model.MergeKeys.map(col)
+        val winnerKeys = winnerRows.select(mergeKeys: _*)
+        val bcastMax = spark.sessionState.conf.autoBroadcastJoinThreshold
+        val side: DataFrame => DataFrame =
+          if (bcastMax >= 0 && winnerKeys.queryExecution.optimizedPlan.stats.sizeInBytes <= bcastMax)
+            broadcast(_)
+          else _.hint("merge")
         val rawKeys = storedRows(winnerBuckets)
           .select((mergeKeys :+ col("_txid").as("__t_txid")): _*)
-        val matched = rawKeys.join(broadcast(winnerRows.select(mergeKeys: _*)),
-            Model.MergeKeys.toSeq)
+        val matched = rawKeys.join(side(winnerKeys), Model.MergeKeys.toSeq)
           .groupBy(mergeKeys: _*).agg(max(col("__t_txid")).as("__t_txid"))
         winnerRows
-          .join(broadcast(matched), Model.MergeKeys.toSeq, "left")
+          .join(side(matched), Model.MergeKeys.toSeq, "left")
           .where(col("__t_txid").isNull || col("_txid") > col("__t_txid"))
           .drop("__t_txid")
           .withColumn("__ev", lit(true))

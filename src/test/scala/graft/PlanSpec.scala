@@ -567,4 +567,38 @@ class PlanSpec extends SparkSpec {
     assertSameRows(table.read(spark).select("conv_id", "turn_idx", "text"),
       Corpus.oracleFinalState(events).select("conv_id", "turn_idx", "text"))
   }
+
+  test("a gated batch past Spark's broadcast threshold joins the stored keys through a shuffle") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    // a direct re-apply of a whole 1M-event changelog (~630k distinct
+    // keys) plus five fresh inserts: pre-scanned with a txid floor of 1,
+    // so its DELTA winners gate, and their keys are far past the
+    // broadcast threshold
+    val table = new LakeTable(tmpDir("gatebig"), numBuckets = 8)
+    val events = Corpus.changeEvents(spark, 1000000, nConvs = 20000, maxTurns = 50, skew = 1.0)
+    CdcApply.applyBatch(spark, table, events, pruneBuckets = false)
+    val wm = table.txidWatermark
+    val fresh = events.where(col("_txid") <= 5)
+      .withColumn("conv_id", concat(lit("convFRESH"), col("_txid").cast("string")))
+      .withColumn("_op", lit("insert"))
+      .withColumn("_txid", col("_txid") + lit(wm))
+    val batch = events.unionByName(fresh)
+    val (s, qes) = plansDuring(CdcApply.applyBatch(spark, table, batch))
+    val c = table.currentCommit().get
+    assert(s.applied == 5L, s"applied ${s.applied}, want the 5 fresh inserts")
+    assert(c.metrics("versionGate") == 1L && c.metrics("deltaCommit") == 1L, c.metrics)
+    val plans = qes.flatMap(qe => flattenPlan(qe.executedPlan))
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val big = plans.collect {
+      case b: BroadcastExchangeExec if b.metrics("dataSize").value > limit => b }
+    assert(big.isEmpty, s"broadcast past the $limit-byte threshold:\n" +
+      big.map(b => s"${b.metrics("dataSize").value} bytes\n${b.treeString}").mkString("\n"))
+    assert(plans.exists {
+        case _: SortMergeJoinExec | _: ShuffledHashJoinExec => true
+        case _ => false
+      }, "the gate ran no shuffled join")
+    assertSameRows(table.read(spark).select("conv_id", "turn_idx", "text"),
+      Corpus.oracleFinalState(batch).select("conv_id", "turn_idx", "text"))
+  }
 }

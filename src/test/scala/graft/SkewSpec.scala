@@ -62,4 +62,24 @@ class SkewSpec extends SparkSpec {
       salted.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
       Corpus.oracleFinalState(events))
   }
+
+  test("a known batch's winners collapse per bucket: a pre-scanned 600k-event first load writes its hot bucket as one file") {
+    // the trade-off of choosing the plan from the batch's facts, never
+    // its size: the salt lives in the FOLD resolve only, and a batch the
+    // apply pre-scans takes the DELTA class (on an empty table its
+    // winners are the bases), so its hot bucket resolves in one task
+    // and one file however large the batch
+    val events = hotCorpus(600000)
+    val hotBucket = spark.range(1)
+      .select(pmod(xxhash64(lit("convHOT")), lit(8L)).cast("int"))
+      .head().getInt(0)
+    val table = new LakeTable(tmpDir("skew-known"), numBuckets = 8)
+    CdcApply.applyBatch(spark, table, events, saltBuckets = 8)
+    assert(table.currentCommit().get.metrics("consolidatedBuckets") == 0L)
+    assert(partFiles(table, hotBucket) == 1,
+      s"a pre-scanned load's hot bucket wrote ${partFiles(table, hotBucket)} files")
+    assertSameRows(
+      table.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
+      Corpus.oracleFinalState(events))
+  }
 }
