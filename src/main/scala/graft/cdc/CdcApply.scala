@@ -2,7 +2,7 @@ package graft.cdc
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,12 +27,45 @@ case class ApplyStats(
   * of at least `lo`. */
 case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
 
+object BatchHint {
+
+  /** The facts as aggregate columns over the rows where `clean` holds,
+    * so a caller folds them into an aggregation it already runs. The
+    * key is hashed cast to its stored type (xxhash64 is type-directed:
+    * an uncast key, say a batch whose conv_id inferred bigint against a
+    * stored string, would name other buckets), and the floor is the min
+    * `_txid` try-cast to bigint, as the apply stores it (a string
+    * `_txid` would compare lexically). */
+  def facts(table: LakeTable, clean: Column = lit(true)): Seq[Column] = {
+    val keyType = table.currentCommit().fold[DataType](StringType)(_.schema("conv_id").dataType)
+    val tx = col("_txid").try_cast(LongType)
+    Seq(collect_set(when(clean, table.bucketCol(col("conv_id").cast(keyType)))).as("buckets"),
+      count(when(clean, 1)).as("events"),
+      min(when(clean, tx)).as("minTx"),
+      count(when(clean && tx.isNull, 1)).as("nullTx"))
+  }
+
+  /** One hint from the rows of an aggregation over [[facts]], one per
+    * group: any null `_txid` in any group voids the floor. */
+  def combine(rows: Seq[Row]): BatchHint = {
+    def longs(name: String) =
+      rows.flatMap(r => Option(r.getAs[java.lang.Long](name))).map(_.longValue)
+    val lows = longs("minTx")
+    val buckets = rows.flatMap(r => r.getSeq[Int](r.fieldIndex("buckets"))).distinct.sorted
+    BatchHint(buckets, longs("events").sum,
+      Option.when(lows.nonEmpty && longs("nullTx").sum == 0L)(lows.min))
+  }
+}
+
 /** The MERGE-apply stage: one micro-batch of change events → one new
   * snapshot of the target [[LakeTable]].
   *
   * Pipeline (SURVEY.md §3.4; each step anchored to a reference op):
-  *   1. within-batch collapse — latest txid wins per (conv_id,
-  *      turn_idx) via a max_by (reference: `sort -r | uniq`
+  *   1. the batch is aligned ONCE to the stored schema (deletes become
+  *      tombstones) and every bucket class reads that one frame; its
+  *      within-batch collapse — latest txid wins per (conv_id,
+  *      turn_idx) — is the engine's one merge rule,
+  *      [[LakeTable.resolveLatest]] (reference: `sort -r | uniq`
   *      idempotent dedupe, /root/reference/manta/dc_inputs_2b.sh:33-35);
   *   2. bucket pruning — only the hash-buckets the incoming keys map to
   *      are read and rewritten (reference analogue: per-split map
@@ -56,32 +89,35 @@ case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
   *      CONSOLIDATE (stack ∪ winners → one delta dir, base untouched) or
   *      FOLD (base ∪ stack ∪ the bucket's raw events → a fresh base; a
   *      batch the apply knows nothing of folds every touched bucket).
-  *      Both rewrite classes run ONE shared latest-per-key resolve
-  *      ([[LakeTable.resolveLatest]]), the same rule the merge-on-read
-  *      reader applies; a stored row wins a _txid tie, so FOLD's resolve
-  *      is also its collapse and its gate, and steps 1 and 3 run only
+  *      Every class runs [[LakeTable.resolveLatest]], the same rule the
+  *      merge-on-read reader applies: the DELTA/CONSOLIDATE winners are
+  *      the resolve of their buckets' events alone, and the version gate
+  *      runs on that output; a stored row wins a _txid tie, so FOLD's
+  *      resolve is also its collapse and its gate, and step 3 runs only
   *      for DELTA and CONSOLIDATE buckets;
-  *   5. the FOLD resolve's one exchange is salted within each bucket,
-  *      so one hot conversation cannot serialize a whole bucket into
-  *      one task (north-rule skew mandate — the reference has no skew
-  *      handling, SURVEY.md §4.1), and its output reaches the
-  *      bucket-partitioned writer with no further exchange. DELTA and
-  *      CONSOLIDATE winners collapse per bucket unsalted, so a known
-  *      batch's hot bucket (a pre-scanned first load too) resolves in
-  *      one task and one file at any size (SkewSpec). The classes'
-  *      parts are unioned and written by ONE observed write into ONE
-  *      dir (`data/cV` when any base is rewritten, else `data/cVd`);
+  *   5. each resolve is one exchange whose output reaches the
+  *      bucket-partitioned writer with no further exchange. The FOLD
+  *      resolve is salted within each bucket, so one hot conversation
+  *      cannot serialize a whole bucket into one task (north-rule skew
+  *      mandate — the reference has no skew handling, SURVEY.md §4.1).
+  *      The winners resolve with salt 1: each winner bucket lands whole
+  *      in one reducer and one file, so a known batch's hot bucket (a
+  *      pre-scanned first load too) resolves in one task at any size
+  *      (SkewSpec). The classes' parts are unioned and written by ONE
+  *      observed write into ONE dir (`data/cV` when any base is
+  *      rewritten, else `data/cVd`);
   *   6. ONE atomic commit with txid high-watermark + per-bucket
   *      lineage counts from that dir's footers. An entirely-ineffective
   *      batch (pure replay) leaves no dir and commits nothing.
   *
-  * Scale notes: the only full pass over the *batch* is one shuffle —
-  * by bucket for the DELTA/CONSOLIDATE winners, by (bucket, salt) for
-  * the FOLD buckets' raw events. The target table is touched only on
-  * affected buckets; the version gate is a join keyed on the merge
-  * key, and only the DELTA/CONSOLIDATE buckets of a batch at or below
-  * the watermark (late, overlapping, or with a null _txid) run it. It
-  * broadcasts the winner keys only under Spark's
+  * Scale notes: the only full pass over the *batch* is one shuffle,
+  * the resolve's — by bucket for the DELTA/CONSOLIDATE winners, by
+  * (bucket, salt) for the FOLD buckets' events — at every batch size:
+  * no batch is funnelled into one writer task. The target table is
+  * touched only on affected buckets; the version gate is a join keyed
+  * on the merge key, and only the DELTA/CONSOLIDATE buckets of a batch
+  * at or below the watermark (late, overlapping, or with a null _txid)
+  * run it. It broadcasts the winner keys only under Spark's
   * autoBroadcastJoinThreshold; a larger batch (a re-apply of a whole
   * changelog, a stream backfill of large late segments) sort-merge
   * joins the narrow stored keys instead. A replay never gates.
@@ -180,13 +216,6 @@ object CdcApply {
     * amplification ~4× while read amplification stays ≤ depth+1. */
   val FoldToBaseRatio = 0.5
 
-  /** Below this batch size the steady-state delta write stays a single
-    * coalesced task (a shuffle's stage overhead would dominate);
-    * at/above it the write is hash-partitioned by bucket so each
-    * bucket's file is written in parallel — the lone writer task
-    * measured ~40% of a 100k-event batch's wall time. */
-  val ParallelDeltaWriteMinEvents = 20000L
-
   def applyBatch(
       spark: SparkSession,
       table: LakeTable,
@@ -242,30 +271,15 @@ object CdcApply {
     // set of the winners — no window, no materialization, ≤ numBuckets
     // values collected). Callers that already run an O(batch)
     // aggregation of their own (the streaming tail's lineage/drift
-    // summary) pass the facts as `prunedHint`, folding the pre-scan into
-    // that job — the steady-state micro-batch then pays exactly ONE pass
-    // over the batch before the write. With no hint and
+    // summary) fold the same [[BatchHint.facts]] into that job and pass
+    // them as `prunedHint` — the steady-state micro-batch then pays
+    // exactly ONE pass over the batch before the write. With no hint and
     // pruneBuckets=false the apply has no facts: the pre-scan is
     // skipped and every bucket folds (step 2).
     val hint = prunedHint.map(h => h.copy(buckets = h.buckets.sorted))
       .orElse(Option.when(pruneBuckets) {
-        // hash the CAST key — the winner tagging below hashes the key
-        // cast to the stored type, and xxhash64 is type-directed, so an
-        // uncast pre-scan (e.g. a batch whose conv_id inferred bigint
-        // against a stored string column) would compute a DIFFERENT
-        // bucket set: the gate would read the wrong buckets and a
-        // winner could fall outside every bucket class
-        // (the floor reads _txid cast as the apply stores it: a
-        // string-inferred _txid would compare lexically)
-        val tx = col("_txid").cast(LongType)
-        val eAgg = events.agg(
-          collect_set(table.bucketCol(
-            col("conv_id").cast(schema("conv_id").dataType))).as("buckets"),
-          count(lit(1)).as("n"), min(tx).as("lo"),
-          count(when(tx.isNull, 1)).as("nullTx")).head()
-        BatchHint(eAgg.getSeq[Int](0).sorted, eAgg.getAs[Long]("n"),
-          Option.when(eAgg.getAs[Long]("nullTx") == 0L && !eAgg.isNullAt(2))(
-            eAgg.getAs[Long]("lo")))
+        val facts = BatchHint.facts(table)
+        BatchHint.combine(events.agg(facts.head, facts.tail: _*).collect().toSeq)
       })
     val BatchHint(touched, batchCount, txidFloor) =
       hint.getOrElse(BatchHint(0 until table.effectiveNumBuckets, -1L, None))
@@ -326,48 +340,39 @@ object CdcApply {
       if (buckets.size == of.size) df
       else df.where(bkt.isin(buckets.map(Integer.valueOf): _*))
 
-    // 3. align to the stored schema; deletes become tombstones with
-    // payload nulled (the per-key version gate needs them so a stale
-    // update arriving after a newer delete cannot resurrect). Shared by
-    // the winners and the fold's raw events.
+    // 3. the batch aligned ONCE to the stored schema and tagged __ev =
+    // true; deletes become tombstones with payload nulled (the per-key
+    // version gate needs them so a stale update arriving after a newer
+    // delete cannot resurrect). Every class reads this one frame.
     val keyCols = Model.MergeKeys.toSet
     val isDel = col("_op") === "delete"
-    def alignWinnerCols(srcCols: Seq[String]): Seq[Column] =
-      schema.fields.map { f =>
+    val evRows = events.select(schema.fields.toSeq.map { f =>
         if (f.name == "_deleted") isDel.as("_deleted")
         else if (keyCols(f.name) || f.name == "_txid" || f.name == "_etag")
           col(f.name).cast(f.dataType).as(f.name)
-        else if (srcCols.contains(f.name))
+        else if (events.columns.contains(f.name))
           when(isDel, lit(null)).otherwise(col(f.name)).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
-      }.toSeq
+      } :+ lit(true).as("__ev"): _*)
+    // the one merge rule over stored rows ∪ the batch side `ev`: a
+    // stored row ranks above an event with the same _txid, so an event
+    // takes effect only if its _txid exceeds the stored row's and a
+    // re-applied batch changes nothing; events of one _txid rank by
+    // _etag (duplicated txids carry identical payloads). The resolve's
+    // one exchange leaves each bucket over ≤ `salt` reducers (files)
+    def merged(stored: Option[DataFrame], ev: DataFrame, salt: Int): DataFrame =
+      table.resolveLatest(
+          stored.fold(ev)(_.withColumn("__ev", lit(false)).unionByName(ev)), salt,
+          struct(col("_txid"), !col("__ev"), coalesce(col("_etag"), lit(""))))
+        .withColumn("_bucket", bucketOf)
 
-    // 4. the DELTA and CONSOLIDATE buckets' batch side, tagged __ev =
-    // true: the latest event per key within the batch (§2.8 semantics)
-    // as a partial-aggregable max_by instead of a row_number window —
-    // the scalable form of `sort -r | uniq` — ranked by _txid cast as
-    // the apply stores it (a string _txid would rank "9" above "10"),
-    // then _etag (duplicated txids carry identical payloads). The batch
-    // is hashed ONCE, by bucket (cast-typed key — xxhash64 is
-    // type-directed): the winner groupBy keeps that layout (bucket is a
-    // subset of the group keys) and so does the gate below when it
-    // broadcasts, so the delta write consumes winners ALREADY clustered
-    // by bucket and needs no exchange of its own — a micro-batch pays
-    // exactly one O(batch) shuffle end to end.
-    val eventCols = events.columns.toSeq
-    val stdShufflePartitions = spark.sessionState.conf.numShufflePartitions
-    val winners = within(
-        events.withColumn("__bkt",
-          table.bucketCol(col("conv_id").cast(schema("conv_id").dataType))),
-        col("__bkt"), winnerBuckets, touched)
-      .repartition(stdShufflePartitions, col("__bkt"))
-      .groupBy((col("__bkt") +: Model.MergeKeys.map(col)): _*)
-      .agg(max_by(
-        struct(eventCols.map(col): _*),
-        struct(col("_txid").cast(LongType), coalesce(col("_etag"), lit("")))).as("__w"))
-      .select(col("__bkt"), col("__w.*"))
-    val winnerRows = winners.select(
-      alignWinnerCols(winners.columns.toSeq) :+ col("__bkt"): _*)
+    // 4. the DELTA and CONSOLIDATE buckets' winners: the latest event per
+    // key within the batch (§2.8 semantics), resolved with salt 1 so each
+    // bucket lands whole in one reducer. The version gate below keeps
+    // that layout when it broadcasts, so the delta write consumes winners
+    // ALREADY clustered by bucket and needs no exchange of its own — a
+    // micro-batch pays exactly one O(batch) shuffle end to end.
+    val winners = merged(None, within(evRows, bucketOf, winnerBuckets, touched), 1)
     // The version gate keeps the winners that TAKE EFFECT: the stored
     // (key, _txid) of the winner buckets — a column-pruned narrow scan
     // of the raw physical rows — joins the winner keys FIRST, so the
@@ -390,10 +395,10 @@ object CdcApply {
     // scan was broadcast at 100 MB).
     val gated = prev.nonEmpty && winnerBuckets.nonEmpty && !txidFloor.exists(_ > prevWm)
     val batchRows: DataFrame =
-      if (!gated) winnerRows.withColumn("__ev", lit(true))
+      if (!gated) winners
       else {
         val mergeKeys = Model.MergeKeys.map(col)
-        val winnerKeys = winnerRows.select(mergeKeys: _*)
+        val winnerKeys = winners.select(mergeKeys: _*)
         val bcastMax = spark.sessionState.conf.autoBroadcastJoinThreshold
         val side: DataFrame => DataFrame =
           if (bcastMax >= 0 && winnerKeys.queryExecution.optimizedPlan.stats.sizeInBytes <= bcastMax)
@@ -403,49 +408,30 @@ object CdcApply {
           .select((mergeKeys :+ col("_txid").as("__t_txid")): _*)
         val matched = rawKeys.join(side(winnerKeys), Model.MergeKeys.toSeq)
           .groupBy(mergeKeys: _*).agg(max(col("__t_txid")).as("__t_txid"))
-        winnerRows
+        winners
           .join(side(matched), Model.MergeKeys.toSeq, "left")
           .where(col("__t_txid").isNull || col("_txid") > col("__t_txid"))
           .drop("__t_txid")
-          .withColumn("__ev", lit(true))
       }
     // the consolidate part reads the gated winners too: persist them so
     // the gate runs once
     val shared = deltaBuckets.nonEmpty && consBuckets.nonEmpty
     if (shared) batchRows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the one merge rule over stored rows ∪ the batch side `ev`: a
-    // stored row ranks above an event with the same _txid, so an event
-    // takes effect only if its _txid exceeds the stored row's and a
-    // re-applied batch changes nothing. The resolve's one exchange
-    // leaves each bucket over ≤ `salt` reducers (files)
-    def merged(stored: Option[DataFrame], ev: DataFrame, salt: Int): DataFrame =
-      table.resolveLatest(
-          stored.fold(ev)(_.withColumn("__ev", lit(false)).unionByName(ev)), salt,
-          struct(col("_txid"), !col("__ev"), coalesce(col("_etag"), lit(""))))
-        .withColumn("_bucket", bucketOf)
     val parts: Seq[DataFrame] = Seq(
-      // delta winners arrive already hashed by bucket (the batch's one
-      // shuffle): each bucket lands whole in one task, one file per
-      // bucket, no exchange here. Tiny batches: a lone writer task
-      // beats per-task overhead
-      Option.when(deltaBuckets.nonEmpty) {
-        val d = within(batchRows, col("__bkt"), deltaBuckets, winnerBuckets)
-          .withColumnRenamed("__bkt", "_bucket")
-        if (batchCount >= 0 && batchCount < ParallelDeltaWriteMinEvents) d.coalesce(1)
-        else d
-      },
+      // delta winners arrive already hashed by bucket: each bucket lands
+      // whole in one task, one file per bucket, no exchange here
+      Option.when(deltaBuckets.nonEmpty)(
+        within(batchRows, col("_bucket"), deltaBuckets, winnerBuckets)),
       // salt 1: one reducer (and so one file) per consolidated bucket —
       // the dir lives until the bucket's fold
       Option.when(consBuckets.nonEmpty)(merged(
         Some(align(table.readDeltaStacks(spark, consBuckets), schema)),
-        within(batchRows, col("__bkt"), consBuckets, winnerBuckets).drop("__bkt"), 1)),
-      // the fold buckets' RAW aligned events: the salted resolve
-      // collapses, gates and merges them in its one exchange
+        within(batchRows, col("_bucket"), consBuckets, winnerBuckets).drop("_bucket"), 1)),
+      // the fold buckets' events: the salted resolve collapses, gates
+      // and merges them in its one exchange
       Option.when(foldBuckets.nonEmpty)(merged(
         prev.map(_ => storedRows(foldBuckets)),
-        within(events.select(alignWinnerCols(eventCols) :+ lit(true).as("__ev"): _*),
-          bucketOf, foldBuckets, touched),
-        saltBuckets))).flatten
+        within(evRows, bucketOf, foldBuckets, touched), saltBuckets))).flatten
 
     // 5. ONE write puts every class's part into ONE bucket-partitioned
     // dir, sorted so each bucket file's row groups carry tight conv_id

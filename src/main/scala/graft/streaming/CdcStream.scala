@@ -284,10 +284,14 @@ object CdcStream {
             val t0 = System.nanoTime()
             // a line whose _txid parses but is no number (a string
             // "x") is corrupt too: the apply casts _txid to bigint, and
-            // an ANSI cast of it would fail the whole batch
+            // an ANSI cast of it would fail the whole batch. So is a line
+            // without a merge key: no well-formed event could ever
+            // address the row it would upsert (redrive refuses it too)
             def parseWith(schema: StructType): DataFrame = {
               val parseSchema = StructType(
                 schema.fields :+ StructField(CorruptCol, StringType))
+              val keyless = graft.model.Model.MergeKeys.map(k =>
+                if (schema.fieldNames.contains(k)) col(k).isNull else lit(true)).reduce(_ || _)
               batch.select(
                   from_json(col("value"), parseSchema,
                     Map("columnNameOfCorruptRecord" -> CorruptCol)).as("e"),
@@ -295,7 +299,7 @@ object CdcStream {
                   col("_path"), col("value").as("__raw"))
                 .select(col("e.*"), col("__novel"), originFile, originDc, col("__raw"))
                 .withColumn(CorruptCol, coalesce(col(CorruptCol),
-                  when(col("_txid").isNotNull && col("_txid").try_cast("bigint").isNull,
+                  when(keyless || (col("_txid").isNotNull && col("_txid").try_cast("bigint").isNull),
                     col("__raw"))))
                 .drop("__raw")
             }
@@ -304,40 +308,26 @@ object CdcStream {
             try {
               // ONE pass over the batch: per-DC lineage counters, distinct
               // origin files, newest event time (ingest-lag input), novel
-              // keys and corrupt rows (drift detection), PLUS the apply
-              // stage's prunedHint over non-corrupt rows (touched-bucket
-              // set, clean row count, and the txid floor: min and null
-              // count of _txid) — a single job that also materializes the
-              // cache every later job reads, so applyBatch skips its own
-              // pre-scan entirely, and an in-order batch (floor above the
-              // table's watermark) skips the version gate. hasTs reads
-              // schemaCache at CALL time: a drift re-inference that
-              // introduces `ts` mid-batch must be visible to the second
-              // summarize or the batch records no ingest-lag reading.
+              // keys and corrupt rows (drift detection), PLUS the apply's
+              // BatchHint facts over non-corrupt rows — a single job that
+              // also materializes the cache every later job reads, so
+              // applyBatch skips its own pre-scan entirely, and an
+              // in-order batch (floor above the table's watermark) skips
+              // the version gate. hasTs reads schemaCache at CALL time: a
+              // drift re-inference that introduces `ts` mid-batch must be
+              // visible to the second summarize or the batch records no
+              // ingest-lag reading.
               def summarize(df: DataFrame) = {
                 val hasTs = schemaCache.fieldNames.contains("ts")
-                // cast before hashing: xxhash64 is type-directed, and
-                // this bucket set becomes applyBatch's prunedHint —
-                // normalize() will cast conv_id to string before the
-                // apply hashes it, so the hint must hash the same value.
-                // _txid is cast as normalize() casts it too: a
-                // string-inferred _txid would compare lexically (a try_cast:
-                // a clean row's _txid casts, a corrupt one's need not)
-                val clean = col(CorruptCol).isNull
-                val okBucket = when(clean,
-                  table.bucketCol(col("conv_id").cast("string")))
-                val okTx = col("_txid").try_cast("bigint")
-                df.groupBy("_origin_dc").agg(
+                val aggs = Seq(
                   count(lit(1)).as("n"),
                   countDistinct(col("_origin_file")).as("nf"),
                   (if (hasTs) max(col("ts").cast("timestamp")).cast("long")
                    else lit(null).cast("long")).as("maxTs"),
                   sum(col(CorruptCol).isNotNull.cast("long")).as("nCorrupt"),
-                  array_distinct(flatten(collect_set(col("__novel")))).as("novel"),
-                  collect_set(okBucket).as("buckets"),
-                  min(when(clean, okTx)).as("minTx"),
-                  count(when(clean && okTx.isNull, 1)).as("nullTx"))
-                  .collect()
+                  array_distinct(flatten(collect_set(col("__novel")))).as("novel")) ++
+                  BatchHint.facts(table, col(CorruptCol).isNull)
+                df.groupBy("_origin_dc").agg(aggs.head, aggs.tail: _*).collect()
               }
               var summary = summarize(enriched)
               val novelKeys = summary.flatMap(r =>
@@ -374,13 +364,6 @@ object CdcStream {
               val nFiles = summary.map(_.getLong(2)).sum
               val maxTs = summary.flatMap(r =>
                 if (r.isNullAt(3)) None else Some(r.getLong(3)))
-              // prunedHint, already paid for by the summary job
-              val nClean = summary.map(r => r.getLong(1) - r.getLong(4)).sum
-              val touchedBuckets = summary
-                .flatMap(_.getSeq[Int](6)).distinct.toSeq
-              val minTx = summary.filterNot(_.isNullAt(7)).map(_.getLong(7))
-              val txidFloor = Option.when(
-                minTx.nonEmpty && summary.forall(_.getLong(8) == 0L))(minTx.min)
               val events = normalize(enriched
                 .where(col(CorruptCol).isNull)
                 .drop(CorruptCol, "__novel"))
@@ -389,7 +372,7 @@ object CdcStream {
                 extraMetrics = lineage + ("originFiles" -> nFiles) ++
                   (if (nCorruptFinal > 0)
                     Map("corruptRows" -> nCorruptFinal) else Map.empty),
-                prunedHint = Some(BatchHint(touchedBuckets, nClean, txidFloor)))
+                prunedHint = Some(BatchHint.combine(summary.toSeq)))
               val ms = (System.nanoTime() - t0) / 1000000
               // ingest lag: wall-clock minus newest event time in the batch
               // (north-star metric; negative/absent ts → no lag reading)

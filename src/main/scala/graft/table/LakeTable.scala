@@ -651,7 +651,8 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
   /** The engine's one merge rule — the newest row per (conv_id,
     * turn_idx) wins (the reference's `sort -r | uniq`,
     * manta/dc_inputs_2b.sh:33-35) — shared by the merge-on-read
-    * resolve, the fold, the consolidation and the bulk apply. `rows`
+    * resolve, the fold, the consolidation, the bulk apply and the
+    * apply's within-batch collapse of its winners. `rows`
     * must already be aligned to the stored schema (the bucket hash is
     * type-directed). "Newest" is the greatest `order`,
     * by default (_txid, _etag); the bulk apply slots a stored-row flag

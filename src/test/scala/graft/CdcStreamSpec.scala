@@ -342,6 +342,26 @@ class CdcStreamSpec extends SparkSpec {
     assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
   }
 
+  test("a line without a merge key is quarantined, never upserted under a null key") {
+    import java.nio.file.{Files, Paths}
+    val events = Corpus.changeEvents(spark, 400, nConvs = 10, maxTurns = 4)
+    val dir = tmpDir("keyless-log")
+    writeChangelog(dir, events, Seq((1L, 400L)))
+    // well-formed JSON, numeric and newest _txid, but no turn_idx
+    val bad = """{"_txid":999999,"_op":"update","_etag":"ek",""" +
+      """"conv_id":"conv00000001","role":"user","text":"keyless"}"""
+    Files.writeString(Paths.get(s"$dir/chunk0/zz-keyless.json"), bad + "\n")
+    val table = new LakeTable(tmpDir("keyless-table"), numBuckets = 8)
+    CdcStream.runOnce(spark, s"$dir/chunk*", table, tmpDir("keyless-ckpt"))
+    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+    val q = spark.read.json(s"${table.location}/_quarantine/*/*")
+    assert(q.select("raw").collect().map(_.getString(0)).toSeq == Seq(bad))
+    assert(q.select("_origin_file").collect().map(_.getString(0)).toSeq ==
+      Seq("zz-keyless.json"))
+    assert(table.commitLog().exists(_.metrics.get("corruptRows").contains(1L)),
+      "corruptRows metric missing from the commit log")
+  }
+
   test("a batch with no inferable change-event schema is quarantined, not skipped") {
     import java.nio.file.{Files, Paths}
     val events = Corpus.changeEvents(spark, 400, nConvs = 10, maxTurns = 4)

@@ -512,6 +512,33 @@ class PlanSpec extends SparkSpec {
         .select("conv_id", "turn_idx", "text"))
   }
 
+  test("a small in-order batch writes one file per touched bucket, through no coalesce") {
+    import org.apache.spark.sql.execution.CoalesceExec
+    import scala.jdk.CollectionConverters._
+    val (table, events, _) = gateTable("plansmall")
+    val (s, qes) = plansDuring(CdcApply.applyBatch(spark, table,
+      events.where(col("_txid") > 2000 && col("_txid") <= 2300)))
+    val c = table.currentCommit().get
+    assert(s.applied > 0 && c.metrics("deltaCommit") == 1L, c.metrics)
+    val writes = qes.filter { qe =>
+      val p = qe.executedPlan.toString
+      p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
+    }
+    assert(writes.nonEmpty, "no write-job plan captured")
+    val coalesced = writes.filter(qe =>
+      flattenPlan(qe.executedPlan).exists(_.isInstanceOf[CoalesceExec]))
+    assert(coalesced.isEmpty,
+      s"the delta write is coalesced:\n${coalesced.map(_.executedPlan).mkString("\n")}")
+    val dir = java.nio.file.Paths.get(table.location, f"data/c${c.version}%012dd")
+    val files = java.nio.file.Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("_bucket=")).map { b =>
+        b.getFileName.toString -> java.nio.file.Files.list(b).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet"))
+      }.toMap
+    assert(files.size == s.bucketsTouched && files.values.forall(_ == 1),
+      s"want one part file in each of ${s.bucketsTouched} bucket dirs: $files")
+  }
+
   test("watermark skip: re-emitting the watermark's own event still gates and commits nothing") {
     val (table, events, dataDir) = gateTable("planskipeq")
     val v = table.currentCommit().get.version
