@@ -107,7 +107,7 @@ object BatchHint {
   *      observed write into ONE dir (`data/cV` when any base is
   *      rewritten, else `data/cVd`);
   *   6. ONE atomic commit with txid high-watermark + per-bucket
-  *      lineage counts from that dir's footers. An entirely-ineffective
+  *      lineage counts from the write's Observation. An entirely-ineffective
   *      batch (pure replay) leaves no dir and commits nothing.
   *
   * Scale notes: the only full pass over the *batch* is one shuffle,
@@ -439,28 +439,23 @@ object CdcApply {
     // Observation over the batch's rows (__ev): effective events,
     // deletes, max _txid — no separate stats job. A batch where nothing
     // took effect (a pure replay) leaves no dir and commits nothing —
-    // idempotent no-op.
+    // idempotent no-op. The same Observation counts the rows written per
+    // bucket, so no footer is read back.
     val obs = new org.apache.spark.sql.Observation(s"apply-$version")
     try parts.reduce(_ unionByName _)
       .observe(obs,
         coalesce(sum(col("__ev").cast("long")), lit(0L)).as("nEff"),
         coalesce(sum((col("__ev") && coalesce(col("_deleted"), lit(false)))
           .cast("long")), lit(0L)).as("nDel"),
-        max(when(col("__ev"), col("_txid"))).as("maxTx"))
+        max(when(col("__ev"), col("_txid"))).as("maxTx"),
+        LakeTable.bucketRows(col("_bucket"), table.effectiveNumBuckets))
       .drop("__ev")
       .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
       .write.mode("overwrite").partitionBy("_bucket")
       .parquet(outDir.toString)
     finally if (shared) batchRows.unpersist()
-    // per-bucket row counts straight from the parquet footers of the
-    // just-written files — driver-side metadata reads, no Spark job
-    val counts = LakeTable.footerRowCounts(outDir)
-    // AQE may replace an all-empty plan with an empty relation and drop
-    // the CollectMetrics node: a missing map is a no-op only when the
-    // write left no rows — never trust a silent one
     val m = obs.get
-    if (!m.contains("nEff") && counts.nonEmpty) throw new IllegalStateException(
-      s"apply of version $version wrote rows at $outDir but its stats were not observed")
+    val counts = LakeTable.observedBucketRows(m, outDir)
     val nEff = m.get("nEff").map(_.asInstanceOf[Long]).getOrElse(0L)
     if (nEff == 0L) {
       LakeTable.deleteRecursively(outDir)

@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.StructType
   * module, so the (one-line) accessors live in this package. No Spark
   * internals are modified — this only re-exports the supported
   * Column ⇄ Expression conversion, the listener-bus drain the
-  * profiler needs before it reads what its job listener collected, and
-  * the nullable data schema every file relation is built with.
+  * profiler needs before it reads what its job listener collected, the
+  * nullable data schema every file relation is built with, and the
+  * re-binding of a frame's plan to another session.
   */
 object graftshim {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -20,4 +21,11 @@ object graftshim {
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 
   def asNullable(s: StructType): StructType = s.asNullable
+
+  /** `df`'s logical plan as a frame of `spark`: every job it runs then
+    * runs under `spark`, and so on its executor classloader and its
+    * codegen cache entries (the `executePlan` path). */
+  def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(classic.ClassicConversions.castToImpl(spark),
+      classic.ClassicConversions.castToImpl(df).queryExecution.logical)
 }

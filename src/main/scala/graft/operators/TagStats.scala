@@ -55,8 +55,8 @@ object TagStats {
     * (measure/jsonvalues.sh:18-24): the bytes each tag ACTUALLY
     * occupies on disk under the lake format's own compression, not an
     * estimate. Driver-side metadata only (O(KB) per footer), no extra
-    * Spark pass; the same footer-walk shape as
-    * [[graft.table.LakeTable.footerRowCounts]]. */
+    * Spark pass; the same footer walk as
+    * [[graft.table.LakeTable.flatFooterRowCount]]. */
   def compressedColumnBytes(dir: String): Map[String, (Long, Long)] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(dir)

@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.{graftshim, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 import graft.cdc.{BatchHint, CdcApply}
 import graft.table.LakeTable
@@ -29,16 +31,23 @@ import graft.table.LakeTable
   *
   * Novel-field absorption / schema evolution WITHOUT per-batch
   * inference: the stream caches the inferred event schema and parses
-  * each micro-batch exactly once with `from_json`. Drift is detected in
-  * the same single pass — novel top-level keys via `json_object_keys`
-  * vs the cached schema, type drift via the corrupt-record column (a
-  * value that no longer fits its cached type marks the row corrupt) —
-  * and only a drifted batch pays schema re-inference + a re-parse, after
-  * which the cache is widened along the promotion lattice (reference
-  * analogue: novel-key sweep into `_s`, lib/moraydump_reorg.js:501-529)
-  * — unless the field is in `ignoreFields` (manifest `source.ignore`,
-  * lib/wf_keys_tojson.js:113-134). Genuinely malformed lines (corrupt
-  * even under the re-inferred schema) are excluded from the apply and
+  * each micro-batch exactly once with `from_json`. The cache is kept in
+  * the checkpoint (`<checkpointDir>/graft-event-schema.json`, replaced
+  * atomically whenever it is set or widened), so a restart runs no
+  * inference job and its schema does not depend on where it restarted;
+  * a wiped checkpoint drops it together with the stream's identity.
+  * Drift is detected in the same single pass — novel top-level keys via
+  * `json_object_keys` vs the cached schema, type drift via the
+  * corrupt-record column (a value that no longer fits its cached type
+  * marks the row corrupt) — and only a drifted batch pays schema
+  * re-inference + a re-parse, after which the cache is widened along
+  * the promotion lattice (reference analogue: novel-key sweep into
+  * `_s`, lib/moraydump_reorg.js:501-529) — unless the field is in
+  * `ignoreFields` (manifest `source.ignore`,
+  * lib/wf_keys_tojson.js:113-134). A corrupt line that is no JSON
+  * object at all (a truncated line) cannot widen any schema, so it
+  * triggers no re-inference. Genuinely malformed lines (corrupt even
+  * under the re-inferred schema) are excluded from the apply and
   * DEAD-LETTERED: the raw line plus (datacenter, file) lineage is
   * written under the table's `_quarantine/<queryId>/batch-N/` (scoped
   * like commit idempotence, so a later stream on the same table never
@@ -178,6 +187,27 @@ object CdcStream {
     "ckpt-" + java.util.UUID.nameUUIDFromBytes(
       checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
 
+  /** Where the stream's event schema is kept: inside its checkpoint, so
+    * the schema lives and dies with the stream's identity. */
+  private[graft] def schemaPath(checkpointDir: String): Path =
+    Paths.get(checkpointDir.stripPrefix("file:"), "graft-event-schema.json")
+
+  private def readSchema(checkpointDir: String): Option[StructType] = {
+    val p = schemaPath(checkpointDir)
+    Option.when(Files.isRegularFile(p))(
+      DataType.fromJson(Files.readString(p)).asInstanceOf[StructType])
+  }
+
+  /** Replace the kept schema atomically: a reader sees the old or the
+    * new one, never a torn file. */
+  private def writeSchema(checkpointDir: String, schema: StructType): Unit = {
+    val p = schemaPath(checkpointDir)
+    Files.createDirectories(p.getParent)
+    val tmp = Files.createTempFile(p.getParent, ".tmp-schema-", ".json")
+    Files.writeString(tmp, schema.json)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+  }
+
   def start(
       spark: SparkSession,
       changelogDir: String,
@@ -230,10 +260,15 @@ object CdcStream {
         lit("default")).as("_origin_dc")
     }
 
-    // per-stream mutable state: the cached event schema (re-inferred
-    // only on detected drift) and the resolved stream identity
-    @volatile var schemaCache: StructType = null
+    // per-stream mutable state: the cached event schema (read back from
+    // the checkpoint, re-inferred only on detected drift) and the
+    // resolved stream identity
+    @volatile var schemaCache: StructType = readSchema(checkpointDir).orNull
     @volatile var queryIdCache: String = null
+    def cacheSchema(s: StructType): Unit = {
+      schemaCache = s
+      writeSchema(checkpointDir, s)
+    }
 
     val lines: DataFrame = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -245,8 +280,12 @@ object CdcStream {
     lines.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val session = batch.sparkSession
+      .foreachBatch { (micro: DataFrame, batchId: Long) =>
+        // the micro-batch re-bound to the caller's session: Spark runs
+        // each query on a clone of it, and the executor keys its task
+        // classloader (and so the codegen cache) by session, so every
+        // restart would otherwise compile the same classes again
+        val batch = graftshim.ofRows(spark, micro)
         if (queryIdCache == null) queryIdCache = queryIdFor(checkpointDir)
         val queryId = queryIdCache
         // crash-replay pre-check: a replayed batch must not pay ANY
@@ -256,7 +295,7 @@ object CdcStream {
         if (batchId < 0 || (!table.hasBatch(batchId, queryId) &&
             !table.hasBatch(batchId, legacyQueryIdFor(checkpointDir)))) {
           def inferSchema(): StructType = {
-            val s = session.read.json(batch.select("value")
+            val s = spark.read.json(batch.select("value")
               .as[String](org.apache.spark.sql.Encoders.STRING)).schema
             StructType(s.fields.filterNot(_.name == "_corrupt_record"))
           }
@@ -271,7 +310,7 @@ object CdcStream {
               .json(s"${table.location}/_quarantine/$queryId/batch-$batchId")
           if (schemaCache == null) {
             val inf = inferSchema() // once per stream, not per batch
-            if (inf.fieldNames.contains("_txid")) schemaCache = inf
+            if (inf.fieldNames.contains("_txid")) cacheSchema(inf)
           }
           if (schemaCache == null) {
             // no change-event schema (no `_txid`) can be inferred from
@@ -321,27 +360,33 @@ object CdcStream {
                 val hasTs = schemaCache.fieldNames.contains("ts")
                 val aggs = Seq(
                   count(lit(1)).as("n"),
-                  countDistinct(col("_origin_file")).as("nf"),
+                  size(collect_set(col("_origin_file"))).cast("long").as("nf"),
                   (if (hasTs) max(col("ts").cast("timestamp")).cast("long")
                    else lit(null).cast("long")).as("maxTs"),
                   sum(col(CorruptCol).isNotNull.cast("long")).as("nCorrupt"),
-                  array_distinct(flatten(collect_set(col("__novel")))).as("novel")) ++
+                  array_distinct(flatten(collect_set(col("__novel")))).as("novel"),
+                  // corrupt lines that are still JSON objects: only those
+                  // can carry a type or key a re-inference would widen
+                  sum((col(CorruptCol).isNotNull &&
+                    json_object_keys(col(CorruptCol)).isNotNull).cast("long")).as("nDrift")) ++
                   BatchHint.facts(table, col(CorruptCol).isNull)
                 df.groupBy("_origin_dc").agg(aggs.head, aggs.tail: _*).collect()
               }
               var summary = summarize(enriched)
               val novelKeys = summary.flatMap(r =>
                 Option(r.getSeq[String](5)).getOrElse(Nil)).distinct
-              val nCorrupt = summary.map(_.getLong(4)).sum
-              if (novelKeys.nonEmpty || nCorrupt > 0) {
+              val nDrift = summary.map(_.getAs[Long]("nDrift")).sum
+              if (novelKeys.nonEmpty || nDrift > 0) {
                 // drift: widen the cached schema along the promotion
                 // lattice and re-parse this batch once. If re-inference
                 // changes nothing (genuinely malformed lines), the
                 // corrupt rows are dropped below rather than re-chased.
+                // A line that is no JSON object (truncated) is corrupt
+                // under any schema: it is quarantined with no inference.
                 val evolved = CdcApply.evolveSchema(
                   schemaCache, inferSchema(), ignoreFields)
                 if (evolved != schemaCache) {
-                  schemaCache = evolved
+                  cacheSchema(evolved)
                   enriched.unpersist()
                   enriched = parseWith(evolved)
                     .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -367,7 +412,7 @@ object CdcStream {
               val events = normalize(enriched
                 .where(col(CorruptCol).isNull)
                 .drop(CorruptCol, "__novel"))
-              val stats = CdcApply.applyBatch(session, table, events,
+              val stats = CdcApply.applyBatch(spark, table, events,
                 batchId = batchId, queryId = queryId, ignoreFields = ignoreFields,
                 extraMetrics = lineage + ("originFiles" -> nFiles) ++
                   (if (nCorruptFinal > 0)
@@ -396,7 +441,7 @@ object CdcStream {
                     .map(_.metrics.getOrElse("deletes", 0L)).sum)
                 val totalRows = log.last.rowCounts.values.sum
                 if (delSince >= autoCompactMinDeletes && delSince * 5 >= totalRows) {
-                  table.compact(session,
+                  table.compact(spark,
                     tombstoneHorizon = stats.txidWatermark - tombstoneLag)
                   // the compaction stranded every pre-compaction dir;
                   // reclaim all but the last two snapshots' storage

@@ -970,39 +970,37 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     currentCommit().map { c =>
       val keep = readRaw(spark).where(
         !coalesce(col("_deleted"), lit(false)) || col("_txid") >= tombstoneHorizon)
-      val (rel, dirs, counts) =
-        writeBase(keep, c.version + 1, bucketCol(col("conv_id")))
+      val (rel, counts) =
+        writeBase(keep, c.version + 1, col("conv_id"), effectiveNumBuckets)
       // every bucket with a base or a delta stack is folded into the new
       // base; rewriting them clears their delta stacks in commit().
       // `counts` are the fresh post-compaction row counts: the
       // tombstones just dropped must leave the per-bucket lineage too
       val rewritten: Map[Int, Option[String]] =
         c.liveBuckets.map { b =>
-          b -> (if (dirs.contains(s"_bucket=$b")) Some(s"$rel/_bucket=$b") else None)
+          b -> counts.get(b).map(_ => s"$rel/_bucket=$b")
         }.toMap
       commit(c.schema, rewritten, counts, c.txidWatermark, -1L,
         Map("compaction" -> 1L, "tombstoneHorizon" -> tombstoneHorizon))
     }
 
-  /** Rewrite `df` as a fresh bucket-partitioned base under
-    * `data/c<version>`, files sorted by (bucket, conv_id, turn_idx) for
-    * row-group min/max skipping on later gate reads — the one write
-    * shape shared by compaction and rebucketing. Returns the dir's
-    * relative path, its `_bucket=` subdir names, and per-bucket counts. */
+  /** Rewrite `df` as a fresh base of `numBuckets` buckets (hashed from
+    * `conv`) under `data/c<version>`, files sorted by (bucket, conv_id,
+    * turn_idx) for row-group min/max skipping on later gate reads — the
+    * one write shape shared by compaction and rebucketing. Returns the
+    * dir's relative path and the rows the write put in each bucket (a
+    * bucket it wrote no row to has no entry and no dir). */
   private def writeBase(df: DataFrame, version: Long,
-      bucket: org.apache.spark.sql.Column):
-      (String, Set[String], Map[Int, Long]) = {
+      conv: Column, numBuckets: Int): (String, Map[Int, Long]) = {
     val rel = f"data/c$version%012d"
-    df.withColumn("_bucket", bucket)
+    val obs = new org.apache.spark.sql.Observation(s"base-$version")
+    df.withColumn("_bucket", LakeTable.bucketColFor(conv, numBuckets))
+      .observe(obs, LakeTable.bucketRows(col("_bucket"), numBuckets))
       .repartition(col("_bucket"))
       .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
       .write.mode("overwrite").partitionBy("_bucket")
       .parquet(root.resolve(rel).toString)
-    val s = Files.list(root.resolve(rel))
-    val dirs = try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith("_bucket=")).toSet
-    finally s.close()
-    (rel, dirs, LakeTable.footerRowCounts(root.resolve(rel)))
+    (rel, LakeTable.observedBucketRows(obs.get, root.resolve(rel)))
   }
 
   /** Re-hash the table to a new bucket count — the maintenance op for
@@ -1031,11 +1029,11 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val oldN = effectiveNumBuckets
     require(newNumBuckets != oldN,
       s"table at $location is already laid out with $oldN buckets")
-    val (rel, dirs, counts) = writeBase(readRaw(spark), c.version + 1,
-      LakeTable.bucketColFor(col("conv_id"), newNumBuckets))
+    val (rel, counts) =
+      writeBase(readRaw(spark), c.version + 1, col("conv_id"), newNumBuckets)
     val allBuckets = c.liveBuckets ++ (0 until newNumBuckets)
     val rewritten: Map[Int, Option[String]] = allBuckets.map { b =>
-      b -> (if (dirs.contains(s"_bucket=$b")) Some(s"$rel/_bucket=$b") else None)
+      b -> counts.get(b).map(_ => s"$rel/_bucket=$b")
     }.toMap
     commit(c.schema, rewritten, counts, c.txidWatermark, -1L,
       Map("rebucket" -> 1L, LakeTable.NumBucketsKey -> newNumBuckets.toLong))
@@ -1175,7 +1173,7 @@ object LakeTable {
   }
 
   /** Read-only Hadoop conf shared by every footer read (building one
-    * parses the default resources; footerRowCounts reads from a pool). */
+    * parses the default resources). */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
   /** Open each part's footer and fold `f` over the readers — the one
@@ -1191,10 +1189,9 @@ object LakeTable {
     }
 
   /** Footer row count of the part-*.parquet files DIRECTLY under
-    * `dir` (no `_bucket=` partitioning) — one bucket's count in
-    * [[footerRowCounts]], and the fallback truth source for flat writes
-    * like [[graft.cdc.CdcOut]]'s pull dirs when the write job's
-    * Observation metric was elided by a statically-empty plan.
+    * `dir` (no `_bucket=` partitioning) — the fallback truth source for
+    * flat writes like [[graft.cdc.CdcOut]]'s pull dirs when the write
+    * job's Observation metric was elided by a statically-empty plan.
     * Driver-side metadata only, no Spark job. */
   def flatFooterRowCount(dir: Path): Long =
     withFooters(dir)(_.getRecordCount).sum
@@ -1221,33 +1218,48 @@ object LakeTable {
     else Some(maxes.flatten.max)
   }
 
-  /** Per-bucket row counts from the parquet footers under a commit's
-    * data dir (driver-side metadata only; footer reads are O(KB) each,
-    * parallelized). Layout: `<dir>/_bucket=N/part-*.parquet`. */
-  def footerRowCounts(outDir: Path): Map[Int, Long] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.isDirectory(outDir)) return Map.empty
-    val s = Files.list(outDir)
-    val bucketDirs = try s.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("_bucket=")).toList
-    finally s.close()
-    if (bucketDirs.isEmpty) return Map.empty
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // pool bounded by the work: this is a driver-side metadata read and
-    // must not become a driver bottleneck pattern if numBuckets grows
-    // with cluster size — O(KB) per footer, ≤16 threads, no Spark job
-    val pool = Executors.newFixedThreadPool(math.min(16, bucketDirs.length))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = bucketDirs.map { dir =>
-        Future {
-          dir.getFileName.toString.stripPrefix("_bucket=").toInt ->
-            flatFooterRowCount(dir)
-        }
-      }
-      Await.result(Future.sequence(futures), Duration.Inf).toMap
-    } finally pool.shutdown()
+  /** One long per bucket: the buffer of [[bucketRows]]. */
+  private final class BucketRows(n: Int)
+      extends org.apache.spark.sql.expressions.Aggregator[Int, Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](n)
+    def reduce(acc: Array[Long], bucket: Int): Array[Long] = { acc(bucket) += 1; acc }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < n) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(acc: Array[Long]): Array[Long] = acc
+    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] = longsEncoder
+    def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] = longsEncoder
   }
+
+  private def longsEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+
+  /** The exact row count of each of `numBuckets` buckets as ONE
+    * aggregate for a write's Observation (metric `bucketRows`): the
+    * counts ride the write job itself, so no footer is read back. */
+  private[graft] def bucketRows(bucket: Column, numBuckets: Int): Column =
+    udaf(new BucketRows(numBuckets), org.apache.spark.sql.Encoders.scalaInt)(bucket)
+      .as("bucketRows")
+
+  /** The rows per bucket a write into `outDir` observed through
+    * [[bucketRows]], for the buckets it wrote rows to. AQE may replace an
+    * all-empty plan with an empty relation and drop the CollectMetrics
+    * node: a missing metric is a no-op only when `outDir` holds no
+    * `_bucket=` dir — never trust a silent one. */
+  private[graft] def observedBucketRows(metrics: Map[String, Any], outDir: Path): Map[Int, Long] =
+    metrics.get("bucketRows") match {
+      case Some(rows: scala.collection.Seq[_]) =>
+        rows.iterator.zipWithIndex.collect { case (n: Long, b) if n > 0 => b -> n }.toMap
+      case _ =>
+        val wrote = Files.isDirectory(outDir) && {
+          val s = Files.list(outDir)
+          try s.iterator().asScala.exists(_.getFileName.toString.startsWith("_bucket="))
+          finally s.close()
+        }
+        if (wrote) throw new IllegalStateException(
+          s"the write to $outDir left rows but its counts were not observed")
+        Map.empty
+    }
 }

@@ -16,6 +16,25 @@ class CdcApplySpec extends SparkSpec {
   private def finalPayload(t: LakeTable) =
     t.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
+  /** Every `_bucket=N` dir the head commit references holds exactly the
+    * rows its counts say: a base dir its `rowCounts` less its tracked
+    * delta rows, each delta dir its `deltaRowCounts` entry. */
+  private def assertCountsMatchFooters(t: LakeTable): Unit = {
+    val c = t.currentCommit().get
+    def footer(rel: String) =
+      LakeTable.flatFooterRowCount(java.nio.file.Paths.get(t.location, rel))
+    c.buckets.foreach { case (b, rel) =>
+      assert(c.baseRowsOf(b.toInt).contains(footer(rel)),
+        s"v${c.version} base $rel: counted ${c.baseRowsOf(b.toInt)}, footers ${footer(rel)}")
+    }
+    c.deltas.foreach { case (b, stack) =>
+      assert(c.deltaRowCounts(b).size == stack.size, s"v${c.version} bucket $b")
+      stack.zip(c.deltaRowCounts(b)).foreach { case (rel, n) =>
+        assert(n == footer(rel), s"v${c.version} delta $rel: counted $n, footers ${footer(rel)}")
+      }
+    }
+  }
+
   test("single-batch replay matches the reference-semantics oracle") {
     val events = corpus(2000)
     val table = new LakeTable(tmpDir("single"), numBuckets = 16)
@@ -443,6 +462,24 @@ class CdcApplySpec extends SparkSpec {
       c.buckets(dB.toString) == base.buckets(dB.toString))
     assertSameRows(finalPayload(table),
       Corpus.oracleFinalState(patches.foldLeft(events)(_ unionByName _)))
+    assertCountsMatchFooters(table)
+  }
+
+  test("observed bucket counts equal the written footers: delta apply, compact, rebucket") {
+    val events = corpus(3000)
+    val table = new LakeTable(tmpDir("obscounts"), numBuckets = 8)
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") <= 2000))
+    assertCountsMatchFooters(table)
+    // an in-order batch: every touched bucket appends one delta dir
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") > 2000))
+    assert(table.currentCommit().get.metrics.get("deltaCommit").contains(1L))
+    assertCountsMatchFooters(table)
+    table.compact(spark, tombstoneHorizon = Long.MaxValue)
+    assert(table.currentCommit().get.deltas.isEmpty)
+    assertCountsMatchFooters(table)
+    table.rebucket(spark, 5)
+    assertCountsMatchFooters(table)
+    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
   }
 
   test("at-cap stack CONSOLIDATES into one delta dir; the base is not rewritten") {

@@ -465,4 +465,117 @@ class CdcStreamSpec extends SparkSpec {
       got.head.getString(2) == "hello")
     assert(!Files.exists(qdir), "quarantine dir released after redrive")
   }
+
+  /** Segment `i` as one NDJSON file, newer than segment i-1's: the
+    * file source takes segments in order, one per trigger at
+    * `maxFilesPerTrigger = 1`. */
+  private def writeLines(dir: String, i: Int, lines: Seq[String]): Unit = {
+    val f = java.nio.file.Paths.get(s"$dir/chunk$i/part-0.json")
+    java.nio.file.Files.createDirectories(f.getParent)
+    java.nio.file.Files.writeString(f, lines.mkString("", "\n", "\n"))
+    java.nio.file.Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - 60000L + i * 1000L))
+  }
+
+  private def metaLine(i: Int, meta: String, extra: String = "") =
+    s"""{"_txid":$i,"_op":"upsert","_etag":"e$i","conv_id":"c${i % 5}",""" +
+      s""""turn_idx":${i / 5},"role":"user","text":"t$i","meta":$meta$extra}"""
+
+  private def keptSchema(ckpt: String) =
+    org.apache.spark.sql.types.DataType.fromJson(java.nio.file.Files.readString(
+      CdcStream.schemaPath(ckpt))).asInstanceOf[org.apache.spark.sql.types.StructType]
+
+  test("a restarted tail runs every query on the caller's session, so it keeps its compiled classes") {
+    // every segment carries every field (no evolve point), so each
+    // restart runs the same plans: the first compiles them, and later
+    // restarts find them in the codegen cache only if they run on the
+    // caller's session (one executor classloader), not on a per-query
+    // clone of it. The cache is a bounded LRU split into segments, so
+    // how many of them a restart still finds depends on how its keys
+    // hash: the assertion is on the session, the count is reported
+    val events = Corpus.changeEvents(spark, 2000, nConvs = 40, maxTurns = 8,
+      evolveFrac = 0.0)
+    val logDir = tmpDir("warm-log")
+    val ckpt = tmpDir("warm-ckpt")
+    val table = new LakeTable(tmpDir("warm-table"), numBuckets = 16)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    import scala.jdk.CollectionConverters._
+    // every named query a restart runs, with the session it ran on
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        ran.add(funcName -> (qe.sparkSession eq spark))
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit =
+        ran.add(funcName -> (qe.sparkSession eq spark))
+    }
+    val perRestart = (0 until 4).map { i =>
+      CdcStream.writeSegment(Corpus.shuffled(events.where(
+        col("_txid") > i * 500L && col("_txid") <= (i + 1) * 500L)), s"$logDir/chunk$i")
+      val before = compiles.getCount
+      if (i == 3) spark.listenerManager.register(listener)
+      try CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt, maxFilesPerTrigger = 1)
+      finally if (i == 3) {
+        org.apache.spark.sql.graftshim.drainListeners(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      compiles.getCount - before
+    }
+    assert(table.txidWatermark == 2000L)
+    val queries = ran.asScala.toSeq
+    // the summary's collect and the apply's write at least
+    assert(Set("collect", "command").subsetOf(queries.map(_._1).toSet) && queries.forall(_._2),
+      s"queries of the 4th restart (name, on the caller's session): $queries")
+    info(s"classes compiled per restart: $perRestart")
+    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+  }
+
+  test("a restart whose first batch carries a narrower struct keeps the table's struct") {
+    val logDir = tmpDir("narrow-log")
+    val ckpt = tmpDir("narrow-ckpt")
+    val table = new LakeTable(tmpDir("narrow-table"), numBuckets = 8)
+    val wide = (1 to 40).map(i => metaLine(i, s"""{"a":$i,"b":"x$i"}"""))
+    val narrow = (41 to 80).map(i => metaLine(i, s"""{"a":$i}"""))
+    val novel = (81 to 120).map(i =>
+      metaLine(i, s"""{"a":$i,"b":"y$i"}""", s""","origin_host":"h$i""""))
+    writeLines(logDir, 0, wide)
+    CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt, maxFilesPerTrigger = 1)
+    val metaType = table.currentCommit().get.schema("meta").dataType
+    assert(metaType.isInstanceOf[org.apache.spark.sql.types.StructType])
+    val kept = keptSchema(ckpt)
+    // the restart's first batch knows only meta.a: it parses under the
+    // kept schema instead of inferring a narrower struct
+    writeLines(logDir, 1, narrow)
+    CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt, maxFilesPerTrigger = 1)
+    assert(table.txidWatermark == 80L)
+    assert(table.currentCommit().get.schema("meta").dataType == metaType)
+    assert(keptSchema(ckpt) == kept)
+    // drift widens the kept schema by exactly the novel field
+    writeLines(logDir, 2, novel)
+    CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt, maxFilesPerTrigger = 1)
+    assert(table.currentCommit().get.schema("meta").dataType == metaType)
+    assert(keptSchema(ckpt) == org.apache.spark.sql.types.StructType(kept.fields :+
+      org.apache.spark.sql.types.StructField("origin_host",
+        org.apache.spark.sql.types.StringType)))
+    assert(table.read(spark).where(col("_txid") > 40 && col("_txid") <= 80)
+      .where(col("meta.a").isNull || col("meta.b").isNotNull).count() == 0)
+  }
+
+  test("a truncated line re-infers nothing: a narrower struct batch keeps the table's struct") {
+    val logDir = tmpDir("trunc-log")
+    val table = new LakeTable(tmpDir("trunc-table"), numBuckets = 8)
+    val truncated = metaLine(99, """{"a":99}""").take(40)
+    writeLines(logDir, 0, (1 to 40).map(i => metaLine(i, s"""{"a":$i,"b":"x$i"}""")))
+    writeLines(logDir, 1, (41 to 80).map(i => metaLine(i, s"""{"a":$i}""")) :+ truncated)
+    CdcStream.runOnce(spark, s"$logDir/chunk*", table, tmpDir("trunc-ckpt"),
+      maxFilesPerTrigger = 1)
+    assert(table.txidWatermark == 80L)
+    assert(table.currentCommit().get.schema("meta").dataType
+      .isInstanceOf[org.apache.spark.sql.types.StructType],
+      s"meta degraded to ${table.currentCommit().get.schema("meta").dataType}")
+    val q = spark.read.json(s"${table.location}/_quarantine/*/*")
+    assert(q.select("raw").collect().map(_.getString(0)).toSeq == Seq(truncated))
+    assert(table.commitLog().exists(_.metrics.get("corruptRows").contains(1L)))
+  }
 }
