@@ -95,25 +95,32 @@ object BatchHint {
   *      runs on that output; a stored row wins a _txid tie, so FOLD's
   *      resolve is also its collapse and its gate, and step 3 runs only
   *      for DELTA and CONSOLIDATE buckets;
-  *   5. each resolve is one exchange whose output reaches the
-  *      bucket-partitioned writer with no further exchange. The FOLD
-  *      resolve is salted within each bucket, so one hot conversation
-  *      cannot serialize a whole bucket into one task (north-rule skew
-  *      mandate — the reference has no skew handling, SURVEY.md §4.1).
-  *      The winners resolve with salt 1: each winner bucket lands whole
-  *      in one reducer and one file, so a known batch's hot bucket (a
-  *      pre-scanned first load too) resolves in one task at any size
-  *      (SkewSpec). The classes' parts are unioned and written by ONE
-  *      observed write into ONE dir (`data/cV` when any base is
-  *      rewritten, else `data/cVd`);
+  *   5. each resolve is one exchange whose output reaches the writer
+  *      with no further exchange. The FOLD resolve is salted within
+  *      each bucket, so one hot conversation cannot serialize a whole
+  *      bucket into one task (north-rule skew mandate — the reference
+  *      has no skew handling, SURVEY.md §4.1). The winners resolve with
+  *      salt 1: each winner bucket lands whole in one reducer, so a
+  *      known batch's hot bucket (a pre-scanned first load too)
+  *      resolves in one task at any size (SkewSpec). The classes' parts
+  *      are unioned and written by ONE observed write into ONE dir:
+  *      `data/cV`, partitioned by bucket, when any base is rewritten;
+  *      else `data/cVd`, FLAT — one file per write task, `_bucket` a
+  *      column — so a steady apply that touches every bucket writes a
+  *      few files, not one per bucket (level 0 of an LSM tree);
   *   6. ONE atomic commit with txid high-watermark + per-bucket
-  *      lineage counts from the write's Observation. An entirely-ineffective
-  *      batch (pure replay) leaves no dir and commits nothing.
+  *      lineage counts from the write's Observation, which also names
+  *      the task that wrote each bucket: a flat write's stack entry is
+  *      that task's one file (the dir if the bucket spread over several
+  *      tasks). Nothing is read back. An entirely-ineffective batch
+  *      (pure replay) leaves no dir and commits nothing.
   *
   * Scale notes: the only full pass over the *batch* is one shuffle,
   * the resolve's — by bucket for the DELTA/CONSOLIDATE winners, by
   * (bucket, salt) for the FOLD buckets' events — at every batch size:
-  * no batch is funnelled into one writer task. The target table is
+  * no batch is funnelled into one writer task, and a delta-only write
+  * opens at most one file per write task (≤ spark.sql.shuffle.partitions
+  * per part), however many buckets it touches. The target table is
   * touched only on affected buckets; the version gate is a join keyed
   * on the merge key, and only the DELTA/CONSOLIDATE buckets of a batch
   * at or below the watermark (late, overlapping, or with a null _txid)
@@ -166,7 +173,8 @@ object CdcApply {
     * PROMOTE along the reference's typeThatWins lattice
     * (lib/json2pgtypes.js:613-643) — int+real → real, int+timestamp →
     * timestamp, anything+varchar → varchar — instead of failing or
-    * silently truncating. */
+    * silently truncating. A struct that only lacks some of the stored
+    * struct's subfields is no conflict: the stored struct is kept. */
   def evolveSchema(
       prev: StructType, incoming: StructType,
       ignore: Set[String] = Set.empty): StructType = {
@@ -174,7 +182,7 @@ object CdcApply {
     val widened = prev.fields.map { f =>
       incomingByName.get(f.name) match {
         case Some(in) if in.dataType != f.dataType
-            && !Model.MergeKeys.contains(f.name) =>
+            && !Model.MergeKeys.contains(f.name) && !narrowerStruct(in.dataType, f.dataType) =>
           val winner = graft.types.TypeInference.typeThatWins(
             latticeName(f.dataType), latticeName(in.dataType))
           f.copy(dataType = latticeType(winner, f.dataType, in.dataType))
@@ -185,6 +193,16 @@ object CdcApply {
     val novel = incoming.fields.filterNot(f =>
       known.contains(f.name) || ignore.contains(f.name))
     StructType(widened ++ novel.map(_.copy(nullable = true)))
+  }
+
+  /** A struct whose every field `wide` holds under the same name, with
+    * the same or (recursively) a narrower struct type: a batch that
+    * lacks some subfields. It is no type conflict — `wide` already reads
+    * it ([[LakeTable.castTo]] fills the absent subfields with nulls). */
+  private def narrowerStruct(in: DataType, wide: DataType): Boolean = (in, wide) match {
+    case (i: StructType, w: StructType) => i.fields.forall(f => w.find(_.name == f.name)
+      .exists(g => g.dataType == f.dataType || narrowerStruct(f.dataType, g.dataType)))
+    case _ => false
   }
 
   /** Columns stored in the table: merge keys + payload + CDC metadata
@@ -351,7 +369,8 @@ object CdcApply {
         else if (keyCols(f.name) || f.name == "_txid" || f.name == "_etag")
           col(f.name).cast(f.dataType).as(f.name)
         else if (events.columns.contains(f.name))
-          when(isDel, lit(null)).otherwise(col(f.name)).cast(f.dataType).as(f.name)
+          LakeTable.castTo(when(isDel, lit(null)).otherwise(col(f.name)),
+            events.schema(f.name).dataType, f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       } :+ lit(true).as("__ev"): _*)
     // the one merge rule over stored rows ∪ the batch side `ev`: a
@@ -433,29 +452,36 @@ object CdcApply {
         prev.map(_ => storedRows(foldBuckets)),
         within(evRows, bucketOf, foldBuckets, touched), saltBuckets))).flatten
 
-    // 5. ONE write puts every class's part into ONE bucket-partitioned
-    // dir, sorted so each bucket file's row groups carry tight conv_id
-    // min/max for later pruned reads, with the apply's stats riding an
-    // Observation over the batch's rows (__ev): effective events,
-    // deletes, max _txid — no separate stats job. A batch where nothing
-    // took effect (a pure replay) leaves no dir and commits nothing —
-    // idempotent no-op. The same Observation counts the rows written per
-    // bucket, so no footer is read back.
+    // 5. ONE write puts every class's part into ONE dir, sorted so each
+    // file's row groups carry tight (bucket, conv_id) min/max for later
+    // pruned reads. A write that rewrites a base partitions the dir by
+    // bucket; a delta-only one writes it FLAT, one file per write task
+    // with `_bucket` as a column (level 0: the steady tail's write pays
+    // per file, not per row, and touches about every bucket). The
+    // apply's stats ride an Observation over the batch's rows (__ev):
+    // effective events, deletes, max _txid — no separate stats job. A
+    // batch where nothing took effect (a pure replay) leaves no dir and
+    // commits nothing — idempotent no-op. The same Observation counts
+    // the rows written per bucket and the task that wrote them, so no
+    // footer is read back.
+    val flat = baseBuckets.isEmpty
     val obs = new org.apache.spark.sql.Observation(s"apply-$version")
-    try parts.reduce(_ unionByName _)
-      .observe(obs,
-        coalesce(sum(col("__ev").cast("long")), lit(0L)).as("nEff"),
-        coalesce(sum((col("__ev") && coalesce(col("_deleted"), lit(false)))
-          .cast("long")), lit(0L)).as("nDel"),
-        max(when(col("__ev"), col("_txid"))).as("maxTx"),
-        LakeTable.bucketRows(col("_bucket"), table.effectiveNumBuckets))
-      .drop("__ev")
-      .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-      .write.mode("overwrite").partitionBy("_bucket")
-      .parquet(outDir.toString)
-    finally if (shared) batchRows.unpersist()
+    try {
+      val w = parts.reduce(_ unionByName _)
+        .observe(obs,
+          coalesce(sum(col("__ev").cast("long")), lit(0L)).as("nEff"),
+          coalesce(sum((col("__ev") && coalesce(col("_deleted"), lit(false)))
+            .cast("long")), lit(0L)).as("nDel"),
+          max(when(col("__ev"), col("_txid"))).as("maxTx"),
+          LakeTable.bucketWrites(col("_bucket"), table.effectiveNumBuckets))
+        .drop("__ev")
+        .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
+        .write.mode("overwrite")
+      (if (flat) w else w.partitionBy("_bucket")).parquet(outDir.toString)
+    } finally if (shared) batchRows.unpersist()
     val m = obs.get
-    val counts = LakeTable.observedBucketRows(m, outDir)
+    val written = LakeTable.observedBucketWrites(m, outDir)
+    val counts = written.map { case (b, w) => b -> w.rows }
     val nEff = m.get("nEff").map(_.asInstanceOf[Long]).getOrElse(0L)
     if (nEff == 0L) {
       LakeTable.deleteRecursively(outDir)
@@ -465,15 +491,20 @@ object CdcApply {
     val maxTx = math.max(prevWm, Option(m("maxTx")).fold(prevWm)(_.asInstanceOf[Long]))
 
     // 6. ONE atomic commit: fold (and first-commit) buckets get fresh
-    // bases, consolidated stacks are replaced by their one dir, every
-    // other bucket appends its dir to its stack — with the txid
-    // high-watermark and per-bucket lineage counts
+    // bases, consolidated stacks are replaced by their one entry, every
+    // other bucket appends its entry to its stack — with the txid
+    // high-watermark and per-bucket lineage counts. A flat write's entry
+    // names the one file its bucket's task wrote (the dir when the
+    // bucket spread over several tasks: the sort-merge gate's re-hash)
+    val entryOf: Map[Int, String] =
+      if (flat) LakeTable.flatEntries(Paths.get(table.location), rel, written)
+      else counts.map { case (b, _) => b -> s"$rel/_bucket=$b" }
     val baseSet = baseBuckets.toSet
     val (deltaAdds, deltaReplaces) = (counts -- baseBuckets)
-      .map { case (b, n) => b -> (s"$rel/_bucket=$b", n) }
+      .map { case (b, n) => b -> (entryOf(b), n) }
       .partition { case (b, _) => !consSet(b) }
     val c = table.commit(schema,
-      baseBuckets.map(b => b -> counts.get(b).map(_ => s"$rel/_bucket=$b")).toMap,
+      baseBuckets.map(b => b -> entryOf.get(b)).toMap,
       counts.filter { case (b, _) => baseSet(b) }, maxTx, batchId, Map(
         "events" -> nEff, "upserts" -> (nEff - nDel), "deletes" -> nDel,
         "bucketsTouched" -> touched.length.toLong,
@@ -483,7 +514,8 @@ object CdcApply {
         "deltaRows" -> deltaAdds.values.map(_._2).sum,
         "deltaCommit" -> (if (baseBuckets.isEmpty && consBuckets.isEmpty) 1L else 0L),
         // 1 when step 4's gate join ran (a fold's resolve is its own gate)
-        "versionGate" -> (if (gated) 1L else 0L)) ++ extraMetrics,
+        "versionGate" -> (if (gated) 1L else 0L),
+        "filesWritten" -> LakeTable.parquetFilesUnder(outDir)) ++ extraMetrics,
       queryId, deltaAdds = deltaAdds, deltaReplaces = deltaReplaces)
     ApplyStats(c.version, nEff, nEff - nDel, nDel,
       skippedReplay = false, c.txidWatermark, touched.length)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{graftshim, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.Serialization
 
@@ -34,12 +34,22 @@ import org.json4s.jackson.Serialization
   * @param metrics        free-form counters for the commit (applied/deleted/...)
   * @param queryId        stream identity that produced the batch (sink-side
   *                       exactly-once is scoped (queryId, batchId))
-  * @param deltas         MERGE-ON-READ delta dirs PER BUCKET: bucket id ->
-  *                       the stack of small parquet dirs (each
-  *                       `data/cVVV[d]/_bucket=B`: `data/cVVVd` from a
-  *                       delta-only apply, `data/cVVV` when the same
-  *                       apply also rewrote a base) appended since that
-  *                       bucket's last fold. Per-bucket tracking makes the
+  * @param deltas         MERGE-ON-READ delta entries PER BUCKET: bucket id ->
+  *                       the stack of entries appended since that
+  *                       bucket's last fold, one per write. An apply that
+  *                       rewrote a base writes `data/cVVV/_bucket=B`, a
+  *                       dir of the bucket alone. A delta-only apply
+  *                       writes `data/cVVVd` FLAT (level 0 of an LSM
+  *                       tree): one parquet file per write task, with
+  *                       `_bucket` as a data column, so a file holds
+  *                       several buckets' rows. Its entry names the one
+  *                       file holding all of the bucket's rows
+  *                       (`data/cVVVd/part-NNNNN-…parquet`), or the whole
+  *                       dir when the write spread the bucket over
+  *                       several tasks. A reader keeps a flat entry's
+  *                       rows only for the buckets whose stack lists it:
+  *                       a bucket consolidated or folded since has stale
+  *                       rows in a file it shared. Per-bucket tracking makes the
   *                       three costly operations proportional to the HOT
   *                       data, not the table: reads prune delta paths by
   *                       bucket, depth is tracked per bucket, and a fold
@@ -554,10 +564,17 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       resolve: Boolean = true, includeBase: Boolean = true): DataFrame = {
     val base =
       if (includeBase) buckets.flatMap(b => c.buckets.get(b.toString)) else Nil
-    // delta dirs are bucket-partitioned, so pruning is PATH selection —
-    // no per-row filter, and buckets without deltas skip resolve cost
+    // pruning is PATH selection — a stack entry names only files holding
+    // its bucket's rows, and buckets without deltas skip resolve cost
     val deltaRels = buckets.flatMap(b => c.deltas.getOrElse(b.toString, Nil))
     if (base.isEmpty && deltaRels.isEmpty) return LakeTable.emptyFrame(spark, c.schema)
+    // a flat entry is shared with other buckets, some of which may have
+    // been consolidated or folded since: it is read for exactly the
+    // requested buckets whose stack still lists it, and entries listed
+    // by the same buckets share one scan
+    val listedBy: Map[String, Seq[Int]] = buckets.distinct.flatMap(b =>
+        c.deltas.getOrElse(b.toString, Nil).filter(LakeTable.isFlat).map(_ -> b))
+      .groupMap(_._1)(_._2)
     // Each data dir was written by exactly one commit (path encodes the
     // version), under that commit's schema. Schema evolution may PROMOTE
     // column types (int→double→string), which parquet cannot coerce at
@@ -568,8 +585,14 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       case (v, j) => v -> DataType.fromJson(j).asInstanceOf[StructType]
     }
     val latest = c.schema
-    def readGroup(rels: Seq[String]): Option[DataFrame] = {
+    // `only` non-empty: the rels are flat, and only those buckets' rows
+    // are kept (their `_bucket` column is scanned, filtered and dropped)
+    def readGroup(rels: Seq[String], only: Seq[Int] = Nil): Option[DataFrame] = {
       if (rels.isEmpty) return None
+      def scanned(grp: Seq[String], schema: Option[StructType]) =
+        if (only.isEmpty) scan(spark, grp, schema)
+        else scan(spark, grp, schema.map(_.add("_bucket", IntegerType)))
+          .where(col("_bucket").isin(only: _*)).drop("_bucket")
       val byVersion = rels.groupBy(LakeTable.schemaKeyOf)
       // fast path (one scan) only when EVERY dir's writer schema is
       // known and nothing needs reader-side promotion; add-only
@@ -581,7 +604,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
         !c.renames.contains(f.name) &&
           latest.find(_.name == f.name).exists(_.dataType == f.dataType))))
       Some(
-        if (addOnly) scan(spark, rels, Some(latest))
+        if (addOnly) scanned(rels, Some(latest))
         // a dir whose writer schema was pruned from the retained log (a
         // lagging consumer's endpoint commit after checkpointLog rolled
         // history up) scans under its footers' schema — exactly what was
@@ -590,11 +613,13 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
         // columns as all-null
         else byVersion.toSeq.sortBy(_._1).map { case (ver, grp) =>
           LakeTable.align(
-            LakeTable.withRenames(scan(spark, grp, schemas.get(ver)), c.renames), latest)
+            LakeTable.withRenames(scanned(grp, schemas.get(ver)), c.renames), latest)
         }.reduce(_ unionByName _))
     }
-    val deltaDf = readGroup(deltaRels.distinct)
-    val combined = (readGroup(base) ++ deltaDf).reduce(_ unionByName _)
+    val deltaDfs = readGroup(deltaRels.distinct.filterNot(LakeTable.isFlat)) ++
+      listedBy.toSeq.groupMap(_._2)(_._1).toSeq.sortBy(_._2.min)
+        .flatMap { case (only, rels) => readGroup(rels.sorted, only) }
+    val combined = (readGroup(base) ++ deltaDfs).reduce(_ unionByName _)
     // MERGE-ON-READ resolve: a key may appear in the base and in any
     // number of delta files — the newest row wins (resolveLatest).
     // Skipped entirely when no deltas exist. A bucket with NO base and
@@ -604,18 +629,19 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     // skips the resolve shuffle outright.
     val resolveFree = base.isEmpty && buckets.forall(b =>
       c.deltas.getOrElse(b.toString, Nil).size <= 1)
-    if (deltaDf.isEmpty || !resolve || resolveFree) combined
+    if (deltaDfs.isEmpty || !resolve || resolveFree) combined
     else resolveLatest(combined, LakeTable.SaltBuckets)
   }
 
-  /** One parquet scan over the data dirs `rels`, under `schema` (the
-    * footers' schema when None): the relation `DataFrameReader.parquet`
-    * resolves the dirs to — same scan node, dir order, sizes and input
-    * files — but with every part file handed to the index pre-listed,
-    * so no listing job runs however many dirs the read spans (Spark
-    * lists past `parallelPartitionDiscovery.threshold` paths with a
-    * distributed job, ~0.1-0.6 s) and no session conf is touched. A
-    * missing dir fails the read by name, never scans as empty. */
+  /** One parquet scan over the data dirs or files `rels`, under
+    * `schema` (the footers' schema when None): the relation
+    * `DataFrameReader.parquet` resolves the paths to — same scan node,
+    * path order, sizes and input files — but with every part file
+    * handed to the index pre-listed, so no listing job runs however
+    * many paths the read spans (Spark lists past
+    * `parallelPartitionDiscovery.threshold` paths with a distributed
+    * job, ~0.1-0.6 s) and no session conf is touched. A missing path
+    * fails the read by name, never scans as empty. */
   private def scan(spark: SparkSession, rels: Seq[String],
       schema: Option[StructType]): DataFrame = {
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
@@ -623,14 +649,16 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       val local = root.resolve(rel)
       // qualified, no trailing slash: each part's parent must equal its
       // root, or partition inference sees conflicting dir structures
-      val dir = fs.makeQualified(new HadoopPath(local.toString))
-      if (!Files.isDirectory(local)) throw new java.io.FileNotFoundException(
-        s"data dir $dir referenced by the commit does not exist")
-      dir -> LakeTable.parquetParts(local).sortBy(_.getFileName.toString).map { p =>
+      val path = fs.makeQualified(new HadoopPath(local.toString))
+      if (!Files.exists(local)) throw new java.io.FileNotFoundException(
+        s"data path $path referenced by the commit does not exist")
+      // a file root is its own one leaf, named by its own path
+      val dir = if (Files.isDirectory(local)) path.toUri.getPath else path.getParent.toUri.getPath
+      path -> LakeTable.parquetParts(local).sortBy(_.getFileName.toString).map { p =>
         val a = Files.readAttributes(p, classOf[BasicFileAttributes])
         // named as Hadoop's local listing names a file (file:///…)
-        new FileStatus(a.size, false, 1, fs.getDefaultBlockSize(dir), a.lastModifiedTime.toMillis,
-          fs.makeQualified(new HadoopPath(dir.toUri.getPath, p.getFileName.toString)))
+        new FileStatus(a.size, false, 1, fs.getDefaultBlockSize(path), a.lastModifiedTime.toMillis,
+          fs.makeQualified(new HadoopPath(dir, p.getFileName.toString)))
       }.toArray
     }
     val cache = new FileStatusCache {
@@ -995,12 +1023,12 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val rel = f"data/c$version%012d"
     val obs = new org.apache.spark.sql.Observation(s"base-$version")
     df.withColumn("_bucket", LakeTable.bucketColFor(conv, numBuckets))
-      .observe(obs, LakeTable.bucketRows(col("_bucket"), numBuckets))
+      .observe(obs, LakeTable.bucketWrites(col("_bucket"), numBuckets))
       .repartition(col("_bucket"))
       .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
       .write.mode("overwrite").partitionBy("_bucket")
       .parquet(root.resolve(rel).toString)
-    (rel, LakeTable.observedBucketRows(obs.get, root.resolve(rel)))
+    (rel, LakeTable.observedBucketWrites(obs.get, root.resolve(rel)).map { case (b, w) => b -> w.rows })
   }
 
   /** Re-hash the table to a new bucket count — the maintenance op for
@@ -1110,9 +1138,22 @@ object LakeTable {
     * promotion and the apply's alignment to the stored schema). */
   private[graft] def align(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.fields.toSeq.map { f =>
-      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      if (df.columns.contains(f.name))
+        castTo(col(f.name), df.schema(f.name).dataType, f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
+
+  /** `c` (of type `from`) as `to`: a cast, except that a struct whose
+    * fields are a subset of `to`'s is rebuilt by name with the absent
+    * subfields null — Spark casts a struct only positionally, to one of
+    * as many fields. */
+  private[graft] def castTo(c: Column, from: DataType, to: DataType): Column = (from, to) match {
+    case (f: StructType, t: StructType) if f != t && f.fieldNames.forall(t.fieldNames.contains) =>
+      when(c.isNotNull, struct(t.fields.toSeq.map(tf => f.find(_.name == tf.name)
+        .fold(lit(null).cast(tf.dataType))(ff => castTo(c.getField(tf.name), ff.dataType, tf.dataType))
+        .as(tf.name)): _*))
+    case _ => c.cast(to)
+  }
 
   /** Map each column `df` still carries under a retired name onto its
     * current one ([[Commit.renames]]: retired → current, flattened).
@@ -1218,14 +1259,27 @@ object LakeTable {
     else Some(maxes.flatten.max)
   }
 
-  /** One long per bucket: the buffer of [[bucketRows]]. */
-  private final class BucketRows(n: Int)
+  /** What one write put in one bucket: its rows, and the one write
+    * task that wrote all of them (None when several tasks did). */
+  private[graft] case class BucketWrite(rows: Long, task: Option[Int])
+
+  /** The buffer of [[bucketWrites]]: per bucket, its rows at `b` and at
+    * `n + b` its write task + 1 (0 before any row, -1 once two tasks
+    * wrote it). Each row's task is the partition of the task that
+    * observes it. */
+  private final class BucketWrites(n: Int)
       extends org.apache.spark.sql.expressions.Aggregator[Int, Array[Long], Array[Long]] {
-    def zero: Array[Long] = new Array[Long](n)
-    def reduce(acc: Array[Long], bucket: Int): Array[Long] = { acc(bucket) += 1; acc }
+    def zero: Array[Long] = new Array[Long](2 * n)
+    private def task(a: Long, b: Long): Long = if (a == 0 || a == b) b else if (b == 0) a else -1L
+    def reduce(acc: Array[Long], bucket: Int): Array[Long] = {
+      acc(bucket) += 1
+      val ctx = org.apache.spark.TaskContext.get()
+      acc(n + bucket) = task(acc(n + bucket), if (ctx == null) -1L else ctx.partitionId + 1L)
+      acc
+    }
     def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
       var i = 0
-      while (i < n) { a(i) += b(i); i += 1 }
+      while (i < n) { a(i) += b(i); a(n + i) = task(a(n + i), b(n + i)); i += 1 }
       a
     }
     def finish(acc: Array[Long]): Array[Long] = acc
@@ -1236,30 +1290,66 @@ object LakeTable {
   private def longsEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
 
-  /** The exact row count of each of `numBuckets` buckets as ONE
-    * aggregate for a write's Observation (metric `bucketRows`): the
-    * counts ride the write job itself, so no footer is read back. */
-  private[graft] def bucketRows(bucket: Column, numBuckets: Int): Column =
-    udaf(new BucketRows(numBuckets), org.apache.spark.sql.Encoders.scalaInt)(bucket)
-      .as("bucketRows")
+  /** Each of `numBuckets` buckets' row count and write task as ONE
+    * aggregate for a write's Observation (metric `bucketWrites`): they
+    * ride the write job itself, so no footer is read back. Observed in
+    * the write's own stage (no exchange between them, as in the apply),
+    * the task is the write task's partition: the number in Spark's
+    * `part-NNNNN-` file name. */
+  private[graft] def bucketWrites(bucket: Column, numBuckets: Int): Column =
+    udaf(new BucketWrites(numBuckets), org.apache.spark.sql.Encoders.scalaInt)(bucket)
+      .as("bucketWrites")
 
-  /** The rows per bucket a write into `outDir` observed through
-    * [[bucketRows]], for the buckets it wrote rows to. AQE may replace an
-    * all-empty plan with an empty relation and drop the CollectMetrics
-    * node: a missing metric is a no-op only when `outDir` holds no
-    * `_bucket=` dir — never trust a silent one. */
-  private[graft] def observedBucketRows(metrics: Map[String, Any], outDir: Path): Map[Int, Long] =
-    metrics.get("bucketRows") match {
-      case Some(rows: scala.collection.Seq[_]) =>
-        rows.iterator.zipWithIndex.collect { case (n: Long, b) if n > 0 => b -> n }.toMap
+  /** What a write into `outDir` observed through [[bucketWrites]], for
+    * the buckets it wrote rows to. AQE may replace an all-empty plan
+    * with an empty relation and drop the CollectMetrics node: a missing
+    * metric is a no-op only when `outDir` holds no `_bucket=` dir and no
+    * flat file with a row — never trust a silent one. */
+  private[graft] def observedBucketWrites(metrics: Map[String, Any],
+      outDir: Path): Map[Int, BucketWrite] =
+    metrics.get("bucketWrites") match {
+      case Some(acc: scala.collection.Seq[_]) =>
+        val xs = acc.map(_.asInstanceOf[Long]).toIndexedSeq
+        val n = xs.size / 2
+        (0 until n).collect { case b if xs(b) > 0 =>
+          b -> BucketWrite(xs(b), Option.when(xs(n + b) > 0)(xs(n + b).toInt - 1))
+        }.toMap
       case _ =>
-        val wrote = Files.isDirectory(outDir) && {
+        val wrote = Files.isDirectory(outDir) && ({
           val s = Files.list(outDir)
           try s.iterator().asScala.exists(_.getFileName.toString.startsWith("_bucket="))
           finally s.close()
-        }
+        } || flatFooterRowCount(outDir) > 0)
         if (wrote) throw new IllegalStateException(
           s"the write to $outDir left rows but its counts were not observed")
         Map.empty
+    }
+
+  /** A stack entry of a flat write (no `_bucket=` dir): its rows carry
+    * their bucket as a column, and other buckets' rows beside them. */
+  private[graft] def isFlat(rel: String): Boolean = !rel.contains("/_bucket=")
+
+  /** The stack entry of each bucket a FLAT write into `rel` (under
+    * `root`) put rows in: the one file its task wrote, or the whole dir
+    * when several tasks (or files) hold the bucket's rows. One listing
+    * of the dir, no footer read. */
+  private[graft] def flatEntries(root: Path, rel: String,
+      writes: Map[Int, BucketWrite]): Map[Int, String] = {
+    val files = parquetParts(root.resolve(rel)).map(_.getFileName.toString)
+    writes.map { case (b, w) =>
+      b -> (w.task.map(t => files.filter(_.startsWith(f"part-$t%05d-"))) match {
+        case Some(Seq(file)) => s"$rel/$file"
+        case _ => rel
+      })
+    }
+  }
+
+  /** The parquet files under `dir`, at any depth. */
+  private[graft] def parquetFilesUnder(dir: Path): Long =
+    if (!Files.isDirectory(dir)) 0L
+    else {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")).toLong
+      finally s.close()
     }
 }

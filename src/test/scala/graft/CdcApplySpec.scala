@@ -16,13 +16,18 @@ class CdcApplySpec extends SparkSpec {
   private def finalPayload(t: LakeTable) =
     t.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
-  /** Every `_bucket=N` dir the head commit references holds exactly the
-    * rows its counts say: a base dir its `rowCounts` less its tracked
-    * delta rows, each delta dir its `deltaRowCounts` entry. */
+  /** Every entry the head commit references holds exactly the rows its
+    * counts say: a base dir its `rowCounts` less its tracked delta rows,
+    * each delta entry its `deltaRowCounts` entry. A `_bucket=N` dir is
+    * counted by its footers; a flat entry by its rows whose `_bucket`
+    * column is the bucket, and a flat FILE entry holds all of the
+    * bucket's rows its dir holds. */
   private def assertCountsMatchFooters(t: LakeTable): Unit = {
     val c = t.currentCommit().get
-    def footer(rel: String) =
-      LakeTable.flatFooterRowCount(java.nio.file.Paths.get(t.location, rel))
+    def path(rel: String) = java.nio.file.Paths.get(t.location, rel)
+    def footer(rel: String) = LakeTable.flatFooterRowCount(path(rel))
+    def rowsOf(rel: String, b: Int) =
+      spark.read.parquet(path(rel).toString).where(col("_bucket") === b).count()
     c.buckets.foreach { case (b, rel) =>
       assert(c.baseRowsOf(b.toInt).contains(footer(rel)),
         s"v${c.version} base $rel: counted ${c.baseRowsOf(b.toInt)}, footers ${footer(rel)}")
@@ -30,7 +35,12 @@ class CdcApplySpec extends SparkSpec {
     c.deltas.foreach { case (b, stack) =>
       assert(c.deltaRowCounts(b).size == stack.size, s"v${c.version} bucket $b")
       stack.zip(c.deltaRowCounts(b)).foreach { case (rel, n) =>
-        assert(n == footer(rel), s"v${c.version} delta $rel: counted $n, footers ${footer(rel)}")
+        val got = if (LakeTable.isFlat(rel)) rowsOf(rel, b.toInt) else footer(rel)
+        assert(n == got, s"v${c.version} delta $rel of bucket $b: counted $n, holds $got")
+        if (rel.endsWith(".parquet")) {
+          val dir = rel.split("/").take(2).mkString("/")
+          assert(rowsOf(dir, b.toInt) == n, s"v${c.version} bucket $b has rows outside $rel")
+        }
       }
     }
   }
@@ -659,5 +669,76 @@ class CdcApplySpec extends SparkSpec {
     CdcApply.applyBatch(spark, stale, events.where(col("_txid") > 1500))
     assertSameRows(finalPayload(stale), Corpus.oracleFinalState(events))
     assert(stale.currentCommit().get.metrics(LakeTable.NumBucketsKey) == 16L)
+  }
+
+  test("evolveSchema keeps a stored struct when the batch's struct only lacks subfields") {
+    import org.apache.spark.sql.types._
+    val inner = StructType(Seq(StructField("x", LongType), StructField("y", StringType)))
+    val meta = StructType(Seq(StructField("a", LongType), StructField("b", StringType),
+      StructField("c", inner)))
+    val prev = StructType(Seq(StructField("conv_id", StringType, nullable = false),
+      StructField("turn_idx", IntegerType, nullable = false), StructField("meta", meta)))
+    def withMeta(t: DataType) = StructType(prev.fields.init :+ StructField("meta", t))
+    // narrower at the top and one level down (any field order): no conflict
+    Seq(StructType(Seq(StructField("a", LongType))),
+      StructType(Seq(StructField("c", StructType(Seq(StructField("y", StringType)))),
+        StructField("a", LongType))),
+      meta).foreach { in =>
+      assert(CdcApply.evolveSchema(prev, withMeta(in)) == prev, s"meta $in")
+    }
+    // a novel subfield or a subfield type conflict still promotes
+    Seq(StructType(Seq(StructField("a", LongType), StructField("z", StringType))),
+      StructType(Seq(StructField("a", StringType))),
+      StructType(Seq(StructField("c", StructType(Seq(StructField("x", StringType))))))).foreach { in =>
+      assert(CdcApply.evolveSchema(prev, withMeta(in))("meta").dataType == StringType, s"meta $in")
+    }
+    // an apply of a narrower batch keeps the table's struct; the absent
+    // subfields read as null
+    val table = new LakeTable(tmpDir("narrow-struct"), numBuckets = 4)
+    CdcApply.applyBatch(spark, table, spark.sql("""select 1L as _txid, 'insert' as _op,
+      'e1' as _etag, 'c1' as conv_id, 0 as turn_idx,
+      named_struct('a', 1L, 'b', 'x', 'c', named_struct('x', 2L, 'y', 'q')) as meta"""))
+    val stored = table.currentCommit().get.schema("meta").dataType
+    assert(stored.isInstanceOf[StructType])
+    CdcApply.applyBatch(spark, table, spark.sql("""select 2L as _txid, 'update' as _op,
+      'e2' as _etag, 'c1' as conv_id, 0 as turn_idx, named_struct('a', 5L) as meta
+      union all select 3L, 'insert', 'e3', 'c2', 0, named_struct('a', 6L)"""))
+    assert(table.currentCommit().get.schema("meta").dataType == stored)
+    val rows = table.read(spark).orderBy("conv_id")
+      .select("conv_id", "meta.a", "meta.b", "meta.c").collect().map(_.toSeq).toSeq
+    assert(rows == Seq(Seq("c1", 5L, null, null), Seq("c2", 6L, null, null)), rows)
+  }
+
+  test("each apply commit records filesWritten: the parquet files under its data dir") {
+    import spark.implicits._
+    val table = new LakeTable(tmpDir("files-written"), numBuckets = 4)
+    def patch(txid: Long) =
+      Seq((txid, "update", s"e$txid", "conv00000001", 0, "user", s"p$txid",
+        null: String, java.sql.Timestamp.valueOf("2014-03-12 00:00:00")))
+        .toDF("_txid", "_op", "_etag", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    def assertFilesWritten(kind: String): Unit = {
+      val c = table.currentCommit().get
+      val dirs = Seq("", "d").map(sfx =>
+        java.nio.file.Paths.get(table.location, f"data/c${c.version}%012d$sfx"))
+        .filter(java.nio.file.Files.isDirectory(_))
+      assert(dirs.size == 1, s"$kind v${c.version}: data dirs $dirs")
+      val walk = java.nio.file.Files.walk(dirs.head)
+      val files = try walk.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      finally walk.close()
+      assert(files > 0 && c.metrics.get("filesWritten").contains(files.toLong),
+        s"$kind v${c.version}: filesWritten ${c.metrics.get("filesWritten")}, $files files")
+    }
+    val events = corpus(2400)
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") <= 2000))
+    assertFilesWritten("first commit")
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") > 2000))
+    assert(table.currentCommit().get.metrics("deltaCommit") == 1L)
+    assertFilesWritten("delta-only")
+    CdcApply.applyBatch(spark, table, patch(100001), maxDeltaDepth = 1, foldRatio = 10.0)
+    assert(table.currentCommit().get.metrics("consolidatedBuckets") == 1L)
+    assertFilesWritten("consolidating")
+    CdcApply.applyBatch(spark, table, patch(100002), maxDeltaDepth = 1, foldRatio = 0.0)
+    assert(table.currentCommit().get.metrics("foldedBuckets") == 1L)
+    assertFilesWritten("folding")
   }
 }

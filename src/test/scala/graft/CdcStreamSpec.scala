@@ -578,4 +578,24 @@ class CdcStreamSpec extends SparkSpec {
     assert(q.select("raw").collect().map(_.getString(0)).toSeq == Seq(truncated))
     assert(table.commitLog().exists(_.metrics.get("corruptRows").contains(1L)))
   }
+
+  test("drift with a novel key keeps a struct whose values lack a subfield") {
+    val logDir = tmpDir("drift-narrow-log")
+    val ckpt = tmpDir("drift-narrow-ckpt")
+    val table = new LakeTable(tmpDir("drift-narrow-table"), numBuckets = 8)
+    writeLines(logDir, 0, (1 to 40).map(i => metaLine(i, s"""{"a":$i,"b":"x$i"}""")))
+    CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt, maxFilesPerTrigger = 1)
+    val metaType = table.currentCommit().get.schema("meta").dataType
+    assert(metaType.isInstanceOf[org.apache.spark.sql.types.StructType])
+    // the novel key re-infers this batch's schema, whose meta lacks b
+    writeLines(logDir, 1, (41 to 80).map(i =>
+      metaLine(i, s"""{"a":$i}""", s""","origin_host":"h$i"""")))
+    CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt, maxFilesPerTrigger = 1)
+    assert(table.txidWatermark == 80L)
+    val schema = table.currentCommit().get.schema
+    assert(schema("meta").dataType == metaType, s"meta became ${schema("meta").dataType}")
+    assert(schema.fieldNames.contains("origin_host"))
+    assert(table.read(spark).where(col("_txid") > 40).where(col("meta.a").isNull ||
+      col("meta.b").isNotNull || col("origin_host").isNull).count() == 0)
+  }
 }

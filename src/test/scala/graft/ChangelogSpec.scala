@@ -109,10 +109,15 @@ class ChangelogSpec extends SparkSpec {
       .select(pmod(xxhash64(lit("conv00000001")), lit(8L)).cast("int"))
       .head().getInt(0)
     val ch = t.changesBetween(spark, v1, v2)
-    val files = ch.inputFiles
+    val files = ch.inputFiles.map(f => java.nio.file.Paths.get(new java.net.URI(f)))
+    // every file the diff reads is one the endpoints list under the bucket
+    val listed = Seq(v1, v2).map(v => t.commitLog().find(_.version == v).get).flatMap(c =>
+        c.buckets.get(bucket.toString) ++ c.deltas.getOrElse(bucket.toString, Nil))
+      .flatMap(rel => LakeTable.parquetParts(java.nio.file.Paths.get(t.location, rel).toAbsolutePath))
+      .toSet
     assert(files.nonEmpty)
-    assert(files.forall(_.contains(s"_bucket=$bucket")),
-      s"read outside bucket $bucket: ${files.filterNot(_.contains(s"_bucket=$bucket")).take(3).mkString(", ")}")
+    assert(files.forall(listed), s"read outside bucket $bucket: " +
+      files.filterNot(listed).take(3).mkString(", "))
     assert(changeMap(ch) == Map(("conv00000001", 0) -> ("update", "zz")))
   }
 

@@ -512,10 +512,11 @@ class PlanSpec extends SparkSpec {
         .select("conv_id", "turn_idx", "text"))
   }
 
-  test("a small in-order batch writes one file per touched bucket, through no coalesce") {
+  test("a small in-order batch writes one flat file per write task, each bucket's rows in one, through no coalesce") {
     import org.apache.spark.sql.execution.CoalesceExec
     import scala.jdk.CollectionConverters._
     val (table, events, _) = gateTable("plansmall")
+    val prev = table.currentCommit().get
     val (s, qes) = plansDuring(CdcApply.applyBatch(spark, table,
       events.where(col("_txid") > 2000 && col("_txid") <= 2300)))
     val c = table.currentCommit().get
@@ -529,14 +530,28 @@ class PlanSpec extends SparkSpec {
       flattenPlan(qe.executedPlan).exists(_.isInstanceOf[CoalesceExec]))
     assert(coalesced.isEmpty,
       s"the delta write is coalesced:\n${coalesced.map(_.executedPlan).mkString("\n")}")
-    val dir = java.nio.file.Paths.get(table.location, f"data/c${c.version}%012dd")
-    val files = java.nio.file.Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("_bucket=")).map { b =>
-        b.getFileName.toString -> java.nio.file.Files.list(b).iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet"))
-      }.toMap
-    assert(files.size == s.bucketsTouched && files.values.forall(_ == 1),
-      s"want one part file in each of ${s.bucketsTouched} bucket dirs: $files")
+    // one flat dir of at most one file per write task
+    val rel = f"data/c${c.version}%012dd"
+    val dir = java.nio.file.Paths.get(table.location, rel)
+    val entries = java.nio.file.Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.startsWith(".")).toSeq
+    val files = entries.filter(_.endsWith(".parquet"))
+    assert(!entries.exists(_.startsWith("_bucket=")) &&
+      files.size <= spark.sessionState.conf.numShufflePartitions,
+      s"want at most ${spark.sessionState.conf.numShufflePartitions} flat files in $rel: $entries")
+    // each touched bucket gains one entry: the one file holding all its rows
+    val rowsByFile = files.map(f => f -> spark.read.parquet(dir.resolve(f).toString)
+      .groupBy("_bucket").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap).toMap
+    val touched = c.deltas.keys.filter(b => c.deltaDepthOf(b.toInt) == prev.deltaDepthOf(b.toInt) + 1)
+    assert(touched.size == s.bucketsTouched, s"${touched.size} stacks grew, ${s.bucketsTouched} touched")
+    touched.foreach { b =>
+      val entry = c.deltas(b).last
+      val file = entry.stripPrefix(s"$rel/")
+      assert(files.contains(file), s"bucket $b's entry $entry names no file of $rel")
+      assert(rowsByFile(file).get(b.toInt).contains(c.deltaRowCounts(b).last) &&
+        rowsByFile.values.map(_.getOrElse(b.toInt, 0L)).sum == c.deltaRowCounts(b).last,
+        s"bucket $b's rows are not all in $file: $rowsByFile")
+    }
   }
 
   test("watermark skip: re-emitting the watermark's own event still gates and commits nothing") {
@@ -625,6 +640,12 @@ class PlanSpec extends SparkSpec {
         case _: SortMergeJoinExec | _: ShuffledHashJoinExec => true
         case _ => false
       }, "the gate ran no shuffled join")
+    // the re-hash spreads a fresh bucket over several write tasks: its
+    // entry names the whole flat dir, read back through the same filter
+    val rel = f"data/c${c.version}%012dd"
+    val added = c.deltas.values.map(_.last).filter(_.startsWith(rel)).toSeq
+    assert(added.contains(rel) && added.forall(e => e == rel || e.endsWith(".parquet")),
+      s"new entries: $added")
     assertSameRows(table.read(spark).select("conv_id", "turn_idx", "text"),
       Corpus.oracleFinalState(batch).select("conv_id", "turn_idx", "text"))
   }

@@ -20,11 +20,11 @@ class ScanSpec extends SparkSpec {
 
   private val thresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
-  /** 8 buckets, each a base plus a 5-deep delta stack: 48 data dirs,
-    * past the session's listing threshold of 32. */
+  /** 40 buckets, each a base plus a stack of up to 5 level-0 entries:
+    * 40 base dirs, past the session's listing threshold of 32. */
   private def wideTable(): (LakeTable, DataFrame) = {
-    val table = new LakeTable(tmpDir("scan-wide"), numBuckets = 8)
-    val events = Corpus.changeEvents(spark, 3000, nConvs = 50, maxTurns = 8)
+    val table = new LakeTable(tmpDir("scan-wide"), numBuckets = 40)
+    val events = Corpus.changeEvents(spark, 3000, nConvs = 400, maxTurns = 8)
     (0 until 6).foreach { i =>
       CdcApply.applyBatch(spark, table,
         events.where(col("_txid") > i * 500 && col("_txid") <= (i + 1) * 500),
@@ -60,11 +60,11 @@ class ScanSpec extends SparkSpec {
     val (table, events) = wideTable()
     val head = table.currentCommit().get
     val bases = head.buckets.toSeq.sortBy(_._1.toInt).map(_._2)
-    val deltas = head.liveBuckets.toSeq.sorted
-      .flatMap(b => head.deltas.getOrElse(b.toString, Nil)).distinct
-    assert(head.liveBuckets.size == 8 && deltas.size == 40 && bases.size == 8,
-      s"expected 8 bases and 40 delta dirs, got ${bases.size} and ${deltas.size}")
-    assert(spark.conf.get(thresholdKey).toInt < bases.size + deltas.size)
+    assert(head.liveBuckets.size == 40 && bases.size == 40 && head.deltaDepth == 5 &&
+      head.liveBuckets.forall(head.deltaDepthOf(_) >= 1),
+      s"expected 40 bases, each under 1-5 delta entries, got ${bases.size} and ${head.deltas}")
+    assert(head.deltaFiles.forall(LakeTable.isFlat))
+    assert(spark.conf.get(thresholdKey).toInt < bases.size)
     val bucket = head.liveBuckets.min
 
     val confBefore = spark.conf.getAll
@@ -79,21 +79,31 @@ class ScanSpec extends SparkSpec {
     def paths(rels: Seq[String]) = rels.map(r => Paths.get(table.location, r).toString)
     val prev = spark.conf.getOption(thresholdKey)
     spark.conf.set(thresholdKey, "8192")
-    val (refFull, refOne) = try {
-      def ref(bs: Seq[String], ds: Seq[String]) = table.resolveLatest(
-        spark.read.schema(head.schema).parquet(paths(bs): _*)
-          .unionByName(spark.read.schema(head.schema).parquet(paths(ds): _*)),
-        LakeTable.SaltBuckets)
-      (LakeTable.dropTombstones(ref(bases, deltas)),
-        ref(head.buckets.get(bucket.toString).toSeq, head.deltas(bucket.toString)))
+    // a level-0 entry is read for the requested buckets whose stack
+    // lists it, one scan per such bucket set
+    val withBucket = head.schema.add("_bucket", org.apache.spark.sql.types.IntegerType)
+    val (refFull, refOne, groups) = try {
+      def ref(buckets: Seq[Int]) = {
+        val listedBy = buckets.flatMap(b => head.deltas(b.toString).map(_ -> b))
+          .groupMap(_._1)(_._2).toSeq.groupMap(_._2)(_._1).toSeq.sortBy(_._2.min)
+        val deltaScans = listedBy.map { case (only, rels) =>
+          spark.read.schema(withBucket).parquet(paths(rels.sorted): _*)
+            .where(col("_bucket").isin(only: _*)).drop("_bucket")
+        }
+        val bs = buckets.flatMap(b => head.buckets.get(b.toString))
+        (table.resolveLatest((spark.read.schema(head.schema).parquet(paths(bs): _*) +: deltaScans)
+          .reduce(_ unionByName _), LakeTable.SaltBuckets), listedBy.size)
+      }
+      val (f, n) = ref(head.liveBuckets.toSeq.sorted)
+      (LakeTable.dropTombstones(f), ref(Seq(bucket))._1, n)
     } finally prev match {
       case Some(v) => spark.conf.set(thresholdKey, v)
       case None => spark.conf.unset(thresholdKey)
     }
-    Seq(full -> refFull, one -> refOne).foreach { case (got, want) =>
+    Seq((full, refFull, 1 + groups), (one, refOne, 2)).foreach { case (got, want, scans) =>
       assert(planText(got) == planText(want))
       val (g, w) = (relations(got), relations(want))
-      assert(g.size == 2 && g.size == w.size)
+      assert(g.size == scans && g.size == w.size)
       g.zip(w).foreach { case (a, b) =>
         assert(a.location.rootPaths == b.location.rootPaths)
         assert(a.sizeInBytes == b.sizeInBytes)
