@@ -512,7 +512,7 @@ class PlanSpec extends SparkSpec {
         .select("conv_id", "turn_idx", "text"))
   }
 
-  test("a small in-order batch writes one flat file per write task, each bucket's rows in one, through no coalesce") {
+  test("a small in-order batch writes one file per touched bucket, through no coalesce") {
     import org.apache.spark.sql.execution.CoalesceExec
     import scala.jdk.CollectionConverters._
     val (table, events, _) = gateTable("plansmall")
