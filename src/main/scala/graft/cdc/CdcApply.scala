@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.model.Model
-import graft.table.LakeTable
+import graft.table.{Commit, LakeTable}
 import graft.table.LakeTable.align
 
 /** Result of applying one change-event batch. */
@@ -22,38 +22,44 @@ case class ApplyStats(
 
 /** What a caller's own pass over a batch already knows, so the apply
   * can skip its pre-scan: the touched bucket set, the event count (-1
-  * when unknown), and the txid floor — `Some(lo)` when every event
-  * carries a non-null `_txid` (cast to bigint, as the apply stores it)
-  * of at least `lo`. */
-case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long])
+  * when unknown), the txid floor — `Some(lo)` when every event carries
+  * a non-null `_txid` (cast to bigint, as the apply stores it) of at
+  * least `lo` — and `base`, the commit those facts were computed
+  * against (None: the table was empty). The apply derives everything
+  * from `base` and publishes against it. */
+case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long],
+    base: Option[Commit])
 
 object BatchHint {
 
-  /** The facts as aggregate columns over the rows where `clean` holds,
-    * so a caller folds them into an aggregation it already runs. The
-    * key is hashed cast to its stored type (xxhash64 is type-directed:
-    * an uncast key, say a batch whose conv_id inferred bigint against a
-    * stored string, would name other buckets), and the floor is the min
-    * `_txid` try-cast to bigint, as the apply stores it (a string
-    * `_txid` would compare lexically). */
-  def facts(table: LakeTable, clean: Column = lit(true)): Seq[Column] = {
-    val keyType = table.currentCommit().fold[DataType](StringType)(_.schema("conv_id").dataType)
+  /** The facts against commit `base` as aggregate columns over the rows
+    * where `clean` holds, so a caller folds them into an aggregation it
+    * already runs. The key is hashed in `base`'s layout, cast to its
+    * stored type (xxhash64 is type-directed: an uncast key, say a batch
+    * whose conv_id inferred bigint against a stored string, would name
+    * other buckets), and the floor is the min `_txid` try-cast to
+    * bigint, as the apply stores it (a string `_txid` would compare
+    * lexically). */
+  def facts(table: LakeTable, base: Option[Commit], clean: Column = lit(true)): Seq[Column] = {
+    val keyType = base.fold[DataType](StringType)(_.schema("conv_id").dataType)
+    val bucket = LakeTable.bucketColFor(col("conv_id").cast(keyType), table.numBucketsOf(base))
     val tx = col("_txid").try_cast(LongType)
-    Seq(collect_set(when(clean, table.bucketCol(col("conv_id").cast(keyType)))).as("buckets"),
+    Seq(collect_set(when(clean, bucket)).as("buckets"),
       count(when(clean, 1)).as("events"),
       min(when(clean, tx)).as("minTx"),
       count(when(clean && tx.isNull, 1)).as("nullTx"))
   }
 
-  /** One hint from the rows of an aggregation over [[facts]], one per
-    * group: any null `_txid` in any group voids the floor. */
-  def combine(rows: Seq[Row]): BatchHint = {
+  /** One hint from the rows of an aggregation over [[facts]] against
+    * `base`, one per group: any null `_txid` in any group voids the
+    * floor. */
+  def combine(rows: Seq[Row], base: Option[Commit]): BatchHint = {
     def longs(name: String) =
       rows.flatMap(r => Option(r.getAs[java.lang.Long](name))).map(_.longValue)
     val lows = longs("minTx")
     val buckets = rows.flatMap(r => r.getSeq[Int](r.fieldIndex("buckets"))).distinct.sorted
     BatchHint(buckets, longs("events").sum,
-      Option.when(lows.nonEmpty && longs("nullTx").sum == 0L)(lows.min))
+      Option.when(lows.nonEmpty && longs("nullTx").sum == 0L)(lows.min), base)
   }
 }
 
@@ -113,7 +119,10 @@ object BatchHint {
   *      the task that wrote each bucket: a flat write's stack entry is
   *      that task's one file (the dir if the bucket spread over several
   *      tasks). Nothing is read back. An entirely-ineffective batch
-  *      (pure replay) leaves no dir and commits nothing.
+  *      (pure replay) leaves no dir and commits nothing. Every step
+  *      derives from ONE snapshot (the head, read once, or the hint's
+  *      `base`), and the commit is published against it: a conflicting
+  *      commit landing meanwhile refuses it ([[LakeTable.commit]]).
   *
   * Scale notes: the only full pass over the *batch* is one shuffle,
   * the resolve's — by bucket for the DELTA/CONSOLIDATE winners, by
@@ -247,7 +256,9 @@ object CdcApply {
       maxDeltaDepth: Int = MaxDeltaDepth,
       foldRatio: Double = FoldToBaseRatio,
       prunedHint: Option[BatchHint] = None): ApplyStats = {
-    val prev = table.currentCommit()
+    // the ONE snapshot the apply derives from and publishes against
+    val prev = prunedHint.fold(table.currentCommit())(_.base)
+    val numBuckets = table.numBucketsOf(prev)
     val prevWm = prev.map(_.txidWatermark).getOrElse(0L)
     // every apply that changes nothing returns this
     def unchanged(skipped: Boolean) = ApplyStats(prev.map(_.version).getOrElse(0L),
@@ -296,11 +307,11 @@ object CdcApply {
     // skipped and every bucket folds (step 2).
     val hint = prunedHint.map(h => h.copy(buckets = h.buckets.sorted))
       .orElse(Option.when(pruneBuckets) {
-        val facts = BatchHint.facts(table)
-        BatchHint.combine(events.agg(facts.head, facts.tail: _*).collect().toSeq)
+        val facts = BatchHint.facts(table, prev)
+        BatchHint.combine(events.agg(facts.head, facts.tail: _*).collect().toSeq, prev)
       })
-    val BatchHint(touched, batchCount, txidFloor) =
-      hint.getOrElse(BatchHint(0 until table.effectiveNumBuckets, -1L, None))
+    val BatchHint(touched, batchCount, txidFloor, _) =
+      hint.getOrElse(BatchHint(0 until numBuckets, -1L, None, prev))
     if (batchCount == 0L) return unchanged(skipped = false)
 
     // 2. every touched bucket falls in exactly ONE class, chosen from
@@ -344,14 +355,14 @@ object CdcApply {
     // base-rewriting applies (cV, like compaction) apart from
     // delta-only ones (cVd)
     val baseBuckets = if (prev.isEmpty) touched else foldBuckets
-    val version = table.nextVersion
+    val version = prev.fold(1L)(_.version + 1)
     val rel = f"data/c$version%012d" + (if (baseBuckets.isEmpty) "d" else "")
     val outDir = Paths.get(table.location).resolve(rel)
-    val bucketOf = table.bucketCol(col("conv_id"))
-    // the RAW stored rows (base + deltas, unresolved) of `buckets`,
-    // aligned to this apply's schema
-    def storedRows(buckets: Seq[Int]): DataFrame =
-      align(table.readBuckets(spark, buckets, resolve = false), schema)
+    val bucketOf = LakeTable.bucketColFor(col("conv_id"), numBuckets)
+    // the RAW stored rows (base + deltas, or the deltas alone) of
+    // `buckets` in the snapshot, aligned to this apply's schema
+    def storedRows(buckets: Seq[Int], includeBase: Boolean = true): DataFrame =
+      align(table.readCommit(spark, prev.get, buckets, resolve = false, includeBase), schema)
     // the rows of `df` (spanning the buckets `of`) whose bucket `bkt` is
     // in `buckets`
     def within(df: DataFrame, bkt: Column, buckets: Seq[Int], of: Seq[Int]): DataFrame =
@@ -381,7 +392,7 @@ object CdcApply {
     // one exchange leaves each bucket over ≤ `salt` reducers (files)
     def merged(stored: Option[DataFrame], ev: DataFrame, salt: Int): DataFrame =
       table.resolveLatest(
-          stored.fold(ev)(_.withColumn("__ev", lit(false)).unionByName(ev)), salt,
+          stored.fold(ev)(_.withColumn("__ev", lit(false)).unionByName(ev)), numBuckets, salt,
           struct(col("_txid"), !col("__ev"), coalesce(col("_etag"), lit(""))))
         .withColumn("_bucket", bucketOf)
 
@@ -444,7 +455,7 @@ object CdcApply {
       // salt 1: one reducer (and so one file) per consolidated bucket —
       // the dir lives until the bucket's fold
       Option.when(consBuckets.nonEmpty)(merged(
-        Some(align(table.readDeltaStacks(spark, consBuckets), schema)),
+        Some(storedRows(consBuckets, includeBase = false)),
         within(batchRows, col("_bucket"), consBuckets, winnerBuckets).drop("_bucket"), 1)),
       // the fold buckets' events: the salted resolve collapses, gates
       // and merges them in its one exchange
@@ -473,7 +484,7 @@ object CdcApply {
           coalesce(sum((col("__ev") && coalesce(col("_deleted"), lit(false)))
             .cast("long")), lit(0L)).as("nDel"),
           max(when(col("__ev"), col("_txid"))).as("maxTx"),
-          LakeTable.bucketWrites(col("_bucket"), table.effectiveNumBuckets))
+          LakeTable.bucketWrites(col("_bucket"), numBuckets))
         .drop("__ev")
         .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
         .write.mode("overwrite")
@@ -503,7 +514,7 @@ object CdcApply {
     val (deltaAdds, deltaReplaces) = (counts -- baseBuckets)
       .map { case (b, n) => b -> (entryOf(b), n) }
       .partition { case (b, _) => !consSet(b) }
-    val c = table.commit(schema,
+    val c = table.commit(prev, schema,
       baseBuckets.map(b => b -> entryOf.get(b)).toMap,
       counts.filter { case (b, _) => baseSet(b) }, maxTx, batchId, Map(
         "events" -> nEff, "upserts" -> (nEff - nDel), "deletes" -> nDel,
@@ -542,10 +553,11 @@ object CdcApply {
     (0 until nBatches).map { i =>
       val from = lo + i * step
       val to = if (i == nBatches - 1) hi + 1 else math.min(lo + (i + 1) * step, hi + 1)
+      val head = table.currentCommit()
       applyBatch(spark, table,
         events.where(col("_txid") >= from && col("_txid") < to), pruneBuckets = false,
-        prunedHint = Option.when(table.currentCommit().exists(_.txidWatermark < from))(
-          BatchHint(0 until table.effectiveNumBuckets, -1L, Some(from))))
+        prunedHint = Option.when(head.exists(_.txidWatermark < from))(
+          BatchHint(0 until table.numBucketsOf(head), -1L, Some(from), head)))
     }
   }
 }

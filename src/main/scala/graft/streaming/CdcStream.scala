@@ -27,7 +27,10 @@ import graft.table.LakeTable
   *    checkpoint is wiped — so a "reprocess" that deletes the
   *    checkpoint dir but reuses its PATH gets a fresh identity and its
   *    restarted batch 0 is not mistaken for the old run's (Delta's
-  *    txnAppId/txnVersion shape).
+  *    txnAppId/txnVersion shape);
+  *  - a batch publishes against the snapshot it read: a conflicting
+  *    commit landing mid-batch stops the query, and the next start
+  *    replays the batch against the new snapshot.
   *
   * Novel-field absorption / schema evolution WITHOUT per-batch
   * inference: the stream caches the inferred event schema and parses
@@ -155,37 +158,22 @@ object CdcStream {
     * checkpointed query id (the `id` field of `<checkpointDir>/
     * metadata`, regenerated whenever the checkpoint is recreated), so a
     * wiped-and-recreated checkpoint at the SAME path — whose batch ids
-    * restart at 0 — cannot collide with the old run's commits. Falls
-    * back to a path hash only if the metadata file is absent/unreadable
-    * (pre-start callers). */
+    * restart at 0 — cannot collide with the old run's commits. A
+    * checkpoint without readable metadata (the stream never started
+    * there, or the file is damaged) has no identity: that throws,
+    * naming the file. */
   def queryIdFor(checkpointDir: String): String = {
-    val metaPath = java.nio.file.Paths.get(
-      checkpointDir.stripPrefix("file:"), "metadata")
-    val fromMeta =
-      try {
-        if (java.nio.file.Files.isRegularFile(metaPath)) {
-          val json = org.json4s.jackson.JsonMethods.parse(
-            java.nio.file.Files.readString(metaPath))
-          (json \ "id") match {
-            case org.json4s.JString(id) if id.nonEmpty => Some("qid-" + id)
-            case _ => None
-          }
-        } else None
-      } catch { case _: Throwable => None }
-    fromMeta.getOrElse(legacyQueryIdFor(checkpointDir))
+    val meta = Paths.get(checkpointDir.stripPrefix("file:"), "metadata")
+    def unreadable(cause: Throwable) =
+      new IllegalStateException(s"no readable stream id in $meta", cause)
+    val json =
+      try org.json4s.jackson.JsonMethods.parse(Files.readString(meta))
+      catch { case scala.util.control.NonFatal(e) => throw unreadable(e) }
+    json \ "id" match {
+      case org.json4s.JString(id) if id.nonEmpty => "qid-" + id
+      case _ => throw unreadable(null)
+    }
   }
-
-  /** The pre-metadata stream identity ('ckpt-' + path hash). IDENTITY
-    * MIGRATION: streams started before queryIdFor read the checkpoint
-    * metadata recorded their commits under this id. A stream resumed in
-    * place on such a table would otherwise fail the (queryId, batchId)
-    * replay check for the old commits and re-apply a crash-replayed
-    * batch — the txid gate makes that a no-op, but the documented
-    * exactly-once guard should not silently downgrade to gate-based
-    * idempotence, so the tail's replay pre-check accepts BOTH ids. */
-  def legacyQueryIdFor(checkpointDir: String): String =
-    "ckpt-" + java.util.UUID.nameUUIDFromBytes(
-      checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
 
   /** Where the stream's event schema is kept: inside its checkpoint, so
     * the schema lives and dies with the stream's identity. */
@@ -261,10 +249,10 @@ object CdcStream {
     }
 
     // per-stream mutable state: the cached event schema (read back from
-    // the checkpoint, re-inferred only on detected drift) and the
-    // resolved stream identity
+    // the checkpoint, re-inferred only on detected drift)
     @volatile var schemaCache: StructType = readSchema(checkpointDir).orNull
-    @volatile var queryIdCache: String = null
+    // read at the first batch: Spark writes the metadata at query start
+    lazy val queryId = queryIdFor(checkpointDir)
     def cacheSchema(s: StructType): Unit = {
       schemaCache = s
       writeSchema(checkpointDir, s)
@@ -286,14 +274,9 @@ object CdcStream {
         // classloader (and so the codegen cache) by session, so every
         // restart would otherwise compile the same classes again
         val batch = graftshim.ofRows(spark, micro)
-        if (queryIdCache == null) queryIdCache = queryIdFor(checkpointDir)
-        val queryId = queryIdCache
         // crash-replay pre-check: a replayed batch must not pay ANY
-        // Spark job (the summary agg alone is a full batch pass). The
-        // legacy 'ckpt-' identity is accepted too so a stream resumed
-        // in place on a pre-upgrade table still skips its old batches.
-        if (batchId < 0 || (!table.hasBatch(batchId, queryId) &&
-            !table.hasBatch(batchId, legacyQueryIdFor(checkpointDir)))) {
+        // Spark job (the summary agg alone is a full batch pass)
+        if (batchId < 0 || !table.hasBatch(batchId, queryId)) {
           def inferSchema(): StructType = {
             val s = spark.read.json(batch.select("value")
               .as[String](org.apache.spark.sql.Encoders.STRING)).schema
@@ -344,6 +327,8 @@ object CdcStream {
             }
             var enriched = parseWith(schemaCache)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            // the snapshot the facts and the apply derive from
+            val base = table.currentCommit()
             try {
               // ONE pass over the batch: per-DC lineage counters, distinct
               // origin files, newest event time (ingest-lag input), novel
@@ -369,7 +354,7 @@ object CdcStream {
                   // can carry a type or key a re-inference would widen
                   sum((col(CorruptCol).isNotNull &&
                     json_object_keys(col(CorruptCol)).isNotNull).cast("long")).as("nDrift")) ++
-                  BatchHint.facts(table, col(CorruptCol).isNull)
+                  BatchHint.facts(table, base, col(CorruptCol).isNull)
                 df.groupBy("_origin_dc").agg(aggs.head, aggs.tail: _*).collect()
               }
               var summary = summarize(enriched)
@@ -417,7 +402,7 @@ object CdcStream {
                 extraMetrics = lineage + ("originFiles" -> nFiles) ++
                   (if (nCorruptFinal > 0)
                     Map("corruptRows" -> nCorruptFinal) else Map.empty),
-                prunedHint = Some(BatchHint.combine(summary.toSeq)))
+                prunedHint = Some(BatchHint.combine(summary.toSeq, base)))
               val ms = (System.nanoTime() - t0) / 1000000
               // ingest lag: wall-clock minus newest event time in the batch
               // (north-star metric; negative/absent ts → no lag reading)
@@ -430,16 +415,13 @@ object CdcStream {
               // tombstones older than the lateness bound. O(table) —
               // triggered only when ≥20% of it is reclaimable.
               if (stats.applied > 0) {
-                val log = table.commitLog()
-                // the latest commit carries the running counter, which
-                // survives commit-log checkpoint truncation (a history
-                // walk would see at most the retained window's deletes
-                // and could starve compaction forever on a long stream)
-                val delSince = log.last.metrics.getOrElse(
-                  "deletesSinceCompaction",
-                  log.reverse.takeWhile(c => !c.metrics.contains("compaction"))
-                    .map(_.metrics.getOrElse("deletes", 0L)).sum)
-                val totalRows = log.last.rowCounts.values.sum
+                // the head carries the running counter, which survives
+                // commit-log checkpoint truncation (a history walk would
+                // see at most the retained window's deletes and could
+                // starve compaction forever on a long stream)
+                val head = table.currentCommit().get
+                val delSince = head.metrics.getOrElse("deletesSinceCompaction", 0L)
+                val totalRows = head.rowCounts.values.sum
                 if (delSince >= autoCompactMinDeletes && delSince * 5 >= totalRows) {
                   table.compact(spark,
                     tombstoneHorizon = stats.txidWatermark - tombstoneLag)

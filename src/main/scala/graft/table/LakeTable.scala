@@ -168,36 +168,34 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
   private val root: Path = Paths.get(location)
   private val commitsDir: Path = root.resolve("_commits")
 
-  /** The bucket count the table's data is ACTUALLY laid out with: the
-    * count persisted in the retained commit log when one exists, the
-    * constructor's `numBuckets` only for a fresh table. Every commit
-    * carries the layout count forward in its metrics, so re-opening an
-    * existing table with a mismatched constructor value cannot split a
-    * key's history across two hash spaces (the write path would
-    * otherwise route updates for a key to a different bucket than its
-    * stored row and the merge gate would never see them). */
-  def effectiveNumBuckets: Int = {
-    val commits = cachedCommits()
-    commits.reverseIterator
-      .flatMap(_.metrics.get(LakeTable.NumBucketsKey)).nextOption()
-      .map(_.toInt).getOrElse {
-        // pre-metric table (written before the layout key was
-        // persisted): the constructor has to be trusted, but a
-        // PROVABLY wrong value is refused — a stored bucket id at or
-        // above the claimed count can only come from a larger hash
-        // space. (A too-large claim over a small-id population is not
-        // detectable; the first commit through this code pins the
-        // count and ends the exposure.)
-        commits.lastOption.foreach { c =>
-          val maxId = c.liveBuckets.maxOption.getOrElse(-1)
-          require(maxId < numBuckets,
-            s"table at $location holds bucket $maxId but this handle " +
-              s"claims numBuckets=$numBuckets — existing table opened " +
-              "with a wrong bucket count")
-        }
-        numBuckets
+  /** The bucket count the table's data is ACTUALLY laid out with: that
+    * of the head commit ([[numBucketsOf]]). */
+  def effectiveNumBuckets: Int = numBucketsOf(currentCommit())
+
+  /** The bucket count commit `c`'s data is laid out with: the count it
+    * persists, the constructor's `numBuckets` only for a fresh table.
+    * Every commit carries the layout count forward in its metrics, so
+    * re-opening an existing table with a mismatched constructor value
+    * cannot split a key's history across two hash spaces (the write
+    * path would otherwise route updates for a key to a different bucket
+    * than its stored row and the merge gate would never see them). */
+  private[graft] def numBucketsOf(c: Option[Commit]): Int =
+    c.flatMap(_.metrics.get(LakeTable.NumBucketsKey)).map(_.toInt).getOrElse {
+      // pre-metric table (written before the layout key was persisted):
+      // the constructor has to be trusted, but a PROVABLY wrong value is
+      // refused — a stored bucket id at or above the claimed count can
+      // only come from a larger hash space. (A too-large claim over a
+      // small-id population is not detectable; the first commit through
+      // this code pins the count and ends the exposure.)
+      c.foreach { c =>
+        val maxId = c.liveBuckets.maxOption.getOrElse(-1)
+        require(maxId < numBuckets,
+          s"table at $location holds bucket $maxId but this handle " +
+            s"claims numBuckets=$numBuckets — existing table opened " +
+            "with a wrong bucket count")
       }
-  }
+      numBuckets
+    }
 
   def bucketCol(conv: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     LakeTable.bucketColFor(conv, effectiveNumBuckets)
@@ -350,16 +348,6 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     currentCommit() match {
       case None => spark.emptyDataFrame
       case Some(c) => readCommit(spark, c, buckets, resolve)
-    }
-
-  /** The physical rows of ONLY the given buckets' delta stacks (no base
-    * files, no per-key resolution) — the input to a two-level stack
-    * consolidation, which re-resolves and rewrites them as one dir. */
-  def readDeltaStacks(spark: SparkSession, buckets: Seq[Int]): DataFrame =
-    currentCommit() match {
-      case None => spark.emptyDataFrame
-      case Some(c) => readCommit(spark, c, buckets, resolve = false,
-        includeBase = false)
     }
 
   /** All RETAINED commits in version order: one small JSON per commit,
@@ -560,7 +548,9 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     }
   }
 
-  private def readCommit(spark: SparkSession, c: Commit, buckets: Seq[Int],
+  /** The rows of `buckets` in commit `c` (a writer reads through the
+    * commit it publishes against, never the head). */
+  private[graft] def readCommit(spark: SparkSession, c: Commit, buckets: Seq[Int],
       resolve: Boolean = true, includeBase: Boolean = true): DataFrame = {
     val base =
       if (includeBase) buckets.flatMap(b => c.buckets.get(b.toString)) else Nil
@@ -630,7 +620,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val resolveFree = base.isEmpty && buckets.forall(b =>
       c.deltas.getOrElse(b.toString, Nil).size <= 1)
     if (deltaDfs.isEmpty || !resolve || resolveFree) combined
-    else resolveLatest(combined, LakeTable.SaltBuckets)
+    else resolveLatest(combined, numBucketsOf(Some(c)), LakeTable.SaltBuckets)
   }
 
   /** One parquet scan over the data dirs or files `rels`, under
@@ -694,20 +684,19 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * keeps the aggregation's parallelism at numBuckets × salt (not
     * numBuckets) and spreads a hot bucket's resolve across `salt`
     * reducers instead of funneling it through one; `salt = 1` keeps
-    * each bucket whole in one reducer (one file per bucket). */
-  private[graft] def resolveLatest(rows: DataFrame, salt: Int,
+    * each bucket whole in one reducer (one file per bucket). Buckets
+    * hash into `numBuckets`, the layout of the commit read. */
+  private[graft] def resolveLatest(rows: DataFrame, numBuckets: Int, salt: Int,
       order: Column = struct(col("_txid"), coalesce(col("_etag"), lit("")))): DataFrame = {
     val keys = graft.model.Model.MergeKeys
     val p = rows.sparkSession.sessionState.conf.numShufflePartitions
-    rows.withColumn("__bkt", bucketCol(col("conv_id")))
+    rows.withColumn("__bkt", LakeTable.bucketColFor(col("conv_id"), numBuckets))
       .withColumn("__slt", pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(salt.toLong)))
       .repartition(p, col("__bkt"), col("__slt"))
       .groupBy((Seq(col("__bkt"), col("__slt")) ++ keys.map(col)): _*)
       .agg(max_by(struct(rows.columns.toSeq.map(col): _*), order).as("__m"))
       .select(col("__m.*"))
   }
-
-  def nextVersion: Long = currentCommit().map(_.version + 1).getOrElse(1L)
 
   /** Atomically publish a new snapshot. `rewritten` are the buckets this
     * commit REWROTE: Some(relativeDir) replaces the bucket's BASE data,
@@ -723,8 +712,24 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * atomically. A delta-only commit carries every base forward: the
     * steady-state CDC apply is an O(batch) write, no table rewrite
     * (reference contrast: the dump pipeline rewrites everything every
-    * cycle, manta/dc_inputs_4.sh). */
+    * cycle, manta/dc_inputs_4.sh).
+    *
+    * `base` is the commit the writer read and derived its files from
+    * (None: an empty table). OPTIMISTIC CONCURRENCY (Iceberg-style):
+    * every attempt — the first, and each retry after a lost link(2)
+    * race — runs the one conflict check against `base`
+    * ([[requireNoConflict]]) and builds on the head it read, which
+    * carries every other bucket forward; a true conflict raises
+    * ConcurrentModificationException and the caller redoes its work
+    * against the new snapshot (a stream batch, through its checkpoint's
+    * replay). Writers of the same kind racing on the same version also
+    * race on the data-dir NAME (data/cV vs cVd separates base-rewriting
+    * commits — compaction, rebucket, and applies that fold — from
+    * delta-only applies, but two writers of one kind share a name) — the
+    * supported topology is one streaming tail plus maintenance jobs,
+    * which never collide there. */
   def commit(
+      base: Option[Commit],
       schema: StructType,
       rewritten: Map[Int, Option[String]],
       newRowCounts: Map[Int, Long],
@@ -734,85 +739,65 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       queryId: String = "",
       deltaAdds: Map[Int, (String, Long)] = Map.empty,
       deltaReplaces: Map[Int, (String, Long)] = Map.empty): Commit = {
-    // OPTIMISTIC CONCURRENCY (Iceberg-style): losing the ATOMIC_MOVE
-    // race re-reads the log and, if every interleaved commit touched a
-    // DISJOINT set of buckets, rebuilds this commit against the new
-    // head and re-publishes — disjoint-bucket writes compose because
-    // each commit carries every other bucket forward untouched. An
-    // overlapping bucket is a TRUE conflict (our data files were
-    // derived from a stale read of it) and raises
-    // ConcurrentModificationException: the caller must redo its work
-    // against the new snapshot (a crash-replayed stream batch does
-    // this for free via checkpoint replay). Writers of the same kind
-    // racing on the same version also race on the data-dir NAME
-    // (data/cV vs cVd separates base-rewriting commits — compaction,
-    // rebucket, and applies that fold — from delta-only applies, but
-    // two writers of one kind share a name) — the supported topology is
-    // one streaming tail plus maintenance jobs, which never collide there.
-    // intra-JVM: one attempt at a time per table handle (the base
-    // version bookkeeping is per-instance); cross-process concurrency
-    // is what the ATOMIC_MOVE + retry protocol arbitrates
-    this.synchronized {
+    val mine = rewritten.keySet ++ deltaAdds.keySet ++ deltaReplaces.keySet ++ newRowCounts.keySet
     var attempt = 0
     while (true) {
-      try return commitOnce(schema, rewritten, newRowCounts, txidWatermark,
-        batchId, metrics, queryId, deltaAdds, deltaReplaces)
+      val log = cachedCommits()
+      requireNoConflict(base, log, mine)
+      try return commitOnce(log.lastOption, schema, rewritten, newRowCounts,
+        txidWatermark, batchId, metrics, queryId, deltaAdds, deltaReplaces)
       catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           attempt += 1
           if (attempt > 5) throw new java.util.ConcurrentModificationException(
             s"lost the commit race $attempt times at $location — livelock?")
-          // an interleaved RENAME commit conflicts with every writer:
-          // this attempt's data files and `schema` were derived under
-          // the pre-rename names, and re-publishing them would revert
-          // the schema while the rename map still points at it — the
-          // caller must redo the apply against the renamed snapshot
-          // (which folds its batch onto the current names)
-          if (currentCommit().exists(_.renames != attemptBaseRenames))
-            throw new java.util.ConcurrentModificationException(
-              s"concurrent column rename at $location — redo the apply " +
-                "against the renamed snapshot")
-          val mine: Set[Int] = rewritten.keySet ++ deltaAdds.keySet ++
-            deltaReplaces.keySet ++ newRowCounts.keySet
-          val theirs = modifiedBucketsSince(attemptBaseVersion)
-          val overlap = mine intersect theirs
-          if (overlap.nonEmpty) throw new java.util.ConcurrentModificationException(
-            s"concurrent commit modified buckets ${overlap.toSeq.sorted.take(8)
-              .mkString(",")} at $location — redo the apply against the new snapshot")
       }
     }
     throw new IllegalStateException("unreachable")
-    }
   }
 
-  /** Version this attempt's state was read from (conflict-window lower
-    * bound for the optimistic retry). */
-  @volatile private var attemptBaseVersion: Long = 0L
+  /** The one conflict check, run by every commit attempt: refuses a
+    * commit derived from `base` once the head of `log` has moved past it
+    * in a way that voids what the writer derived — a rebucket (its
+    * bucket ids name another hash space), a commit that modified one of
+    * the writer's buckets `mine` (its files resolve a stale read of that
+    * bucket), or a schema change: a rename (its files carry the retired
+    * names, and its schema would revert the rename while the rename map
+    * points past it) or another writer's new column (its schema would
+    * hide that column). */
+  private def requireNoConflict(base: Option[Commit], log: Seq[Commit], mine: Set[Int]): Unit = {
+    val since = base.fold(0L)(_.version)
+    val head = log.lastOption
+    if (head.fold(0L)(_.version) == since) return
+    def refuse(what: String) = throw new java.util.ConcurrentModificationException(
+      s"$what at $location since version $since — redo the write against the new snapshot")
+    if (numBucketsOf(head) != numBucketsOf(base)) refuse("concurrent rebucket")
+    val overlap = mine intersect modifiedBucketsSince(since, log)
+    if (overlap.nonEmpty)
+      refuse(s"concurrent commit modified buckets ${overlap.toSeq.sorted.take(8).mkString(",")}")
+    if (head.map(_.schemaJson) != base.map(_.schemaJson))
+      refuse("concurrent schema change (a column rename or a new column)")
+  }
 
-  /** Rename map at the attempt's base version — an interleaved commit
-    * that CHANGED it (a renameColumn) is a true conflict for any data
-    * writer (see commit()'s retry handler). */
-  @volatile private var attemptBaseRenames: Map[String, String] = Map.empty
-
-  /** Test-only race injection: runs after an attempt reads the log but
-    * before it publishes, so a spec can land a competing commit in the
-    * window deterministically (cleared after first use). */
+  /** Test-only race injection: runs after the next attempt's conflict
+    * check, just before its publish, so a spec can land a competing
+    * commit that the retry's check then sees (cleared after first use). */
   private[graft] var testBeforePublish: () => Unit = () => ()
 
-  /** Buckets modified by any commit with version > `sinceVersion`:
-    * the union, over each such commit, of keys whose base dir, delta
-    * stack, or row count differs from its predecessor's. Commits no
-    * longer in the retained log (checkpoint-truncated) are treated as
-    * modifying everything — refusal is the safe answer. */
-  private def modifiedBucketsSince(sinceVersion: Long): Set[Int] = {
-    val log = cachedCommits()
+  /** Buckets modified by any commit of `log` (the retained log) with
+    * version > `sinceVersion`: the union, over each such commit, of keys
+    * whose base dir, delta stack, or row count differs from its
+    * predecessor's. Commits no longer in the retained log
+    * (checkpoint-truncated) are treated as modifying everything —
+    * refusal is the safe answer. */
+  private def modifiedBucketsSince(sinceVersion: Long, log: Seq[Commit]): Set[Int] = {
     if (log.isEmpty) return Set.empty
     if (log.head.version > sinceVersion + 1)
       return log.last.liveBuckets
     // log.head's own predecessor (version == sinceVersion) is never in
     // the retained log, so sliding(2) can't see head's changes. When the
     // head itself is inside the conflict window — two writers racing on
-    // an empty table, or the attempt's base rolled into a checkpoint at
+    // an empty table, or the writer's base rolled into a checkpoint at
     // base+1 — count everything the head carries as modified (it has no
     // visible predecessor to diff against; refusal is the safe answer).
     val headOwn: Set[Int] =
@@ -830,6 +815,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
   }
 
   private def commitOnce(
+      prev: Option[Commit],
       schema: StructType,
       rewritten: Map[Int, Option[String]],
       newRowCounts: Map[Int, Long],
@@ -839,9 +825,6 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       queryId: String,
       deltaAdds: Map[Int, (String, Long)],
       deltaReplaces: Map[Int, (String, Long)]): Commit = {
-    val prev = currentCommit()
-    attemptBaseVersion = prev.map(_.version).getOrElse(0L)
-    attemptBaseRenames = prev.map(_.renames).getOrElse(Map.empty)
     val carried = prev.map(_.buckets).getOrElse(Map.empty)
     val carriedCounts = prev.map(_.rowCounts).getOrElse(Map.empty)
     val carriedDeltas = prev.map(_.deltas).getOrElse(Map.empty)
@@ -904,7 +887,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
         // persist the layout's bucket count forward; a caller-supplied
         // value wins (only rebucket passes one — it IS the layout change)
         (LakeTable.NumBucketsKey -> metrics.getOrElse(
-          LakeTable.NumBucketsKey, effectiveNumBuckets.toLong)),
+          LakeTable.NumBucketsKey, numBucketsOf(prev).toLong)),
       queryId, newDeltas, newDeltaCounts,
       prev.map(_.renames).getOrElse(Map.empty)))
   }
@@ -996,10 +979,10 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * rewrite, bounding read amplification after many commits. */
   def compact(spark: SparkSession, tombstoneHorizon: Long): Option[Commit] =
     currentCommit().map { c =>
-      val keep = readRaw(spark).where(
+      val keep = readCommit(spark, c, c.liveBuckets.toSeq.sorted).where(
         !coalesce(col("_deleted"), lit(false)) || col("_txid") >= tombstoneHorizon)
       val (rel, counts) =
-        writeBase(keep, c.version + 1, col("conv_id"), effectiveNumBuckets)
+        writeBase(keep, c.version + 1, col("conv_id"), numBucketsOf(Some(c)))
       // every bucket with a base or a delta stack is folded into the new
       // base; rewriting them clears their delta stacks in commit().
       // `counts` are the fresh post-compaction row counts: the
@@ -1008,7 +991,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
         c.liveBuckets.map { b =>
           b -> counts.get(b).map(_ => s"$rel/_bucket=$b")
         }.toMap
-      commit(c.schema, rewritten, counts, c.txidWatermark, -1L,
+      commit(Some(c), c.schema, rewritten, counts, c.txidWatermark, -1L,
         Map("compaction" -> 1L, "tombstoneHorizon" -> tombstoneHorizon))
     }
 
@@ -1054,16 +1037,16 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     require(newNumBuckets > 0, s"newNumBuckets must be positive: $newNumBuckets")
     val c = currentCommit().getOrElse(throw new IllegalArgumentException(
       s"rebucket: table at $location has no commits"))
-    val oldN = effectiveNumBuckets
+    val oldN = numBucketsOf(Some(c))
     require(newNumBuckets != oldN,
       s"table at $location is already laid out with $oldN buckets")
-    val (rel, counts) =
-      writeBase(readRaw(spark), c.version + 1, col("conv_id"), newNumBuckets)
+    val (rel, counts) = writeBase(readCommit(spark, c, c.liveBuckets.toSeq.sorted),
+      c.version + 1, col("conv_id"), newNumBuckets)
     val allBuckets = c.liveBuckets ++ (0 until newNumBuckets)
     val rewritten: Map[Int, Option[String]] = allBuckets.map { b =>
       b -> counts.get(b).map(_ => s"$rel/_bucket=$b")
     }.toMap
-    commit(c.schema, rewritten, counts, c.txidWatermark, -1L,
+    commit(Some(c), c.schema, rewritten, counts, c.txidWatermark, -1L,
       Map("rebucket" -> 1L, LakeTable.NumBucketsKey -> newNumBuckets.toLong))
   }
 

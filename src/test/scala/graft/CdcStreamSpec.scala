@@ -77,6 +77,47 @@ class CdcStreamSpec extends SparkSpec {
     assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
   }
 
+  test("a commit refused by a concurrent compaction stops the tail; the next start replays the batch") {
+    val events = Corpus.changeEvents(spark, 2000, nConvs = 40, maxTurns = 8)
+    val logDir = tmpDir("refused-log")
+    val ckpt = tmpDir("refused-ckpt")
+    val table = new LakeTable(tmpDir("refused-table"), numBuckets = 8)
+    writeChangelog(logDir, events, Seq((1L, 1000L)))
+    CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt)
+    CdcStream.writeSegment(Corpus.shuffled(events.where(col("_txid") > 1000L)), s"$logDir/chunk1")
+    // a maintenance job lands a compaction between the tail's read of
+    // the table and its publish
+    val compactor = new LakeTable(table.location, numBuckets = 8)
+    table.testBeforePublish = () => compactor.compact(spark, tombstoneHorizon = 0L)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.util.ConcurrentModificationException]), e)
+    assert(table.currentCommit().get.metrics.contains("compaction"))
+    assert(table.txidWatermark == 1000L)
+    // the checkpoint replays the unacknowledged batch onto the compacted
+    // snapshot
+    CdcStream.runOnce(spark, s"$logDir/chunk*", table, ckpt)
+    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+    val batches = table.commitLog().filter(_.batchId >= 0).groupBy(c => (c.queryId, c.batchId))
+    assert(batches.keySet.map(_._2) == Set(0L, 1L) && batches.values.forall(_.size == 1),
+      s"commits per (queryId, batchId): ${batches.map { case (k, cs) => k -> cs.size }}")
+    val head = table.currentCommit().get
+    val top = table.readRaw(spark).agg(max(col("_txid"))).head().getLong(0)
+    assert(head.txidWatermark == 2000L && top <= head.txidWatermark,
+      s"stored _txid $top, watermark ${head.txidWatermark}")
+  }
+
+  test("a checkpoint without readable stream metadata has no identity: queryIdFor names the file") {
+    val ckpt = tmpDir("noid-ckpt")
+    val meta = java.nio.file.Paths.get(ckpt, "metadata")
+    val missing = intercept[IllegalStateException](CdcStream.queryIdFor(ckpt))
+    assert(missing.getMessage.contains(meta.toString), missing.getMessage)
+    java.nio.file.Files.writeString(meta, "{\"id\":")
+    val damaged = intercept[IllegalStateException](CdcStream.queryIdFor(ckpt))
+    assert(damaged.getMessage.contains(meta.toString), damaged.getMessage)
+  }
+
   test("crash replay: re-running with a FRESH checkpoint over the same files is a no-op") {
     val events = Corpus.changeEvents(spark, 1000, nConvs = 30, maxTurns = 6)
     val logDir = tmpDir("crash-log")

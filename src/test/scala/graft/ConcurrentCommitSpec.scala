@@ -6,14 +6,45 @@ import graft.cdc.CdcApply
 import graft.model.Corpus
 import graft.table.LakeTable
 
+/** Lands a competing commit from inside an apply, with no hook in the
+  * engine: [[fire]] is a nondeterministic filter on a one-event batch,
+  * which the apply's pre-scan evaluates once and its write job once
+  * more. That second evaluation runs the armed commit and waits for it,
+  * so the commit lands after the apply read its snapshot and before it
+  * publishes. The counter lives in this object: the filter's closure is
+  * deserialized per task, and a counter captured by it would be a copy.
+  * The commit runs on a daemon thread started from the test thread, so
+  * a commit that runs Spark jobs of its own (a rebucket) starts outside
+  * any task. */
+object MidApply extends Serializable {
+  private val evaluations = new java.util.concurrent.atomic.AtomicLong
+  @volatile private var competing: () => Unit = () => ()
+  private lazy val outsideTasks = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+    val t = new Thread(r, "mid-apply-commit"); t.setDaemon(true); t
+  }
+
+  def arm(commit: => Any): Unit = {
+    evaluations.set(0)
+    competing = () => commit
+    outsideTasks.submit(new Runnable { def run(): Unit = () }).get()
+  }
+
+  val fire = udf { () =>
+    if (evaluations.incrementAndGet() == 2)
+      outsideTasks.submit(new Runnable { def run(): Unit = competing() }).get()
+    true
+  }.asNondeterministic()
+}
+
 /** Optimistic concurrency on the commit log: two writers racing the
   * same version must (a) both land when their buckets are disjoint
   * (loser rebuilds against the new head and re-publishes) and (b) fail
   * CLEANLY on a true conflict (overlapping buckets — the loser's data
   * files were derived from a stale snapshot), after which a redo
   * against the new snapshot succeeds. The race window is injected
-  * deterministically via `testBeforePublish` (after the loser reads the
-  * log, before it publishes). */
+  * deterministically: via `testBeforePublish` (after the loser's
+  * conflict check, before it publishes), or via [[MidApply]] (after an
+  * apply read its snapshot, during its write). */
 class ConcurrentCommitSpec extends SparkSpec {
 
   /** A small table with every bucket populated. */
@@ -25,10 +56,11 @@ class ConcurrentCommitSpec extends SparkSpec {
   }
 
   /** Write a one-row delta dir for `bucket` under the given version
-    * name and return (relPath, rowCount, the row's conv_id, txid). */
+    * name, at `txid` (default: just above the watermark), and return
+    * (relPath, rowCount, the row's conv_id, txid). */
   private def writeDelta(table: LakeTable, version: Long, bucket: Int,
-      newText: String): (String, Long, String, Long) = {
-    val tx = table.txidWatermark + 1
+      newText: String, txid: Option[Long] = None): (String, Long, String, Long) = {
+    val tx = txid.getOrElse(table.txidWatermark + 1)
     val row = table.readBuckets(spark, Seq(bucket))
       .orderBy("conv_id", "turn_idx").limit(1)
       .withColumn("_txid", lit(tx))
@@ -40,6 +72,132 @@ class ConcurrentCommitSpec extends SparkSpec {
     (rel, 1L, row.select("conv_id").head().getString(0), tx)
   }
 
+  /** A one-event batch that updates the key [[writeDelta]] picks in
+    * `bucket` to `text` at `tx`: one partition of an RDD, not a local
+    * relation, which the optimizer may evaluate on its own. */
+  private def oneEvent(table: LakeTable, bucket: Int, tx: Long, text: String) = {
+    val row = table.readBuckets(spark, Seq(bucket))
+      .orderBy("conv_id", "turn_idx").limit(1)
+      .withColumn("_txid", lit(tx))
+      .withColumn("_op", lit("update"))
+      .withColumn("_etag", lit(s"ev-$tx"))
+      .withColumn("text", lit(text))
+      .drop("_deleted")
+    spark.createDataFrame(spark.sparkContext.parallelize(row.collect().toSeq, 1), row.schema)
+  }
+
+  test("a rename landing during an apply refuses its commit; every row keeps the new name") {
+    val (table, events) = seeded()
+    val admin = new LakeTable(table.location, numBuckets = 8)
+    val batch = oneEvent(table, bucket = 3, table.txidWatermark + 1, "redo")
+      .where(MidApply.fire())
+    MidApply.arm(admin.renameColumn("text", "body"))
+    intercept[java.util.ConcurrentModificationException](
+      CdcApply.applyBatch(spark, table, batch))
+    val renamed = table.currentCommit().get
+    assert(renamed.metrics.contains("rename") && renamed.renames == Map("text" -> "body"),
+      s"head is not the rename: $renamed")
+    def underBody = table.read(spark)
+      .select(col("conv_id"), col("turn_idx"), col("body").as("text"))
+    assertSameRows(underBody,
+      Corpus.oracleFinalState(events).select("conv_id", "turn_idx", "text"))
+    // the redo reads the renamed snapshot and folds the batch's retired
+    // `text` onto `body`
+    CdcApply.applyBatch(spark, table, batch)
+    assert(table.currentCommit().get.version == renamed.version + 1)
+    assert(underBody.where(col("text") === "redo").count() == 1L)
+  }
+
+  test("a newer delta landing during a fold's write refuses the fold; the newer row survives the redo") {
+    val (table, _) = seeded()
+    val base = table.currentCommit()
+    val (v0, wm, schema) = (base.get.version, base.get.txidWatermark, base.get.schema)
+    val b = new LakeTable(table.location, numBuckets = 8)
+    val (relB, nB, conv, txB) = writeDelta(b, v0 + 1, bucket = 2, "newer", Some(wm + 1000))
+    // an older event for the same key: newer than its stored row, older
+    // than the delta
+    val older = oneEvent(table, bucket = 2, wm + 1, "older")
+    val turn = older.select("turn_idx").head().getInt(0)
+    val batch = older.where(MidApply.fire())
+    MidApply.arm(b.commit(base, schema, Map.empty, Map.empty, txB, -1L, Map.empty,
+      deltaAdds = Map(2 -> (relB, nB))))
+    intercept[java.util.ConcurrentModificationException](
+      CdcApply.applyBatch(spark, table, batch, maxDeltaDepth = 0))
+    assert(table.currentCommit().get.version == v0 + 1)
+    // the redo folds the delta in, and the newer row wins
+    CdcApply.applyBatch(spark, table, batch, maxDeltaDepth = 0)
+    val got = table.read(spark).where(col("conv_id") === conv && col("turn_idx") === turn)
+      .select("text", "_txid").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(got == Seq(("newer", txB)), s"key $conv/$turn reads $got")
+    assert(table.txidWatermark == txB)
+  }
+
+  test("a rebucket landing during a delta apply refuses the apply's commit") {
+    val (table, events) = seeded()
+    val maintenance = new LakeTable(table.location, numBuckets = 8)
+    val batch = oneEvent(table, bucket = 3, table.txidWatermark + 1, "8-space")
+      .where(MidApply.fire())
+    MidApply.arm(maintenance.rebucket(spark, 16))
+    intercept[java.util.ConcurrentModificationException](
+      CdcApply.applyBatch(spark, table, batch))
+    // the head is the rebucket's: every bucket id in the 16-space, no
+    // 8-space delta published into it
+    val head = table.currentCommit().get
+    assert(head.metrics.contains("rebucket") && table.effectiveNumBuckets == 16)
+    assert(head.deltas.isEmpty && head.buckets.keySet.forall(_.toInt < 16))
+    assertSameRows(table.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
+      Corpus.oracleFinalState(events))
+  }
+
+  test("a disjoint commit that widens the schema during an apply refuses its commit; the redo keeps the column") {
+    val (table, _) = seeded()
+    val base = table.currentCommit()
+    val (v0, wm) = (base.get.version, base.get.txidWatermark)
+    // B rewrites bucket 2's base with a new `note` column
+    val b = new LakeTable(table.location, numBuckets = 8)
+    val relB = f"data/c${v0 + 1}%012d/_bucket=2"
+    val bucket2 = b.readBuckets(spark, Seq(2)).withColumn("note", lit("from-B"))
+    bucket2.coalesce(1).write.mode("overwrite").parquet(s"${table.location}/$relB")
+    val (rowsB, liveB) = (bucket2.count(), LakeTable.dropTombstones(bucket2).count())
+    val fields = base.get.schema.fields
+    val wide = org.apache.spark.sql.types.StructType(fields.dropRight(3) ++
+      Seq(org.apache.spark.sql.types.StructField("note", org.apache.spark.sql.types.StringType)) ++
+      fields.takeRight(3))
+    val batch = oneEvent(table, bucket = 3, wm + 1, "narrow").where(MidApply.fire())
+    MidApply.arm(b.commit(base, wide, Map(2 -> Some(relB)), Map(2 -> rowsB), wm, -1L, Map.empty))
+    val e = intercept[java.util.ConcurrentModificationException](
+      CdcApply.applyBatch(spark, table, batch))
+    assert(e.getMessage.contains("schema"), e.getMessage)
+    // the redo evolves the widened schema, so B's column stays readable
+    CdcApply.applyBatch(spark, table, batch)
+    val read = table.read(spark)
+    assert(read.where(col("note") === "from-B").count() == liveB)
+    assert(read.where(col("text") === "narrow").count() == 1L)
+  }
+
+  test("a commit against a stale base composes with a disjoint commit and refuses an overlapping one") {
+    val (table, _) = seeded()
+    val stale = table.currentCommit()
+    val (v0, schema) = (stale.get.version, stale.get.schema)
+    val b = new LakeTable(table.location, numBuckets = 8)
+    val (relB, nB, _, txB) = writeDelta(b, v0 + 1, bucket = 2, "from-B")
+    b.commit(stale, schema, Map.empty, Map.empty, txB, -1L, Map.empty,
+      deltaAdds = Map(2 -> (relB, nB)))
+    // bucket 5 is untouched since the stale base: composes on B's head
+    val (relA, nA, _, txA) = writeDelta(table, v0 + 2, bucket = 5, "from-A")
+    val a = table.commit(base = stale, schema, Map.empty, Map.empty, txA, -1L, Map.empty,
+      deltaAdds = Map(5 -> (relA, nA)))
+    assert(a.version == v0 + 2 && a.deltas("2").nonEmpty && a.deltas("5").nonEmpty, s"$a")
+    // bucket 2 moved since the stale base: refused, nothing published
+    val (relC, nC, _, txC) = writeDelta(table, v0 + 3, bucket = 2, "stale")
+    val e = intercept[java.util.ConcurrentModificationException] {
+      table.commit(base = stale, schema, Map.empty, Map.empty, txC, -1L, Map.empty,
+        deltaAdds = Map(2 -> (relC, nC)))
+    }
+    assert(e.getMessage.contains("buckets 2"), e.getMessage)
+    assert(table.currentCommit().get.version == v0 + 2)
+  }
+
   test("disjoint-bucket commits: the race loser retries and BOTH land") {
     val (table, _) = seeded()
     val v0 = table.currentCommit().get.version
@@ -49,10 +207,11 @@ class ConcurrentCommitSpec extends SparkSpec {
     val b = new LakeTable(table.location, numBuckets = 8)
     val (relB, nB, convB, txB) = writeDelta(b, v0 + 1, bucket = 2, "from-B")
     val (relA, nA, convA, txA) = writeDelta(table, v0 + 2, bucket = 5, "from-A")
+    val base = table.currentCommit()
     table.testBeforePublish = () =>
-      b.commit(schema, Map.empty, Map.empty, txB, -1L, Map("writer" -> 2L),
+      b.commit(b.currentCommit(), schema, Map.empty, Map.empty, txB, -1L, Map("writer" -> 2L),
         deltaAdds = Map(2 -> (relB, nB)))
-    table.commit(schema, Map.empty, Map.empty, txA, -1L, Map("writer" -> 1L),
+    table.commit(base, schema, Map.empty, Map.empty, txA, -1L, Map("writer" -> 1L),
       deltaAdds = Map(5 -> (relA, nA)))
 
     val head = table.currentCommit().get
@@ -75,18 +234,19 @@ class ConcurrentCommitSpec extends SparkSpec {
     // both writers target bucket 3 — B wins the race, A must refuse
     val (relB, nB, _, txB) = writeDelta(b, v0 + 1, bucket = 3, "winner")
     val (relA, nA, _, txA) = writeDelta(table, v0 + 2, bucket = 3, "stale")
+    val base = table.currentCommit()
     table.testBeforePublish = () =>
-      b.commit(schema, Map.empty, Map.empty, txB, -1L, Map.empty,
+      b.commit(b.currentCommit(), schema, Map.empty, Map.empty, txB, -1L, Map.empty,
         deltaAdds = Map(3 -> (relB, nB)))
     val e = intercept[java.util.ConcurrentModificationException] {
-      table.commit(schema, Map.empty, Map.empty, txA, -1L, Map.empty,
+      table.commit(base, schema, Map.empty, Map.empty, txA, -1L, Map.empty,
         deltaAdds = Map(3 -> (relA, nA)))
     }
     assert(e.getMessage.contains("buckets 3"), e.getMessage)
     assert(table.currentCommit().get.version == v0 + 1) // only B landed
     // redo against the new snapshot (fresh read → fresh delta) lands
     val (relA2, nA2, convA2, txA2) = writeDelta(table, v0 + 2, bucket = 3, "redo")
-    table.commit(schema, Map.empty, Map.empty, txA2, -1L, Map.empty,
+    table.commit(table.currentCommit(), schema, Map.empty, Map.empty, txA2, -1L, Map.empty,
       deltaAdds = Map(3 -> (relA2, nA2)))
     assert(table.currentCommit().get.version == v0 + 2)
     val got = table.read(spark)
@@ -114,9 +274,9 @@ class ConcurrentCommitSpec extends SparkSpec {
     val (relB, schema) = writeBase(1, "winner")
     val (relA, _) = writeBase(2, "stale")
     a.testBeforePublish = () =>
-      b.commit(schema, Map(3 -> Some(relB)), Map(3 -> 1L), 1L, -1L, Map.empty)
+      b.commit(None, schema, Map(3 -> Some(relB)), Map(3 -> 1L), 1L, -1L, Map.empty)
     val e = intercept[java.util.ConcurrentModificationException] {
-      a.commit(schema, Map(3 -> Some(relA)), Map(3 -> 1L), 2L, -1L, Map.empty)
+      a.commit(None, schema, Map(3 -> Some(relA)), Map(3 -> 1L), 2L, -1L, Map.empty)
     }
     assert(e.getMessage.contains("buckets 3"), e.getMessage)
     val head = a.currentCommit().get
@@ -133,10 +293,11 @@ class ConcurrentCommitSpec extends SparkSpec {
     // bucket) lands first — the tail's commit must refuse, because its
     // gate read pre-compaction state of a bucket compaction rewrote
     val (relA, nA, _, txA) = writeDelta(table, v0 + 2, bucket = 1, "tail")
+    val base = table.currentCommit()
     table.testBeforePublish = () =>
       compactor.compact(spark, tombstoneHorizon = compactor.txidWatermark)
     intercept[java.util.ConcurrentModificationException] {
-      table.commit(schema, Map.empty, Map.empty, txA, -1L, Map.empty,
+      table.commit(base, schema, Map.empty, Map.empty, txA, -1L, Map.empty,
         deltaAdds = Map(1 -> (relA, nA)))
     }
     // the compaction snapshot is intact and fully readable
@@ -157,7 +318,7 @@ class ConcurrentCommitSpec extends SparkSpec {
     // refuse — composing would resurrect the pre-delta bucket contents
     val (relB, nB, convB, txB) = writeDelta(tail, v0 + 1, bucket = 4, "tail-won")
     table.testBeforePublish = () =>
-      tail.commit(schema, Map.empty, Map.empty, txB, -1L, Map.empty,
+      tail.commit(tail.currentCommit(), schema, Map.empty, Map.empty, txB, -1L, Map.empty,
         deltaAdds = Map(4 -> (relB, nB)))
     intercept[java.util.ConcurrentModificationException] {
       table.rebucket(spark, 16)
@@ -188,9 +349,10 @@ class ConcurrentCommitSpec extends SparkSpec {
     // rebucket(16) lands first — the tail's commit must refuse (its
     // bucket ids and dir keys mean nothing under the new layout)
     val (relA, nA, _, txA) = writeDelta(table, v0 + 2, bucket = 1, "stale-layout")
+    val base = table.currentCommit()
     table.testBeforePublish = () => { maintenance.rebucket(spark, 16); () }
     intercept[java.util.ConcurrentModificationException] {
-      table.commit(schema, Map.empty, Map.empty, txA, -1L, Map.empty,
+      table.commit(base, schema, Map.empty, Map.empty, txA, -1L, Map.empty,
         deltaAdds = Map(1 -> (relA, nA)))
     }
     assert(table.effectiveNumBuckets == 16)
@@ -251,9 +413,9 @@ class ConcurrentCommitSpec extends SparkSpec {
     // B (say a redrive) publishes a higher watermark inside A's window;
     // A (say the tail) retries onto B's commit
     table.testBeforePublish = () =>
-      b.commit(schema, Map.empty, Map.empty, wm + 10, -1L, Map.empty,
+      b.commit(b.currentCommit(), schema, Map.empty, Map.empty, wm + 10, -1L, Map.empty,
         deltaAdds = Map(2 -> (relB, nB)))
-    val a = table.commit(schema, Map.empty, Map.empty, wm + 1, -1L, Map.empty,
+    val a = table.commit(Some(c0), schema, Map.empty, Map.empty, wm + 1, -1L, Map.empty,
       deltaAdds = Map(5 -> (relA, nA)))
     assert(a.version == v0 + 2 && table.currentCommit().get.txidWatermark == wm + 10,
       s"head watermark ${table.currentCommit().get.txidWatermark}, want ${wm + 10}")

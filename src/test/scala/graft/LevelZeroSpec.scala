@@ -54,8 +54,11 @@ class LevelZeroSpec extends SparkSpec {
   /** Each read of the two buckets returns exactly each one's own rows. */
   private def assertOwnRows(table: LakeTable, bx: Int, by: Int,
       xDeltas: Seq[String], xLatest: String, yRow: String): Unit = {
-    assert(patched(table.readDeltaStacks(spark, Seq(bx, by))) == (xDeltas :+ yRow).sorted)
-    assert(patched(table.readDeltaStacks(spark, Seq(by))) == Seq(yRow))
+    // the delta stacks alone: what a consolidation reads
+    def deltaStacks(buckets: Seq[Int]) = table.readCommit(spark, table.currentCommit().get,
+      buckets, resolve = false, includeBase = false)
+    assert(patched(deltaStacks(Seq(bx, by))) == (xDeltas :+ yRow).sorted)
+    assert(patched(deltaStacks(Seq(by))) == Seq(yRow))
     assert(patched(table.readBuckets(spark, Seq(bx, by), resolve = false)) ==
       (xDeltas ++ Seq(xLatest, yRow)).distinct.sorted)
     assert(patched(table.readBuckets(spark, Seq(bx, by))) == Seq(xLatest, yRow).sorted)

@@ -92,7 +92,7 @@ class ScanSpec extends SparkSpec {
         }
         val bs = buckets.flatMap(b => head.buckets.get(b.toString))
         (table.resolveLatest((spark.read.schema(head.schema).parquet(paths(bs): _*) +: deltaScans)
-          .reduce(_ unionByName _), LakeTable.SaltBuckets), listedBy.size)
+          .reduce(_ unionByName _), table.effectiveNumBuckets, LakeTable.SaltBuckets), listedBy.size)
       }
       val (f, n) = ref(head.liveBuckets.toSeq.sorted)
       (LakeTable.dropTombstones(f), ref(Seq(bucket))._1, n)
