@@ -109,9 +109,10 @@ object BatchHint {
   *      salt 1: each winner bucket lands whole in one reducer, so a
   *      known batch's hot bucket (a pre-scanned first load too)
   *      resolves in one task at any size (SkewSpec). The classes' parts
-  *      are unioned and written by ONE observed write into ONE dir:
-  *      `data/cV`, partitioned by bucket, when any base is rewritten;
-  *      else `data/cVd`, FLAT — one file per write task, `_bucket` a
+  *      are unioned and written by ONE observed write into ONE fresh
+  *      dir of its own ([[LakeTable.newDataDir]]): `data/cV-TOKEN`,
+  *      partitioned by bucket, when any base is rewritten; else
+  *      `data/cVd-TOKEN`, FLAT — one file per write task, `_bucket` a
   *      column — so a steady apply that touches every bucket writes a
   *      few files, not one per bucket (level 0 of an LSM tree);
   *   6. ONE atomic commit with txid high-watermark + per-bucket
@@ -351,12 +352,10 @@ object CdcApply {
     // the buckets that take the batch's collapsed winners
     val winnerBuckets = touched.filterNot(foldBuckets.toSet)
     val deltaBuckets = winnerBuckets.filterNot(consSet)
-    // the buckets whose BASE this commit writes; the dir name keeps
-    // base-rewriting applies (cV, like compaction) apart from
-    // delta-only ones (cVd)
+    // the buckets whose BASE this commit writes, into a fresh dir of
+    // its own: a delta-only apply's is marked `d`
     val baseBuckets = if (prev.isEmpty) touched else foldBuckets
-    val version = prev.fold(1L)(_.version + 1)
-    val rel = f"data/c$version%012d" + (if (baseBuckets.isEmpty) "d" else "")
+    val rel = LakeTable.newDataDir(prev, delta = baseBuckets.isEmpty)
     val outDir = Paths.get(table.location).resolve(rel)
     val bucketOf = LakeTable.bucketColFor(col("conv_id"), numBuckets)
     // the RAW stored rows (base + deltas, or the deltas alone) of
@@ -476,7 +475,7 @@ object CdcApply {
     // the rows written per bucket and the task that wrote them, so no
     // footer is read back.
     val flat = baseBuckets.isEmpty
-    val obs = new org.apache.spark.sql.Observation(s"apply-$version")
+    val obs = new org.apache.spark.sql.Observation(s"apply-${prev.fold(1L)(_.version + 1)}")
     try {
       val w = parts.reduce(_ unionByName _)
         .observe(obs,
@@ -487,7 +486,7 @@ object CdcApply {
           LakeTable.bucketWrites(col("_bucket"), numBuckets))
         .drop("__ev")
         .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-        .write.mode("overwrite")
+        .write.mode("errorifexists")
       (if (flat) w else w.partitionBy("_bucket")).parquet(outDir.toString)
     } finally if (shared) batchRows.unpersist()
     val m = obs.get

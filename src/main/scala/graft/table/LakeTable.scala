@@ -37,14 +37,15 @@ import org.json4s.jackson.Serialization
   * @param deltas         MERGE-ON-READ delta entries PER BUCKET: bucket id ->
   *                       the stack of entries appended since that
   *                       bucket's last fold, one per write. An apply that
-  *                       rewrote a base writes `data/cVVV/_bucket=B`, a
+  *                       rewrote a base writes `data/cVVV-T/_bucket=B`
+  *                       (T a token unique to the write), a
   *                       dir of the bucket alone. A delta-only apply
-  *                       writes `data/cVVVd` FLAT (level 0 of an LSM
+  *                       writes `data/cVVVd-T` FLAT (level 0 of an LSM
   *                       tree): one parquet file per write task, with
   *                       `_bucket` as a data column, so a file holds
   *                       several buckets' rows. Its entry names the one
   *                       file holding all of the bucket's rows
-  *                       (`data/cVVVd/part-NNNNN-…parquet`), or the whole
+  *                       (`data/cVVVd-T/part-NNNNN-…parquet`), or the whole
   *                       dir when the write spread the bucket over
   *                       several tasks. A reader keeps a flat entry's
   *                       rows only for the buckets whose stack lists it:
@@ -416,7 +417,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * at `toVersion` is an `insert` (bootstrap feed for a new
     * downstream consumer). Only the two ENDPOINT versions must still
     * be in the retained commit log with un-vacuumed data — data dirs
-    * are version-stamped (`data/cVVV[d]`) and bucket pointers only
+    * are write-unique (`data/cVVV[d]-T`) and bucket pointers only
     * move forward, so equal pointers at both endpoints prove the
     * bucket was untouched by every commit in between; intermediate
     * commit JSONs are never consulted. Refusal is an explicit error,
@@ -722,12 +723,9 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * carries every other bucket forward; a true conflict raises
     * ConcurrentModificationException and the caller redoes its work
     * against the new snapshot (a stream batch, through its checkpoint's
-    * replay). Writers of the same kind racing on the same version also
-    * race on the data-dir NAME (data/cV vs cVd separates base-rewriting
-    * commits — compaction, rebucket, and applies that fold — from
-    * delta-only applies, but two writers of one kind share a name) — the
-    * supported topology is one streaming tail plus maintenance jobs,
-    * which never collide there. */
+    * replay). Writers never race on data files: each writes its own
+    * fresh dir ([[LakeTable.newDataDir]]), so a writer refused here has
+    * touched nothing another writer published. */
   def commit(
       base: Option[Commit],
       schema: StructType,
@@ -743,7 +741,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     var attempt = 0
     while (true) {
       val log = cachedCommits()
-      requireNoConflict(base, log, mine)
+      requireNoConflict(base, log, mine, schema)
       try return commitOnce(log.lastOption, schema, rewritten, newRowCounts,
         txidWatermark, batchId, metrics, queryId, deltaAdds, deltaReplaces)
       catch {
@@ -764,8 +762,12 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * bucket), or a schema change: a rename (its files carry the retired
     * names, and its schema would revert the rename while the rename map
     * points past it) or another writer's new column (its schema would
-    * hide that column). */
-  private def requireNoConflict(base: Option[Commit], log: Seq[Commit], mine: Set[Int]): Unit = {
+    * hide that column) — or a change of the writer's own `schema`: its
+    * dir is stamped base + 1, and a dir's writer schema is the one
+    * committed at its stamp, so a schema change lands there or not at
+    * all. */
+  private def requireNoConflict(base: Option[Commit], log: Seq[Commit], mine: Set[Int],
+      schema: StructType): Unit = {
     val since = base.fold(0L)(_.version)
     val head = log.lastOption
     if (head.fold(0L)(_.version) == since) return
@@ -777,6 +779,8 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       refuse(s"concurrent commit modified buckets ${overlap.toSeq.sorted.take(8).mkString(",")}")
     if (head.map(_.schemaJson) != base.map(_.schemaJson))
       refuse("concurrent schema change (a column rename or a new column)")
+    if (!base.exists(_.schemaJson == schema.json))
+      refuse("a schema change that cannot land at its data dir's version")
   }
 
   /** Test-only race injection: runs after the next attempt's conflict
@@ -981,8 +985,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     currentCommit().map { c =>
       val keep = readCommit(spark, c, c.liveBuckets.toSeq.sorted).where(
         !coalesce(col("_deleted"), lit(false)) || col("_txid") >= tombstoneHorizon)
-      val (rel, counts) =
-        writeBase(keep, c.version + 1, col("conv_id"), numBucketsOf(Some(c)))
+      val (rel, counts) = writeBase(keep, c, col("conv_id"), numBucketsOf(Some(c)))
       // every bucket with a base or a delta stack is folded into the new
       // base; rewriting them clears their delta stacks in commit().
       // `counts` are the fresh post-compaction row counts: the
@@ -995,21 +998,22 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
         Map("compaction" -> 1L, "tombstoneHorizon" -> tombstoneHorizon))
     }
 
-  /** Rewrite `df` as a fresh base of `numBuckets` buckets (hashed from
-    * `conv`) under `data/c<version>`, files sorted by (bucket, conv_id,
-    * turn_idx) for row-group min/max skipping on later gate reads — the
-    * one write shape shared by compaction and rebucketing. Returns the
-    * dir's relative path and the rows the write put in each bucket (a
-    * bucket it wrote no row to has no entry and no dir). */
-  private def writeBase(df: DataFrame, version: Long,
+  /** Rewrite `df`, read from `base`, as a fresh base of `numBuckets`
+    * buckets (hashed from `conv`) in a new dir ([[LakeTable.newDataDir]]),
+    * files sorted by (bucket, conv_id, turn_idx) for row-group min/max
+    * skipping on later gate reads — the one write shape shared by
+    * compaction and rebucketing. Returns the dir's relative path and the
+    * rows the write put in each bucket (a bucket it wrote no row to has
+    * no entry and no dir). */
+  private def writeBase(df: DataFrame, base: Commit,
       conv: Column, numBuckets: Int): (String, Map[Int, Long]) = {
-    val rel = f"data/c$version%012d"
-    val obs = new org.apache.spark.sql.Observation(s"base-$version")
+    val rel = LakeTable.newDataDir(Some(base), delta = false)
+    val obs = new org.apache.spark.sql.Observation(s"base-${base.version + 1}")
     df.withColumn("_bucket", LakeTable.bucketColFor(conv, numBuckets))
       .observe(obs, LakeTable.bucketWrites(col("_bucket"), numBuckets))
       .repartition(col("_bucket"))
       .sortWithinPartitions("_bucket", "conv_id", "turn_idx")
-      .write.mode("overwrite").partitionBy("_bucket")
+      .write.mode("errorifexists").partitionBy("_bucket")
       .parquet(root.resolve(rel).toString)
     (rel, LakeTable.observedBucketWrites(obs.get, root.resolve(rel)).map { case (b, w) => b -> w.rows })
   }
@@ -1041,7 +1045,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     require(newNumBuckets != oldN,
       s"table at $location is already laid out with $oldN buckets")
     val (rel, counts) = writeBase(readCommit(spark, c, c.liveBuckets.toSeq.sorted),
-      c.version + 1, col("conv_id"), newNumBuckets)
+      c, col("conv_id"), newNumBuckets)
     val allBuckets = c.liveBuckets ++ (0 until newNumBuckets)
     val rewritten: Map[Int, Option[String]] = allBuckets.map { b =>
       b -> counts.get(b).map(_ => s"$rel/_bucket=$b")
@@ -1060,8 +1064,11 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * [[checkpointLog]] may later roll subsumed commits into a
     * checkpoint and delete their JSONs, retaining only the schemas of
     * data dirs still live at checkpoint time (full schema history does
-    * NOT survive a checkpointed log). Dirs newer than the latest
-    * commit (an in-flight writer's output) are left alone. Returns the
+    * NOT survive a checkpointed log). Dirs stamped newer than the latest
+    * commit (a writer in flight from the head) are left alone; a dir
+    * stamped at or below it that no retained commit references is
+    * deleted — a refused writer's output, or that of a writer still in
+    * flight from a snapshot the head has since moved past. Returns the
     * deleted dir names. */
   def vacuum(retainCommits: Int = 2): Seq[String] = {
     val log = cachedCommits()
@@ -1079,7 +1086,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     finally s.close()
     val deletable = candidates.filter { name =>
       !referenced.contains(name) &&
-        name.stripPrefix("c").stripSuffix("d").toLongOption.exists(_ <= latest)
+        LakeTable.stampOf(name).toLongOption.exists(_ <= latest)
     }
     deletable.foreach(name =>
       LakeTable.deleteRecursively(dataDir.resolve(name)))
@@ -1153,13 +1160,26 @@ object LakeTable {
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  /** The commit-stamped dir a data path lives in: "data/cVVV[d]/…" →
-    * "cVVV[d]" (vacuum's unit of deletion). */
+  /** A fresh data dir for one write derived from `base`:
+    * "data/cVVV[d]-TOKEN", VVV the version its commit follows `base`
+    * with (whose schema key it takes), `d` for a delta-only write, and
+    * a random token, so no two writers — nor a writer's redo — ever
+    * share a dir: a writer only ever writes, or deletes, its own files,
+    * and a refused writer's dir is left for `vacuum`. */
+  private[graft] def newDataDir(base: Option[Commit], delta: Boolean): String =
+    f"data/c${base.fold(1L)(_.version + 1)}%012d" + (if (delta) "d-" else "-") +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+
+  /** The commit-stamped dir a data path lives in: "data/cVVV[d][-TOKEN]/…"
+    * → "cVVV[d][-TOKEN]" (vacuum's unit of deletion). */
   private def dataDirOf(rel: String): String = rel.split("/")(1)
 
-  /** The writer-schema key of a data path, base (cVVV) or delta (cVVVd)
-    * alike: "cVVV", the commit whose schema wrote it. */
-  private def schemaKeyOf(rel: String): String = dataDirOf(rel).stripSuffix("d")
+  /** The version digits stamped on a data dir name: cVVV[d][-TOKEN] → VVV. */
+  private def stampOf(dir: String): String = dir.drop(1).takeWhile(_.isDigit)
+
+  /** The writer-schema key of a data path, base or delta alike: "cVVV",
+    * the commit whose schema wrote it. */
+  private def schemaKeyOf(rel: String): String = "c" + stampOf(dataDirOf(rel))
 
   /** The live rows of a raw read: delete tombstones filtered out, the
     * `_deleted` marker dropped. */

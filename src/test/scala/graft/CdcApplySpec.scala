@@ -55,7 +55,8 @@ class CdcApplySpec extends SparkSpec {
     assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
     // the bootstrap base is written once, one file per bucket — not
     // rewritten again by the (salted) fold branch
-    val base = java.nio.file.Paths.get(table.location, "data", "c000000000001")
+    val Seq(baseDir) = dataDirsOf(table, 1L)
+    val base = java.nio.file.Paths.get(table.location, baseDir)
     def list(d: java.nio.file.Path) = {
       val s = java.nio.file.Files.list(d)
       try s.iterator().asScala.toList finally s.close()
@@ -718,9 +719,7 @@ class CdcApplySpec extends SparkSpec {
         .toDF("_txid", "_op", "_etag", "conv_id", "turn_idx", "role", "text", "tool", "ts")
     def assertFilesWritten(kind: String): Unit = {
       val c = table.currentCommit().get
-      val dirs = Seq("", "d").map(sfx =>
-        java.nio.file.Paths.get(table.location, f"data/c${c.version}%012d$sfx"))
-        .filter(java.nio.file.Files.isDirectory(_))
+      val dirs = dataDirsOf(table, c.version).map(java.nio.file.Paths.get(table.location, _))
       assert(dirs.size == 1, s"$kind v${c.version}: data dirs $dirs")
       val walk = java.nio.file.Files.walk(dirs.head)
       val files = try walk.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.cdc.CdcApply
+import graft.cdc.{BatchHint, CdcApply}
 import graft.model.Corpus
 import graft.table.LakeTable
 
@@ -149,6 +149,56 @@ class ConcurrentCommitSpec extends SparkSpec {
       Corpus.oracleFinalState(events))
   }
 
+  /** The batch's facts against `base`, as the stream's trigger
+    * computes them before its apply. */
+  private def hintFor(table: LakeTable, batch: org.apache.spark.sql.DataFrame,
+      base: Option[graft.table.Commit]): BatchHint = {
+    val facts = BatchHint.facts(table, base)
+    BatchHint.combine(batch.agg(facts.head, facts.tail: _*).collect().toSeq, base)
+  }
+
+  test("a compaction landing between a fold's snapshot read and its write stays readable") {
+    val (table, events) = seeded()
+    val base = table.currentCommit()
+    val batch = oneEvent(table, bucket = 3, base.get.txidWatermark + 1, "folded")
+    val hint = hintFor(table, batch, base)
+    // the compaction lands after the hint was built: both writers derive
+    // their dirs from the same snapshot
+    val compacted = new LakeTable(table.location, numBuckets = 8)
+      .compact(spark, tombstoneHorizon = 0L).get
+    intercept[java.util.ConcurrentModificationException](CdcApply.applyBatch(
+      spark, table, batch, maxDeltaDepth = 0, prunedHint = Some(hint)))
+    val head = table.currentCommit().get
+    assert(head.version == compacted.version && head.buckets == compacted.buckets, s"$head")
+    // the fold's write left the compaction's files alone
+    assertSameRows(table.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
+      Corpus.oracleFinalState(events))
+    // the redo folds onto the compacted snapshot
+    CdcApply.applyBatch(spark, table, batch, maxDeltaDepth = 0)
+    assert(table.currentCommit().get.version == compacted.version + 1)
+    assert(table.read(spark).where(col("text") === "folded").count() == 1L)
+  }
+
+  test("two delta-only applies from one snapshot on disjoint buckets both land and both read") {
+    val (table, events) = seeded()
+    val base = table.currentCommit()
+    val (v0, wm) = (base.get.version, base.get.txidWatermark)
+    val other = new LakeTable(table.location, numBuckets = 8)
+    val (batchA, batchB) =
+      (oneEvent(table, bucket = 2, wm + 1, "from-A"), oneEvent(table, bucket = 5, wm + 2, "from-B"))
+    val (hintA, hintB) = (hintFor(table, batchA, base), hintFor(other, batchB, base))
+    CdcApply.applyBatch(spark, table, batchA, prunedHint = Some(hintA))
+    CdcApply.applyBatch(spark, other, batchB, prunedHint = Some(hintB))
+    val head = table.currentCommit().get
+    assert(head.version == v0 + 2, s"$head")
+    assert(head.deltas("2").last.split("/")(1) != head.deltas("5").last.split("/")(1),
+      s"one dir for both writers: $head")
+    val texts = table.read(spark).where(col("_txid") > wm)
+      .select("text").collect().map(_.getString(0)).toSet
+    assert(texts == Set("from-A", "from-B"), s"got $texts")
+    assert(table.read(spark).count() == Corpus.oracleFinalState(events).count())
+  }
+
   test("a disjoint commit that widens the schema during an apply refuses its commit; the redo keeps the column") {
     val (table, _) = seeded()
     val base = table.currentCommit()
@@ -173,6 +223,33 @@ class ConcurrentCommitSpec extends SparkSpec {
     val read = table.read(spark)
     assert(read.where(col("note") === "from-B").count() == liveB)
     assert(read.where(col("text") === "narrow").count() == 1L)
+  }
+
+  test("an apply that widens the schema refuses to compose onto a disjoint commit; its column survives a rename") {
+    val (table, _) = seeded()
+    val base = table.currentCommit()
+    val (v0, wm, schema) = (base.get.version, base.get.txidWatermark, base.get.schema)
+    val b = new LakeTable(table.location, numBuckets = 8)
+    val (relB, nB, _, txB) = writeDelta(b, v0 + 1, bucket = 2, "from-B")
+    val wide = oneEvent(table, bucket = 3, wm + 1, "wide").withColumn("note", lit("from-A"))
+    val conv = wide.select("conv_id").head().getString(0)
+    val batch = wide.where(MidApply.fire())
+    MidApply.arm(b.commit(base, schema, Map.empty, Map.empty, txB, -1L, Map.empty,
+      deltaAdds = Map(2 -> (relB, nB))))
+    // composed at v0 + 2, the apply's dir (stamped v0 + 1) would be read
+    // under B's schema, which has no `note`
+    val e = intercept[java.util.ConcurrentModificationException](
+      CdcApply.applyBatch(spark, table, batch))
+    assert(e.getMessage.contains("schema"), e.getMessage)
+    assert(table.currentCommit().get.version == v0 + 1)
+    CdcApply.applyBatch(spark, table, batch)
+    assert(table.currentCommit().get.version == v0 + 2)
+    // a rename makes every read scan each dir under its writer schema
+    table.renameColumn("text", "body")
+    val got = table.read(spark).where(col("conv_id") === conv && col("body") === "wide")
+      .select("note").collect().map(_.getString(0)).toSeq
+    assert(got == Seq("from-A"), s"key $conv reads note $got")
+    assert(table.read(spark).where(col("body") === "from-B").count() == 1L)
   }
 
   test("a commit against a stale base composes with a disjoint commit and refuses an overlapping one") {

@@ -531,7 +531,8 @@ class PlanSpec extends SparkSpec {
     assert(coalesced.isEmpty,
       s"the delta write is coalesced:\n${coalesced.map(_.executedPlan).mkString("\n")}")
     // one flat dir of at most one file per write task
-    val rel = f"data/c${c.version}%012dd"
+    val Seq(rel) = dataDirsOf(table, c.version)
+    assert(rel.startsWith(f"data/c${c.version}%012dd-"), rel)
     val dir = java.nio.file.Paths.get(table.location, rel)
     val entries = java.nio.file.Files.list(dir).iterator().asScala.map(_.getFileName.toString)
       .filterNot(_.startsWith(".")).toSeq
@@ -642,7 +643,8 @@ class PlanSpec extends SparkSpec {
       }, "the gate ran no shuffled join")
     // the re-hash spreads a fresh bucket over several write tasks: its
     // entry names the whole flat dir, read back through the same filter
-    val rel = f"data/c${c.version}%012dd"
+    val Seq(rel) = dataDirsOf(table, c.version)
+    assert(rel.startsWith(f"data/c${c.version}%012dd-"), rel)
     val added = c.deltas.values.map(_.last).filter(_.startsWith(rel)).toSeq
     assert(added.contains(rel) && added.forall(e => e == rel || e.endsWith(".parquet")),
       s"new entries: $added")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** One shared local SparkSession across all suites (forked test JVM). */
 object TestSpark {
@@ -27,6 +28,16 @@ abstract class SparkSpec extends AnyFunSuite {
     val base = java.nio.file.Paths.get("target", "test-tmp")
     java.nio.file.Files.createDirectories(base)
     java.nio.file.Files.createTempDirectory(base, prefix).toString
+  }
+
+  /** The data dirs (relative, "data/cVVV[d]-TOKEN") of `table` stamped
+    * with `version`, sorted. */
+  def dataDirsOf(table: graft.table.LakeTable, version: Long): Seq[String] = {
+    val data = java.nio.file.Paths.get(table.location, "data")
+    val s = java.nio.file.Files.list(data)
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(f"c$version%012d")).map("data/" + _).toSeq.sorted
+    finally s.close()
   }
 
   /** Order-insensitive DataFrame equality on a stable sort. */
