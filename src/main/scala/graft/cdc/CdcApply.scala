@@ -26,7 +26,8 @@ case class ApplyStats(
   * a non-null `_txid` (cast to bigint, as the apply stores it) of at
   * least `lo` — and `base`, the commit those facts were computed
   * against (None: the table was empty). The apply derives everything
-  * from `base` and publishes against it. */
+  * from `base` and publishes against it; a caller that passes a hint
+  * has run the replay check on the log `base` came from. */
 case class BatchHint(buckets: Seq[Int], events: Long, txidFloor: Option[Long],
     base: Option[Commit])
 
@@ -257,14 +258,17 @@ object CdcApply {
       maxDeltaDepth: Int = MaxDeltaDepth,
       foldRatio: Double = FoldToBaseRatio,
       prunedHint: Option[BatchHint] = None): ApplyStats = {
-    // the ONE snapshot the apply derives from and publishes against
-    val prev = prunedHint.fold(table.currentCommit())(_.base)
+    // the ONE snapshot the apply derives from and publishes against: the
+    // hint's, or the head of the one log read that also answers the
+    // replay check (a hinting caller ran that check on its base's log)
+    val log = Option.when(prunedHint.isEmpty)(table.log())
+    val prev = prunedHint.fold(log.flatMap(_.head))(_.base)
     val numBuckets = table.numBucketsOf(prev)
     val prevWm = prev.map(_.txidWatermark).getOrElse(0L)
     // every apply that changes nothing returns this
     def unchanged(skipped: Boolean) = ApplyStats(prev.map(_.version).getOrElse(0L),
       0, 0, 0, skippedReplay = skipped, prevWm, 0)
-    if (batchId >= 0 && table.hasBatch(batchId, queryId)) return unchanged(skipped = true)
+    if (log.exists(_.committed(batchId, queryId))) return unchanged(skipped = true)
 
     // Declared column renames (LakeTable.renameColumn): fold events from
     // late producers still emitting a retired key into its CURRENT
@@ -552,7 +556,7 @@ object CdcApply {
     (0 until nBatches).map { i =>
       val from = lo + i * step
       val to = if (i == nBatches - 1) hi + 1 else math.min(lo + (i + 1) * step, hi + 1)
-      val head = table.currentCommit()
+      val head = table.log().head
       applyBatch(spark, table,
         events.where(col("_txid") >= from && col("_txid") < to), pruneBuckets = false,
         prunedHint = Option.when(head.exists(_.txidWatermark < from))(

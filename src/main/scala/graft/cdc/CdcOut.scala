@@ -72,7 +72,7 @@ object CdcOut {
       consumerDir: String): Option[Pull] = {
     val root = Paths.get(consumerDir)
     Files.createDirectories(root)
-    val head = table.currentCommit().getOrElse(return None)
+    val head = table.log().head.getOrElse(return None)
     val wm: Option[Watermark] =
       if (Files.exists(wmPath(root)))
         Some(Serialization.read[Watermark](Files.readString(wmPath(root))))

@@ -274,9 +274,12 @@ object CdcStream {
         // classloader (and so the codegen cache) by session, so every
         // restart would otherwise compile the same classes again
         val batch = graftshim.ofRows(spark, micro)
-        // crash-replay pre-check: a replayed batch must not pay ANY
-        // Spark job (the summary agg alone is a full batch pass)
-        if (batchId < 0 || !table.hasBatch(batchId, queryId)) {
+        // ONE read of the commit log: the crash-replay pre-check (a
+        // replayed batch must not pay ANY Spark job — the summary agg
+        // alone is a full batch pass), and the snapshot the batch's facts
+        // and its apply derive from
+        val log = table.log()
+        if (!log.committed(batchId, queryId)) {
           def inferSchema(): StructType = {
             val s = spark.read.json(batch.select("value")
               .as[String](org.apache.spark.sql.Encoders.STRING)).schema
@@ -327,8 +330,7 @@ object CdcStream {
             }
             var enriched = parseWith(schemaCache)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            // the snapshot the facts and the apply derive from
-            val base = table.currentCommit()
+            val base = log.head
             try {
               // ONE pass over the batch: per-DC lineage counters, distinct
               // origin files, newest event time (ingest-lag input), novel
@@ -415,11 +417,13 @@ object CdcStream {
               // tombstones older than the lateness bound. O(table) —
               // triggered only when ≥20% of it is reclaimable.
               if (stats.applied > 0) {
-                // the head carries the running counter, which survives
+                // ONE more read of the log serves both maintenance checks.
+                // The head carries the running counter, which survives
                 // commit-log checkpoint truncation (a history walk would
                 // see at most the retained window's deletes and could
                 // starve compaction forever on a long stream)
-                val head = table.currentCommit().get
+                val after = table.log()
+                val head = after.head.get
                 val delSince = head.metrics.getOrElse("deletesSinceCompaction", 0L)
                 val totalRows = head.rowCounts.values.sum
                 if (delSince >= autoCompactMinDeletes && delSince * 5 >= totalRows) {
@@ -431,8 +435,9 @@ object CdcStream {
                 }
                 // a 10^10-event tail writes ~10^5 commits: roll the log
                 // up periodically so its listing stays O(window), not
-                // O(stream lifetime)
-                if (logCheckpointEvery > 0 && table.commitLogSize > logCheckpointEvery)
+                // O(stream lifetime) (a compaction's commit counts at the
+                // next trigger)
+                if (logCheckpointEvery > 0 && after.names.size > logCheckpointEvery)
                   table.checkpointLog()
               }
               onBatch(ms, stats)

@@ -136,10 +136,52 @@ case class Commit(
   *                          identity — batch ids are monotonic per
   *                          queryId, so idempotence after truncation
   *                          is `batchId <= max` */
-private[table] case class LogCheckpoint(
+private[graft] case class LogCheckpoint(
     commit: Commit,
     schemasByVersion: Map[String, String],
     maxBatchIdByQuery: Map[String, Long])
+
+/** One read of a table's commit log ([[LakeTable.log]]): the file
+  * `names` one listing of `_commits` saw, the newest `rollup` among
+  * them and the commits `later` than it, in version order. Immutable,
+  * so an operation that reads one `Log` — a trigger's replay check and
+  * its apply's base, a commit attempt's conflict check and its parent,
+  * a rollup and the files it deletes — sees one state of the log. */
+private[graft] case class Log(names: Seq[String], rollup: Option[LogCheckpoint],
+    later: Seq[Commit]) {
+
+  /** All retained commits in version order: the rollup's, then `later`. */
+  lazy val commits: Seq[Commit] = rollup.map(_.commit).toSeq ++ later
+
+  def head: Option[Commit] = commits.lastOption
+
+  /** True if a streaming micro-batch with this id was already committed
+    * BY THE SAME STREAM (crash-replay idempotence check). Scoped by
+    * (queryId, batchId) like Delta's txnAppId/txnVersion: Spark batch
+    * ids restart at 0 per checkpoint, so a bare-batchId check would
+    * silently drop the first batches of any new checkpoint pointed at
+    * an existing table. */
+  def committed(batchId: Long, queryId: String): Boolean = batchId >= 0 && (
+    later.exists(c => c.batchId == batchId && c.queryId == queryId) ||
+      rollup.exists { r =>
+        r.commit.batchId == batchId && r.commit.queryId == queryId ||
+          // pre-checkpoint history is truncated; batch ids are monotonic
+          // per stream, so anything ≤ the stream's recorded max was seen
+          r.maxBatchIdByQuery.get(queryId).exists(batchId <= _)
+      })
+
+  /** Writer schema JSON per data-dir version key ("cVVVVV"): reader-side
+    * type promotion casts each file group up from the schema it was
+    * WRITTEN under. From the rollup plus every commit after it. */
+  lazy val schemasByVersion: Map[String, String] =
+    rollup.fold(Map.empty[String, String])(_.schemasByVersion) ++
+      later.map(c => f"c${c.version}%012d" -> c.schemaJson)
+
+  /** [[schemasByVersion]], parsed. */
+  lazy val writerSchemas: Map[String, StructType] = schemasByVersion.map {
+    case (v, j) => v -> DataType.fromJson(j).asInstanceOf[StructType]
+  }
+}
 
 /** An Iceberg-*semantics* table over plain Parquet + a JSON commit log.
   *
@@ -201,125 +243,98 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
   def bucketCol(conv: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     LakeTable.bucketColFor(conv, effectiveNumBuckets)
 
-  /** Cached parse of the commit log (checkpoint rollup + commits after
-    * it). The cache is keyed on the set of commit FILENAMES (a cheap
-    * directory listing), so external writers are still picked up, but
-    * the JSON bodies are deserialized at most once per new commit —
-    * without this, a long stream's per-batch idempotence check
-    * (hasBatch) re-parses every commit every batch, O(commits²) over
-    * the stream's lifetime. */
-  @volatile private var commitCache:
-    (Seq[String], (Option[(LogCheckpoint, Long)], Seq[Commit])) =
-    (Seq.empty, (None, Seq.empty))
+  /** The last [[Log]] this handle read: [[log]] parses none of its files
+    * again. */
+  @volatile private var lastLog = Log(Nil, None, Nil)
 
-  private def listLogFiles(): Seq[Path] = {
-    if (!Files.isDirectory(commitsDir)) return Seq.empty
-    val s = Files.list(commitsDir)
-    try s.iterator().asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        // ".tmp-*" are in-flight atomic-publish temps — never parse them
-        n.endsWith(".json") && !n.startsWith(".")
-      }
-      .toSeq.sortBy(_.getFileName.toString)
-    finally s.close()
-  }
-
-  /** (newest checkpoint with its version, commits strictly after it). */
-  private def cachedState(): (Option[(LogCheckpoint, Long)], Seq[Commit]) = {
-    val files = listLogFiles()
-    val names = files.map(_.getFileName.toString)
-    val cached = commitCache
-    if (cached._1 == names) cached._2
-    else {
-      val (ckptFiles, commitFiles) =
-        files.partition(_.getFileName.toString.endsWith(".ckpt.json"))
-      val ckpt = ckptFiles.lastOption.map { p =>
-        val parsed = Serialization.read[LogCheckpoint](Files.readString(p))
-        (parsed, parsed.commit.version)
-      }
-      val horizon = ckpt.map(_._2).getOrElse(0L)
-      val parsed = commitFiles
-        .map { p =>
-          val body = Files.readString(p)
-          // pre-bucket-partitioned commits stored un-bucketed delta dirs
-          // under `deltaFiles`; silently ignoring them would DROP their
-          // rows from every read and let vacuum delete them — refuse
-          // loudly instead (fold/compact with the writing version first)
-          if (body.contains("\"deltaFiles\"")) {
-            val legacy = org.json4s.jackson.JsonMethods.parse(body) \ "deltaFiles"
-            legacy match {
-              case org.json4s.JArray(xs) if xs.nonEmpty =>
-                throw new UnsupportedOperationException(
-                  s"commit ${p.getFileName} carries pre-upgrade un-bucketed " +
-                    "delta dirs (deltaFiles) this version cannot read; " +
-                    "compact the table with the version that wrote it " +
-                    "before upgrading")
-              case _ =>
-            }
-          }
-          Serialization.read[Commit](body)
-        }
-        .filter(_.version > horizon)
-      val state = (ckpt, parsed)
-      commitCache = (names, state)
-      state
+  /** The commit log, read ONCE: the one listing of `_commits` the engine
+    * makes, and every log accessor below is a view of the [[Log]] it
+    * returns. Commit and rollup files never change once linked, so a
+    * file the handle's previous listing named is not parsed again — each
+    * body is parsed at most once per handle — and of the new names only
+    * the newest rollup and the commits after it are parsed. The handle
+    * keeps the names of its last listing alone. */
+  private[graft] def log(): Log = {
+    val names = if (!Files.isDirectory(commitsDir)) Nil else {
+      val s = Files.list(commitsDir)
+      // ".tmp-*" are in-flight atomic-publish temps — never parse them
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".json") && !n.startsWith(".")).toSeq.sorted
+      finally s.close()
     }
+    val prev = lastLog
+    if (names == prev.names) return prev
+    val (rollupNames, commitNames) = names.partition(_.endsWith(".ckpt.json"))
+    val rollup = rollupNames.lastOption.map { n =>
+      prev.rollup.filter(r => f"${r.commit.version}%012d.ckpt.json" == n).getOrElse(
+        Serialization.read[LogCheckpoint](Files.readString(commitsDir.resolve(n))))
+    }
+    val horizon = rollup.fold(0L)(_.commit.version)
+    val parsed = prev.later.map(c => f"${c.version}%012d.json" -> c).toMap
+    val later = commitNames.filter(_.stripSuffix(".json").toLongOption.forall(_ > horizon))
+      .map(n => parsed.getOrElse(n, parseCommit(n)))
+    val l = Log(names, rollup, later)
+    lastLog = l
+    l
   }
 
-  private def cachedCommits(): Seq[Commit] = {
-    val (ckpt, later) = cachedState()
-    ckpt.map(_._1.commit).toSeq ++ later
+  private def parseCommit(name: String): Commit = {
+    val body = Files.readString(commitsDir.resolve(name))
+    // pre-bucket-partitioned commits stored un-bucketed delta dirs
+    // under `deltaFiles`; silently ignoring them would DROP their
+    // rows from every read and let vacuum delete them — refuse
+    // loudly instead (fold/compact with the writing version first)
+    if (body.contains("\"deltaFiles\"")) {
+      org.json4s.jackson.JsonMethods.parse(body) \ "deltaFiles" match {
+        case org.json4s.JArray(xs) if xs.nonEmpty =>
+          throw new UnsupportedOperationException(
+            s"commit $name carries pre-upgrade un-bucketed " +
+              "delta dirs (deltaFiles) this version cannot read; " +
+              "compact the table with the version that wrote it " +
+              "before upgrading")
+        case _ =>
+      }
+    }
+    Serialization.read[Commit](body)
   }
 
-  def currentCommit(): Option[Commit] = cachedCommits().lastOption
+  def currentCommit(): Option[Commit] = log().head
 
   /** Number of files currently in the commit log (checkpoint trigger
     * gauge for long-lived streams). */
-  def commitLogSize: Int = listLogFiles().size
+  def commitLogSize: Int = log().names.size
 
   /** Roll the commit log up into one checkpoint file and delete the
     * subsumed per-commit JSONs. History BEFORE the checkpoint is no
     * longer readable (the same trade [[vacuum]] makes for data dirs);
     * the current snapshot, per-dir writer schemas, and per-stream batch
     * idempotence all survive. Keeps the log directory O(commits since
-    * last checkpoint) instead of O(stream lifetime). */
+    * last checkpoint) instead of O(stream lifetime). Works from ONE
+    * [[Log]]: the rollup holds exactly the state that Log read, and only
+    * files it named are deleted, so a commit landing meanwhile stays in
+    * the log. */
   def checkpointLog(): Unit = {
-    val (prevCkpt, later) = cachedState()
-    val current = currentCommit().getOrElse(return)
+    val l = log()
+    val current = l.head.getOrElse(return)
     val live: Set[String] = (current.buckets.values ++ current.deltas.values.flatten)
       .map(LakeTable.schemaKeyOf).toSet
-    val schemas = schemasByVersion().filter { case (v, _) => live.contains(v) }
-    val maxBatch: Map[String, Long] = {
-      val base = prevCkpt.map(_._1.maxBatchIdByQuery).getOrElse(Map.empty)
-      later.filter(_.batchId >= 0).foldLeft(base) { (m, c) =>
+    val schemas = l.schemasByVersion.filter { case (v, _) => live.contains(v) }
+    val maxBatch = l.later.filter(_.batchId >= 0)
+      .foldLeft(l.rollup.fold(Map.empty[String, Long])(_.maxBatchIdByQuery)) { (m, c) =>
         m.updated(c.queryId, math.max(c.batchId, m.getOrElse(c.queryId, -1L)))
       }
-    }
     val ckpt = LogCheckpoint(current, schemas, maxBatch)
     val tmp = Files.createTempFile(commitsDir, ".tmp-", ".ckpt")
     Files.writeString(tmp, Serialization.write(ckpt))
     Files.move(tmp, commitsDir.resolve(f"${current.version}%012d.ckpt.json"),
       StandardCopyOption.ATOMIC_MOVE)
     // delete subsumed files: all plain commits ≤ version, older ckpts
-    listLogFiles().foreach { p =>
-      val name = p.getFileName.toString
+    l.names.foreach { name =>
       val isCkpt = name.endsWith(".ckpt.json")
       val ver = name.stripSuffix(if (isCkpt) ".ckpt.json" else ".json").toLongOption
-      val subsumed = ver.exists(v =>
-        (isCkpt && v < current.version) || (!isCkpt && v <= current.version))
-      if (subsumed) Files.deleteIfExists(p)
+      if (ver.exists(v => v < current.version || !isCkpt && v == current.version))
+        Files.deleteIfExists(commitsDir.resolve(name))
     }
-  }
-
-  /** Writer schema per data-dir version key ("cVVVVV"): reader-side
-    * type promotion casts each file group up from the schema it was
-    * WRITTEN under. Sourced from the checkpoint rollup plus every
-    * commit after it. */
-  private def schemasByVersion(): Map[String, String] = {
-    val (ckpt, later) = cachedState()
-    ckpt.map(_._1.schemasByVersion).getOrElse(Map.empty) ++
-      later.map(cm => f"c${cm.version}%012d" -> cm.schemaJson)
   }
 
   def txidWatermark: Long = currentCommit().map(_.txidWatermark).getOrElse(0L)
@@ -354,7 +369,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
   /** All RETAINED commits in version order: one small JSON per commit,
     * plus the rollup commit if [[checkpointLog]] has truncated older
     * history. */
-  def commitLog(): Seq[Commit] = cachedCommits()
+  def commitLog(): Seq[Commit] = log().commits
 
   /** Time travel (Iceberg `VERSION AS OF` semantics): the table's live
     * rows as of a past commit, so a downstream job can pin a
@@ -572,9 +587,10 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     // scan time — so read every file group under its writer's schema and
     // cast up to the latest (reader-side promotion, SURVEY.md §7 hard
     // part (c)). Single-schema groups take the single-scan fast path.
-    val schemas: Map[String, StructType] = schemasByVersion().map {
-      case (v, j) => v -> DataType.fromJson(j).asInstanceOf[StructType]
-    }
+    // The writers' schemas come from the newest Log this handle read, or
+    // from a fresh one when `c` is newer than it (another handle's commit)
+    val schemas = Some(lastLog).filter(_.head.exists(_.version >= c.version))
+      .getOrElse(log()).writerSchemas
     val latest = c.schema
     // `only` non-empty: the rels are flat, and only those buckets' rows
     // are kept (their `_bucket` column is scanned, filtered and dropped)
@@ -715,12 +731,15 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * (reference contrast: the dump pipeline rewrites everything every
     * cycle, manta/dc_inputs_4.sh).
     *
+    * `renames` (retired → current, flattened over `base`'s) joins the
+    * carried rename map: only [[renameColumn]] passes any.
+    *
     * `base` is the commit the writer read and derived its files from
     * (None: an empty table). OPTIMISTIC CONCURRENCY (Iceberg-style):
     * every attempt — the first, and each retry after a lost link(2)
-    * race — runs the one conflict check against `base`
-    * ([[requireNoConflict]]) and builds on the head it read, which
-    * carries every other bucket forward; a true conflict raises
+    * race — reads the log ONCE ([[log]]), runs the one conflict check
+    * of `base` against it ([[requireNoConflict]]) and builds on its
+    * head, which carries every other bucket forward; a true conflict raises
     * ConcurrentModificationException and the caller redoes its work
     * against the new snapshot (a stream batch, through its checkpoint's
     * replay). Writers never race on data files: each writes its own
@@ -736,14 +755,15 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       metrics: Map[String, Long],
       queryId: String = "",
       deltaAdds: Map[Int, (String, Long)] = Map.empty,
-      deltaReplaces: Map[Int, (String, Long)] = Map.empty): Commit = {
+      deltaReplaces: Map[Int, (String, Long)] = Map.empty,
+      renames: Map[String, String] = Map.empty): Commit = {
     val mine = rewritten.keySet ++ deltaAdds.keySet ++ deltaReplaces.keySet ++ newRowCounts.keySet
     var attempt = 0
     while (true) {
-      val log = cachedCommits()
-      requireNoConflict(base, log, mine, schema)
-      try return commitOnce(log.lastOption, schema, rewritten, newRowCounts,
-        txidWatermark, batchId, metrics, queryId, deltaAdds, deltaReplaces)
+      val l = log()
+      requireNoConflict(base, l.commits, mine, schema)
+      try return commitOnce(l.head, schema, rewritten, newRowCounts,
+        txidWatermark, batchId, metrics, queryId, deltaAdds, deltaReplaces, renames)
       catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           attempt += 1
@@ -762,10 +782,10 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * bucket), or a schema change: a rename (its files carry the retired
     * names, and its schema would revert the rename while the rename map
     * points past it) or another writer's new column (its schema would
-    * hide that column) — or a change of the writer's own `schema`: its
-    * dir is stamped base + 1, and a dir's writer schema is the one
-    * committed at its stamp, so a schema change lands there or not at
-    * all. */
+    * hide that column) — or a change of the schema by a writer of
+    * buckets: its dir is stamped base + 1, and a dir's writer schema is
+    * the one committed at its stamp, so a schema change lands there or
+    * not at all (a rename writes no dir, so it composes). */
   private def requireNoConflict(base: Option[Commit], log: Seq[Commit], mine: Set[Int],
       schema: StructType): Unit = {
     val since = base.fold(0L)(_.version)
@@ -779,7 +799,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       refuse(s"concurrent commit modified buckets ${overlap.toSeq.sorted.take(8).mkString(",")}")
     if (head.map(_.schemaJson) != base.map(_.schemaJson))
       refuse("concurrent schema change (a column rename or a new column)")
-    if (!base.exists(_.schemaJson == schema.json))
+    if (mine.nonEmpty && !base.exists(_.schemaJson == schema.json))
       refuse("a schema change that cannot land at its data dir's version")
   }
 
@@ -828,7 +848,8 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       metrics: Map[String, Long],
       queryId: String,
       deltaAdds: Map[Int, (String, Long)],
-      deltaReplaces: Map[Int, (String, Long)]): Commit = {
+      deltaReplaces: Map[Int, (String, Long)],
+      renames: Map[String, String]): Commit = {
     val carried = prev.map(_.buckets).getOrElse(Map.empty)
     val carriedCounts = prev.map(_.rowCounts).getOrElse(Map.empty)
     val carriedDeltas = prev.map(_.deltas).getOrElse(Map.empty)
@@ -893,7 +914,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
         (LakeTable.NumBucketsKey -> metrics.getOrElse(
           LakeTable.NumBucketsKey, numBucketsOf(prev).toLong)),
       queryId, newDeltas, newDeltaCounts,
-      prev.map(_.renames).getOrElse(Map.empty)))
+      prev.map(_.renames).getOrElse(Map.empty) ++ renames))
   }
 
   /** Rename a payload column — Iceberg ALTER TABLE RENAME COLUMN
@@ -907,49 +928,31 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * the novel-key absorber). Chained renames stay flattened: after
     * a→b then b→c the map holds a→c and b→c, so a dir of ANY vintage
     * resolves in one hop. Merge keys and CDC envelope columns are
-    * structural and refuse to rename. Concurrency: publishes through
-    * the same one-winner link(2) protocol as data commits; on a lost
-    * race it rebuilds against the new head (touches no buckets, so
-    * there is no true-conflict case). */
+    * structural and refuse to rename. Concurrency: one [[commit]]
+    * against the head it read, passing the flattened map; it touches no
+    * bucket, so a disjoint data commit landing first is composed onto,
+    * while a schema change or a rebucket landing first refuses it with
+    * ConcurrentModificationException. */
   def renameColumn(oldName: String, newName: String): Commit = {
     val structural = graft.model.Model.MergeKeys.toSet ++
       Set("_txid", "_etag", "_deleted", "_bucket")
     require(oldName != newName, s"rename $oldName -> itself")
     require(!structural(oldName) && !structural(newName),
       s"cannot rename structural column ($oldName -> $newName)")
-    this.synchronized {
-      var attempt = 0
-      while (true) {
-        val prev = currentCommit().getOrElse(throw new IllegalArgumentException(
-          s"rename $oldName -> $newName: table at $location has no commits"))
-        val schema = prev.schema
-        require(schema.fieldNames.contains(oldName),
-          s"rename source $oldName not in schema ${schema.fieldNames.mkString(",")}")
-        require(!schema.fieldNames.contains(newName),
-          s"rename target $newName already in schema")
-        val renamed = StructType(schema.fields.map(f =>
-          if (f.name == oldName) f.copy(name = newName) else f))
-        val flattened = prev.renames.map { case (k, v) =>
-          k -> (if (v == oldName) newName else v)
-        } + (oldName -> newName)
-        try return publish(prev.copy(
-          version = prev.version + 1, batchId = -1L, queryId = "",
-          schemaJson = renamed.json,
-          metrics = Map("rename" -> 1L) ++
-            prev.metrics.get("deletesSinceCompaction")
-              .map("deletesSinceCompaction" -> _) ++
-            prev.metrics.get(LakeTable.NumBucketsKey)
-              .map(LakeTable.NumBucketsKey -> _),
-          renames = flattened))
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            attempt += 1
-            if (attempt > 5) throw new java.util.ConcurrentModificationException(
-              s"rename $oldName -> $newName lost the commit race $attempt times")
-        }
-      }
-      throw new IllegalStateException("unreachable")
-    }
+    val head = currentCommit().getOrElse(throw new IllegalArgumentException(
+      s"rename $oldName -> $newName: table at $location has no commits"))
+    val schema = head.schema
+    require(schema.fieldNames.contains(oldName),
+      s"rename source $oldName not in schema ${schema.fieldNames.mkString(",")}")
+    require(!schema.fieldNames.contains(newName),
+      s"rename target $newName already in schema")
+    val renamed = StructType(schema.fields.map(f =>
+      if (f.name == oldName) f.copy(name = newName) else f))
+    val flattened = head.renames.map { case (k, v) =>
+      k -> (if (v == oldName) newName else v)
+    } + (oldName -> newName)
+    commit(Some(head), renamed, Map.empty, Map.empty, head.txidWatermark, -1L,
+      Map("rename" -> 1L), renames = flattened)
   }
 
   private def publish(c: Commit): Commit = {
@@ -1071,7 +1074,7 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * flight from a snapshot the head has since moved past. Returns the
     * deleted dir names. */
   def vacuum(retainCommits: Int = 2): Seq[String] = {
-    val log = cachedCommits()
+    val log = commitLog()
     if (log.isEmpty) return Nil
     val latest = log.last.version
     val referenced: Set[String] = log.takeRight(math.max(1, retainCommits))
@@ -1093,23 +1096,8 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     deletable.sorted
   }
 
-  /** True if a streaming micro-batch with this id was already committed
-    * BY THE SAME STREAM (crash-replay idempotence check). Scoped by
-    * (queryId, batchId) like Delta's txnAppId/txnVersion: Spark batch
-    * ids restart at 0 per checkpoint, so a bare-batchId check would
-    * silently drop the first batches of any new checkpoint pointed at
-    * an existing table. */
-  def hasBatch(batchId: Long, queryId: String = ""): Boolean = {
-    if (batchId < 0) return false
-    val (ckpt, later) = cachedState()
-    later.exists(c => c.batchId == batchId && c.queryId == queryId) ||
-      ckpt.exists { case (lc, _) =>
-        lc.commit.batchId == batchId && lc.commit.queryId == queryId ||
-          // pre-checkpoint history is truncated; batch ids are monotonic
-          // per stream, so anything ≤ the stream's recorded max was seen
-          lc.maxBatchIdByQuery.get(queryId).exists(batchId <= _)
-      }
-  }
+  /** [[Log.committed]] on a fresh read of the log. */
+  def hasBatch(batchId: Long, queryId: String = ""): Boolean = log().committed(batchId, queryId)
 }
 
 object LakeTable {

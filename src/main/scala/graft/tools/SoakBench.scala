@@ -1,7 +1,5 @@
 package graft.tools
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.model.Corpus
@@ -70,19 +68,16 @@ object SoakBench {
     val ckptVersions = scala.collection.mutable.Set[String]()
     val onBatch: (Long, graft.cdc.ApplyStats) => Unit = { (ms, stats) =>
       batchMs += ms.toDouble
-      maxLogSize.getAndUpdate(m => math.max(m, table.commitLogSize))
-      val fresh = table.commitLog().filter(_.version > maxSeen)
+      val log = table.log()
+      maxLogSize.getAndUpdate(m => math.max(m, log.names.size))
+      val fresh = log.commits.filter(_.version > maxSeen)
       compactions += fresh.count(_.metrics.contains("compaction"))
       folded += fresh.map(_.metrics.getOrElse("foldedBuckets", 0L)).sum
       consolidated += fresh.map(_.metrics.getOrElse("consolidatedBuckets", 0L)).sum
       maxSeen = fresh.lastOption.map(_.version).getOrElse(maxSeen)
       // rollup files are themselves rolled up later; count DISTINCT
       // checkpoint versions ever observed
-      val s = java.nio.file.Files.list(
-        java.nio.file.Paths.get(table.location, "_commits"))
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".ckpt.json")).foreach(ckptVersions += _)
-      finally s.close()
+      ckptVersions ++= log.names.filter(_.endsWith(".ckpt.json"))
     }
     val t0 = System.nanoTime()
     // aggressive maintenance knobs so the run crosses SEVERAL

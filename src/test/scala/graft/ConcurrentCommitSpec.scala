@@ -108,6 +108,43 @@ class ConcurrentCommitSpec extends SparkSpec {
     assert(underBody.where(col("text") === "redo").count() == 1L)
   }
 
+  test("a disjoint delta landing in a rename's publish window composes: both changes read back") {
+    val (table, events) = seeded()
+    val c0 = table.currentCommit().get
+    val b = new LakeTable(table.location, numBuckets = 8)
+    val (relB, nB, convB, txB) = writeDelta(b, c0.version + 1, bucket = 2, "from-B")
+    table.testBeforePublish = () =>
+      b.commit(b.currentCommit(), c0.schema, Map.empty, Map.empty, txB, -1L, Map.empty,
+        deltaAdds = Map(2 -> (relB, nB)))
+    val r = table.renameColumn("text", "body")
+    assert(r.version == c0.version + 2 && r.renames == Map("text" -> "body") &&
+      r.deltas("2").contains(relB) && r.txidWatermark == txB, s"$r")
+    val read = table.read(spark)
+    assert(!read.columns.contains("text"))
+    assert(read.where(col("conv_id") === convB && col("_txid") === txB)
+      .select("body").collect().map(_.getString(0)).toSeq == Seq("from-B"))
+    assert(read.count() == Corpus.oracleFinalState(events).count())
+  }
+
+  test("a widening apply landing in a rename's publish window refuses the rename") {
+    val (table, _) = seeded()
+    val c0 = table.currentCommit().get
+    val b = new LakeTable(table.location, numBuckets = 8)
+    val wide = oneEvent(b, bucket = 3, c0.txidWatermark + 1, "wide").withColumn("note", lit("new"))
+    table.testBeforePublish = () => { CdcApply.applyBatch(spark, b, wide); () }
+    val e = intercept[java.util.ConcurrentModificationException](
+      table.renameColumn("text", "body"))
+    assert(e.getMessage.contains("schema"), e.getMessage)
+    val head = table.currentCommit().get
+    assert(head.version == c0.version + 1 && head.schema.fieldNames.contains("note") &&
+      head.renames.isEmpty, s"$head")
+    // a redo renames the widened schema
+    val r = table.renameColumn("text", "body")
+    assert(r.schema.fieldNames.contains("note") && r.schema.fieldNames.contains("body"))
+    assert(table.read(spark).where(col("body") === "wide").select("note")
+      .collect().map(_.getString(0)).toSeq == Seq("new"))
+  }
+
   test("a newer delta landing during a fold's write refuses the fold; the newer row survives the redo") {
     val (table, _) = seeded()
     val base = table.currentCommit()
