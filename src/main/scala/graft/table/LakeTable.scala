@@ -252,8 +252,9 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     * returns. Commit and rollup files never change once linked, so a
     * file the handle's previous listing named is not parsed again — each
     * body is parsed at most once per handle — and of the new names only
-    * the newest rollup and the commits after it are parsed. The handle
-    * keeps the names of its last listing alone. */
+    * the newest rollup and the commits after it are parsed (a rollup
+    * this handle wrote is not parsed at all). The handle keeps the names
+    * of its last listing alone. */
   private[graft] def log(): Log = {
     val names = if (!Files.isDirectory(commitsDir)) Nil else {
       val s = Files.list(commitsDir)
@@ -326,8 +327,8 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val ckpt = LogCheckpoint(current, schemas, maxBatch)
     val tmp = Files.createTempFile(commitsDir, ".tmp-", ".ckpt")
     Files.writeString(tmp, Serialization.write(ckpt))
-    Files.move(tmp, commitsDir.resolve(f"${current.version}%012d.ckpt.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    val rollupName = f"${current.version}%012d.ckpt.json"
+    Files.move(tmp, commitsDir.resolve(rollupName), StandardCopyOption.ATOMIC_MOVE)
     // delete subsumed files: all plain commits ≤ version, older ckpts
     l.names.foreach { name =>
       val isCkpt = name.endsWith(".ckpt.json")
@@ -335,6 +336,8 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       if (ver.exists(v => v < current.version || !isCkpt && v == current.version))
         Files.deleteIfExists(commitsDir.resolve(name))
     }
+    // the log this rollup leaves: the handle never parses its own rollup
+    lastLog = Log(Seq(rollupName), Some(ckpt), Nil)
   }
 
   def txidWatermark: Long = currentCommit().map(_.txidWatermark).getOrElse(0L)

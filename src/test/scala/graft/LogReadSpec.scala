@@ -64,4 +64,22 @@ class LogReadSpec extends SparkSpec {
     // a fresh handle parses every file, so the broken one is really broken
     intercept[Exception](new LakeTable(table.location, numBuckets = 4).currentCommit())
   }
+
+  test("a handle never parses the rollup it wrote: its Log equals a fresh handle's") {
+    val events = Corpus.changeEvents(spark, 900, nConvs = 30, maxTurns = 6)
+    val table = new LakeTable(tmpDir("rollup-once"), numBuckets = 4)
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") <= 300))
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") > 300 && col("_txid") <= 600))
+    table.checkpointLog()
+    val rolled = new LakeTable(table.location, numBuckets = 4).log()
+    assert(rolled.names.size == 1 && rolled.rollup.nonEmpty && rolled.later.isEmpty, s"$rolled")
+    // the rollup's bytes no longer parse: the handle that wrote it never reads them
+    Files.writeString(Paths.get(table.location, "_commits", rolled.names.head), "{not a rollup")
+    assert(table.log() == rolled)
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") > 600))
+    assert(table.currentCommit().get.version == rolled.head.get.version + 1)
+    assertSameRows(table.read(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
+      Corpus.oracleFinalState(events))
+    intercept[Exception](new LakeTable(table.location, numBuckets = 4).currentCommit())
+  }
 }
